@@ -1,12 +1,10 @@
 """Machine-load context snapshots shared by the measurement harnesses.
 
-bench.py records load average + /proc/stat busy fraction around its
-sampling windows so a round-over-round delta on a shared box is
-adjudicable from the artifact alone (VERDICT r9 #1); the streaming
-throughput harness records the same context next to its rates.  One
-definition here (ADVICE r10 — stream_throughput previously exec'd
-bench.py via importlib just to borrow these two pure helpers, coupling
-it to bench.py's module top-level which imports the full registry).
+perfbench and the streaming throughput harness record load average +
+/proc/stat busy fraction around their measurement windows so a delta
+measured on a shared box is adjudicable from the artifact alone
+(VERDICT r9 #1).  One definition here, importable without the query
+registry.
 """
 
 from __future__ import annotations

@@ -306,11 +306,17 @@ def fold_centroids(centroids: DataFrame,
                  .alias("__cents")))
 
 
-def ivf_assign(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", nprobe: int = 1,
+def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
+               id_col: str = "vec_id", vec_col: str = "embedding",
+               nprobe: int = 1,
                prefolded: DataFrame | None = None) -> DataFrame:
     """IVF coarse quantization: assign every vector to its ``nprobe``
     nearest centroids (one output row per probed cell).
+
+    Pass exactly one of ``centroids`` and ``prefolded`` (the
+    :func:`fold_centroids` form of the same table); passing both would
+    let a fold of a different table silently win, so it raises
+    ``ValueError``.
 
     ``centroids`` is a tiny (cluster_id, centroid vector) table.  It is
     folded into ONE array row (``coalesce(1)`` first, so the k-row
@@ -341,6 +347,9 @@ def ivf_assign(df: DataFrame, centroids: DataFrame, id_col: str = "vec_id",
     a full digest mismatch (ADVICE r9, medium).  One shared formula,
     both engines.
     """
+    if (centroids is None) == (prefolded is None):
+        raise ValueError(
+            "ivf_assign: pass exactly one of centroids and prefolded")
     c_arr = (prefolded if prefolded is not None
              else fold_centroids(centroids, vec_col))
     # d2 in two cheap interpreted passes: zip_with computes the diffs,
@@ -478,8 +487,8 @@ def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
     i would re-trigger the very re-derivation the persist exists to
     prevent — so the step tables stay persisted by default.  Each
     entry is k·d floats (~16 KB at k=32, d=64), so the cost per
-    invocation is negligible; one-shot harnesses (bench.py, the
-    driver's per-query loop) bound the accumulation with
+    invocation is negligible; one-shot harnesses (the driver's
+    per-query loop) bound the accumulation with
     ``spark.catalog.clearCache()`` between plans.  A LONG-LIVED
     service that builds many trained quantizers should instead pass
     ``step_cache`` (any list): every persisted step DataFrame is

@@ -1182,11 +1182,10 @@ def _ivf_nprobe_plan(spark: SparkSession, sf_dir: str, ivf_k: int,
     # unchanged); building it once just skips a construction-time
     # py4j chain per extra assignment
     folded = fold_centroids(centroids)
-    corpus_cells = ivf_assign(S.with_norm(emb), centroids,
-                              prefolded=folded)
+    corpus_cells = ivf_assign(S.with_norm(emb), prefolded=folded)
     query_cells = ivf_assign(
         S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
-        centroids, nprobe=nprobe, prefolded=folded)
+        nprobe=nprobe, prefolded=folded)
     q = query_cells.select(F.col("vec_id").alias("query_id"),
                            F.col("embedding").alias("q_vec"),
                            F.col("norm").alias("q_norm"), "cluster_id")

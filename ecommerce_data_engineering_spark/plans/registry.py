@@ -35,7 +35,7 @@ class QuerySpec:
     oracle: Optional[str]          # DuckDB SQL, or None → rows-only check
     doc: str = ""
     covers: tuple[str, ...] = ()   # SURVEY.md §2 row ids, e.g. ("A1", "J3")
-    bench: bool = False            # include in bench.py headline set
+    bench: bool = False            # headline set: scale sweeps + shuffle budgets
 
 
 def query(name: str, oracle: Optional[str] = None, covers: tuple[str, ...] = (),

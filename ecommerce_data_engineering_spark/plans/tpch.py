@@ -1,7 +1,7 @@
 """Benchmark / multi-join queries over the driver's TPC-H-ish fixtures.
 
-These are the headline bench queries (bench.py) and the widest join
-exercises (SURVEY.md §2.4 J1–J4).  Plans are checked with
+These are the headline bench queries (``QuerySpec.bench``) and the
+widest join exercises (SURVEY.md §2.4 J1–J4).  Plans are checked with
 ``.explain``: filters land in PushedFilters, dims go broadcast, aggs
 are partial+final.
 

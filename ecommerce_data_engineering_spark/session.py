@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's MemTotal in whole GiB, at least ``1g`` — a
+    driver heap that fits the machine it runs on.  Without a readable
+    MemTotal (non-Linux) the floor is used."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        kib = 0
+    return f"{max(1, kib // 2 // (1024 * 1024))}g"
+
+
 def get_spark(app_name: str = "ecommerce_data_engineering_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -62,7 +75,8 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which

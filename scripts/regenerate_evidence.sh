@@ -3,8 +3,11 @@
 #
 # Run pieces selectively — the full script is hours (the quadratic
 # single-node DuckDB oracles dominate; Spark is never the bottleneck).
-# Measurement steps (4-7) need an OTHERWISE IDLE box: concurrent sweeps
-# poison bench medians (correctness sweeps 1-3 only cost wall time).
+# Measurement steps (4-5) need an OTHERWISE IDLE box: concurrent sweeps
+# poison their timings (correctness sweeps 1-3 only cost wall time).
+# SCALE_BENCH.json and the BENCH_CONSEC_r*.json pairs are frozen
+# records: the harness that produced them is retired (last present at
+# commit 767b712) and perfbench/run.py is the repo's benchmark.
 #
 # Fixture derivation first — driver testdata regenerates every round,
 # so derived fixtures must be rebuilt before any sweep that reads them.
@@ -26,7 +29,6 @@ python scripts/make_skewed_fixture.py /tmp/sf_skew16x /tmp/sf_16x
 python scripts/make_seeded_fixture.py /tmp/sf_seed1 1
 python scripts/make_seeded_fixture.py /tmp/sf_seed2 2
 python scripts/make_seeded_fixture.py /tmp/sf_seed3 3
-python scripts/make_rowgrouped_fixture.py /tmp/sf0.1_rg8 8 /root/testdata/sf0.1
 # clustered-embedding fixtures (r10): the structured case the IVF
 # scaling evidence measures — see ANN_SCALING.json / RECALL.json
 python scripts/make_clustered_fixture.py /tmp/sf_clustered 2000 --docs-from=/root/testdata/sf0.1
@@ -86,26 +88,13 @@ python scripts/ann_recall.py sf0.1=/root/testdata/sf0.1 16x=/tmp/sf_16x \
 echo "== 3b. IVF k_cells scaling (VERDICT r9 #2) =="
 python scripts/ann_scaling.py
 
-echo "== 4. Spark-side throughput (IDLE BOX) =="
-python scripts/make_scale_bench.py
-
-echo "== 5. streaming soak (IDLE BOX) =="
+echo "== 4. streaming soak (IDLE BOX) =="
 # --skew (VERDICT r8 #7): the same three stateful shapes re-run on the
 # pathological-key fixture; streamed==batch must hold there too
 python scripts/stream_throughput.py /tmp/sf_64x 32 --force --skew=/tmp/sf_skew16x
 
-echo "== 6. bucketed-join delta (IDLE BOX) =="
+echo "== 5. bucketed-join delta (IDLE BOX) =="
 python scripts/bucketed_join_bench.py /tmp/sf_64x
-
-echo "== 7. scaling ladder (IDLE BOX; table quoted in SCALE.md) =="
-python scripts/bench_scaling.py 0.1=/tmp/sf0.1_rg8
-
-echo "== 8. consecutive suspect-free bench pair (IDLE BOX) =="
-# pass the round number; refuses to write if either run self-flags
-# fail fast when ROUND is unset (ADVICE r8): defaulting to 0 wrote a
-# mislabeled BENCH_CONSEC_r00.json nobody cites while the real
-# per-round record stayed stale
-python scripts/bench_consec.py "${ROUND:?set ROUND to the current round number}"
 
 echo "== assert everything green and cited =="
 python scripts/check_scale_evidence.py

@@ -15,6 +15,7 @@ in either spelling fails loudly.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecommerce_data_engineering_spark.functions.rounding import pround
@@ -401,5 +402,21 @@ def test_ivf_assign_values_unchanged(spark):
     emb, cents = _emb(spark), _cents(spark)
     new = S.ivf_assign(S.with_norm(emb), cents, nprobe=2)
     ref = _ivf_assign_ref(_with_norm_ref(emb), cents, nprobe=2)
+    assert sorted(map(tuple, new.collect())) == \
+        sorted(map(tuple, ref.collect()))
+
+
+def test_ivf_assign_takes_exactly_one_centroid_form(spark):
+    """``prefolded`` replaces ``centroids`` rather than overriding it:
+    passing both (a fold of possibly another table) or neither is
+    rejected, and the prefolded form assigns the same cells."""
+    emb, cents = _emb(spark), _cents(spark)
+    folded = S.fold_centroids(cents)
+    with pytest.raises(ValueError, match="exactly one"):
+        S.ivf_assign(S.with_norm(emb), cents, prefolded=folded)
+    with pytest.raises(ValueError, match="exactly one"):
+        S.ivf_assign(S.with_norm(emb))
+    new = S.ivf_assign(S.with_norm(emb), prefolded=folded, nprobe=2)
+    ref = S.ivf_assign(S.with_norm(emb), cents, nprobe=2)
     assert sorted(map(tuple, new.collect())) == \
         sorted(map(tuple, ref.collect()))

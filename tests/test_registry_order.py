@@ -158,40 +158,6 @@ def test_bench_headliners_never_lose_verification():
         f"bench=True queries without an oracle: {unverified}")
 
 
-def test_bench_final_json_line_fits_driver_tail():
-    """The driver records only the LAST ~2000 chars of bench.py output
-    (BENCH_r03.json came back parsed:null when the line outgrew it).
-    bench.py caps its compact final line at 1800 chars before dropping
-    per-query numbers — pin that the CURRENT bench set stays under the
-    cap with realistic 7-char timings, so growth in the bench roster
-    is caught here instead of in a truncated round artifact."""
-    import json
-
-    queries = {n: 999.999 for n, s in REGISTRY.items() if s.bench}
-    line = json.dumps({
-        "metric": "headline_queries_total_runtime",
-        "value": 99999.999, "value_min": 99999.999,
-        "unit": "sec", "queries": queries, "sf": 0.1,
-        # worst case: every benched query self-flags as suspect
-        "suspect": sorted(queries),
-        # calibration + scaling-proof context (r9 #1, r11 #2)
-        "calib": 999.999, "calib_legacy": 999.999,
-        "master": "local[128]", "parallelism": 128,
-        "shuffle_partitions": 128,
-        "load": {"loadavg_start": [99.99, 99.99, 99.99],
-                 "loadavg_end": [99.99, 99.99, 99.99],
-                 "cpu_busy_frac": 0.9999, "ncpu": 128},
-        # shared-roster subtotals (VERDICT r8 #6) ride the final line
-        "value_shared_prev": 99999.999,
-        "value_shared_prev_baseline": 99999.999,
-        "geomean_ratio_shared": 9.999, "shared_ratio": 9.999,
-        "calib_ratio": 9.999, "drift_class": "plan_or_unexplained",
-    }, separators=(",", ":"))
-    assert len(line) <= 1800, (
-        f"final bench line would be {len(line)} chars; trim the bench "
-        f"set or shorten names before the driver truncates it again")
-
-
 def test_r12_revert_of_r11_window_swap():
     """VERDICT r11 #1: the r11-born corpus_leakage_safe_split displaced
     corpus_filter_pipeline from the 50-slot driver window — the r11

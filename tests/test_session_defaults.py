@@ -1,0 +1,39 @@
+"""``get_spark``'s driver-heap default derives from host memory, so a
+default session fits the machine it starts on.  No SparkSession
+needed."""
+
+from __future__ import annotations
+
+from ecommerce_data_engineering_spark.session import default_driver_memory
+
+
+def _meminfo(tmp_path, text: str) -> str:
+    p = tmp_path / "meminfo"
+    p.write_text(text)
+    return str(p)
+
+
+def test_half_of_memtotal_in_whole_gib(tmp_path):
+    # a 15 GiB host (MemTotal in kB) gets a 7g heap, not 48g
+    info = _meminfo(tmp_path, "MemTotal:       15728640 kB\n"
+                              "MemFree:         1000000 kB\n")
+    assert default_driver_memory(info) == "7g"
+    info = _meminfo(tmp_path, "MemFree: 1 kB\nMemTotal: 268435456 kB\n")
+    assert default_driver_memory(info) == "128g"
+
+
+def test_floor_is_one_gib(tmp_path):
+    info = _meminfo(tmp_path, "MemTotal: 1048576 kB\n")
+    assert default_driver_memory(info) == "1g"
+    # unreadable or MemTotal-less meminfo falls back to the floor
+    assert default_driver_memory(str(tmp_path / "missing")) == "1g"
+    assert default_driver_memory(_meminfo(tmp_path, "MemFree: 5 kB\n")) == "1g"
+
+
+def test_host_default_fits_host():
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(l.split()[1]) for l in f
+                         if l.startswith("MemTotal:"))
+    heap_gib = int(default_driver_memory()[:-1])
+    # at most half the host, unless the 1g floor applies
+    assert heap_gib == 1 or heap_gib * 2 * 1024 * 1024 <= total_kib
