@@ -43,14 +43,6 @@ def minhash_params(num_hashes: int) -> list[tuple[int, int]]:
             for i in range(num_hashes)]
 
 
-def minhash_base(token_col: Column | str) -> Column:
-    """28-bit integer digest of a token: first 7 hex chars of ONE md5.
-    DuckDB twin: ``CAST(('0x' || substring(md5(tok), 1, 7)) AS
-    BIGINT)`` — bit-identical."""
-    c = F.col(token_col) if isinstance(token_col, str) else token_col
-    return F.conv(F.substring(F.md5(c), 1, 7), 16, 10).cast("long")
-
-
 def minhash_cols(token_col: str, num_hashes: int) -> list[Column]:
     """One aggregate column per hash function:
     min((a_i·md5_28(tok) + b_i) mod P).

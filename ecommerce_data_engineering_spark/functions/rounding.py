@@ -59,10 +59,6 @@ def dsum_sql(expr: str, scale: int = 2) -> str:
     return f"CAST(sum(CAST(({expr}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
-def davg_sql(expr: str, scale: int = 2) -> str:
-    return f"({dsum_sql(expr, scale)} / count({expr}))"
-
-
 # ---------------------------------------------------------------------------
 # Scaled-long exact aggregation — the fast path for fixed-point money.
 #

@@ -277,20 +277,12 @@ def pipeline_dag(spark, raw: Mapping[str, Any], as_of: str,
 
     # --- warehouse (warehouse_dag.py:493-563) ---
     d.task("transform_customers_dimension",
-           lambda r: P._attach_surrogate(
-               P.build_dim_customers(
-                   r["load_customers_to_staging"],
-                   P._drop_if_present(prior.get("dim_customers"),
-                                      "customer_key"), as_of),
-               prior.get("dim_customers"), "customer_id", "customer_key"),
+           lambda r: P.build_dim_customers(r["load_customers_to_staging"],
+                                           prior.get("dim_customers"), as_of),
            upstream=("load_customers_to_staging", "validate_staging_data"))
     d.task("transform_products_dimension",
-           lambda r: P._attach_surrogate(
-               P.build_dim_products(
-                   r["load_products_to_staging"],
-                   P._drop_if_present(prior.get("dim_products"),
-                                      "product_key"), as_of),
-               prior.get("dim_products"), "product_id", "product_key"),
+           lambda r: P.build_dim_products(r["load_products_to_staging"],
+                                          prior.get("dim_products"), as_of),
            upstream=("load_products_to_staging", "validate_staging_data"))
     d.task("load_time_dimension",
            lambda r: P.build_dim_time(r["load_orders_to_staging"],
@@ -352,6 +344,12 @@ def pipeline_dag(spark, raw: Mapping[str, Any], as_of: str,
            lambda r: P.build_customer_acquisition(
                r["transform_customers_dimension"], r["load_orders_fact"]),
            upstream=("create_daily_sales_summary",))
+    # analytics_dag.py:325-328: attribution is the one soft-fail task.
+    # DataFrames are lazy, so the soft fail can only catch ANALYSIS-time
+    # failures (missing campaign columns/table — the reference's actual
+    # soft-fail cause); an execution-time failure surfaces at the
+    # consumer's action like any other table's would.  Consumers needing
+    # a hard guarantee should eagerly materialize inside their own guard.
     d.task("create_campaign_attribution",
            lambda r: P.build_campaign_attribution(
                r["create_daily_sales_summary"],
@@ -387,3 +385,27 @@ def pipeline_dag(spark, raw: Mapping[str, Any], as_of: str,
     d.task("validate_analytics_data", _validate_analytics,
            upstream=("create_business_summary_views",))
     return d
+
+
+def pipeline_tables(runs: Mapping[str, TaskRun]) -> dict[str, Any]:
+    """The 19 reference tables (PAPER.md §1.1) from the task results of
+    a ``pipeline_dag`` run with no hard failure; a soft-failed
+    ``campaign_attribution`` reads None."""
+    r = {n: run.result for n, run in runs.items()}
+    return {
+        "dim_customers": r["transform_customers_dimension"],
+        "dim_products": r["transform_products_dimension"],
+        "dim_time": r["load_time_dimension"],
+        "dim_campaigns": r["load_marketing_campaigns_dimension"],
+        "fact_orders": r["load_orders_fact"],
+        "fact_order_items": r["load_order_items_fact"],
+        "fact_clickstream": r["load_clickstream_fact"],
+        "fact_inventory": r["load_inventory_fact"],
+        "customer_metrics": r["create_customer_metrics"],
+        "product_metrics": r["create_product_metrics"],
+        "daily_sales": r["create_daily_sales_summary"],
+        "monthly_trends": r["create_monthly_trends"],
+        "customer_acquisition": r["create_customer_acquisition_analysis"],
+        "campaign_attribution": r["create_campaign_attribution"],
+        **r["create_business_summary_views"],
+    }

@@ -3,9 +3,10 @@ the e-commerce schema, DECIMAL money preserved (SURVEY.md §3).
 
 This is the fidelity layer: each function reproduces one Airflow task
 of the reference (staging_dag.py / warehouse_dag.py / analytics_dag.py)
-as a DataFrame build.  The Airflow task graph collapses into plain
-function ordering inside one SparkSession (SURVEY.md §3.4); the
-documented quirks (§7.4.5) are replicated and cited inline.
+as a DataFrame build.  ``orchestration.pipeline_dag`` is the one task
+graph that wires them; ``run_pipeline`` runs it inside one SparkSession
+(SURVEY.md §3.4).  The documented quirks (§7.4.5) are replicated and
+cited inline.
 
 Scale posture: dims broadcast; facts shuffle once on their join key;
 every analytics table is a single groupBy; campaign attribution uses
@@ -24,6 +25,7 @@ from .operators.range_join import range_join
 from .operators.scd2 import scd2_merge
 from .operators.upsert import keyed_upsert
 from . import quality as Q
+from .orchestration import State, pipeline_dag, pipeline_tables
 
 # ---------------------------------------------------------------- staging
 
@@ -68,13 +70,46 @@ def staging_quality(staged: dict[str, DataFrame]) -> list[Q.CheckResult]:
 # -------------------------------------------------------------- warehouse
 
 
-def _empty_dim(staging: DataFrame, key: str, attrs: list[str],
-               as_of: str) -> DataFrame:
-    """Initial SCD2 load: every staged row becomes a current version."""
-    return (staging.select(key, *attrs)
-            .withColumn("effective_date", F.lit(as_of).cast("date"))
-            .withColumn("expiry_date", F.lit("9999-12-31").cast("date"))
-            .withColumn("is_current", F.lit(True)))
+def _attach_surrogate(dim: DataFrame, prior_dim: DataFrame | None,
+                      natural_key: str, surrogate: str) -> DataFrame:
+    """Join the durable key mapping onto every version row of the dim
+    (all versions of a natural key share one surrogate — SERIAL
+    parity).  Prior keys are reused verbatim; only first-seen keys get
+    new values (max prior + row_number over the new keys alone)."""
+    from .operators.keys import surrogate_mapping
+
+    prior_map = (prior_dim.select(natural_key, surrogate).distinct()
+                 if prior_dim is not None and surrogate in prior_dim.columns
+                 else None)
+    mapping = surrogate_mapping(dim, natural_key, surrogate, prior_map)
+    # null-safe attach: surrogate_mapping deliberately gives a NULL
+    # natural key a durable surrogate; a plain equi-join would drop
+    # that dim row here (NULL = NULL is never true)
+    m = mapping.select(F.col(natural_key).alias("__nk"), surrogate)
+    return (dim.join(m, F.col(natural_key).eqNullSafe(F.col("__nk")))
+            .drop("__nk"))
+
+
+def _scd2_dim(snapshot: DataFrame, prior: DataFrame | None, key: str,
+             surrogate: str, tracked: list[str], as_of: str) -> DataFrame:
+    """SCD2 versions of ``snapshot`` carrying the durable surrogate key.
+
+    No ``prior`` is the initial load: every staged row becomes a current
+    version.  Otherwise the merge runs on the attribute columns only
+    (the stored key is stripped from ``prior`` so it isn't mistaken for
+    a tracked attr).  Then the key mapping is re-attached: prior keys
+    verbatim, new natural keys get max(prior)+row_number(new) — facts
+    retained by the M2 upsert keep resolving to the same dim rows run
+    over run."""
+    if prior is None:
+        dim = (snapshot
+               .withColumn("effective_date", F.lit(as_of).cast("date"))
+               .withColumn("expiry_date", F.lit("9999-12-31").cast("date"))
+               .withColumn("is_current", F.lit(True)))
+    else:
+        dim = scd2_merge(prior.drop(surrogate), snapshot, key,
+                         tracked=tracked, as_of_date=as_of)
+    return _attach_surrogate(dim, prior, key, surrogate)
 
 
 def build_dim_customers(staged: DataFrame, prior: DataFrame | None,
@@ -82,24 +117,23 @@ def build_dim_customers(staged: DataFrame, prior: DataFrame | None,
     """warehouse_dag.py:31-92 — SCD2 on segment/city/country; full_name
     via null-propagating `||` concat (P6: PG `first || ' ' || last`
     yields NULL if either side is NULL — F.concat matches; concat_ws
-    would skip NULLs, a documented semantic difference, SURVEY §2.2)."""
-    attrs = ["full_name", "email", "customer_segment", "city", "country",
-             "registration_date"]
+    would skip NULLs, a documented semantic difference, SURVEY §2.2).
+    ``prior`` is yesterday's keyed dim; the result carries
+    ``customer_key``."""
     snapshot = (staged.withColumn(
         "full_name",
         F.concat(F.col("first_name"), F.lit(" "), F.col("last_name")))
-        .select("customer_id", *attrs))
-    if prior is None:
-        return _empty_dim(snapshot, "customer_id", attrs, as_of)
-    return scd2_merge(prior, snapshot, "customer_id",
-                      tracked=["customer_segment", "city", "country"],
-                      as_of_date=as_of)
+        .select("customer_id", "full_name", "email", "customer_segment",
+                "city", "country", "registration_date"))
+    return _scd2_dim(snapshot, prior, "customer_id", "customer_key",
+                     ["customer_segment", "city", "country"], as_of)
 
 
 def build_dim_products(staged: DataFrame, prior: DataFrame | None,
                        as_of: str = AS_OF_DATE) -> DataFrame:
     """warehouse_dag.py:94-153 — SCD2 on cost/sell/is_active, plus the
-    profit-margin projection (P12/P13, warehouse_dag.py:128)."""
+    profit-margin projection (P12/P13, warehouse_dag.py:128).  ``prior``
+    is yesterday's keyed dim; the result carries ``product_key``."""
     margin = F.when(
         F.col("selling_price") > 0,
         F.round((F.col("selling_price") - F.col("cost_price"))
@@ -110,12 +144,8 @@ def build_dim_products(staged: DataFrame, prior: DataFrame | None,
                 .select("product_id", "product_name", "category", "brand",
                         "cost_price", "selling_price", "profit_margin",
                         "is_active"))
-    attrs = [c for c in snapshot.columns if c != "product_id"]
-    if prior is None:
-        return _empty_dim(snapshot, "product_id", attrs, as_of)
-    return scd2_merge(prior, snapshot, "product_id",
-                      tracked=["cost_price", "selling_price", "is_active"],
-                      as_of_date=as_of)
+    return _scd2_dim(snapshot, prior, "product_id", "product_key",
+                     ["cost_price", "selling_price", "is_active"], as_of)
 
 
 def build_dim_time(orders_staged: DataFrame,
@@ -144,44 +174,11 @@ def build_dim_time(orders_staged: DataFrame,
     return insert_if_absent(prior, fresh, "time_key")
 
 
-def _surrogate(dim: DataFrame, natural_key: str, surrogate: str) -> DataFrame:
-    """P20: surrogate keys for current dim rows.
-
-    Dims built by ``run_pipeline`` carry a DURABLE stored key column
-    (operators/keys.surrogate_mapping — assigned at first sight, never
-    recomputed), so this is just the current-row filter.  The
-    row_number fallback serves standalone single-run callers only; in
-    an incremental pipeline it would reassign keys when the key set's
-    sort order shifts (reference SERIAL semantics forbid that)."""
-    if surrogate in dim.columns:
-        return dim.filter(F.col("is_current"))
-    w = Window.orderBy(natural_key)
-    return (dim.filter(F.col("is_current"))
-            .withColumn(surrogate, F.row_number().over(w)))
-
-
-def _attach_surrogate(dim: DataFrame, prior_dim: DataFrame | None,
-                      natural_key: str, surrogate: str) -> DataFrame:
-    """Join the durable key mapping onto every version row of the dim
-    (all versions of a natural key share one surrogate — SERIAL
-    parity).  Prior keys are reused verbatim; only first-seen keys get
-    new values (max prior + row_number over the new keys alone)."""
-    from .operators.keys import surrogate_mapping
-
-    prior_map = (prior_dim.select(natural_key, surrogate).distinct()
-                 if prior_dim is not None and surrogate in prior_dim.columns
-                 else None)
-    mapping = surrogate_mapping(dim, natural_key, surrogate, prior_map)
-    # null-safe attach: surrogate_mapping deliberately gives a NULL
-    # natural key a durable surrogate; a plain equi-join would drop
-    # that dim row here (NULL = NULL is never true)
-    m = mapping.select(F.col(natural_key).alias("__nk"), surrogate)
-    return (dim.join(m, F.col(natural_key).eqNullSafe(F.col("__nk")))
-            .drop("__nk"))
-
-
-def _drop_if_present(df: DataFrame | None, col: str) -> DataFrame | None:
-    return df.drop(col) if df is not None and col in df.columns else df
+def _current(dim: DataFrame) -> DataFrame:
+    """P20: the current dim rows.  Every dim carries its DURABLE stored
+    key column (operators/keys.surrogate_mapping — assigned at first
+    sight, never recomputed), so facts resolve against it directly."""
+    return dim.filter(F.col("is_current"))
 
 
 def build_fact_orders(orders_staged: DataFrame, dim_customers: DataFrame,
@@ -190,7 +187,7 @@ def build_fact_orders(orders_staged: DataFrame, dim_customers: DataFrame,
     dim rows (J1/J4), smart date key (P8), profit = total−tax−shipping
     (P12), `total_items = 1` hardcode (quirk, warehouse_dag.py:224),
     idempotent keyed upsert (M2)."""
-    dim = _surrogate(dim_customers, "customer_id", "customer_key")
+    dim = _current(dim_customers)
     fact = (
         orders_staged.join(F.broadcast(dim.select("customer_id", "customer_key")),
                            "customer_id")
@@ -214,7 +211,7 @@ def build_fact_order_items(items_staged: DataFrame, fact_orders: DataFrame,
                            prior: DataFrame | None = None) -> DataFrame:
     """warehouse_dag.py:247-273 (J2 multi-way): items resolve order facts
     + current products; item profit = (price − cost) × qty (P12)."""
-    dimp = _surrogate(dim_products, "product_id", "product_key")
+    dimp = _current(dim_products)
     fact = (
         items_staged
         .join(fact_orders.select("order_id", "customer_key", "order_date_key"),
@@ -240,10 +237,8 @@ def build_fact_clickstream(click_staged: DataFrame,
     NULL keys out of the shuffle entirely."""
     from .operators.skew import null_safe_left_join
 
-    dimc = _surrogate(dim_customers, "customer_id", "customer_key") \
-        .select("customer_id", "customer_key")
-    dimp = _surrogate(dim_products, "product_id", "product_key") \
-        .select("product_id", "product_key")
+    dimc = _current(dim_customers).select("customer_id", "customer_key")
+    dimp = _current(dim_products).select("product_id", "product_key")
     fact = null_safe_left_join(click_staged, dimc, "customer_id")
     fact = null_safe_left_join(fact, dimp, "product_id")
     return fact.select(
@@ -257,8 +252,7 @@ def build_fact_clickstream(click_staged: DataFrame,
 def build_fact_inventory(inventory_staged: DataFrame,
                          dim_products: DataFrame) -> DataFrame:
     """warehouse_dag.py:296-340: full-refresh inventory fact (M3)."""
-    dimp = _surrogate(dim_products, "product_id", "product_key") \
-        .select("product_id", "product_key")
+    dimp = _current(dim_products).select("product_id", "product_key")
     return (inventory_staged.join(F.broadcast(dimp), "product_id")
             .select("inventory_id", "product_key", "warehouse_location",
                     "current_stock", "reserved_stock",
@@ -276,11 +270,11 @@ def build_dim_campaigns(campaigns_staged: DataFrame) -> DataFrame:
 def warehouse_quality(fact_orders: DataFrame,
                       dim_customers: DataFrame) -> list[Q.CheckResult]:
     """warehouse_dag.py:462-488: current-row count + orphan FK check."""
-    current = dim_customers.filter("is_current")
+    current = _current(dim_customers)
     return [
         Q.check_row_count(current, 1, "dim_customers_current"),
         Q.check_referential(
-            fact_orders, _surrogate(dim_customers, "customer_id", "customer_key"),
+            fact_orders, current,
             "customer_key", "customer_key", "fact_orders→dim_customers"),
     ]
 
@@ -291,7 +285,7 @@ def warehouse_quality(fact_orders: DataFrame,
 def build_customer_metrics(dim_customers: DataFrame, fact_orders: DataFrame,
                            as_of: str = AS_OF_DATE) -> DataFrame:
     """analytics_dag.py:44-69: per-customer rollup + churn tiers."""
-    dim = _surrogate(dim_customers, "customer_id", "customer_key")
+    dim = _current(dim_customers)
     as_of_c = F.lit(as_of).cast("date")
     last_dk = F.max("order_date_key")
     last_date = F.to_date(last_dk.cast("string"), "yyyyMMdd")
@@ -322,7 +316,7 @@ def build_product_metrics(dim_products: DataFrame, fact_items: DataFrame,
                           inventory_staged: DataFrame) -> DataFrame:
     """analytics_dag.py:85-122 with the CTE total_inventory (A6) and the
     PG truncating integer division (P21 — floor, §7.4.4)."""
-    dimp = _surrogate(dim_products, "product_id", "product_key")
+    dimp = _current(dim_products)
     total_inv = (inventory_staged.groupBy("product_id")
                  .agg(F.sum("current_stock").alias("total_stock")))
     sales = (fact_items.groupBy("product_key")
@@ -386,7 +380,7 @@ def build_customer_acquisition(dim_customers: DataFrame,
                                fact_orders: DataFrame) -> DataFrame:
     """analytics_dag.py:236-268: first-order CTE (A6) with the
     first_order_value = MIN(total_amount) quirk (§7.4.5)."""
-    dim = _surrogate(dim_customers, "customer_id", "customer_key")
+    dim = _current(dim_customers)
     first_order = (
         fact_orders.groupBy("customer_key")
         .agg(F.min(F.to_date(F.col("order_date_key").cast("string"), "yyyyMMdd"))
@@ -411,8 +405,8 @@ def build_customer_acquisition(dim_customers: DataFrame,
 def build_campaign_attribution(daily_sales: DataFrame,
                                campaigns_staged: DataFrame) -> DataFrame:
     """analytics_dag.py:296-316 (J7 BETWEEN range join; campaign side
-    broadcast).  Soft-fails upstream per the reference (§7.4.5 — the
-    caller wraps in try/except)."""
+    broadcast).  ``pipeline_dag`` runs it as the one soft-fail task, per
+    the reference (§7.4.5)."""
     joined = range_join(daily_sales, campaigns_staged.select(
         "campaign_id", "campaign_name", "channel", "start_date", "end_date"),
         "sales_date", "start_date", "end_date")
@@ -491,82 +485,14 @@ def build_executive_summary(fact_orders: DataFrame,
 def run_pipeline(spark: SparkSession, raw: dict[str, DataFrame],
                  as_of: str = AS_OF_DATE,
                  prior: dict[str, DataFrame] | None = None) -> dict[str, DataFrame]:
-    """staging → warehouse → analytics, mirroring the reference's DAG
-    ordering (SURVEY.md §3.2-3.3).  ``prior`` carries yesterday's dims/
-    facts for the incremental path (SCD2 + M2 upsert); None = initial
-    load.  Campaign attribution soft-fails like the reference."""
-    prior = prior or {}
-
-    staged = {
-        "customers": stage_customers(raw["customers"]),
-        "products": stage_products(raw["products"]),
-        "orders": stage_orders(raw["orders"]),
-        "order_items": raw["order_items"],
-        "inventory": raw["inventory"],
-        "marketing_campaigns": raw["marketing_campaigns"],
-        "clickstream": raw["clickstream"],
-    }
-    staging_quality(staged)
-
-    # SCD2 merge runs on the attribute columns only (the stored key is
-    # stripped from `prior` so it isn't mistaken for a tracked attr),
-    # then the durable key mapping is re-attached: prior keys verbatim,
-    # new natural keys get max(prior)+row_number(new) — facts retained
-    # by the M2 upsert keep resolving to the same dim rows run over run.
-    dim_customers = _attach_surrogate(
-        build_dim_customers(staged["customers"],
-                            _drop_if_present(prior.get("dim_customers"),
-                                             "customer_key"), as_of),
-        prior.get("dim_customers"), "customer_id", "customer_key")
-    dim_products = _attach_surrogate(
-        build_dim_products(staged["products"],
-                           _drop_if_present(prior.get("dim_products"),
-                                            "product_key"), as_of),
-        prior.get("dim_products"), "product_id", "product_key")
-    dim_time = build_dim_time(staged["orders"], prior.get("dim_time"))
-    fact_orders = build_fact_orders(staged["orders"], dim_customers,
-                                    prior.get("fact_orders"))
-    fact_order_items = build_fact_order_items(
-        staged["order_items"], fact_orders, dim_products,
-        prior.get("fact_order_items"))
-    warehouse_quality(fact_orders, dim_customers)
-
-    daily_sales = build_daily_sales(fact_orders)
-    customer_metrics = build_customer_metrics(dim_customers, fact_orders, as_of)
-    product_metrics = build_product_metrics(dim_products, fact_order_items,
-                                            staged["inventory"])
-    customer_acquisition = build_customer_acquisition(dim_customers, fact_orders)
-    out = {
-        "dim_customers": dim_customers,
-        "dim_products": dim_products,
-        "dim_time": dim_time,
-        "dim_campaigns": build_dim_campaigns(staged["marketing_campaigns"]),
-        "fact_orders": fact_orders,
-        "fact_order_items": fact_order_items,
-        "fact_clickstream": build_fact_clickstream(staged["clickstream"],
-                                                   dim_customers, dim_products),
-        "fact_inventory": build_fact_inventory(staged["inventory"], dim_products),
-        "customer_metrics": customer_metrics,
-        "product_metrics": product_metrics,
-        "daily_sales": daily_sales,
-        "monthly_trends": build_monthly_trends(daily_sales),
-        "customer_acquisition": customer_acquisition,
-        "executive_summary": build_executive_summary(fact_orders, dim_customers),
-        "top_products": build_top_products(product_metrics),
-        "customer_segmentation": build_customer_segmentation(customer_metrics),
-        "seasonal_performance": build_seasonal_performance(daily_sales),
-        "acquisition_summary": build_acquisition_summary(customer_acquisition),
-    }
-    try:
-        # analytics_dag.py:325-328: attribution is the one soft-fail
-        # task.  DataFrames are lazy, so this except can only catch
-        # ANALYSIS-time failures (missing campaign columns/table —
-        # the reference's actual soft-fail cause); an execution-time
-        # failure surfaces at the consumer's action like any other
-        # table's would.  Consumers needing a hard guarantee should
-        # eagerly materialize inside their own guard.
-        out["campaign_attribution"] = build_campaign_attribution(
-            daily_sales, staged["marketing_campaigns"])
-    except Exception:
-        out["campaign_attribution"] = None
-    return out
+    """staging → warehouse → analytics: one run of ``pipeline_dag``
+    (SURVEY.md §3.2-3.3), returning the 19 tables.  ``prior`` carries
+    yesterday's dims/facts for the incremental path (SCD2 + M2 upsert);
+    None = initial load.  A failing task is retried once (the
+    reference's ``retries: 1``), then the first failed task's error is
+    raised; campaign attribution soft-fails to None like the reference."""
+    runs = pipeline_dag(spark, raw, as_of, prior).run()
+    for run in runs.values():
+        if run.state is State.FAILED:
+            raise run.error
+    return pipeline_tables(runs)

@@ -27,7 +27,6 @@ from .registry import query
 # exact decimal forms of the lineitem money expressions
 _DEC_EP = 'CAST(l_extendedprice AS DECIMAL(18,4))'
 _DEC_DISC = 'CAST(1 - l_discount AS DECIMAL(8,4))'
-_DEC_TAX = 'CAST(1 + l_tax AS DECIMAL(8,4))'
 
 
 def _dec_ep():
@@ -36,10 +35,6 @@ def _dec_ep():
 
 def _dec_disc():
     return (F.lit(1) - F.col("l_discount")).cast("decimal(8,4)")
-
-
-def _dec_tax():
-    return (F.lit(1) + F.col("l_tax")).cast("decimal(8,4)")
 
 
 # Scaled-long exact forms (functions/rounding.lsum rationale): integer

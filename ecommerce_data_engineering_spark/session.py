@@ -1,7 +1,8 @@
 """SparkSession factory.
 
-Local-mode defaults are tuned for the test harness (local[32], single
-JVM); the same builder flags are what we would ship on a real cluster —
+Local-mode defaults fit the host: one JVM with ``SPARK_GRAFT_CPUS``
+cores (else every host core) and a driver heap from ``driver_memory``.
+The same builder flags are what we would ship on a real cluster —
 AQE handles partition coalescing / skew at any scale, UTC pins
 timestamp semantics for oracle comparison, Arrow accelerates the few
 pandas-UDF extension operators.
@@ -25,6 +26,13 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     except (OSError, StopIteration, ValueError, IndexError):
         kib = 0
     return f"{max(1, kib // 2 // (1024 * 1024))}g"
+
+
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_DRIVER_MEMORY`` if set, else the host
+    default.  Every session this repo builds, scripts included, takes
+    its heap from here."""
+    return os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
 
 def get_spark(app_name: str = "ecommerce_data_engineering_spark",
@@ -75,8 +83,7 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which

@@ -172,11 +172,11 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.session import driver_memory
 
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

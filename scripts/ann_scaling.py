@@ -39,7 +39,7 @@ n_train so the wall numbers are attributable.
     python scripts/make_clustered_fixture.py /tmp/sf_clustered 2000
     python scripts/make_clustered_fixture.py /tmp/sf_clustered16x 32000
     python scripts/make_clustered_fixture.py /tmp/sf_clustered64x 128000
-    SPARK_DRIVER_MEMORY=24g python scripts/ann_scaling.py
+    python scripts/ann_scaling.py
 """
 
 from __future__ import annotations
@@ -94,12 +94,12 @@ def main() -> None:
     from ecommerce_data_engineering_spark.plans import REGISTRY
     from ecommerce_data_engineering_spark.plans.extensions import (
         ANN_QUERY_LIMIT, PROD_TRAIN_ITERS)
+    from ecommerce_data_engineering_spark.session import driver_memory
     from ecommerce_data_engineering_spark.sources.readers import load
 
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -42,12 +42,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from ecommerce_data_engineering_spark.session import driver_memory
+
     spark = (SparkSession.builder.master(
                 f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.sql.warehouse.dir", warehouse)
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     # AQE off for this bench (ADVICE r7): the assert below counts

@@ -21,7 +21,7 @@ allUpdatesTimeMs), so the artifact names the cause with numbers
 instead of a hypothesis.
 
     python scripts/make_scaled_fixture.py /tmp/sf_64x 64
-    SPARK_DRIVER_MEMORY=24g python scripts/diag_rocksdb_countjoin.py
+    python scripts/diag_rocksdb_countjoin.py
 """
 
 from __future__ import annotations
@@ -60,6 +60,7 @@ def main() -> None:
 
     from ecommerce_data_engineering_spark.loadctx import (
         busy_fraction, load_snapshot)
+    from ecommerce_data_engineering_spark.session import driver_memory
     from ecommerce_data_engineering_spark.sources import load
     from ecommerce_data_engineering_spark.streaming.events import (
         run_stream_to_memory)
@@ -72,8 +73,7 @@ def main() -> None:
     spark = (SparkSession.builder.master(
                 f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
              .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.sql.streaming.numRecentProgressUpdates",
                      str(4 * n_files + 64))
              .config("spark.ui.enabled", "false").getOrCreate())

@@ -57,6 +57,7 @@ from ecommerce_data_engineering_spark.operators import packing as PK  # noqa: E4
 from ecommerce_data_engineering_spark.operators import text as X  # noqa: E402
 from ecommerce_data_engineering_spark.plans.curation import (  # noqa: E402
     PACK_BUDGET, PACK_SEED)
+from ecommerce_data_engineering_spark.session import driver_memory  # noqa: E402
 from ecommerce_data_engineering_spark.sources.readers import load  # noqa: E402
 
 REPS = 3
@@ -67,8 +68,7 @@ def _session(app: str, **conf) -> SparkSession:
     b = (SparkSession.builder.master("local[32]")
          .config("spark.sql.shuffle.partitions", "32")
          .config("spark.ui.enabled", "true")
-         .config("spark.driver.memory",
-                 os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+         .config("spark.driver.memory", driver_memory())
          .appName(app))
     for k, v in conf.items():
         b = b.config(k, v)

@@ -13,7 +13,6 @@
 # so derived fixtures must be rebuilt before any sweep that reads them.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-export SPARK_DRIVER_MEMORY="${SPARK_DRIVER_MEMORY:-24g}"
 
 # commit-time guard (VERDICT r8 #1): make sure the pre-commit hook that
 # re-asserts evidence freshness is installed in this checkout, so a

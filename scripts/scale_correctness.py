@@ -107,6 +107,7 @@ def main() -> None:
 
     from oracle import DigestUnsupported, compare, digest_compare, duckdb_run
     from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.session import driver_memory
 
     # 4x-sf0.1 pair-emitting queries need real executor heap (the 1g
     # JVM default OOMs on the ~1.2M-pair simhash/jaccard volume the
@@ -114,8 +115,7 @@ def main() -> None:
     # executor memory the cluster manager provides.
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -131,6 +131,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from ecommerce_data_engineering_spark.session import driver_memory
     from ecommerce_data_engineering_spark.sources import load
     from ecommerce_data_engineering_spark.streaming.source import (
         stream_events_dir)
@@ -138,8 +139,7 @@ def main() -> None:
     spark = (SparkSession.builder.master(
                 f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
              .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+             .config("spark.driver.memory", driver_memory())
              # the progress ring buffer must outlast the feed or early
              # batches silently vanish from the metrics (ADVICE r6;
              # run_stream_to_memory now refuses a full buffer)

@@ -94,7 +94,8 @@ def test_soft_fail_lets_downstream_proceed():
     runs = d.run()
     assert runs["attribution"].state is State.SOFT_FAILED
     assert runs["views"].state is State.SUCCESS
-    # soft-failed result surfaces as None, like run_pipeline's except-leg
+    # soft-failed result surfaces as None, like run_pipeline's
+    # campaign_attribution
     assert runs["views"].result is None
 
 

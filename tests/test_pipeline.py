@@ -236,6 +236,31 @@ def test_pipeline_tolerates_empty_orders(spark):
     assert cm.filter(F.col("churn_risk") != "No Orders").count() == 0
 
 
+def test_pipeline_raises_warehouse_quality_error(spark):
+    """A hard warehouse check failing fails the run: no current customer
+    rows raises QualityError naming the check (warehouse_dag.py:462-488)."""
+    from ecommerce_data_engineering_spark.quality import QualityError
+
+    raw = generate_ecommerce(spark, scale=0.02)
+    raw["customers"] = raw["customers"].limit(0)
+    with pytest.raises(QualityError, match="dim_customers_current"):
+        run_pipeline(spark, raw, as_of=AS_OF)
+
+
+def test_campaign_attribution_soft_fails(spark):
+    """analytics_dag.py:325-328: attribution is the one soft-fail table.
+    A campaign feed without ``channel`` leaves it None and every other
+    table built."""
+    raw = generate_ecommerce(spark, scale=0.02)
+    raw["marketing_campaigns"] = raw["marketing_campaigns"].drop("channel")
+    out = run_pipeline(spark, raw, as_of=AS_OF)
+    assert out["campaign_attribution"] is None
+    others = {k: v for k, v in out.items() if k != "campaign_attribution"}
+    assert len(others) == 18
+    assert all(v is not None for v in others.values())
+    assert out["daily_sales"].count() > 0
+
+
 def test_materialize_partitioned_facts_roundtrip(spark, tables, tmp_path):
     """Close the S4/S5 loop with real pipeline data: write fact_orders
     month-partitioned, read back, verify counts and partition pruning."""

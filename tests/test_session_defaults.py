@@ -1,10 +1,17 @@
 """``get_spark``'s driver-heap default derives from host memory, so a
-default session fits the machine it starts on.  No SparkSession
-needed."""
+default session fits the machine it starts on, and every script takes
+its heap from the same rule.  No SparkSession needed."""
 
 from __future__ import annotations
 
-from ecommerce_data_engineering_spark.session import default_driver_memory
+import os
+import re
+
+from ecommerce_data_engineering_spark.session import (
+    default_driver_memory, driver_memory)
+
+SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "scripts")
 
 
 def _meminfo(tmp_path, text: str) -> str:
@@ -37,3 +44,25 @@ def test_host_default_fits_host():
     heap_gib = int(default_driver_memory()[:-1])
     # at most half the host, unless the 1g floor applies
     assert heap_gib == 1 or heap_gib * 2 * 1024 * 1024 <= total_kib
+
+
+def test_env_overrides_host_default(monkeypatch):
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert driver_memory() == "3g"
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY")
+    assert driver_memory() == default_driver_memory()
+
+
+def test_no_script_hardcodes_a_heap_default():
+    """A script's own ``"24g"`` default (Python ``environ.get`` or shell
+    ``${...:-24g}``) would outgrow a smaller host; scripts call
+    ``session.driver_memory()`` instead."""
+    literal = re.compile(r'SPARK_DRIVER_MEMORY(?:"\s*,\s*"|:-)\d+[gGmM]')
+    offenders = []
+    for root, _, files in os.walk(SCRIPTS):
+        for name in files:
+            path = os.path.join(root, name)
+            with open(path, errors="replace") as f:
+                if literal.search(f.read()):
+                    offenders.append(os.path.relpath(path, SCRIPTS))
+    assert not offenders, offenders
