@@ -86,6 +86,16 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache sized to the registry's working set.
+        # Spark's default LRU keeps 100 classes, but one pass over the 13
+        # dashboard queries generates ~190, so every repeat recompiled
+        # its code (and re-JITted it).  One pass over all 120 registered
+        # queries at sf0.001 with an unbounded cache compiles ~1.38k
+        # distinct classes; 2048 holds them all, for ~10 MB more
+        # metaspace.  Static and JVM-wide: the CodeGenerator cache is
+        # built once, from the session that first generates code, so it
+        # cannot be changed per session.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which
         # Spark's vectorized reader rejects; read as long and convert
         # (sources/readers.py handles the cast back to timestamp)
