@@ -96,6 +96,25 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         # built once, from the session that first generates code, so it
         # cannot be changed per session.
         .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # Streaming checkpoint files (offset/commit logs, source logs,
+        # one state-store delta per stateful partition per epoch) commit
+        # by writing a temp file and renaming it.  Spark's default
+        # FileContext-based manager renames through
+        # AbstractFileSystem.renameInternal, which resolves symlinks via
+        # FileUtil.readLink; pip-installed pyspark loads no libhadoop
+        # (NativeIO is unavailable), so every rename forks `readlink`
+        # twice.  The FileSystem-based manager renames through
+        # FileSystem.rename, which on the local filesystem is
+        # File.renameTo: one atomic rename(2) and no fork — atomicity is
+        # the property the checkpoint commit needs.  get_spark only
+        # builds local[N] masters; a cluster on HDFS or an object store
+        # picks its own manager.  Spark's checkpoint checksum files and
+        # Hadoop's .crc files are written as before.  A runtime SQL
+        # conf, read from the session's Hadoop conf when each query
+        # starts.
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
         # the driver fixtures store events.ts as TIMESTAMP(NANOS), which
         # Spark's vectorized reader rejects; read as long and convert
         # (sources/readers.py handles the cast back to timestamp)
