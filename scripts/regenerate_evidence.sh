@@ -5,9 +5,9 @@
 # single-node DuckDB oracles dominate; Spark is never the bottleneck).
 # Measurement steps (4-5) need an OTHERWISE IDLE box: concurrent sweeps
 # poison their timings (correctness sweeps 1-3 only cost wall time).
-# SCALE_BENCH.json and the BENCH_CONSEC_r*.json pairs are frozen
-# records: the harness that produced them is retired (last present at
-# commit 767b712) and perfbench/run.py is the repo's benchmark.
+# The legacy bench harness is retired (last present at commit 767b712)
+# and its records with it (last present at commit 5c22305);
+# perfbench/run.py is the repo's benchmark.
 #
 # Fixture derivation first — driver testdata regenerates every round,
 # so derived fixtures must be rebuilt before any sweep that reads them.

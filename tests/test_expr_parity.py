@@ -4,11 +4,11 @@ stay CANONICALLY IDENTICAL to the original Column-API form —
 ``DataFrame.sameSemantics`` compares canonicalized logical plans, so
 True guarantees identical results AND identical physical plans.
 
-Why the rewrite exists (OPTIMIZATION_r11: the py4j boundary at plan
-construction): each Python-lambda higher-order function costs dozens
-of py4j round-trips when the plan is BUILT, and bench timing includes
-construction — plan construction was ~1/3 of the sf0.1 bench wall.
-One F.expr parse is one round-trip.  The reference implementations
+Why the rewrite exists (OPTIMIZATION_r11.md, last present at commit
+5c22305: the py4j boundary at plan construction): each Python-lambda
+higher-order function costs dozens of py4j round-trips when the plan
+is BUILT, and bench timing includes construction — plan construction
+was ~1/3 of the sf0.1 bench wall.  One F.expr parse is one round-trip.  The reference implementations
 below are the pre-rewrite Column-API forms, kept verbatim so a drift
 in either spelling fails loudly.
 """

@@ -1,7 +1,10 @@
 """Every ``scripts/<name>.py|.sh`` that the run instructions name must
 exist, so deleting a script without updating its callers fails here
-rather than at the next evidence regeneration.  No SparkSession
-needed."""
+rather than at the next evidence regeneration.  Likewise every evidence
+record (``<NAME>.json``) that the docs cite must exist under
+``evidence/`` or at the repo root: ``scripts/check_scale_evidence.py``
+only asserts the other direction (an existing record is cited).  No
+SparkSession needed."""
 
 from __future__ import annotations
 
@@ -14,6 +17,10 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DOCS = ("README.md", ".claude/skills/verify/SKILL.md",
         "scripts/regenerate_evidence.sh")
 SCRIPT_REF = re.compile(r"\bscripts/[A-Za-z0-9_]+\.(?:py|sh)\b")
+RECORD_DOCS = ("README.md", "SCALE.md", ".claude/skills/verify/SKILL.md")
+# a concrete record name; templates such as SCALE_SWEEP_seed{1,2,3}.json
+# or SCALE_SWEEP*.json do not match
+RECORD_REF = re.compile(r"\b[A-Z][A-Za-z0-9_]*\.json\b")
 
 
 @pytest.mark.parametrize("doc", DOCS)
@@ -24,3 +31,15 @@ def test_named_scripts_exist(doc):
     missing = sorted(r for r in refs
                      if not os.path.isfile(os.path.join(HERE, r)))
     assert not missing, f"{doc} names missing scripts: {missing}"
+
+
+@pytest.mark.parametrize("doc", RECORD_DOCS)
+def test_named_records_exist(doc):
+    with open(os.path.join(HERE, doc)) as f:
+        refs = set(RECORD_REF.findall(f.read()))
+    assert refs, f"{doc} names no records; is the pattern still right?"
+    missing = sorted(
+        r for r in refs
+        if not any(os.path.isfile(os.path.join(HERE, d, r))
+                   for d in ("evidence", "")))
+    assert not missing, f"{doc} names missing records: {missing}"
