@@ -489,7 +489,9 @@ def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
     entry is k·d floats (~16 KB at k=32, d=64), so the cost per
     invocation is negligible; one-shot harnesses (the driver's
     per-query loop) bound the accumulation with
-    ``spark.catalog.clearCache()`` between plans.  A LONG-LIVED
+    ``spark.catalog.clearCache()`` between plans (a plan over these
+    persisted steps is never kept in the registry's query memo, so
+    ``clearCache`` frees them for good).  A LONG-LIVED
     service that builds many trained quantizers should instead pass
     ``step_cache`` (any list): every persisted step DataFrame is
     appended to it, and :func:`release_kmeans_steps` unpersists them

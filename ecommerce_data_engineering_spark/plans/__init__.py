@@ -14,7 +14,7 @@ suite (tests/test_oracle_diff.py runs ALL registered queries).
 tests/test_registry_order.py pins both properties.
 """
 
-from .registry import REGISTRY, QuerySpec, query
+from .registry import REGISTRY, QuerySpec, clear_query_memo, query
 
 from . import staging      # noqa: F401  (P1–P5, Q1–Q7)
 from . import dims         # noqa: F401  (dim_time, SCD2)
@@ -218,4 +218,5 @@ def _apply_priority_order() -> None:
 
 _apply_priority_order()
 
-__all__ = ["REGISTRY", "QuerySpec", "query", "DRIVER_WINDOW"]
+__all__ = ["REGISTRY", "QuerySpec", "clear_query_memo", "query",
+           "DRIVER_WINDOW"]

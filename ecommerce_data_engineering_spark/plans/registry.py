@@ -14,14 +14,42 @@ Conventions that keep the driver's hash-compare green:
   HUGEINT needs CAST AS BIGINT; year()/EXTRACT return BIGINT needs
   CAST AS INT to match Spark's IntegerType);
 - queries needing "today" use the pinned AS_OF_DATE (§7.4.1).
+
+Reuse.  ``spec.fn`` memoizes per SparkSession: a call returns the
+DataFrame an earlier call with the same ``(query name, sf_dir)`` built,
+as long as
+- the session's SQL conf equals the conf at the end of that build, and
+- every leaf of the DataFrame's plan, after Spark substitutes cached
+  data, is a file relation that ``sources.readers.load`` returned,
+  each still at the snapshot identity ``(path, mtime_ns)`` it had at
+  build time.
+Any other call builds fresh and replaces the entry, so the memo holds
+at most one entry per (query, dir).  An entry holds the DataFrame, and
+through it the executed plan, its shuffle files and its broadcasts:
+re-executing the same Dataset lets Spark skip every shuffle-map and
+broadcast stage whose output still exists, so a repeat runs only its
+final stage.  The plan itself is unchanged (same file scans, same
+joins).  Queries with a leaf that is not such a file relation — a
+checkpointed RDD, a ``Range``, a sink the query writes itself, data
+persisted with ``persist()`` — or with a subquery expression are
+rebuilt on every call, which keeps their construction side effects.
+Persisted data stays out of the memo because ``clearCache`` cannot
+free it once a kept plan re-executes it: the plan's scan would persist
+its buffers again where the cache manager no longer lists them.
+:func:`clear_query_memo` drops a session's entries, e.g. to time cold
+compute, or to free their shuffle files and broadcasts before moving
+to another input directory.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable, Optional
+import functools
+from dataclasses import dataclass
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.readers import Snapshot, loaded_snapshot, snapshot_id
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -38,15 +66,89 @@ class QuerySpec:
     bench: bool = False            # headline set: scale sweeps + shuffle budgets
 
 
+# Per-SESSION query memo, on the SparkSession OBJECT for the same
+# reason as sources/readers._relation_cache: sessions sharing one
+# application have different SQLConfs, and a DataFrame is bound to the
+# session that built it.
+_MEMO_ATTR = "_egraft_query_memo"
+
+
+@dataclass
+class _Built:
+    df: DataFrame
+    conf: Any                          # JVM Map: the SQL conf after the build
+    snapshots: tuple[Snapshot, ...]
+
+
+def _query_memo(spark: SparkSession) -> dict:
+    # setdefault: concurrent first calls agree on one dict
+    return vars(spark).setdefault(_MEMO_ATTR, {})
+
+
+def clear_query_memo(spark: SparkSession) -> None:
+    """Forget every query this session built; the next calls build
+    fresh plans and recompute every stage."""
+    _query_memo(spark).clear()
+
+
+def _leaf_snapshots(spark: SparkSession,
+                    df: DataFrame) -> Optional[tuple[Snapshot, ...]]:
+    """The snapshot identities of the file relations under ``df``, or
+    ``None`` when ``df`` is not reusable: a subquery expression, or a
+    leaf that is not a relation ``load`` returned (an ``InMemoryRelation``
+    for persisted data among them)."""
+    # the plan the action will execute: Spark fixes its cache
+    # substitution once, so this check and the execution agree
+    plan = df._jdf.queryExecution().withCachedData()
+    pattern = (spark._jvm.org.apache.spark.sql.catalyst.trees
+               .TreePattern.PLAN_EXPRESSION())
+    if plan.containsPattern(pattern):
+        return None
+    leaves = plan.collectLeaves()
+    snapshots = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() != "LogicalRelation":
+            return None
+        snapshot = loaded_snapshot(spark, leaf.relation())
+        if snapshot is None:
+            return None
+        snapshots.add(snapshot)
+    return tuple(snapshots)
+
+
+def _memoized(name: str, fn: QueryFn) -> QueryFn:
+    # No lock: two threads that miss together both build, and the later
+    # write wins — a wasted build, never a stale or wrong DataFrame.
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        memo = _query_memo(spark)
+        key = (name, sf_dir)
+        conf = spark._jsparkSession.conf()
+        built = memo.get(key)
+        if (built is not None and built.conf.equals(conf.getAll())
+                and all(snapshot_id(s[0]) == s for s in built.snapshots)):
+            return built.df
+        df = fn(spark, sf_dir)
+        snapshots = _leaf_snapshots(spark, df)
+        if snapshots is None:
+            memo.pop(key, None)
+        else:
+            memo[key] = _Built(df, conf.getAll(), snapshots)
+        return df
+    return call
+
+
 def query(name: str, oracle: Optional[str] = None, covers: tuple[str, ...] = (),
           bench: bool = False):
-    """Decorator: register a named query with its oracle SQL."""
+    """Decorator: register a named query with its oracle SQL.  The
+    registry holds the memoized call; the module keeps ``fn`` itself."""
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         REGISTRY[name] = QuerySpec(
-            name=name, fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip(),
-            covers=covers, bench=bench,
+            name=name, fn=_memoized(name, fn), oracle=oracle,
+            doc=(fn.__doc__ or "").strip(), covers=covers, bench=bench,
         )
         return fn
     return deco

@@ -16,6 +16,7 @@ reach the scan (check via ``df.explain`` → PushedFilters/ReadSchema).
 from __future__ import annotations
 
 import os
+from typing import Any, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -25,14 +26,14 @@ class MissingColumnsError(ValueError):
     """Raised when a source is missing expected columns (DQ check Q1)."""
 
 
-# Per-SESSION memo of analyzed fixture DataFrames, keyed by
-# (file path, mtime_ns).  ``spark.read.parquet`` re-lists the path and
-# re-reads a footer for schema inference on EVERY call — ~100 ms of
-# per-table JVM work that the 5-way fact builds pay five times per
-# plan construction.  The memo returns the same immutable logical
-# relation (Catalyst still re-optimizes each consuming query from
-# scratch, so this is metadata reuse, not result caching); mtime_ns
-# invalidates regenerated fixtures.  The dict hangs off the
+# Per-SESSION memo of analyzed fixture DataFrames, keyed by the table's
+# snapshot identity ``(file path, mtime_ns)``.  ``spark.read.parquet``
+# re-lists the path and re-reads a footer for schema inference on EVERY
+# call — ~100 ms of per-table JVM work that the 5-way fact builds pay
+# five times per plan construction.  The memo returns the same
+# immutable logical relation (Catalyst still re-optimizes each consuming
+# query from scratch, so this is metadata reuse, not result caching);
+# mtime_ns invalidates regenerated fixtures.  The dict hangs off the
 # SparkSession OBJECT — not a module global keyed by applicationId —
 # because two sessions can share one application (``newSession()``,
 # or the externally-built driver session) with DIFFERENT SQLConfs: a
@@ -42,12 +43,42 @@ class MissingColumnsError(ValueError):
 _CACHE_ATTR = "_egraft_relation_cache"
 
 
+Snapshot = tuple[str, Optional[int]]      # (path, mtime_ns)
+
+
+class _Loaded(NamedTuple):
+    df: DataFrame
+    relation: Any          # the JVM HadoopFsRelation under ``df``
+
+
 def _relation_cache(spark: SparkSession) -> dict:
     cache = getattr(spark, _CACHE_ATTR, None)
     if cache is None:
         cache = {}
         setattr(spark, _CACHE_ATTR, cache)
     return cache
+
+
+def snapshot_id(path: str) -> Snapshot:
+    """A file or directory's snapshot identity: ``(path, mtime_ns)``,
+    with ``None`` for a path that does not exist.  A Spark overwrite
+    recreates the directory, so its mtime moves with every rewrite."""
+    try:
+        return path, os.stat(path).st_mtime_ns
+    except OSError:
+        return path, None
+
+
+def loaded_snapshot(spark: SparkSession, relation: Any) -> Optional[Snapshot]:
+    """The snapshot identity under which :func:`load` holds a file
+    relation equal to the JVM relation ``relation`` in this session, or
+    ``None`` when it holds none.  Relations compare equal when they read
+    the same path with the same schema and options, so the identity
+    names the files ``relation`` reads."""
+    for key, entry in _relation_cache(spark).items():
+        if entry.relation.equals(relation):
+            return key
+    return None
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -71,21 +102,18 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # runtime-settable; required to scan TIMESTAMP(NANOS) parquet
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    try:
-        mtime_ns = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime_ns = None
     cache = _relation_cache(spark)
-    key = (path, mtime_ns)
+    key = snapshot_id(path)
     cached = cache.get(key)
     if cached is not None:
-        return cached
+        return cached.df
     # miss: evict superseded entries for the same path so repeatedly
     # regenerating a fixture within one session doesn't grow the memo
     # without bound or keep stale DataFrames alive (ADVICE r5)
     for stale in [k for k in cache if k[0] == path]:
         del cache[stale]
     df = spark.read.parquet(path)
+    relation = df._jdf.queryExecution().analyzed().relation()
     if table == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Fixture generations vary: TIMESTAMP(NANOS) (handled above) vs
@@ -96,7 +124,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
-    cache[key] = df
+    cache[key] = _Loaded(df, relation)
     return df
 
 

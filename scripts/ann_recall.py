@@ -171,7 +171,8 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.plans import (REGISTRY,
+                                                        clear_query_memo)
     from ecommerce_data_engineering_spark.session import driver_memory
 
     spark = (SparkSession.builder.master("local[8]")
@@ -318,6 +319,9 @@ def main() -> None:
                 "pair_recall": round(pair_recall, 4),
             },
         }
+        # done with this fixture: free the memoized plans' shuffle files
+        # and broadcasts with the cache
+        clear_query_memo(spark)
         spark.catalog.clearCache()
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -91,7 +91,8 @@ def main() -> None:
     from ecommerce_data_engineering_spark.operators import similarity as S
     from ecommerce_data_engineering_spark.operators.similarity import (
         ivf_assign, kmeans_refine_lazy)
-    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.plans import (REGISTRY,
+                                                        clear_query_memo)
     from ecommerce_data_engineering_spark.plans.extensions import (
         ANN_QUERY_LIMIT, PROD_TRAIN_ITERS)
     from ecommerce_data_engineering_spark.session import driver_memory
@@ -142,6 +143,9 @@ def main() -> None:
             exact_cache[sf_dir] = _topk_sets(
                 REGISTRY["embedding_cosine_topk"].fn(spark, sf_dir))
             n_cache[sf_dir] = load(spark, sf_dir, "embeddings").count()
+            # the exact top-k runs once per dir: free its memoized plan's
+            # shuffle files and broadcasts with the cache
+            clear_query_memo(spark)
             spark.catalog.clearCache()
         exact, n = exact_cache[sf_dir], n_cache[sf_dir]
         emb = load(spark, sf_dir, "embeddings")

@@ -9,10 +9,10 @@ per-shard work grows").  Measuring it
 1. **num_shards does not move the wall**: the full registered-shape
    plan at 8 / 64 / 512 shards costs the same — if the per-shard
    window were the bottleneck, 512 shards would collapse it.
-2. **The tokenizer is ~70% of the cost**: a fresh-lineage scalar
-   aggregate over the token count alone costs ~0.7× the full plan's
+2. **The tokenizer is most of the cost**: a fresh-lineage scalar
+   aggregate over the token count alone costs 0.64× the full plan's
    wall; the window + packing aggregate on pre-materialized
-   (doc_id, n_tokens) is ~0.1×.  The record carries BOTH tokenizer
+   (doc_id, n_tokens) is 0.23×.  The record carries BOTH tokenizer
    forms — the definitional size(regexp_extract_all(...)) and the
    registered bpe_token_count (translate arithmetic + one greedy-run
    regexp_count, operators/text.py) that this decomposition motivated
@@ -24,7 +24,7 @@ per-shard work grows").  Measuring it
    substring allocation per match) the wall stayed FLAT while
    scan-stage CPU inflated 2.9× — more threads just fought the
    allocator/GC.  With the registered low-allocation bpe_token_count
-   the same forcing buys a real ~1.9× wall drop at only ~1.4× CPU
+   the same forcing buys a real 2.21× wall drop at only 1.09× CPU
    inflation: remove the allocations and the cores become usable.
    Either way it is a single-JVM ceiling, not the plan; on a real
    cluster the tokenize parallelizes ACROSS executor JVMs.

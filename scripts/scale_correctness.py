@@ -106,7 +106,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from oracle import DigestUnsupported, compare, digest_compare, duckdb_run
-    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.plans import (REGISTRY,
+                                                        clear_query_memo)
     from ecommerce_data_engineering_spark.session import driver_memory
 
     # 4x-sf0.1 pair-emitting queries need real executor heap (the 1g
@@ -146,6 +147,9 @@ def main() -> None:
                                duckdb_run(spec.oracle, sf_dir), name)
         except Exception as ex:                       # noqa: BLE001
             errs = [f"{name}: {type(ex).__name__}: {ex}"]
+        # each query runs once here: drop its memoized plan so Spark can
+        # clean its shuffle files and broadcasts before the next one
+        clear_query_memo(spark)
         dt = time.time() - t0
         secs[name] = round(dt, 1)
         if errs:

@@ -137,7 +137,8 @@ def main() -> None:
 
     from ecommerce_data_engineering_spark.operators.dedup import (
         connected_components)
-    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.plans import (REGISTRY,
+                                                        clear_query_memo)
     from ecommerce_data_engineering_spark.session import driver_memory
 
     spark = (SparkSession.builder.master("local[8]")
@@ -159,6 +160,9 @@ def main() -> None:
     else:
         pair_df = _pairs_at_threshold(spark, sf_dir, threshold)
     pairs = [(r["id_a"], r["id_b"]) for r in pair_df.collect()]
+    # the pair plan runs once: free its memoized shuffle files and
+    # broadcasts before the clusters build
+    clear_query_memo(spark)
     t_pairs = time.time() - t0
     print(f"pairs collected: {len(pairs)} ({t_pairs:.1f}s)", flush=True)
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import pytest
 
-from ecommerce_data_engineering_spark.plans import REGISTRY
+from ecommerce_data_engineering_spark.plans import REGISTRY, clear_query_memo
 
 # name -> why construction legitimately runs jobs
 CONSTRUCTION_EXCEPTIONS = {
@@ -53,13 +53,16 @@ FIXTURE_TABLES = ("region", "nation", "customer", "supplier", "part",
 @pytest.fixture(scope="module")
 def warmed(spark, sf_dir):
     """Warm the one-time metadata paths: relation memo (schema-read
-    jobs) and first-construction memos (synthetic pipeline build)."""
+    jobs) and first-construction memos (synthetic pipeline build).
+    The registry's query memo is emptied again, so every measured call
+    builds its plan instead of returning the one built here."""
     from ecommerce_data_engineering_spark.sources import load
 
     for t in FIXTURE_TABLES:
         load(spark, sf_dir, t)
     for spec in REGISTRY.values():
         spec.fn(spark, sf_dir)
+    clear_query_memo(spark)
     return True
 
 

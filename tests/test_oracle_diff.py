@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from ecommerce_data_engineering_spark.plans import REGISTRY
+from ecommerce_data_engineering_spark.plans import REGISTRY, clear_query_memo
 
 from .oracle import compare, duckdb_run
 
@@ -64,10 +64,13 @@ def test_entry_smoke(spark):
 def test_double_run_determinism(spark, sf_dir, name):
     """Canary against partition-order nondeterminism: the ranked /
     hashed / iterative queries must produce identical canonical rows on
-    two executions within one session."""
+    two executions within one session.  Each run builds its own plan:
+    a memoized one would re-run only its final stage."""
     from .oracle import canonical
 
     spec = REGISTRY[name]
+    clear_query_memo(spark)
     a = canonical(spec.fn(spark, sf_dir).toPandas())
+    clear_query_memo(spark)
     b = canonical(spec.fn(spark, sf_dir).toPandas())
     assert a == b
