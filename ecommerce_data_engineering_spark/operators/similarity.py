@@ -12,8 +12,7 @@ Two strategies:
   from md5, so the oracle can reproduce them), candidate = same bucket,
   exact cosine within bucket.  Cost Σ_bucket |Q_b|·|C_b|·d — the 100 TB
   scale path (bucket count grows 2^H; multi-probe/tables are the
-  production refinement, IVF the alternative — see operators/ivf
-  docstring note below).
+  production refinement, IVF the alternative — see :func:`ivf_assign`).
 
 All arithmetic is double (floats are upcast first) and rounded before
 ranking so results are deterministic and reproducible cross-engine.
@@ -389,10 +388,7 @@ def _lloyd_step(df: DataFrame, centroids: DataFrame, id_col: str,
     :func:`ivf_assign` kernel), recompute each cell's element-wise
     mean, and keep the previous centroid for any cell that went empty
     (standard Lloyd's fallback; k never shrinks).  No action is
-    triggered — callers choose between the driver-hop form
-    (:func:`kmeans_refine`, flat plans for many iterations) and the
-    fully-lazy form (:func:`kmeans_refine_lazy`, zero jobs until the
-    result is consumed).
+    triggered: :func:`kmeans_refine_lazy` chains these steps.
 
     ``quantize``: round each mean component with pround(·, quantize)
     (the portable floor-form).  Float SUMMATION ORDER differs between
@@ -460,10 +456,11 @@ def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
     identical centroid sub-plans referenced more than once are
     deduplicated by Spark's ReuseExchange rule, and the centroid
     tables are k·d scalars, so the nesting is cheap for the small,
-    fixed iteration counts a coarse-quantizer trainer uses (≤ ~5).
-    For long training runs prefer :func:`kmeans_refine`, which
-    flattens lineage with an O(k·d) driver hop per iteration (the
-    MLlib pattern).
+    fixed iteration counts a coarse-quantizer trainer uses (≤ ~5);
+    ``persist_steps`` keeps a table referenced more than once from
+    re-deriving its lineage.  Ties in the assignment break by
+    cluster_id, so two runs produce identical centroids, and an empty
+    cell keeps its previous centroid (pinned in tests).
 
     ``quantize`` (forwarded to :func:`_lloyd_step`): pround each mean
     at 10^-quantize so the trained centroids are bit-identical across
@@ -518,38 +515,6 @@ def release_kmeans_steps(step_cache: list[DataFrame]) -> None:
     step_cache.clear()
 
 
-def kmeans_refine(df: DataFrame, centroids: DataFrame,
-                  n_iter: int = 3, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """Lloyd's-iteration refinement of IVF coarse centroids — train the
-    quantizer instead of trusting the seeds.
-
-    Each iteration: assign every vector to its nearest centroid
-    (broadcast cross, same kernel as :func:`ivf_assign`), recompute
-    each cell's element-wise mean, and pull the tiny (k, d) centroid
-    table back to the driver so the next iteration starts from a flat
-    plan — the MLlib pattern: cluster-side passes are O(|corpus|·k·d)
-    scans, driver state is O(k·d) floats, and lineage never stacks
-    iteration over iteration.  Ties in the assignment break by
-    cluster_id, collect order is canonicalized by position sort, so
-    two runs produce identical centroids (pinned in tests).
-
-    An empty cell keeps its previous centroid (standard Lloyd's
-    fallback; k never shrinks).  Iterative, so the placement is not
-    SQL-expressible — the embedding_ivf_kmeans driver row verifies the
-    WCSS-monotone invariant via per-iteration flags (r5); determinism
-    is asserted in pytest.
-    """
-    cur = centroids.select("cluster_id", F.col(vec_col))
-    for _ in range(n_iter):
-        stepped = _lloyd_step(df, cur, id_col, vec_col)
-        merged = sorted(
-            (r["cluster_id"], list(r[vec_col])) for r in stepped.collect())
-        cur = df.sparkSession.createDataFrame(
-            merged, f"cluster_id int, {vec_col} array<double>")
-    return cur
-
-
 def kmeans_wcss_df(df: DataFrame, centroids: DataFrame,
                    id_col: str = "vec_id",
                    vec_col: str = "embedding") -> DataFrame:
@@ -573,13 +538,6 @@ def kmeans_wcss_df(df: DataFrame, centroids: DataFrame,
     return (assigned.join(cent, "cluster_id")
             .select(d2.alias("d2"))
             .agg(F.coalesce(F.sum("d2"), F.lit(0.0)).alias("wcss")))
-
-
-def kmeans_wcss(df: DataFrame, centroids: DataFrame,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> float:
-    """Eager scalar form of :func:`kmeans_wcss_df` (one driver hop)."""
-    return float(kmeans_wcss_df(df, centroids, id_col=id_col,
-                                vec_col=vec_col).collect()[0]["wcss"])
 
 
 def int8_quantize_stats(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:

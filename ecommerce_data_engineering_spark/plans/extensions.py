@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import dedup as D
 from ..operators import multimodal as M
@@ -912,89 +912,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_K = 16        # centroid count: every (500/16≈31st) vector seeds a cell
 IVF_SEED_STEP = 31
-
-
-def _ivf_oracle() -> str:
-    return f"""
-    WITH {_VEC_CTE},
-    cent AS (
-      SELECT CAST(vec_id / {IVF_SEED_STEP} AS INT) AS cluster_id, i, x
-      FROM v WHERE vec_id % {IVF_SEED_STEP} = 0 AND vec_id < {IVF_K * IVF_SEED_STEP}
-    ), dist AS (
-      SELECT v.vec_id, c.cluster_id,
-             floor(sum((v.x - c.x) * (v.x - c.x)) * 1000000000 + 0.5) / 1000000000 AS d2
-      FROM v JOIN cent c ON v.i = c.i
-      GROUP BY 1, 2
-    ), assigned AS (
-      SELECT vec_id, cluster_id FROM (
-        SELECT *, row_number() OVER
-          (PARTITION BY vec_id ORDER BY d2, cluster_id) AS rn
-        FROM dist) WHERE rn = 1
-    ),
-    qa AS (SELECT * FROM assigned WHERE vec_id < {ANN_QUERY_LIMIT}),
-    cand AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM qa q JOIN assigned c
-        ON q.cluster_id = c.cluster_id AND q.vec_id <> c.vec_id
-    ), dots AS (
-      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
-      FROM cand
-      JOIN v a ON a.vec_id = cand.query_id
-      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
-      GROUP BY 1, 2
-    ), sims AS (
-      SELECT d.query_id, d.neighbor_id,
-             floor(d.dot / (nq.nrm * nc.nrm) * 1000000 + 0.5) / 1000000 AS cosine
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER
-        (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-      FROM sims
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-    FROM ranked WHERE rn <= {ANN_K}
-    """
-
-
-@query("embedding_ann_ivf", oracle=_ivf_oracle(), covers=("EXT-similarity",))
-def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse quantization to K=16 deterministic seed
-    centroids (every 31st vector — a k-means iteration would refine
-    them; seeds keep the oracle exact), then exact cosine only within
-    the query's cell (nprobe=1).  Cost drops from |Q|·|C| to
-    |Q|·|C|/K on balanced cells — the IVF scale path next to the
-    sign-LSH variant."""
-    from ..operators.similarity import ivf_assign
-
-    emb = load(spark, sf_dir, "embeddings")
-    centroids = (emb.filter((F.col("vec_id") % IVF_SEED_STEP == 0)
-                            & (F.col("vec_id") < IVF_K * IVF_SEED_STEP))
-                 .select((F.col("vec_id") / IVF_SEED_STEP).cast("int")
-                         .alias("cluster_id"), "embedding"))
-    assigned = ivf_assign(S.with_norm(emb), centroids)
-    q = (assigned.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_vec"),
-                 F.col("norm").alias("q_norm"), "cluster_id"))
-    c = assigned.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("c_vec"),
-                        F.col("norm").alias("c_norm"), "cluster_id")
-    # cosine in ONE Project + one F.expr parse (construction cost, r11;
-    # optimized plan pinned identical in tests/test_expr_parity.py)
-    sims = (q.join(c, "cluster_id")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id",
-                    F.expr(S._cosine_sql("q_vec", "c_vec",
-                                         "q_norm", "c_norm"))
-                    .alias("cosine")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (sims.withColumn("rn", F.row_number().over(w).cast("int"))
-            .filter(F.col("rn") <= ANN_K))
-
-
 ANN_NPROBE = 2
 
 # Production IVF operating point (VERDICT r7 #2, retrained r8 #2):
@@ -1026,13 +943,13 @@ PROD_TRAIN_SAMPLE_SEED = 0     # (operators/sampling hash gate, r11)
 
 def _cent_cte_sql(ivf_k: int, seed_step: int, train_iters: int = 0,
                   train_sample_sql: str | None = None) -> str:
-    """SQL CTE chain ending in ``cent(cluster_id, i, x)`` — the seed
-    grid, optionally refined by ``train_iters`` quantized Lloyd's
-    iterations (the exact loop the Spark side runs via
-    kmeans_refine_lazy(quantize=9)): assign every vector to its
-    nearest centroid (1e-9-rounded L2, cluster_id tiebreak), recompute
-    per-cell means rounded with the shared floor-form at 1e-9, keep
-    the previous centroid for empty cells.  Because both engines round
+    """SQL CTE chain ending in ``cent(cluster_id, i, x)`` — the oracle
+    twin of :func:`_seed_centroids` optionally refined by
+    :func:`_train_centroids`: ``train_iters`` quantized Lloyd's
+    iterations, each assigning every vector to its nearest centroid
+    (1e-9-rounded L2, cluster_id tiebreak), recomputing per-cell means
+    rounded with the shared floor-form at 1e-9, and keeping the
+    previous centroid for empty cells.  Because both engines round
     every mean to the same 1e-9 grid, the trained centroids are
     bit-identical and everything downstream stays exact.
 
@@ -1040,8 +957,8 @@ def _cent_cte_sql(ivf_k: int, seed_step: int, train_iters: int = 0,
     TRAINING corpus (sampled Lloyd's, r11) — the assignment and mean
     CTEs read from the filtered ``vs`` instead of ``v``.  The Spark
     twin applies the same operators/sampling hash gate to the frame it
-    hands kmeans_refine_lazy, so both engines train on the identical
-    row set and the trained centroids stay bit-identical."""
+    trains on, so both engines train on the identical row set and the
+    trained centroids stay bit-identical."""
     chain = [f"""cent0 AS (
       SELECT CAST(vec_id / {seed_step} AS INT) AS cluster_id, i, x
       FROM v WHERE vec_id % {seed_step} = 0 AND vec_id < {ivf_k * seed_step}
@@ -1076,10 +993,12 @@ def _cent_cte_sql(ivf_k: int, seed_step: int, train_iters: int = 0,
     return ",\n    ".join(chain)
 
 
-def _ivf_nprobe_oracle(ivf_k: int = IVF_K, seed_step: int = IVF_SEED_STEP,
-                       nprobe: int = ANN_NPROBE,
+def _ivf_nprobe_oracle(ivf_k: int, seed_step: int, nprobe: int,
                        train_iters: int = 0,
                        train_sample_sql: str | None = None) -> str:
+    """Oracle twin of :func:`_ivf_search` over the ``_cent_cte_sql``
+    centroids: the corpus stored in its nearest cell, each query
+    probing its ``nprobe`` nearest cells, exact cosine, top ``ANN_K``."""
     return f"""
     WITH {_VEC_CTE},
     {_cent_cte_sql(ivf_k, seed_step, train_iters, train_sample_sql)}, dist AS (
@@ -1131,59 +1050,60 @@ def _seed_centroids(emb: DataFrame, ivf_k: int, seed_step: int) -> DataFrame:
                     .alias("cluster_id"), "embedding"))
 
 
-def _ivf_nprobe_plan(spark: SparkSession, sf_dir: str, ivf_k: int,
-                     seed_step: int, nprobe: int,
-                     train_iters: int = 0,
-                     train_sample_frac: float = 1.0,
-                     train_sample_seed: int = 0) -> DataFrame:
-    """Shared IVF search plan: deterministic seed centroids → corpus
-    stored once per cell (nprobe=1) → queries probe their ``nprobe``
-    nearest cells → cosine rank inside the candidate set.  Probe cost
-    scales with |Q|·(corpus/k_cells)·nprobe, never all-pairs.  No
-    pair dedup is needed (or paid for): a corpus vector lives in
-    exactly ONE cell, so a (query, neighbor) pair meets at most once
-    even when the query probes many cells.
+def _train_centroids(emb: DataFrame, seeds: DataFrame, n_iter: int,
+                     sample_frac: float = 1.0,
+                     sample_seed: int = 0) -> DataFrame:
+    """The IVF trainer: ``n_iter`` quantized Lloyd's iterations from
+    ``seeds``, lazy (operators/similarity.kmeans_refine_lazy).
 
-    ``train_iters`` > 0 refines the seeds with that many quantized
-    Lloyd's iterations before search (VERDICT r8 #2: the production
-    point searches on the TRAINED quantizer).  Quantizing each mean at
-    1e-9 (operators/similarity._lloyd_step) keeps the trained
-    centroids bit-identical across engines, so the DuckDB oracle
-    replays the same training loop CTE-for-CTE.
+    ``sample_frac`` < 1 trains on the deterministic hash-sample
+    md5(seed‖vec_id) < frac (operators/sampling — the same gate the
+    curation family ships) instead of the full corpus: the standard
+    IVF recipe, since training cost is O(k_cells·n_train·d) while the
+    one-pass corpus/query ASSIGNMENT — which still reads every row —
+    is what correctness depends on.  The oracle (``_cent_cte_sql``)
+    applies the identical predicate in its training CTEs.
 
-    ``train_sample_frac`` < 1 trains Lloyd's on the deterministic
-    hash-sample md5(seed‖vec_id) < frac (operators/sampling — the same
-    gate the curation family ships) instead of the full corpus: the
-    standard IVF recipe, since training cost is O(k_cells·n_train·d)
-    while the one-pass corpus/query ASSIGNMENT — which still reads
-    every row — is what correctness depends on.  The oracle applies
-    the identical predicate in its training CTEs, so the trained
-    centroids stay bit-identical."""
+    Quantizing each mean at 1e-9 keeps the trained centroids
+    bit-identical across engines and partitionings; ``persist_steps``
+    keeps a table consumed more than once (corpus and query
+    assignment) from re-expanding the nested training lineage; and
+    ``dim=EMB_DIM`` computes each mean in one Exchange per iteration —
+    every embeddings fixture is exactly EMB_DIM wide, which the
+    oracle's ``_VEC_CTE`` already assumes."""
     from ..operators.sampling import sample_predicate
-    from ..operators.similarity import (fold_centroids, ivf_assign,
-                                        kmeans_refine_lazy)
 
-    emb = load(spark, sf_dir, "embeddings")
-    centroids = _seed_centroids(emb, ivf_k, seed_step)
-    if train_iters:
-        train_df = emb
-        if train_sample_frac < 1.0:
-            train_df = emb.filter(sample_predicate(
-                F.col("vec_id"), train_sample_frac, seed=train_sample_seed))
-        # dim=EMB_DIM: one-Exchange per-position means (r12) — the
-        # embeddings fixture is exactly EMB_DIM wide, which the oracle's
-        # _VEC_CTE already assumes
-        centroids = kmeans_refine_lazy(train_df, centroids,
-                                       n_iter=train_iters,
-                                       quantize=9, persist_steps=True,
-                                       dim=EMB_DIM)
-    # ONE fold of the trained table shared by both assignments (r12):
+    train_df = emb if sample_frac >= 1.0 else emb.filter(
+        sample_predicate(F.col("vec_id"), sample_frac, seed=sample_seed))
+    return S.kmeans_refine_lazy(train_df, seeds, n_iter=n_iter, quantize=9,
+                                persist_steps=True, dim=EMB_DIM)
+
+
+def _prod_centroids(emb: DataFrame) -> DataFrame:
+    """The production quantizer: PROD_IVF_K seeds trained on the
+    PROD_TRAIN_SAMPLE_FRAC hash-sample."""
+    return _train_centroids(emb, _seed_centroids(emb, PROD_IVF_K,
+                                                 PROD_SEED_STEP),
+                            PROD_TRAIN_ITERS, PROD_TRAIN_SAMPLE_FRAC,
+                            PROD_TRAIN_SAMPLE_SEED)
+
+
+def _ivf_search(emb: DataFrame, centroids: DataFrame,
+                nprobe: int) -> DataFrame:
+    """The IVF search plan over a centroid table: corpus stored once
+    per cell (nprobe=1) → the ``ANN_QUERY_LIMIT`` queries probe their
+    ``nprobe`` nearest cells → cosine rank inside the candidate set.
+    Probe cost scales with |Q|·(corpus/k_cells)·nprobe, never
+    all-pairs.  No pair dedup is needed (or paid for): a corpus vector
+    lives in exactly ONE cell, so a (query, neighbor) pair meets at
+    most once even when the query probes many cells."""
+    # ONE fold of the centroid table shared by both assignments (r12):
     # the two fold trees were identical anyway (runtime plans
     # unchanged); building it once just skips a construction-time
     # py4j chain per extra assignment
-    folded = fold_centroids(centroids)
-    corpus_cells = ivf_assign(S.with_norm(emb), prefolded=folded)
-    query_cells = ivf_assign(
+    folded = S.fold_centroids(centroids)
+    corpus_cells = S.ivf_assign(S.with_norm(emb), prefolded=folded)
+    query_cells = S.ivf_assign(
         S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
         nprobe=nprobe, prefolded=folded)
     q = query_cells.select(F.col("vec_id").alias("query_id"),
@@ -1200,20 +1120,36 @@ def _ivf_nprobe_plan(spark: SparkSession, sf_dir: str, ivf_k: int,
                     F.expr(S._cosine_sql("q_vec", "c_vec",
                                          "q_norm", "c_norm"))
                     .alias("cosine")))
-    from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (sims.withColumn("rn", F.row_number().over(w).cast("int"))
             .filter(F.col("rn") <= ANN_K))
 
 
-@query("embedding_ann_ivf_nprobe", oracle=_ivf_nprobe_oracle(),
+@query("embedding_ann_ivf",
+       oracle=_ivf_nprobe_oracle(IVF_K, IVF_SEED_STEP, 1),
+       covers=("EXT-similarity",))
+def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style ANN: coarse quantization to K=16 deterministic seed
+    centroids (every 31st vector — a k-means iteration would refine
+    them; seeds keep the oracle exact), then exact cosine only within
+    the query's cell (nprobe=1).  Cost drops from |Q|·|C| to
+    |Q|·|C|/K on balanced cells — the IVF scale path next to the
+    sign-LSH variant."""
+    emb = load(spark, sf_dir, "embeddings")
+    return _ivf_search(emb, _seed_centroids(emb, IVF_K, IVF_SEED_STEP), 1)
+
+
+@query("embedding_ann_ivf_nprobe",
+       oracle=_ivf_nprobe_oracle(IVF_K, IVF_SEED_STEP, ANN_NPROBE),
        covers=("EXT-similarity",))
 def embedding_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with nprobe=2 (the IVF recall knob): each query searches its
     TWO nearest cells while the corpus stays stored once per cell —
     probe cost scales with |Q|·nprobe, never with corpus size.  Recall
     strictly dominates the nprobe=1 variant (candidate superset)."""
-    return _ivf_nprobe_plan(spark, sf_dir, IVF_K, IVF_SEED_STEP, ANN_NPROBE)
+    emb = load(spark, sf_dir, "embeddings")
+    return _ivf_search(emb, _seed_centroids(emb, IVF_K, IVF_SEED_STEP),
+                       ANN_NPROBE)
 
 
 def _prod_train_sample_sql() -> str:
@@ -1256,10 +1192,8 @@ def embedding_ann_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     train on O(k_cells·samples-per-cell) rows, persist the (k·d)-float
     centroid table, reuse it across queries — here it stays inline so
     the registered plan is self-contained and lazy."""
-    return _ivf_nprobe_plan(spark, sf_dir, PROD_IVF_K, PROD_SEED_STEP,
-                            PROD_NPROBE, train_iters=PROD_TRAIN_ITERS,
-                            train_sample_frac=PROD_TRAIN_SAMPLE_FRAC,
-                            train_sample_seed=PROD_TRAIN_SAMPLE_SEED)
+    emb = load(spark, sf_dir, "embeddings")
+    return _ivf_search(emb, _prod_centroids(emb), PROD_NPROBE)
 
 
 # "Newly arrived" slice for the incremental index-maintenance query:
@@ -1311,14 +1245,12 @@ def embedding_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance — the embedding-store twin of
     the CDC family's O(changes) discipline: newly arrived vectors (a
     deterministic vec_id slice standing in for today's ingest) are
-    assigned to the EXISTING production quantizer (the TRAINED
-    PROD_IVF_K-cell centroid table of embedding_ann_production — same
-    seeds, same two quantized Lloyd's iterations over the same ~25%
-    training hash-sample) without
-    touching stored vectors or retraining further, and the query emits the
-    per-cell maintenance report (existing count, new count, share of
-    cell that is new — the drift signal that schedules a
-    kmeans_refine_lazy retrain).
+    assigned to the EXISTING production quantizer (``_prod_centroids``,
+    the trained PROD_IVF_K-cell table embedding_ann_production
+    searches) without touching stored vectors or retraining further,
+    and the query emits the per-cell maintenance report (existing
+    count, new count, share of cell that is new — the drift signal
+    that schedules a retrain).
 
     At 100 TB this is the path that keeps a daily-growing embedding
     store searchable: assignment costs O(|new| · k_cells · dim) — one
@@ -1328,17 +1260,8 @@ def embedding_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroids stay fixed, so every previously stored vector's cell is
     unchanged by construction and the search plan
     (embedding_ann_production) needs no replan."""
-    from ..operators.sampling import sample_predicate
-    from ..operators.similarity import ivf_assign, kmeans_refine_lazy
-
     emb = load(spark, sf_dir, "embeddings")
-    train_df = emb.filter(sample_predicate(
-        F.col("vec_id"), PROD_TRAIN_SAMPLE_FRAC, seed=PROD_TRAIN_SAMPLE_SEED))
-    cents = kmeans_refine_lazy(
-        train_df, _seed_centroids(emb, PROD_IVF_K, PROD_SEED_STEP),
-        n_iter=PROD_TRAIN_ITERS, quantize=9, persist_steps=True,
-        dim=EMB_DIM)
-    assigned = ivf_assign(S.with_norm(emb), cents).select(
+    assigned = S.ivf_assign(S.with_norm(emb), _prod_centroids(emb)).select(
         "vec_id", "cluster_id")
     is_new = F.col("vec_id") % INDEX_NEW_MOD == INDEX_NEW_REM
     oldc = (assigned.filter(~is_new).groupBy("cluster_id")
@@ -1578,18 +1501,12 @@ def embedding_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     constructing this plan launches ZERO Spark jobs, the same
     contract every other registered query honors
     (tests/test_construction_budget.py pins it registry-wide)."""
-    from ..operators.similarity import kmeans_refine_lazy, kmeans_wcss_df
-
     emb = load(spark, sf_dir, "embeddings")
-    seeds = (emb.filter((F.col("vec_id") % IVF_SEED_STEP == 0)
-                        & (F.col("vec_id") < IVF_K * IVF_SEED_STEP))
-             .select((F.col("vec_id") / IVF_SEED_STEP).cast("int")
-                     .alias("cluster_id"), "embedding"))
-    cents = [seeds]
+    cents = [_seed_centroids(emb, IVF_K, IVF_SEED_STEP)]
     for _ in range(3):
-        cents.append(kmeans_refine_lazy(emb, cents[-1], n_iter=1))
+        cents.append(S.kmeans_refine_lazy(emb, cents[-1], n_iter=1))
     wcss_rows = [
-        kmeans_wcss_df(emb, c).select(F.lit(i).alias("iteration"), "wcss")
+        S.kmeans_wcss_df(emb, c).select(F.lit(i).alias("iteration"), "wcss")
         for i, c in enumerate(cents)]
     wcss = reduce(DataFrame.unionAll, wcss_rows)
     prev = wcss.select((F.col("iteration") + 1).alias("iteration"),

@@ -35,6 +35,31 @@ def driver_memory() -> str:
     return os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
 
+def _mib(size: str) -> float:
+    """A JVM memory string (``3g``, ``3072m``, ``512k``; bare digits
+    are MiB, as for ``spark.driver.memory``) in MiB."""
+    size = size.strip().lower().rstrip("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    if size and size[-1] in scale:
+        return float(size[:-1]) * scale[size[-1]]
+    return float(size)
+
+
+def shj_threshold(heap: str, cores: int) -> str:
+    """AQE's shuffled-hash-join local-map bound: the execution memory
+    Spark guarantees each of ``cores`` concurrent tasks, in whole MiB.
+
+    Unified memory is (heap − 300 MiB reserved) × 0.6
+    (``spark.memory.fraction``); storage can be evicted down to half of
+    it (``spark.memory.storageFraction``), so execution always holds
+    the other half; and ``ExecutionMemoryPool`` lets each of N active
+    tasks claim at least 1/(2N) of its pool before it must spill.  A
+    hash map under that bound is built without spilling or failing,
+    whatever the other tasks do.  3g on 4 cores gives 103m."""
+    unified = max(0.0, _mib(heap) - 300) * 0.6
+    return f"{int(unified * 0.5 / (2 * max(1, cores)))}m"
+
+
 def get_spark(app_name: str = "ecommerce_data_engineering_spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None,
@@ -56,6 +81,7 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    heap = driver_memory()
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -70,20 +96,19 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
         # two per-partition sorts of the fact-table joins (measured 64×:
         # fact_lineitem_build 5.4→4.5 s, top_revenue_orders 2.9→2.3 s,
         # min-of-4 each; static plans unchanged — this is a runtime
-        # re-optimization).  Scale-safe by construction: AQE coalesces
-        # partitions toward 64 MB, the bound caps the per-task hash map,
-        # and oversized partitions fall back to SMJ.  Off upstream only
-        # because the default must never risk a build-side OOM on
-        # unknown memory budgets; 256 MB is conservative against this
-        # engine's per-task memory (heap/cores).
+        # re-optimization).  Off upstream because a hash map larger
+        # than a task's memory fails the task; the bound here is the
+        # execution memory Spark guarantees each concurrent task
+        # (shj_threshold), so it follows the heap and core count the
+        # session actually has, and larger partitions keep sort-merge.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "256m"))
+                shj_threshold(heap, cpus))
         # runtime Bloom-filter semi-join pruning (kicks in at real scan
         # sizes; see tests/test_physical.py for the demonstrated plan)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory())
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Generated-class cache sized to the registry's working set.

@@ -9,8 +9,9 @@ those measurements as a per-fixture artifact:
 - recall@k of every registered ANN variant (sign-LSH single table,
   multi-probe, multi-table, IVF nprobe=1, IVF nprobe=2) against the
   exact brute-force top-k, averaged over the query set;
-- an IVF nprobe sweep (1/2/4/8) via the same `ivf_assign` kernel the
-  registered queries use, showing the recall/candidate-cost knob;
+- an IVF nprobe sweep (1/2/4/8) through the registered queries' own
+  search plan (`plans/extensions._ivf_search`), showing the
+  recall/candidate-cost knob, with seed and trained centroids;
 - MinHash-LSH pair recall against the exhaustive n-gram Jaccard pair
   set (precision is 1.0 by construction — LSH candidates are verified
   with the same exact Jaccard ≥ t predicate the oracle applies, so the
@@ -19,6 +20,9 @@ those measurements as a per-fixture artifact:
 Usage:
     python scripts/ann_recall.py [label=dir ...]
 defaults to `sf0.1=/root/testdata/sf0.1 16x=/tmp/sf_16x`.
+A run that lacks a fixture label the existing record holds prints its
+numbers but does not write; scripts/regenerate_evidence.sh passes every
+fixture the committed record holds.
 
 tests/test_recall_evidence.py asserts the artifact is fresh against the
 current registry and that the structural dominance floors hold
@@ -45,50 +49,43 @@ ANN_VARIANTS = [
 NPROBE_SWEEP = [1, 2, 4, 8]
 
 
-def _ivf_candidates_per_query(spark, sf_dir: str, ivf_k: int,
-                              seed_step: int, nprobe: int,
-                              train_iters: int = 0,
-                              train_sample_frac: float = 1.0,
-                              train_sample_seed: int = 0) -> float:
+def _candidates_per_query(emb, centroids, nprobe: int) -> float:
     """Mean candidates examined per query = corpus rows living in the
-    query's probed cells — the cost side of the recall/cost trade the
-    production flagship must report (VERDICT r7 #2).  ``train_iters``
-    and ``train_sample_frac`` mirror the registered plan's
-    quantized-Lloyd's refinement (r9: the production point searches on
-    the trained quantizer; r11: trained on a deterministic
-    hash-sample)."""
+    query's ``nprobe`` probed cells of ``centroids`` — the cost side of
+    the recall/cost trade the production flagship must report
+    (VERDICT r7 #2)."""
     from pyspark.sql import functions as F
 
-    from ecommerce_data_engineering_spark.operators import similarity as S
-    from ecommerce_data_engineering_spark.operators.sampling import (
-        sample_predicate)
     from ecommerce_data_engineering_spark.operators.similarity import (
-        ivf_assign, kmeans_refine_lazy)
+        ivf_assign, with_norm)
     from ecommerce_data_engineering_spark.plans.extensions import (
-        ANN_QUERY_LIMIT, _seed_centroids)
-    from ecommerce_data_engineering_spark.sources.readers import load
+        ANN_QUERY_LIMIT)
 
-    emb = load(spark, sf_dir, "embeddings")
-    cents = _seed_centroids(emb, ivf_k, seed_step)
-    if train_iters:
-        train_df = emb
-        if train_sample_frac < 1.0:
-            train_df = emb.filter(sample_predicate(
-                F.col("vec_id"), train_sample_frac,
-                seed=train_sample_seed))
-        # persist_steps: cents is consumed twice below (cell_pop +
-        # probed) — without it each reference re-expands the nested
-        # training lineage (the exponential-plan case the production
-        # plan persists against; ADVICE r9)
-        cents = kmeans_refine_lazy(train_df, cents, n_iter=train_iters,
-                                   quantize=9, persist_steps=True)
-    cell_pop = ivf_assign(S.with_norm(emb), cents).groupBy("cluster_id").count()
+    cell_pop = ivf_assign(with_norm(emb), centroids).groupBy("cluster_id").count()
     probed = ivf_assign(
-        S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
-        cents, nprobe=nprobe).select("vec_id", "cluster_id")
+        with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
+        centroids, nprobe=nprobe).select("vec_id", "cluster_id")
     total = (probed.join(cell_pop, "cluster_id")
              .agg(F.sum("count")).collect()[0][0])
     return float(total) / ANN_QUERY_LIMIT
+
+
+def write_record(path: str, rec: dict, keys) -> None:
+    """Write ``rec`` to ``path`` as JSON, unless the record already
+    there holds a key (``keys(record)`` → set) this run lacks: a spot
+    check at one fixture, or a run without the large fixtures, must
+    not replace the full record.  To start over, delete the record by
+    hand."""
+    if os.path.exists(path):
+        with open(path) as f:
+            dropped = keys(json.load(f)) - keys(rec)
+        if dropped:
+            sys.exit(f"REFUSING to overwrite {os.path.basename(path)}: "
+                     f"this run lacks {sorted(dropped)}, which the "
+                     f"record holds; delete it by hand to start over")
+    with open(path, "w") as f:
+        json.dump(rec, f, indent=1)
+    print(f"wrote {os.path.basename(path)}")
 
 
 def _topk_sets(df) -> dict[int, set[int]]:
@@ -108,60 +105,6 @@ def _recall(ann: dict[int, set[int]], exact: dict[int, set[int]]) -> float:
     return total / len(exact)
 
 
-def _ivf_nprobe_topk(spark, sf_dir: str, nprobe: int, centroids=None,
-                     ivf_k=None, seed_step=None):
-    """The registered embedding_ann_ivf_nprobe plan with a parametric
-    nprobe — same seed centroids, same kernels (plans/extensions.py
-    `embedding_ann_ivf_nprobe` is exactly this with nprobe=2).
-
-    ``centroids`` overrides the seed-centroid table (the kmeans_refine
-    sweep passes trained centroids here, ADVICE r7 — one shared
-    join/rank implementation, no inline re-derivation that can drift).
-    ``ivf_k``/``seed_step`` override the seed grid (the production
-    operating-point sweep uses a finer cell grid)."""
-    from pyspark.sql import Window, functions as F
-
-    from ecommerce_data_engineering_spark.functions.rounding import pround
-    from ecommerce_data_engineering_spark.operators import similarity as S
-    from ecommerce_data_engineering_spark.operators.similarity import ivf_assign
-    from ecommerce_data_engineering_spark.plans.extensions import (
-        ANN_K, ANN_QUERY_LIMIT, IVF_K, IVF_SEED_STEP)
-    from ecommerce_data_engineering_spark.sources.readers import load
-
-    ivf_k = IVF_K if ivf_k is None else ivf_k
-    seed_step = IVF_SEED_STEP if seed_step is None else seed_step
-    emb = load(spark, sf_dir, "embeddings")
-    if centroids is None:
-        centroids = (emb.filter((F.col("vec_id") % seed_step == 0)
-                                & (F.col("vec_id") < ivf_k * seed_step))
-                     .select((F.col("vec_id") / seed_step).cast("int")
-                             .alias("cluster_id"), "embedding"))
-    corpus_cells = ivf_assign(S.with_norm(emb), centroids)
-    query_cells = ivf_assign(
-        S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
-        centroids, nprobe=nprobe)
-    q = query_cells.select(F.col("vec_id").alias("query_id"),
-                           F.col("embedding").alias("q_vec"),
-                           F.col("norm").alias("q_norm"), "cluster_id")
-    c = corpus_cells.select(F.col("vec_id").alias("neighbor_id"),
-                            F.col("embedding").alias("c_vec"),
-                            F.col("norm").alias("c_norm"), "cluster_id")
-    dot = F.aggregate(
-        F.zip_with(F.col("q_vec"), F.col("c_vec"),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-    sims = (q.join(c, "cluster_id")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("cosine",
-                        pround(dot / (F.col("q_norm") * F.col("c_norm")), 6))
-            .select("query_id", "neighbor_id", "cosine")
-            .dropDuplicates(["query_id", "neighbor_id"]))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (sims.withColumn("rn", F.row_number().over(w).cast("int"))
-            .filter(F.col("rn") <= ANN_K))
-
-
 def main() -> None:
     fixtures = dict(a.split("=", 1) for a in sys.argv[1:] if "=" in a) or {
         "sf0.1": "/root/testdata/sf0.1", "16x": "/tmp/sf_16x"}
@@ -169,16 +112,20 @@ def main() -> None:
         if not os.path.isdir(d):
             sys.exit(f"fixture dir for {label!r} does not exist: {d}")
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
+    from ecommerce_data_engineering_spark.operators.similarity import (
+        lsh_cosine_topk, lsh_cosine_topk_multitable)
     from ecommerce_data_engineering_spark.plans import (REGISTRY,
                                                         clear_query_memo)
-    from ecommerce_data_engineering_spark.session import driver_memory
+    from ecommerce_data_engineering_spark.plans.extensions import (
+        ANN_K, ANN_PLANES, ANN_QUERY_LIMIT, EMB_DIM, IVF_K, IVF_SEED_STEP,
+        PROD_IVF_K, PROD_NPROBE, PROD_TRAIN_ITERS, PROD_TRAIN_SAMPLE_FRAC,
+        _ivf_search, _prod_centroids, _seed_centroids, _train_centroids)
+    from ecommerce_data_engineering_spark.session import get_spark
+    from ecommerce_data_engineering_spark.sources.readers import load
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory", driver_memory())
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = get_spark("ann_recall")
     spark.sparkContext.setLogLevel("ERROR")
 
     rec: dict = {
@@ -203,16 +150,9 @@ def main() -> None:
         # number above; add the cost side (mean candidates per query
         # and the corpus fraction that represents) so the trade is a
         # recorded fact, not a docstring claim
-        from ecommerce_data_engineering_spark.plans.extensions import (
-            PROD_IVF_K, PROD_NPROBE, PROD_SEED_STEP, PROD_TRAIN_ITERS,
-            PROD_TRAIN_SAMPLE_FRAC, PROD_TRAIN_SAMPLE_SEED)
-        from ecommerce_data_engineering_spark.sources.readers import load
-        n_corpus = load(spark, sf_dir, "embeddings").count()
-        cand_q = _ivf_candidates_per_query(
-            spark, sf_dir, PROD_IVF_K, PROD_SEED_STEP, PROD_NPROBE,
-            train_iters=PROD_TRAIN_ITERS,
-            train_sample_frac=PROD_TRAIN_SAMPLE_FRAC,
-            train_sample_seed=PROD_TRAIN_SAMPLE_SEED)
+        emb = load(spark, sf_dir, "embeddings")
+        n_corpus = emb.count()
+        cand_q = _candidates_per_query(emb, _prod_centroids(emb), PROD_NPROBE)
         production = {
             "ivf_k": PROD_IVF_K, "nprobe": PROD_NPROBE,
             "train_iters": PROD_TRAIN_ITERS,
@@ -227,9 +167,12 @@ def main() -> None:
               f"cand/q = {production['candidates_per_query']} "
               f"({production['corpus_fraction']:.1%} of corpus)", flush=True)
 
+        # the registered IVF search with a parametric nprobe:
+        # embedding_ann_ivf is nprobe=1, embedding_ann_ivf_nprobe 2
+        seeds = _seed_centroids(emb, IVF_K, IVF_SEED_STEP)
         sweep = {}
         for nprobe in NPROBE_SWEEP:
-            sets = _topk_sets(_ivf_nprobe_topk(spark, sf_dir, nprobe))
+            sets = _topk_sets(_ivf_search(emb, seeds, nprobe))
             sweep[str(nprobe)] = round(_recall(sets, exact), 4)
             print(f"{label}: ivf nprobe={nprobe} recall@5 = "
                   f"{sweep[str(nprobe)]}", flush=True)
@@ -240,52 +183,32 @@ def main() -> None:
         # num_tables adds independent plane sets (candidate volume
         # linear in L).  Recorded so capacity planning can pick the
         # cheapest lever for a recall target instead of guessing.
-        from pyspark.sql import functions as SF
-
-        from ecommerce_data_engineering_spark.operators import (
-            similarity as S)
-        from ecommerce_data_engineering_spark.plans.extensions import (
-            ANN_K, ANN_PLANES, ANN_QUERY_LIMIT, EMB_DIM)
-        from ecommerce_data_engineering_spark.sources.readers import load
-
-        emb = load(spark, sf_dir, "embeddings")
-        qs = emb.filter(SF.col("vec_id") < ANN_QUERY_LIMIT)
+        qs = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
         probe_sweep = {}
         for ph in (0, 1, 2):
-            sets = _topk_sets(S.lsh_cosine_topk(
+            sets = _topk_sets(lsh_cosine_topk(
                 emb, qs, ANN_K, EMB_DIM, ANN_PLANES, probe_hamming=ph))
             probe_sweep[str(ph)] = round(_recall(sets, exact), 4)
             print(f"{label}: lsh probe_hamming={ph} recall@5 = "
                   f"{probe_sweep[str(ph)]}", flush=True)
         table_sweep = {}
         for nt in (1, 2, 4):
-            sets = _topk_sets(S.lsh_cosine_topk_multitable(
+            sets = _topk_sets(lsh_cosine_topk_multitable(
                 emb, qs, ANN_K, EMB_DIM, ANN_PLANES, num_tables=nt))
             table_sweep[str(nt)] = round(_recall(sets, exact), 4)
             print(f"{label}: lsh num_tables={nt} recall@5 = "
                   f"{table_sweep[str(nt)]}", flush=True)
 
         # What the k-means trainer buys: rerun IVF nprobe=1/2 with
-        # Lloyd's-refined centroids (operators/similarity.kmeans_refine,
-        # the embedding_ivf_kmeans query's kernel) instead of the raw
+        # centroids trained by the one IVF trainer (three Lloyd's
+        # iterations over the full corpus) instead of the raw
         # deterministic seeds — training the quantizer tightens cells,
         # so recall at the SAME probe budget should not degrade and
-        # usually improves.  Measured here rather than registered as a
-        # query because the iterative trainer is not SQL-expressible.
-        from ecommerce_data_engineering_spark.operators.similarity import (
-            ivf_assign, kmeans_refine)
-        from ecommerce_data_engineering_spark.plans.extensions import (
-            IVF_K, IVF_SEED_STEP)
-
-        seeds = (emb.filter((SF.col("vec_id") % IVF_SEED_STEP == 0)
-                            & (SF.col("vec_id") < IVF_K * IVF_SEED_STEP))
-                 .select((SF.col("vec_id") / IVF_SEED_STEP).cast("int")
-                         .alias("cluster_id"), "embedding"))
-        trained = kmeans_refine(emb, seeds, n_iter=3)
+        # usually improves.
+        trained = _train_centroids(emb, seeds, 3)
         trained_sweep = {}
         for nprobe in (1, 2):
-            sets = _topk_sets(
-                _ivf_nprobe_topk(spark, sf_dir, nprobe, centroids=trained))
+            sets = _topk_sets(_ivf_search(emb, trained, nprobe))
             trained_sweep[str(nprobe)] = round(_recall(sets, exact), 4)
             print(f"{label}: ivf TRAINED nprobe={nprobe} recall@5 = "
                   f"{trained_sweep[str(nprobe)]}", flush=True)
@@ -325,11 +248,8 @@ def main() -> None:
         spark.catalog.clearCache()
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    evid = os.path.join(here, "evidence")
-    os.makedirs(evid, exist_ok=True)
-    with open(os.path.join(evid, "RECALL.json"), "w") as f:
-        json.dump(rec, f, indent=1)
-    print("wrote RECALL.json")
+    write_record(os.path.join(here, "evidence", "RECALL.json"), rec,
+                 lambda r: set(r["fixtures"]))
     spark.stop()
 
 

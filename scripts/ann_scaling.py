@@ -7,9 +7,9 @@ cost stays sublinear.  This script turns that claim into a recorded
 measurement: for each (fixture, k_cells) point it finds the smallest
 nprobe on a ladder that reaches the 0.8 recall floor, then records
 recall, candidates/query, corpus fraction, and wall time of the full
-trained-search plan (training included — the same ivf_assign /
-kmeans_refine_lazy kernels the registered production query runs, via
-ann_recall's shared `_ivf_nprobe_topk` search plan).
+trained-search plan (training included — the registered production
+query's own trainer and search, `plans/extensions._train_centroids`
+and `_ivf_search`).
 
 Two fixture families, deliberately:
 
@@ -34,7 +34,9 @@ min(n, TRAIN_SAMPLES_PER_CELL·k_cells) rows (the standard IVF recipe;
 the registered production query ships the same gate at a fixed
 fraction), so training cost stops growing O(k·n) once n outruns the
 per-cell sample budget.  Each leg records train_sample_frac and
-n_train so the wall numbers are attributable.
+n_train so the wall numbers are attributable.  A run that would drop a
+(label, k_cells) leg the existing record holds (a fixture dir missing)
+does not write.
 
     python scripts/make_clustered_fixture.py /tmp/sf_clustered 2000
     python scripts/make_clustered_fixture.py /tmp/sf_clustered16x 32000
@@ -45,7 +47,6 @@ n_train so the wall numbers are attributable.
 from __future__ import annotations
 
 import datetime
-import json
 import math
 import os
 import statistics
@@ -85,31 +86,26 @@ def _ladder(kind: str, k_cells: int) -> list[int]:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F, SparkSession
+    from pyspark.sql import Window, functions as F
 
-    from ann_recall import _ivf_nprobe_topk, _recall, _topk_sets
-    from ecommerce_data_engineering_spark.operators import similarity as S
-    from ecommerce_data_engineering_spark.operators.similarity import (
-        ivf_assign, kmeans_refine_lazy)
+    from ann_recall import (_candidates_per_query, _recall, _topk_sets,
+                            write_record)
+    from ecommerce_data_engineering_spark.operators.sampling import (
+        sample_predicate)
     from ecommerce_data_engineering_spark.plans import (REGISTRY,
                                                         clear_query_memo)
     from ecommerce_data_engineering_spark.plans.extensions import (
-        ANN_QUERY_LIMIT, PROD_TRAIN_ITERS)
-    from ecommerce_data_engineering_spark.session import driver_memory
+        ANN_QUERY_LIMIT, PROD_TRAIN_ITERS, _ivf_search, _train_centroids)
+    from ecommerce_data_engineering_spark.session import get_spark
     from ecommerce_data_engineering_spark.sources.readers import load
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory", driver_memory())
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = get_spark("ann_scaling")
     spark.sparkContext.setLogLevel("ERROR")
 
     def rank_seeds(emb, k_cells: int, n: int):
         """k seed centroids at rank stride n//k over vec_id order —
         layout-independent (works on the key-shifted scaled fixtures
         where a vec_id-modulo grid would collapse to 2 seeds)."""
-        from pyspark.sql import Window
-
         step = max(1, n // k_cells)
         return (emb.withColumn(
                     "_rn", F.row_number().over(Window.orderBy("vec_id")) - 1)
@@ -118,19 +114,12 @@ def main() -> None:
                 .select((F.col("_rn") / step).cast("int")
                         .alias("cluster_id"), "embedding"))
 
-    from ecommerce_data_engineering_spark.operators.sampling import (
-        sample_predicate)
-
     def train_frac(k_cells: int, n: int) -> float:
         return min(1.0, TRAIN_SAMPLES_PER_CELL * k_cells / max(n, 1))
 
     def trained_cents(emb, k_cells: int, n: int):
-        frac = train_frac(k_cells, n)
-        train_df = emb if frac >= 1.0 else emb.filter(
-            sample_predicate(F.col("vec_id"), frac, seed=0))
-        return kmeans_refine_lazy(train_df, rank_seeds(emb, k_cells, n),
-                                  n_iter=PROD_TRAIN_ITERS, quantize=9,
-                                  persist_steps=True)
+        return _train_centroids(emb, rank_seeds(emb, k_cells, n),
+                                PROD_TRAIN_ITERS, train_frac(k_cells, n))
 
     exact_cache: dict[str, dict] = {}
     n_cache: dict[str, int] = {}
@@ -151,9 +140,8 @@ def main() -> None:
         emb = load(spark, sf_dir, "embeddings")
         trail, picked = {}, None
         for nprobe in _ladder(kind, k_cells):
-            sets = _topk_sets(_ivf_nprobe_topk(
-                spark, sf_dir, nprobe,
-                centroids=trained_cents(emb, k_cells, n)))
+            sets = _topk_sets(_ivf_search(
+                emb, trained_cents(emb, k_cells, n), nprobe))
             r = round(_recall(sets, exact), 4)
             trail[str(nprobe)] = r
             spark.catalog.clearCache()
@@ -170,21 +158,13 @@ def main() -> None:
             (nprobe, r), reached = picked, True
         # cost side at the picked point: mean corpus rows living in the
         # query set's probed cells
-        cents = trained_cents(emb, k_cells, n)
-        cell_pop = (ivf_assign(S.with_norm(emb), cents)
-                    .groupBy("cluster_id").count())
-        probed = ivf_assign(
-            S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
-            cents, nprobe=nprobe).select("vec_id", "cluster_id")
-        total = (probed.join(cell_pop, "cluster_id")
-                 .agg(F.sum("count")).collect()[0][0])
-        cand_q = float(total) / ANN_QUERY_LIMIT
+        cand_q = _candidates_per_query(
+            emb, trained_cents(emb, k_cells, n), nprobe)
         spark.catalog.clearCache()
 
         def timed() -> float:
             t0 = time.perf_counter()
-            _ivf_nprobe_topk(spark, sf_dir, nprobe,
-                             centroids=trained_cents(emb, k_cells, n)) \
+            _ivf_search(emb, trained_cents(emb, k_cells, n), nprobe) \
                 .write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             spark.catalog.clearCache()
@@ -226,11 +206,8 @@ def main() -> None:
         "legs": rows,
     }
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    evid = os.path.join(here, "evidence")
-    os.makedirs(evid, exist_ok=True)
-    with open(os.path.join(evid, "ANN_SCALING.json"), "w") as f:
-        json.dump(rec, f, indent=1)
-    print("wrote ANN_SCALING.json")
+    write_record(os.path.join(here, "evidence", "ANN_SCALING.json"), rec,
+                 lambda r: {(l["label"], l["k_cells"]) for l in r["legs"]})
     spark.stop()
 
 

@@ -468,23 +468,26 @@ def test_kmeans_refine_invariants(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ecommerce_data_engineering_spark.operators.similarity import (
-        kmeans_refine, kmeans_wcss)
+        kmeans_refine_lazy, kmeans_wcss_df)
     from ecommerce_data_engineering_spark.sources import load
+
+    def wcss_of(cents) -> float:
+        return kmeans_wcss_df(emb, cents).first()["wcss"]
 
     emb = load(spark, sf_dir, "embeddings")
     seeds = (emb.filter((F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496))
              .select((F.col("vec_id") / 31).cast("int").alias("cluster_id"),
                      "embedding"))
-    wcss = [kmeans_wcss(emb, seeds)]
+    wcss = [wcss_of(seeds)]
     cur = seeds
     for _ in range(3):
-        cur = kmeans_refine(emb, cur, n_iter=1)
-        wcss.append(kmeans_wcss(emb, cur))
+        cur = kmeans_refine_lazy(emb, cur, n_iter=1, persist_steps=True)
+        wcss.append(wcss_of(cur))
     assert all(b <= a * (1 + 1e-9) for a, b in zip(wcss, wcss[1:])), wcss
     assert wcss[-1] < wcss[0]                      # training actually helps
     assert cur.count() == seeds.count()
 
-    again = kmeans_refine(emb, seeds, n_iter=3)
+    again = kmeans_refine_lazy(emb, seeds, n_iter=3, persist_steps=True)
     a = sorted((r.cluster_id, tuple(r.embedding)) for r in again.collect())
     b = sorted((r.cluster_id, tuple(r.embedding)) for r in cur.collect())
     assert a == b
@@ -496,7 +499,7 @@ def test_kmeans_empty_cell_keeps_previous_centroid(spark):
     fallback must carry its previous centroid forward instead of
     dropping the cell or emitting nulls."""
     from ecommerce_data_engineering_spark.operators.similarity import (
-        kmeans_refine)
+        kmeans_refine_lazy)
 
     vecs = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(10)],
@@ -505,7 +508,7 @@ def test_kmeans_empty_cell_keeps_previous_centroid(spark):
         [(0, [5.0, 1.0]), (1, [5.0, 1.0])],
         "cluster_id int, embedding array<double>")
     out = {r.cluster_id: list(r.embedding) for r in
-           kmeans_refine(vecs, seeds, n_iter=1).collect()}
+           kmeans_refine_lazy(vecs, seeds, n_iter=1).collect()}
     assert set(out) == {0, 1}
     assert out[0] == [4.5, 1.0]          # mean of all ten vectors
     assert out[1] == [5.0, 1.0]          # empty cell: previous centroid

@@ -88,7 +88,8 @@ def test_lsh_lever_sweeps_are_monotone(rec):
 
 
 def test_trained_centroids_do_not_degrade_ivf_recall(rec):
-    """kmeans_refine exists to tighten IVF cells: at the SAME probe
+    """The IVF trainer (plans/extensions._train_centroids) exists to
+    tighten IVF cells: at the SAME probe
     budget, recall with Lloyd's-trained centroids must not fall below
     the deterministic-seed recall (small tolerance — k-means optimizes
     WCSS, not recall, so per-query reshuffles can cost a hair)."""

@@ -1,6 +1,8 @@
 """``get_spark``'s driver-heap default derives from host memory, so a
 default session fits the machine it starts on, and every script takes
-its heap from the same rule.  No SparkSession needed."""
+its heap from the same rule.  The shuffled-hash-join bound derives from
+that heap and the core count.  Only the wiring check needs a
+SparkSession."""
 
 from __future__ import annotations
 
@@ -8,7 +10,7 @@ import os
 import re
 
 from ecommerce_data_engineering_spark.session import (
-    default_driver_memory, driver_memory)
+    _mib, default_driver_memory, driver_memory, shj_threshold)
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "scripts")
@@ -66,3 +68,29 @@ def test_no_script_hardcodes_a_heap_default():
                 if literal.search(f.read()):
                     offenders.append(os.path.relpath(path, SCRIPTS))
     assert not offenders, offenders
+
+
+def test_shj_threshold_is_guaranteed_per_task_execution_memory():
+    # (3072 - 300 reserved) MiB x 0.6 unified x (1 - 0.5 storage)
+    # / (2 x 4 tasks) = 103.95 MiB: perfbench's 3g heap on 4 cores
+    assert shj_threshold("3g", 4) == "103m"
+    assert shj_threshold("3072m", 4) == "103m"
+    assert shj_threshold("7g", 4) == "257m"
+    assert shj_threshold("1g", 8) == "13m"
+    # nothing is guaranteed below the reserved 300 MiB: keep sort-merge
+    assert shj_threshold("256m", 4) == "0m"
+
+
+def test_shj_threshold_never_exceeds_heap_per_core():
+    for heap in ("512m", "1g", "3g", "7g", "64g", "1t"):
+        for cores in (1, 2, 4, 8, 64):
+            bound = _mib(shj_threshold(heap, cores))
+            assert 0 <= bound <= _mib(heap) / cores, (heap, cores)
+
+
+def test_get_spark_sets_the_derived_shj_threshold(spark):
+    conf = spark.conf
+    assert conf.get(
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == \
+        shj_threshold(conf.get("spark.driver.memory"),
+                      spark.sparkContext.defaultParallelism)
