@@ -1,21 +1,28 @@
 """Similarity search over embedding columns (array<float>).
 
-Two strategies:
+Cosine top-k search is one scoring step behind three candidate steps.
+Each search only decides which (query, corpus) pairs are candidates;
+:func:`_score_and_rank` then computes the cosine of every candidate
+pair and keeps the top k per query, the same way for all three:
 
-- ``cosine_topk`` — exact brute-force top-k: query set × corpus with
-  JVM-side ``zip_with``/``aggregate`` dot products (no Python UDF, no
-  Arrow round-trip).  Cost O(|Q|·|C|·d): the correctness baseline, and
+- ``cosine_topk`` — exact: every pair is a candidate (a broadcast
+  nested-loop join).  Cost O(|Q|·|C|·d): the correctness baseline, and
   the right answer when |Q| is small and the corpus side broadcasts.
+- ``lsh_cosine_topk`` — random-hyperplane sign-LSH: sign-bucket every
+  vector with H pseudo-random hyperplanes per table (derived
+  deterministically from md5, so the oracle can reproduce them);
+  candidate = same bucket in any table, optionally within a Hamming
+  radius of the query's bucket.  Cost Σ_bucket |Q_b|·|C_b|·d.
+- IVF — coarse quantization: :func:`ivf_assign` stores each corpus
+  vector in its nearest centroid's cell and each query probes its
+  ``nprobe`` nearest cells; candidate = same cell.  The k-means
+  trainer (:func:`kmeans_refine_lazy`) builds the centroids; the
+  search plan is ``plans/extensions._ivf_search``.
 
-- ``lsh_cosine_topk`` — random-hyperplane LSH: sign-bucket every vector
-  with H shared pseudo-random hyperplanes (derived deterministically
-  from md5, so the oracle can reproduce them), candidate = same bucket,
-  exact cosine within bucket.  Cost Σ_bucket |Q_b|·|C_b|·d — the 100 TB
-  scale path (bucket count grows 2^H; multi-probe/tables are the
-  production refinement, IVF the alternative — see :func:`ivf_assign`).
-
-All arithmetic is double (floats are upcast first) and rounded before
-ranking so results are deterministic and reproducible cross-engine.
+Dot products are JVM-side ``zip_with``/``aggregate`` (no Python UDF, no
+Arrow round-trip).  All arithmetic is double (floats are upcast first)
+and rounded before ranking so results are deterministic and
+reproducible cross-engine.
 """
 
 from __future__ import annotations
@@ -34,9 +41,9 @@ def _dot_sql(a: str, b: str) -> str:
 
 def _cosine_sql(a: str, b: str, na: str, nb: str) -> str:
     """pround(dot/(na·nb), 6) as ONE SQL text — the ranking cosine every
-    top-k variant computes, spelled once so the four call sites cannot
-    drift and plan construction pays one parse instead of ~30 py4j
-    round-trips (r11; equivalence pinned in tests/test_expr_parity.py)."""
+    top-k search computes (in :func:`_score_and_rank`), one parse
+    instead of ~30 py4j round-trips at plan construction (r11;
+    equivalence pinned in tests/test_expr_parity.py)."""
     return (f"floor((({_dot_sql(a, b)}) / (`{na}` * `{nb}`)) "
             f"* 1000000 + 0.5D) / 1000000")
 
@@ -80,36 +87,60 @@ def with_norm(df: DataFrame, vec_col: str = "embedding",
     return df.withColumn(out_col, F.sqrt(sq)).filter(F.col(out_col) > 0)
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+def _side(df: DataFrame, role: str, *keys, id_col: str = "vec_id",
+          vec_col: str = "embedding") -> DataFrame:
+    """One side of :func:`_score_and_rank` from a :func:`with_norm`'d
+    frame: ``(query_id, q_vec, q_norm, keys…)`` for ``role="query"``,
+    ``(neighbor_id, c_vec, c_norm, keys…)`` for ``role="neighbor"``."""
+    p = "q" if role == "query" else "c"
+    return df.select(F.col(id_col).alias(f"{role}_id"),
+                     F.col(vec_col).alias(f"{p}_vec"),
+                     F.col("norm").alias(f"{p}_norm"), *keys)
 
-    Returns (query_id, neighbor_id, cosine, rn).  Ranking is on
-    floor((cos) * 1000000000 + 0.5) / 1000000000 with neighbor-id tiebreak → engine-independent.
-    """
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-    )
-    pairs = q.join(c, F.col("query_id") != F.col("neighbor_id"))
-    # one Project (cosine computed in the select) instead of
-    # withColumn-then-select: every DataFrame op re-analyzes the whole
-    # tree eagerly, so fewer ops = cheaper construction (r11); the
-    # optimizer collapsed the two Projects anyway — optimized plan
-    # pinned identical in tests/test_expr_parity.py
+
+def _score_and_rank(q: DataFrame, c: DataFrame, k: int,
+                    dedup: bool = False) -> DataFrame:
+    """The scoring step every cosine top-k search shares: pair the
+    query side with the corpus side (:func:`_side`) on their common key
+    columns — every pair when they have none, the exact search — drop
+    self pairs, compute the cosine in ONE projection, and keep the top
+    ``k`` per query by cosine descending, then ``neighbor_id``.
+
+    Returns (query_id, neighbor_id, cosine, rn).  ``dedup`` drops a
+    pair met under more than one key (multi-table LSH); the cosine is a
+    function of the pair, so the surviving row is the same whichever
+    copy is kept.  One projection, not withColumn-then-select: every
+    DataFrame op re-analyzes the whole tree eagerly, so fewer ops mean
+    cheaper construction (r11; the optimized plan is pinned identical in
+    tests/test_expr_parity.py)."""
+    keys = [n for n in q.columns if n not in ("query_id", "q_vec", "q_norm")]
+    other = F.col("query_id") != F.col("neighbor_id")
+    pairs = q.join(c, keys).filter(other) if keys else q.join(c, other)
     sim = pairs.select(
         "query_id", "neighbor_id",
         F.expr(_cosine_sql("q_vec", "c_vec", "q_norm", "c_norm"))
         .alias("cosine"))
+    if dedup:
+        sim = sim.dropDuplicates(["query_id", "neighbor_id"])
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (sim.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") <= k))
+
+
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int,
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Exact top-k cosine neighbors for each query vector: every
+    (query, corpus) pair is a candidate.
+
+    Returns (query_id, neighbor_id, cosine, rn).  Ranking is on
+    floor(cos * 1000000 + 0.5) / 1000000 with neighbor-id tiebreak →
+    engine-independent.
+    """
+    return _score_and_rank(
+        _side(with_norm(queries, vec_col), "query",
+              id_col=id_col, vec_col=vec_col),
+        _side(with_norm(corpus, vec_col), "neighbor",
+              id_col=id_col, vec_col=vec_col), k)
 
 
 def rademacher_weights(num_planes: int, dim: int) -> list[list[float]]:
@@ -130,10 +161,7 @@ def rademacher_weights(num_planes: int, dim: int) -> list[list[float]]:
 
 
 def _plane_sign_bit_sql(vec_col: str, ws: list[float], dim: int) -> str:
-    """SQL text of one hyperplane sign bit ('1'/'0') — the ONE
-    definition both the single-table and multi-table sign-LSH build
-    on, so the documented "table 0 reproduces lsh_cosine_topk exactly"
-    recall-dominance property can't silently desynchronize.
+    """SQL text of one hyperplane sign bit ('1'/'0').
 
     Emitted as SQL TEXT so callers can fold a whole H-plane signature
     into a single ``F.expr`` parse: the Column-API form (``F.array``
@@ -156,6 +184,13 @@ def _plane_sign_bit_sql(vec_col: str, ws: list[float], dim: int) -> str:
     return f"CASE WHEN {pround_sql(dot, 9)} > 0 THEN '1' ELSE '0' END"
 
 
+def _signature_sql(vec_col: str, weights: list[list[float]],
+                   dim: int) -> str:
+    """SQL text of the '0'/'1' signature over ``weights``' planes."""
+    return "concat(" + ",".join(_plane_sign_bit_sql(vec_col, ws, dim)
+                                for ws in weights) + ")"
+
+
 def hyperplane_sign_bits(df: DataFrame, vec_col: str, num_planes: int,
                          dim: int, out_col: str = "bucket") -> DataFrame:
     """Random-hyperplane signature as a '0'/'1' string of length H.
@@ -171,31 +206,53 @@ def hyperplane_sign_bits(df: DataFrame, vec_col: str, num_planes: int,
     signature is ONE ``F.expr`` parse (see :func:`_plane_sign_bit_sql`).
     """
     weights = rademacher_weights(num_planes, dim)
-    sig = ",".join(_plane_sign_bit_sql(vec_col, ws, dim) for ws in weights)
-    return df.withColumn(out_col, F.expr(f"concat({sig})"))
+    return df.withColumn(out_col, F.expr(_signature_sql(vec_col, weights,
+                                                        dim)))
 
 
 def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, dim: int,
                     num_planes: int = 6, id_col: str = "vec_id",
                     vec_col: str = "embedding",
-                    probe_hamming: int = 0) -> DataFrame:
-    """Approximate top-k: exact cosine restricted to same-bucket pairs.
+                    probe_hamming: int = 0, num_tables: int = 1) -> DataFrame:
+    """Approximate top-k by random-hyperplane sign-LSH: exact cosine
+    restricted to pairs that share a bucket.  Two orthogonal recall
+    knobs:
 
-    ``probe_hamming=r`` enables multi-probe: each QUERY additionally
-    probes every bucket within Hamming distance r of its own signature
-    (every subset of ≤ r bit flips), recovering neighbors that fell
-    just across one or two hyperplanes.  Candidate volume grows
-    ×Σ_{i≤r} C(H,i) on the QUERY side only — the corpus is still
-    bucketed once, so the production recall knob costs O(|Q|·H^r)
-    extra probe rows, never a second corpus pass.  r is capped at H
-    (flipping every bit) where the probe set is the whole keyspace.
+    - ``num_tables=L``: L independent hyperplane sets; table t uses
+      planes t·H..t·H+H-1 of :func:`rademacher_weights`, so table 0 IS
+      the single-table search and more tables can only add candidates.
+      A near neighbor only has to agree on one table's H planes.  Each
+      side becomes one (id, table, bucket) row per table — the corpus
+      is still scanned once — and candidate volume grows linearly in L.
+      A pair can meet in several tables, so it is deduplicated (only
+      then: with one table a vector has one bucket).
+    - ``probe_hamming=r``: each QUERY additionally probes every bucket
+      within Hamming distance r of its signature in each table (every
+      subset of ≤ r bit flips), recovering neighbors that fell just
+      across one or two hyperplanes.  Candidate volume grows
+      ×Σ_{i≤r} C(H,i) on the QUERY side only, never a second corpus
+      pass.  r is capped at H (flipping every bit) where the probe set
+      is the whole keyspace.  The probe buckets are distinct, so a
+      vector's one bucket per table matches at most one of them.
+
+    Weights are precomputed literals, and each side's whole signature
+    stack is ONE expression parse.
     """
     from itertools import combinations
 
-    qb = hyperplane_sign_bits(
-        with_norm(queries, vec_col), vec_col, num_planes, dim
-    ).select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-             F.col("norm").alias("q_norm"), "bucket")
+    weights = rademacher_weights(num_tables * num_planes, dim)
+    sigs = [_signature_sql(vec_col, weights[t * num_planes:
+                                            (t + 1) * num_planes], dim)
+            for t in range(num_tables)]
+    if num_tables == 1:
+        buckets = [F.expr(sigs[0]).alias("bucket")]
+    else:
+        buckets = [F.inline(F.expr("array(" + ",".join(
+            f"named_struct('table', {t}, 'bucket', {sig})"
+            for t, sig in enumerate(sigs)) + ")"))]
+
+    qb = _side(with_norm(queries, vec_col), "query", *buckets,
+               id_col=id_col, vec_col=vec_col)
     if probe_hamming >= 1:
         def flipped(positions: tuple[int, ...]):
             out, cursor = [], 0
@@ -217,78 +274,9 @@ def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, dim: int,
                  for combo in combinations(range(num_planes), r)]
         qb = (qb.withColumn("bucket",
                             F.explode(F.array(F.col("bucket"), *flips))))
-    cb = hyperplane_sign_bits(
-        with_norm(corpus, vec_col), vec_col, num_planes, dim
-    ).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-             F.col("norm").alias("c_norm"), "bucket")
-    pairs = qb.join(cb, "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
-    sim = pairs.select(
-        "query_id", "neighbor_id",
-        F.expr(_cosine_sql("q_vec", "c_vec", "q_norm", "c_norm"))
-        .alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (sim.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= k))
-
-
-def lsh_cosine_topk_multitable(corpus: DataFrame, queries: DataFrame,
-                               k: int, dim: int, num_planes: int = 6,
-                               num_tables: int = 2, id_col: str = "vec_id",
-                               vec_col: str = "embedding") -> DataFrame:
-    """Multi-TABLE sign-LSH: ``num_tables`` independent hyperplane
-    sets (table t uses global plane indices t·H..t·H+H-1, so table 0
-    reproduces :func:`lsh_cosine_topk` exactly), candidate = same
-    bucket in ANY table, exact cosine over the deduplicated candidate
-    set.  The standard LSH recall lever orthogonal to multi-probe:
-    recall rises with L because a near neighbor only has to agree on
-    one table's H planes.
-
-    Scale shape: each side is ONE frame of (id, table, bucket) rows —
-    the signature stack is an explode over per-table bucket structs,
-    so the corpus is scanned once regardless of L — and the candidate
-    join is a (table, bucket) equi-join whose volume grows linearly in
-    L, never a second corpus pass.  Weights are precomputed literals
-    (:func:`rademacher_weights` over L·H planes), zero per-row hashing.
-    """
-    weights = rademacher_weights(num_tables * num_planes, dim)
-
-    def bucket_struct_sql(t: int) -> str:
-        bits = ",".join(
-            _plane_sign_bit_sql(vec_col, weights[t * num_planes + p], dim)
-            for p in range(num_planes))
-        return f"named_struct('table', {t}, 'bucket', concat({bits}))"
-
-    # the whole L-table signature stack is ONE expression parse
-    tables = F.expr("array(" + ",".join(
-        bucket_struct_sql(t) for t in range(num_tables)) + ")")
-
-    def stacked(df: DataFrame, prefix: str) -> DataFrame:
-        return (with_norm(df, vec_col)
-                .select(F.col(id_col).alias(f"{prefix}_id"),
-                        F.col(vec_col).alias(f"{prefix}_vec"),
-                        F.col("norm").alias(f"{prefix}_norm"),
-                        F.explode(tables).alias("tb"))
-                .select(f"{prefix}_id", f"{prefix}_vec", f"{prefix}_norm",
-                        F.col("tb.table").alias("table"),
-                        F.col("tb.bucket").alias("bucket")))
-
-    qb = stacked(queries, "query")
-    cb = stacked(corpus, "neighbor").select("neighbor_id", "table", "bucket")
-    cand = (qb.join(cb, ["table", "bucket"])
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "query_vec", "query_norm", "neighbor_id")
-            .dropDuplicates(["query_id", "neighbor_id"]))
-    vecs = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"), F.col("norm").alias("c_norm"))
-    sim = (cand.join(vecs, "neighbor_id")
-           .select("query_id", "neighbor_id",
-                   F.expr(_cosine_sql("query_vec", "c_vec",
-                                      "query_norm", "c_norm"))
-                   .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (sim.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") <= k))
+    cb = _side(with_norm(corpus, vec_col), "neighbor", *buckets,
+               id_col=id_col, vec_col=vec_col)
+    return _score_and_rank(qb, cb, k, dedup=num_tables > 1)
 
 
 def fold_centroids(centroids: DataFrame,

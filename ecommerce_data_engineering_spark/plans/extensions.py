@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import dedup as D
 from ..operators import multimodal as M
@@ -317,18 +317,24 @@ _VEC_CTE = """
       -- cosine oracle below inner-joins norms, so both engines agree
       SELECT vec_id, sqrt(sum(x * x)) AS nrm FROM v GROUP BY vec_id
       HAVING sum(x * x) > 0
-    )
-"""
+    )"""
 
 
-@query(
-    "embedding_cosine_topk",
-    oracle=f"""
-    WITH {_VEC_CTE},
-    q AS (SELECT * FROM v WHERE vec_id < {ANN_QUERY_LIMIT}),
-    dots AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, sum(q.x * c.x) AS dot
-      FROM q JOIN v c ON q.i = c.i AND q.vec_id <> c.vec_id
+def _topk_oracle(cand: str, *ctes: str) -> str:
+    """The oracle twin of operators/similarity._score_and_rank, shared
+    by every cosine top-k oracle: ``cand`` selects the distinct
+    (query_id, neighbor_id) candidate pairs over ``_VEC_CTE`` and the
+    search's own ``ctes``; then exact dot products, the rounded
+    cosine, and the top ``ANN_K`` per query by cosine descending, then
+    neighbor_id."""
+    return f"""
+    WITH {", ".join((_VEC_CTE, *ctes))},
+    cand AS ({cand}
+    ), dots AS (
+      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
+      FROM cand
+      JOIN v a ON a.vec_id = cand.query_id
+      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
       GROUP BY 1, 2
     ), sims AS (
       SELECT d.query_id, d.neighbor_id,
@@ -343,7 +349,15 @@ _VEC_CTE = """
     )
     SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
     FROM ranked WHERE rn <= {ANN_K}
-    """,
+    """
+
+
+@query(
+    "embedding_cosine_topk",
+    oracle=_topk_oracle(f"""
+      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
+      FROM norms q JOIN norms c ON q.vec_id <> c.vec_id
+      WHERE q.vec_id < {ANN_QUERY_LIMIT}"""),
     covers=("EXT-similarity",),
     # bench=False since r7 (VERDICT r6 #2): the candidate generator is
     # deliberately O(|Q|·|C|) — it exists as the exact-recall yardstick
@@ -363,135 +377,40 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.cosine_topk(emb, queries, ANN_K)
 
 
-def _planes_cte() -> str:
-    """The precomputed ±1 plane weights (operators/similarity.
-    rademacher_weights — same md5 derivation both engines used to
-    recompute per row) as a DuckDB VALUES table (p, w DOUBLE[])."""
+ANN_TABLES = 2
+
+
+def _lsh_oracle(num_tables: int, probe_hamming: int) -> str:
+    """Oracle twin of operators/similarity.lsh_cosine_topk at
+    ``ANN_PLANES`` planes per table: every vector's sign bit per
+    (table, plane) over the same precomputed ±1 weights
+    (rademacher_weights — the md5 derivation both engines used to
+    recompute per row), its bucket per table, and each query's probe
+    buckets — its own, plus, at ``probe_hamming`` 1, every bucket one
+    bit flip away.  Candidate = a corpus vector in a probed bucket of
+    the same table."""
     from ..operators.similarity import rademacher_weights
 
+    assert probe_hamming in (0, 1), probe_hamming
+    ws = rademacher_weights(num_tables * ANN_PLANES, EMB_DIM)
     rows = ", ".join(
-        f"({p}, [{', '.join(str(w) for w in ws)}]::DOUBLE[])"
-        for p, ws in enumerate(rademacher_weights(ANN_PLANES, EMB_DIM)))
-    return f"planes AS (SELECT * FROM (VALUES {rows}) AS t(p, w))"
-
-
-def _ann_lsh_oracle() -> str:
-    return f"""
-    WITH {_VEC_CTE},
-    {_planes_cte()},
-    sb AS (
-      SELECT v.vec_id, planes.p,
-             CASE WHEN floor(sum(v.x * planes.w[v.i]) * 1000000000 + 0.5)
-                       / 1000000000 > 0
-                  THEN '1' ELSE '0' END AS bit
-      FROM v CROSS JOIN planes
-      GROUP BY v.vec_id, planes.p
-    ), buckets AS (
-      SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket FROM sb GROUP BY vec_id
-    ),
-    qb AS (SELECT * FROM buckets WHERE vec_id < {ANN_QUERY_LIMIT}),
-    cand AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM qb q JOIN buckets c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-    ), dots AS (
-      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
-      FROM cand
-      JOIN v a ON a.vec_id = cand.query_id
-      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
-      GROUP BY 1, 2
-    ), sims AS (
-      SELECT d.query_id, d.neighbor_id,
-             floor((d.dot / (nq.nrm * nc.nrm)) * 1000000 + 0.5) / 1000000 AS cosine
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER
-        (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-      FROM sims
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-    FROM ranked WHERE rn <= {ANN_K}
-    """
-
-
-@query("embedding_ann_lsh", oracle=_ann_lsh_oracle(), covers=("EXT-similarity",),
-       bench=True)
-def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate NN via random-hyperplane sign-LSH: md5-derived ±1
-    planes (shared with the oracle), bucket on the 6-bit signature,
-    exact cosine within buckets only.  Candidate volume drops
-    ~2^planes; recall tunes with plane count / multi-probe."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
-    return S.lsh_cosine_topk(emb, queries, ANN_K, EMB_DIM, ANN_PLANES)
-
-
-def _ann_lsh_mp_oracle() -> str:
-    return f"""
-    WITH {_VEC_CTE},
-    {_planes_cte()},
-    sb AS (
-      SELECT v.vec_id, planes.p,
-             CASE WHEN floor(sum(v.x * planes.w[v.i]) * 1000000000 + 0.5)
-                       / 1000000000 > 0
-                  THEN '1' ELSE '0' END AS bit
-      FROM v CROSS JOIN planes
-      GROUP BY v.vec_id, planes.p
-    ), buckets AS (
-      SELECT vec_id, string_agg(bit, '' ORDER BY p) AS bucket FROM sb GROUP BY vec_id
-    ),
-    qb AS (SELECT * FROM buckets WHERE vec_id < {ANN_QUERY_LIMIT}),
-    probes AS (
-      SELECT vec_id, bucket FROM qb
+        f"({t}, {p}, [{', '.join(str(w) for w in ws[t * ANN_PLANES + p])}]"
+        f"::DOUBLE[])"
+        for t in range(num_tables) for p in range(ANN_PLANES))
+    flips = f"""
       UNION
-      SELECT qb.vec_id,
+      SELECT qb.vec_id, qb.tbl,
              substr(qb.bucket, 1, fp.p)
                || (CASE WHEN substr(qb.bucket, fp.p + 1, 1) = '1'
                         THEN '0' ELSE '1' END)
                || substr(qb.bucket, fp.p + 2) AS bucket
       FROM qb CROSS JOIN
-           (SELECT unnest(generate_series(0, {ANN_PLANES - 1})) AS p) fp
-    ),
-    cand AS (
+           (SELECT unnest(generate_series(0, {ANN_PLANES - 1})) AS p) fp"""
+    return _topk_oracle("""
       SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM probes q JOIN buckets c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-    ), dots AS (
-      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
-      FROM cand
-      JOIN v a ON a.vec_id = cand.query_id
-      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
-      GROUP BY 1, 2
-    ), sims AS (
-      SELECT d.query_id, d.neighbor_id,
-             floor((d.dot / (nq.nrm * nc.nrm)) * 1000000 + 0.5) / 1000000 AS cosine
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER
-        (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-      FROM sims
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-    FROM ranked WHERE rn <= {ANN_K}
-    """
-
-
-ANN_TABLES = 2
-
-
-def _ann_lsh_multitable_oracle() -> str:
-    from ..operators.similarity import rademacher_weights
-
-    ws = rademacher_weights(ANN_TABLES * ANN_PLANES, EMB_DIM)
-    rows = ", ".join(
-        f"({t}, {p}, [{', '.join(str(w) for w in ws[t * ANN_PLANES + p])}]"
-        f"::DOUBLE[])"
-        for t in range(ANN_TABLES) for p in range(ANN_PLANES))
-    return f"""
-    WITH {_VEC_CTE},
-    planes AS (SELECT * FROM (VALUES {rows}) AS t(tbl, p, w)),
+      FROM probes q JOIN buckets c
+        ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id""",
+        f"""planes AS (SELECT * FROM (VALUES {rows}) AS t(tbl, p, w)),
     sb AS (
       SELECT v.vec_id, planes.tbl, planes.p,
              CASE WHEN floor(sum(v.x * planes.w[v.i]) * 1000000000 + 0.5)
@@ -504,50 +423,39 @@ def _ann_lsh_multitable_oracle() -> str:
       FROM sb GROUP BY vec_id, tbl
     ),
     qb AS (SELECT * FROM buckets WHERE vec_id < {ANN_QUERY_LIMIT}),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM qb q JOIN buckets c
-        ON q.tbl = c.tbl AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
-    ), dots AS (
-      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
-      FROM cand
-      JOIN v a ON a.vec_id = cand.query_id
-      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
-      GROUP BY 1, 2
-    ), sims AS (
-      SELECT d.query_id, d.neighbor_id,
-             floor((d.dot / (nq.nrm * nc.nrm)) * 1000000 + 0.5) / 1000000 AS cosine
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER
-        (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-      FROM sims
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-    FROM ranked WHERE rn <= {ANN_K}
-    """
+    probes AS (
+      SELECT vec_id, tbl, bucket FROM qb{flips if probe_hamming else ""}
+    )""")
 
 
-@query("embedding_ann_lsh_multitable", oracle=_ann_lsh_multitable_oracle(),
+@query("embedding_ann_lsh", oracle=_lsh_oracle(1, 0), covers=("EXT-similarity",),
+       bench=True)
+def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate NN via random-hyperplane sign-LSH: md5-derived ±1
+    planes (shared with the oracle), bucket on the 6-bit signature,
+    exact cosine within buckets only.  Candidate volume drops
+    ~2^planes; recall tunes with plane count / multi-probe."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
+    return S.lsh_cosine_topk(emb, queries, ANN_K, EMB_DIM, ANN_PLANES)
+
+
+@query("embedding_ann_lsh_multitable", oracle=_lsh_oracle(ANN_TABLES, 0),
        covers=("EXT-similarity",))
 def embedding_ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table sign-LSH (L=2 independent hyperplane sets): the
     recall lever orthogonal to multi-probe — a near neighbor only has
-    to share a bucket in ONE table.  Table 0's planes are identical to
-    embedding_ann_lsh's, so its candidate set strictly contains the
+    to share a bucket in ONE table.  Table 0's planes are
+    embedding_ann_lsh's, so its candidate set contains the
     single-table one (recall dominance property-tested).  The corpus is
     scanned once; candidate volume grows linearly in L."""
-    from ..operators.similarity import lsh_cosine_topk_multitable
-
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
-    return lsh_cosine_topk_multitable(emb, queries, ANN_K, EMB_DIM,
-                                      ANN_PLANES, ANN_TABLES)
+    return S.lsh_cosine_topk(emb, queries, ANN_K, EMB_DIM, ANN_PLANES,
+                             num_tables=ANN_TABLES)
 
 
-@query("embedding_ann_lsh_multiprobe", oracle=_ann_lsh_mp_oracle(),
+@query("embedding_ann_lsh_multiprobe", oracle=_lsh_oracle(1, 1),
        covers=("EXT-similarity",))
 def embedding_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-LSH (the production recall knob): every query
@@ -999,9 +907,12 @@ def _ivf_nprobe_oracle(ivf_k: int, seed_step: int, nprobe: int,
     """Oracle twin of :func:`_ivf_search` over the ``_cent_cte_sql``
     centroids: the corpus stored in its nearest cell, each query
     probing its ``nprobe`` nearest cells, exact cosine, top ``ANN_K``."""
-    return f"""
-    WITH {_VEC_CTE},
-    {_cent_cte_sql(ivf_k, seed_step, train_iters, train_sample_sql)}, dist AS (
+    return _topk_oracle(f"""
+      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+      FROM q_probe q JOIN assigned c
+        ON q.cluster_id = c.cluster_id AND q.vec_id <> c.vec_id""",
+        _cent_cte_sql(ivf_k, seed_step, train_iters, train_sample_sql),
+        f"""dist AS (
       SELECT v.vec_id, c.cluster_id,
              floor(sum((v.x - c.x) * (v.x - c.x)) * 1000000000 + 0.5) / 1000000000 AS d2
       FROM v JOIN cent c ON v.i = c.i
@@ -1015,31 +926,7 @@ def _ivf_nprobe_oracle(ivf_k: int, seed_step: int, nprobe: int,
     q_probe AS (
       SELECT vec_id, cluster_id FROM ranked_cells
       WHERE rn <= {nprobe} AND vec_id < {ANN_QUERY_LIMIT}
-    ),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-      FROM q_probe q JOIN assigned c
-        ON q.cluster_id = c.cluster_id AND q.vec_id <> c.vec_id
-    ), dots AS (
-      SELECT cand.query_id, cand.neighbor_id, sum(a.x * b.x) AS dot
-      FROM cand
-      JOIN v a ON a.vec_id = cand.query_id
-      JOIN v b ON b.vec_id = cand.neighbor_id AND b.i = a.i
-      GROUP BY 1, 2
-    ), sims AS (
-      SELECT d.query_id, d.neighbor_id,
-             floor(d.dot / (nq.nrm * nc.nrm) * 1000000 + 0.5) / 1000000 AS cosine
-      FROM dots d
-      JOIN norms nq ON d.query_id = nq.vec_id
-      JOIN norms nc ON d.neighbor_id = nc.vec_id
-    ), ranked AS (
-      SELECT *, row_number() OVER
-        (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-      FROM sims
-    )
-    SELECT query_id, neighbor_id, cosine, CAST(rn AS INT) AS rn
-    FROM ranked WHERE rn <= {ANN_K}
-    """
+    )""")
 
 
 def _seed_centroids(emb: DataFrame, ivf_k: int, seed_step: int) -> DataFrame:
@@ -1106,23 +993,9 @@ def _ivf_search(emb: DataFrame, centroids: DataFrame,
     query_cells = S.ivf_assign(
         S.with_norm(emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)),
         nprobe=nprobe, prefolded=folded)
-    q = query_cells.select(F.col("vec_id").alias("query_id"),
-                           F.col("embedding").alias("q_vec"),
-                           F.col("norm").alias("q_norm"), "cluster_id")
-    c = corpus_cells.select(F.col("vec_id").alias("neighbor_id"),
-                            F.col("embedding").alias("c_vec"),
-                            F.col("norm").alias("c_norm"), "cluster_id")
-    # cosine in ONE Project + one F.expr parse (construction cost, r11;
-    # optimized plan pinned identical in tests/test_expr_parity.py)
-    sims = (q.join(c, "cluster_id")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id",
-                    F.expr(S._cosine_sql("q_vec", "c_vec",
-                                         "q_norm", "c_norm"))
-                    .alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (sims.withColumn("rn", F.row_number().over(w).cast("int"))
-            .filter(F.col("rn") <= ANN_K))
+    return S._score_and_rank(S._side(query_cells, "query", "cluster_id"),
+                             S._side(corpus_cells, "neighbor", "cluster_id"),
+                             ANN_K)
 
 
 @query("embedding_ann_ivf",

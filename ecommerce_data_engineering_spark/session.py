@@ -35,6 +35,15 @@ def driver_memory() -> str:
     return os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
 
+def local_cores() -> int:
+    """The local core count (``local[N]``): ``SPARK_GRAFT_CPUS`` if set,
+    else every host core.  Every session this repo builds, scripts
+    included, takes its cores from here unless it pins its own
+    master."""
+    return (int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
+            or os.cpu_count() or 4)
+
+
 def _mib(size: str) -> float:
     """A JVM memory string (``3g``, ``3072m``, ``512k``; bare digits
     are MiB, as for ``spark.driver.memory``) in MiB."""
@@ -78,7 +87,7 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
       that need invalid→NULL use ``try_cast`` explicitly.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
+        cpus = local_cores()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     heap = driver_memory()

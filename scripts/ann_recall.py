@@ -115,7 +115,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from ecommerce_data_engineering_spark.operators.similarity import (
-        lsh_cosine_topk, lsh_cosine_topk_multitable)
+        lsh_cosine_topk)
     from ecommerce_data_engineering_spark.plans import (REGISTRY,
                                                         clear_query_memo)
     from ecommerce_data_engineering_spark.plans.extensions import (
@@ -177,8 +177,8 @@ def main() -> None:
             print(f"{label}: ivf nprobe={nprobe} recall@5 = "
                   f"{sweep[str(nprobe)]}", flush=True)
 
-        # LSH lever frontier: the two orthogonal recall knobs the
-        # operators expose (operators/similarity.py) — probe_hamming
+        # LSH lever frontier: the two orthogonal recall knobs
+        # operators/similarity.lsh_cosine_topk exposes — probe_hamming
         # widens each QUERY's probe set (cost O(|Q|·H) extra rows),
         # num_tables adds independent plane sets (candidate volume
         # linear in L).  Recorded so capacity planning can pick the
@@ -193,7 +193,7 @@ def main() -> None:
                   f"{probe_sweep[str(ph)]}", flush=True)
         table_sweep = {}
         for nt in (1, 2, 4):
-            sets = _topk_sets(lsh_cosine_topk_multitable(
+            sets = _topk_sets(lsh_cosine_topk(
                 emb, qs, ANN_K, EMB_DIM, ANN_PLANES, num_tables=nt))
             table_sweep[str(nt)] = round(_recall(sets, exact), 4)
             print(f"{label}: lsh num_tables={nt} recall@5 = "

@@ -42,10 +42,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession, functions as F
 
-    from ecommerce_data_engineering_spark.session import driver_memory
+    from ecommerce_data_engineering_spark.session import (
+        driver_memory, local_cores)
 
-    spark = (SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = (SparkSession.builder.master(f"local[{local_cores()}]")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.sql.warehouse.dir", warehouse)
              .config("spark.driver.memory", driver_memory())

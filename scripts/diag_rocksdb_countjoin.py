@@ -60,7 +60,8 @@ def main() -> None:
 
     from ecommerce_data_engineering_spark.loadctx import (
         busy_fraction, load_snapshot)
-    from ecommerce_data_engineering_spark.session import driver_memory
+    from ecommerce_data_engineering_spark.session import (
+        driver_memory, local_cores)
     from ecommerce_data_engineering_spark.sources import load
     from ecommerce_data_engineering_spark.streaming.events import (
         run_stream_to_memory)
@@ -70,8 +71,7 @@ def main() -> None:
         stream_events_dir)
     from stream_throughput import build_feed
 
-    spark = (SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = (SparkSession.builder.master(f"local[{local_cores()}]")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.driver.memory", driver_memory())
              .config("spark.sql.streaming.numRecentProgressUpdates",

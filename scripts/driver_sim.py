@@ -3,8 +3,9 @@ entry() smoke, every queries()[name] at sf0.01 vs oracle_sql() in DuckDB.
 
 This is the project verify recipe (.claude/skills/verify/SKILL.md):
 run from anywhere — `python scripts/driver_sim.py`."""
-import sys, traceback
-sys.path.insert(0, "/root/repo")
+import os, sys, traceback
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[8]")
@@ -23,7 +24,7 @@ assert len(rows) > 0
 
 # t2 correctness
 import duckdb
-sys.path.insert(0, "/root/repo/tests")
+sys.path.insert(0, os.path.join(REPO, "tests"))
 from oracle import compare, duckdb_run
 qs, osql = e.queries(), e.oracle_sql()
 sf = "/root/testdata/sf0.01"

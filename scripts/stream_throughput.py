@@ -131,13 +131,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from ecommerce_data_engineering_spark.session import driver_memory
+    from ecommerce_data_engineering_spark.session import (
+        driver_memory, local_cores)
     from ecommerce_data_engineering_spark.sources import load
     from ecommerce_data_engineering_spark.streaming.source import (
         stream_events_dir)
 
-    spark = (SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = (SparkSession.builder.master(f"local[{local_cores()}]")
              .config("spark.sql.shuffle.partitions", "32")
              .config("spark.driver.memory", driver_memory())
              # the progress ring buffer must outlast the feed or early

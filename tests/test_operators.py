@@ -232,6 +232,44 @@ def test_multiprobe_radius_widens_candidates_supersetwise(spark, sf_dir):
     assert n2 > n1, (n1, n2)
 
 
+def test_lsh_tables_and_probes_return_each_pair_once(spark, sf_dir):
+    """With L tables a pair can share a bucket in several of them, so
+    lsh_cosine_topk deduplicates pairs when num_tables > 1 (and only
+    then: one table gives a vector one bucket, and the probe buckets
+    are distinct).  At every (num_tables, probe_hamming) the result
+    holds each (query, neighbor) pair once, with rn running 1..n per
+    query.  With k large enough that ranking evicts nothing, the result
+    is the candidate set, and (2 tables, radius 1) must contain both
+    (1, 1) and (2, 0): table 0 is the single table, and radius 1
+    includes each query's own bucket."""
+    from pyspark.sql import functions as F
+    from ecommerce_data_engineering_spark.operators import similarity as S
+    from ecommerce_data_engineering_spark.plans.extensions import (
+        ANN_PLANES, ANN_QUERY_LIMIT, EMB_DIM)
+    from ecommerce_data_engineering_spark.sources import load
+
+    emb = load(spark, sf_dir, "embeddings")
+    qs = emb.filter(F.col("vec_id") < ANN_QUERY_LIMIT)
+    cands = {}
+    for tables in (1, 2):
+        for radius in (0, 1):
+            rows = S.lsh_cosine_topk(emb, qs, 10_000, EMB_DIM, ANN_PLANES,
+                                     probe_hamming=radius,
+                                     num_tables=tables).collect()
+            pairs = [(r.query_id, r.neighbor_id) for r in rows]
+            assert len(pairs) == len(set(pairs)), (tables, radius)
+            ranks = {}
+            for r in rows:
+                ranks.setdefault(r.query_id, []).append(r.rn)
+            for q, rn in ranks.items():
+                assert sorted(rn) == list(range(1, len(rn) + 1)), (
+                    tables, radius, q)
+            cands[tables, radius] = set(pairs)
+    assert cands[1, 1] <= cands[2, 1] and cands[2, 0] <= cands[2, 1]
+    # the two knobs each add candidates at fixture scale
+    assert cands[1, 0] < cands[1, 1] and cands[1, 0] < cands[2, 0]
+
+
 def test_deterministic_sampling_properties(spark, sf_dir):
     """Sampling/split invariants that matter for training pipelines:
     membership is a pure function of the id (stable under corpus

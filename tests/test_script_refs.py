@@ -3,7 +3,9 @@ exist, so deleting a script without updating its callers fails here
 rather than at the next evidence regeneration.  Likewise every evidence
 record (``<NAME>.json``) that the docs cite must exist under
 ``evidence/`` or at the repo root: ``scripts/check_scale_evidence.py``
-only asserts the other direction (an existing record is cited).  No
+only asserts the other direction (an existing record is cited).  And
+no script may put an absolute path on ``sys.path``: run from another
+checkout it would import that fixed tree instead of its own.  No
 SparkSession needed."""
 
 from __future__ import annotations
@@ -43,3 +45,21 @@ def test_named_records_exist(doc):
         if not any(os.path.isfile(os.path.join(HERE, d, r))
                    for d in ("evidence", "")))
     assert not missing, f"{doc} names missing records: {missing}"
+
+
+# a sys.path edit whose argument holds a string literal starting at "/"
+ABSOLUTE_SYS_PATH = re.compile(r"""sys\.path\b[^\n]*?["']/""")
+
+
+def test_no_script_puts_an_absolute_path_on_sys_path():
+    offenders = []
+    scripts = os.path.join(HERE, "scripts")
+    for root, _, files in os.walk(scripts):
+        for name in files:
+            path = os.path.join(root, name)
+            with open(path, errors="replace") as f:
+                for n, line in enumerate(f, 1):
+                    if ABSOLUTE_SYS_PATH.search(line):
+                        offenders.append(
+                            f"{os.path.relpath(path, HERE)}:{n}")
+    assert not offenders, offenders

@@ -10,7 +10,7 @@ import os
 import re
 
 from ecommerce_data_engineering_spark.session import (
-    _mib, default_driver_memory, driver_memory, shj_threshold)
+    _mib, default_driver_memory, driver_memory, local_cores, shj_threshold)
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "scripts")
@@ -66,6 +66,27 @@ def test_no_script_hardcodes_a_heap_default():
             path = os.path.join(root, name)
             with open(path, errors="replace") as f:
                 if literal.search(f.read()):
+                    offenders.append(os.path.relpath(path, SCRIPTS))
+    assert not offenders, offenders
+
+
+def test_local_cores_env_overrides_host_cores(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cores() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cores() == os.cpu_count()
+
+
+def test_no_script_reads_the_core_count_itself():
+    """A script that reads ``SPARK_GRAFT_CPUS`` itself can carry its own
+    default (``"32"``) that oversubscribes a smaller host; scripts call
+    ``session.local_cores()`` instead."""
+    offenders = []
+    for root, _, files in os.walk(SCRIPTS):
+        for name in files:
+            path = os.path.join(root, name)
+            with open(path, errors="replace") as f:
+                if "SPARK_GRAFT_CPUS" in f.read():
                     offenders.append(os.path.relpath(path, SCRIPTS))
     assert not offenders, offenders
 
