@@ -5,7 +5,9 @@ in watermarked state: a purchase can match clicks up to 1 hour older,
 and the time-range condition + watermarks bound how long either side
 is retained (without them the state grows forever — the condition IS
 the retention policy).  This is the streaming twin of the batch as-of
-join (operators/asof.py) with a bounded lookback window.
+join (operators/asof.py) with a bounded lookback window.  Its count
+twin, :func:`stream_click_purchase_counts`, needs no join at all: one
+windowed aggregation counts both event types per user.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ def stream_click_purchase_counts(spark: SparkSession, sf_dir: str,
                                  window: str = "1 hour",
                                  src: DataFrame | None = None) -> DataFrame:
     """Pre-aggregated (compacted) attribution: per (user, window) click
-    and purchase COUNTS joined key-to-key — the skew-robust twin of
+    and purchase COUNTS — the skew-robust twin of
     :func:`stream_click_purchase_join` (VERDICT r9 #7).
 
     The row-pair join is output-bound under key skew by arithmetic, not
@@ -59,37 +61,41 @@ def stream_click_purchase_counts(spark: SparkSession, sf_dir: str,
     key).  When the downstream product is a statistic — pairs per user,
     conversion volume, attribution weight — materializing the pairs
     only to re-aggregate them wastes the entire emission.  This
-    operator moves the aggregation IN FRONT of the join: each side
-    collapses to one count row per (user, window) BEFORE any matching,
-    so both join inputs, the join state, and the output are bounded by
-    key cardinality.  The hot key becomes one fat count row per side
-    and `n_pairs = n_clicks · n_purchases` is computed in O(1) from
-    the two counts — the c·p blowup never exists anywhere in the
-    pipeline.  (When individual pairs ARE the product, the row-pair
-    operator remains the right tool and its throughput is
-    output-bound by definition; both are measured side by side in
-    evidence/STREAM_BENCH.json.)
+    operator never matches rows at all: clicks and purchases collapse
+    together into one count row per (user, window), so the state and
+    the output are bounded by key cardinality.  The hot key becomes one
+    fat count row and `n_pairs = n_clicks · n_purchases` is computed in
+    O(1) from its two counts — the c·p blowup never exists anywhere in
+    the pipeline.  (When individual pairs ARE the product, the row-pair
+    operator remains the right tool and its throughput is output-bound
+    by definition.)
 
     Semantics: same-window attribution — clicks and purchases are
-    bucketed into tumbling ``window``s and matched within a bucket
-    (the count-join analogue of a bounded lookback; NULL user_ids drop
-    in the equi-join exactly as in the row-pair join).  Spark ≥ 3.5
-    supports this chain natively: windowed aggregation on BOTH streams
-    followed by a stream-stream window equi-join, three stateful
-    operators whose watermarks propagate through the window column.
+    bucketed into tumbling ``window``s and matched within a bucket (the
+    count analogue of a bounded lookback); rows with a NULL user_id are
+    dropped, as the row-pair join's equi-condition drops them, and a
+    (user, window) is emitted only when it holds at least one click AND
+    one purchase.  The plan is one scan of the source and one windowed
+    aggregation — a single stateful operator, no join state — emitted
+    in append mode once the watermark closes the window.
+
+    The watermark is that of the kept click and purchase rows (their
+    max ts − 2 hours), one for both event types.  On a time-ordered
+    feed that finalizes windows no later than separate per-type
+    watermarks would; on a feed where one event type lags the other by
+    more than 2 hours, the lagging type's rows arrive behind the
+    watermark and are dropped as late.
     """
     ev = src if src is not None else _events_stream(spark, sf_dir)
-    clicks = (ev.filter(F.col("event_type") == "click")
-              .withWatermark("ts", "2 hours")
-              .groupBy(F.window("ts", window).alias("win"),
-                       F.col("user_id"))
-              .agg(F.count(F.lit(1)).alias("n_clicks")))
-    purchases = (ev.filter(F.col("event_type") == "purchase")
-                 .withWatermark("ts", "2 hours")
-                 .groupBy(F.window("ts", window).alias("win"),
-                          F.col("user_id"))
-                 .agg(F.count(F.lit(1)).alias("n_purchases")))
-    return (purchases.join(clicks, ["win", "user_id"], "inner")
+    is_click = F.col("event_type") == "click"
+    is_purchase = F.col("event_type") == "purchase"
+    return (ev.filter((is_click | is_purchase)
+                      & F.col("user_id").isNotNull())
+            .withWatermark("ts", "2 hours")
+            .groupBy(F.window("ts", window).alias("win"), "user_id")
+            .agg(F.count_if(is_click).alias("n_clicks"),
+                 F.count_if(is_purchase).alias("n_purchases"))
+            .filter((F.col("n_clicks") > 0) & (F.col("n_purchases") > 0))
             .select(F.col("win.start").alias("window_start"),
                     "user_id", "n_clicks", "n_purchases",
                     (F.col("n_clicks") * F.col("n_purchases"))

@@ -12,8 +12,8 @@ the repo root in r7; SCALE.md carries the index):
 - the untagged SCALE_SWEEP.json (the authoritative 4x full sweep)
   keeps the exact "N of the M" claim SCALE.md quotes.
 
-The other records (STREAM_BENCH, RECALL, ANN_SCALING, ROCKSDB_COUNTJOIN,
-BUCKET_BENCH, PACKING_DECOMP) must be cited too, and the verdicts that
+The other records (STREAM_BENCH, RECALL, ANN_SCALING, BUCKET_BENCH,
+PACKING_DECOMP) must be cited too, and the verdicts that
 STREAM_BENCH, ANN_SCALING and PACKING_DECOMP carry must still hold.
 
 Exit 0 with a one-line summary per record, exit 1 with the reason
@@ -103,16 +103,6 @@ def main() -> None:
                            f"recall floor: {miss}")
             print(f"ANN_SCALING.json: {len(legs)} (fixture, k_cells) "
                   f"legs, floor {rec.get('recall_floor')}")
-    rocks = os.path.join(EVID, "ROCKSDB_COUNTJOIN.json")
-    if os.path.exists(rocks):
-        rec = json.load(open(rocks))
-        if "ROCKSDB_COUNTJOIN.json" not in md:
-            bad.append("ROCKSDB_COUNTJOIN.json: not cited in SCALE.md")
-        else:
-            runs = rec["runs"]
-            print(f"ROCKSDB_COUNTJOIN.json: hdfs {runs['hdfs']['wall_s']}s "
-                  f"vs rocksdb {runs['rocksdb']['wall_s']}s "
-                  f"(changelog {runs['rocksdb_changelog']['wall_s']}s)")
     bbench = os.path.join(EVID, "BUCKET_BENCH.json")
     if os.path.exists(bbench):
         rec = json.load(open(bbench))

@@ -190,17 +190,27 @@ def test_minhash_repeat_invocations_reuse_one_cache_entry(spark, sf_dir):
     CacheManager must dedup the identical plan across invocations so a
     long-lived session holds ONE entry per (session, sf_dir), not one
     per call — the accumulation failure mode ADVICE r02 flagged on the
-    funnel's (since removed) persist."""
+    funnel's (since removed) persist.
+
+    Compares the persisted RDD ids added after the baseline, not the
+    map's size: SparkContext holds persisted RDDs through weak
+    references, so a garbage collection between two reads can drop an
+    unrelated, unreferenced RDD, while the ones CacheManager holds stay
+    strongly reachable."""
     from ecommerce_data_engineering_spark.plans import REGISTRY
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     spark.catalog.clearCache()
     try:
+        base = max(persisted(), default=-1)
         REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
-        n1 = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        new1 = {i for i in persisted() if i > base}
         REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
         REGISTRY["dedup_minhash_lsh"].fn(spark, sf_dir).collect()
-        n3 = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-        assert n1 == n3, (n1, n3)
+        new3 = {i for i in persisted() if i > base}
+        assert new1 and new1 == new3, (new1, new3)
     finally:
         spark.catalog.clearCache()
 

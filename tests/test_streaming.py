@@ -202,6 +202,78 @@ def test_stream_count_join_equals_batch_counts(spark, sf_dir):
 
 
 @pytest.mark.timeout(300)
+def test_count_join_is_one_stateful_operator_over_one_scan(spark, sf_dir):
+    """The count join is one windowed aggregation: every micro-batch
+    reports exactly one state operator, and the plan reads each event
+    once (a self-join would read the source once per side)."""
+    from ecommerce_data_engineering_spark.sources import load
+    from ecommerce_data_engineering_spark.streaming.joins import (
+        stream_click_purchase_counts)
+
+    _, progress = run_stream_to_memory(
+        stream_click_purchase_counts(spark, sf_dir), "count_join_plan",
+        mode="append", return_progress=True)
+    assert progress
+    assert all(len(p["stateOperators"]) == 1 for p in progress), [
+        len(p["stateOperators"]) for p in progress]
+    assert (sum(p["numInputRows"] for p in progress)
+            == load(spark, sf_dir, "events").count())
+
+
+@pytest.mark.timeout(300)
+def test_count_join_emits_only_users_with_both_types(spark, tmp_path):
+    """Per (user, window) the count join emits a row only when the user
+    both clicked and purchased in that window; NULL users never emit.
+    File 1 holds the cases, file 2 a click and a purchase hours later
+    that move the watermark past them."""
+    import datetime
+    import os
+    import time
+
+    from ecommerce_data_engineering_spark.schemas import FIXTURES
+    from ecommerce_data_engineering_spark.streaming.joins import (
+        stream_click_purchase_counts)
+    from ecommerce_data_engineering_spark.streaming.source import (
+        stream_events_dir)
+
+    schema = FIXTURES["events"]
+    names = schema.fieldNames()
+    h10 = datetime.datetime(2024, 1, 1, 10)
+
+    def ev(i, user, etype, minute):
+        row = {n: None for n in names}
+        row.update(event_id=i, user_id=user, event_type=etype,
+                   ts=h10 + datetime.timedelta(minutes=minute))
+        return tuple(row[n] for n in names)
+
+    first = [ev(1, 1, "click", 5), ev(2, 1, "click", 10),   # A: clicks only
+             ev(3, 1, "purchase", 65),                      # A: next hour
+             ev(4, 2, "click", 1), ev(5, 2, "click", 2), ev(6, 2, "click", 3),
+             ev(7, 2, "purchase", 20), ev(8, 2, "purchase", 40),
+             ev(9, 2, "view", 30),                          # B: not counted
+             ev(10, None, "click", 15), ev(11, None, "purchase", 16)]
+    later = [ev(12, 3, "click", 270), ev(13, 4, "purchase", 280)]
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    base = time.time() - 10
+    for k, rows in enumerate((first, later)):
+        stage = tmp_path / f"stage{k}"
+        (spark.createDataFrame(rows, schema).coalesce(1)
+         .write.parquet(str(stage)))
+        dst = feed / f"part{k}.parquet"
+        os.rename(next(stage.glob("part-*.parquet")), dst)
+        os.utime(dst, (base + k, base + k))  # file 1 is read first
+
+    src = stream_events_dir(spark, str(feed), max_files_per_trigger=1)
+    result, progress = run_stream_to_memory(
+        stream_click_purchase_counts(spark, "", src=src), "count_join_cases",
+        mode="append", return_progress=True)
+    assert len([p for p in progress if p["numInputRows"] > 0]) == 2
+    got = [tuple(r) for r in result.collect()]
+    assert got == [(h10, 2, 3, 2, 6)], got
+
+
+@pytest.mark.timeout(300)
 def test_streaming_dedup_drops_redelivered(spark, sf_dir, tmp_path):
     """Feed the same events file twice (simulated redelivery): the
     watermarked dropDuplicates stream must emit each event_id once."""
