@@ -8,7 +8,10 @@ Layout (see SURVEY.md §7):
 - ``schemas``    – declared StructTypes for every table (no inference).
 - ``sources``    – readers/writers (parquet/csv, partitioned sinks, synthetic).
 - ``functions``  – scalar-function registry: PG-compatible date parts,
-                   cleaning transforms, portable (cross-engine) hashing.
+                   cleaning transforms, portable (cross-engine) hashing
+                   and rounding, and ``tokens`` — each text tokenizer
+                   and content key once per engine (Spark form + DuckDB
+                   SQL twin).
 - ``operators``  – reusable dataflow operators: SCD2 merge, keyed upsert,
                    range join, top-k, dedup (exact/minhash/simhash/jaccard),
                    similarity search, text analysis, multimodal plumbing.
@@ -28,12 +31,3 @@ CURRENT_DATE (SCD2 expiry, churn-risk day counts — SURVEY.md §7.4.1).
 The fixture order dates span 1995-01-01..2001-08-01, so this is "today"
 one step after the data ends; injectable for reproducible oracles."""
 
-
-def engine_exports():
-    """Convenience imports for the public API (lazy to keep import
-    light): session factory, pipeline, generator, query registry."""
-    from .session import get_spark
-    from .pipeline import run_pipeline
-    from .sources.synthetic import generate_ecommerce
-    from .plans import REGISTRY
-    return get_spark, run_pipeline, generate_ecommerce, REGISTRY

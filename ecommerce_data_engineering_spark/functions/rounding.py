@@ -55,10 +55,6 @@ def davg(col: Column, scale: int = 2) -> Column:
     return dsum(col, scale) / F.count(col)
 
 
-def dsum_sql(expr: str, scale: int = 2) -> str:
-    return f"CAST(sum(CAST(({expr}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------------
 # Scaled-long exact aggregation — the fast path for fixed-point money.
 #

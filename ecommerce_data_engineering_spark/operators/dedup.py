@@ -31,18 +31,19 @@ from ..functions.rounding import pround
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import minhash_cols
+from ..functions.tokens import (
+    content_key, ngrams_expr, spaced_words, words, words_expr)
 
 
 # --------------------------------------------------------------------- exact
 
-def exact_dedup(df: DataFrame, content_col: str, id_col: str,
-                normalize: bool = True) -> DataFrame:
-    """One row per distinct (normalized) content: keeper id = min id,
-    plus the duplicate count.  Hash-groupBy — one shuffle on the content
-    hash, never on the raw text (hash first so wide text doesn't travel
-    through the shuffle at 100 TB)."""
-    key = F.lower(F.trim(F.col(content_col))) if normalize else F.col(content_col)
-    return (df.select(F.md5(key).alias("content_key"), F.col(id_col))
+def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
+    """One row per distinct content key (functions/tokens.content_key):
+    keeper id = min id, plus the duplicate count.  Hash-groupBy — one
+    shuffle on the content hash, never on the raw text (hash first so
+    wide text doesn't travel through the shuffle at 100 TB)."""
+    return (df.select(content_key(F.col(content_col)).alias("content_key"),
+                      F.col(id_col))
               .groupBy("content_key")
               .agg(F.min(id_col).alias("keeper_id"),
                    F.count(F.lit(1)).alias("n_copies")))
@@ -54,9 +55,9 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str,
                   n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document → (id, shingle).
 
-    Tokenization = lowercase, split on non-alphanumeric, drop empties —
-    chosen because it is expressible verbatim in every SQL engine
-    (regexp_split_to_array in DuckDB), keeping the oracle exact.
+    Tokenization = functions/tokens.words (lowercase, split on
+    non-alphanumeric, drop empties) — chosen because it is expressible
+    verbatim in every SQL engine, keeping the oracle exact.
 
     ``id_col`` must uniquely key the rows of ``df`` (true for every
     caller: doc_id is a fixture primary key).  Under that precondition
@@ -71,14 +72,9 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str,
     # one F.expr parse, not a Column-API lambda: HOF lambdas cost
     # dozens of py4j round-trips at plan construction (r11; tree is
     # sameSemantics-identical, pinned in tests/test_expr_parity.py)
-    words = F.expr(
-        f"filter(split(lower(`{text_col}`), '[^a-z0-9]+'), x -> x != '')"
-    )
-    shingle = F.expr(
-        f"array_distinct(transform(sequence(0, size(w) - {n}), "
-        f"i -> concat_ws(' ', {', '.join(f'w[i+{k}]' for k in range(n))})))"
-    )
-    return (df.select(F.col(id_col), words.alias("w"))
+    w = F.expr(words_expr(f"`{text_col}`"))
+    shingle = F.expr(f"array_distinct({ngrams_expr('w', n)})")
+    return (df.select(F.col(id_col), w.alias("w"))
               .filter(F.size("w") >= n)
               .select(id_col, F.explode(shingle).alias("shingle")))
 
@@ -241,15 +237,13 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
     """
     from ..functions.hashing import hex_nibble_value
 
-    words = F.filter(
-        F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), lambda x: x != ""
-    )
     # distinct tokens per doc, deduped INSIDE the row (id_col uniquely
     # keys rows in every caller) — same result set as the former
     # corpus-wide .distinct() without its Exchange of raw token strings
     # (r11, guide §2.4; same argument as word_shingles above)
     tok = (df.select(F.col(id_col),
-                     F.explode(F.array_distinct(words)).alias("token"))
+                     F.explode(F.array_distinct(words(F.col(text_col))))
+                     .alias("token"))
              .withColumn("h", F.md5(F.col("token"))))
     # one positional-sum aggregate instead of the r1–r10 explode: the
     # old plan multiplied every token row by ``nibbles`` position rows
@@ -489,7 +483,7 @@ def chunk_exact_dedup(df: DataFrame, text_col: str, id_col: str,
     the row — no regroup of exploded text, no window over the corpus,
     no driver state.
     """
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    w = spaced_words(F.col(text_col))
     staged = (df.select(F.col(id_col), w.alias("_w"))
                 .select(id_col, _chunk_array(chunk_words).alias("_chunks")))
     # staged feeds three consumers (hashes→verdicts, hashes→dropped,
@@ -539,7 +533,7 @@ def intradoc_chunk_dedup(df: DataFrame, text_col: str, id_col: str,
     Same output contract as the corpus-wide pass: ``n_chunks``,
     ``n_dropped``, ``kept_md5`` of the reassembled document.
     """
-    w = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    w = spaced_words(F.col(text_col))
     staged = df.select(
         F.col(id_col), w.alias("_w")).select(
         id_col, _chunk_array(chunk_words).alias("_chunks"))

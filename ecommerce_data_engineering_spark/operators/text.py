@@ -20,6 +20,8 @@ and the DuckDB oracle can reproduce it exactly.
 from __future__ import annotations
 
 from ..functions.rounding import pround
+from ..functions.tokens import (
+    bpe_token_count, ngrams_expr, words, words_expr, ws_words)
 from pyspark.sql import Column, DataFrame, functions as F
 
 STOPWORDS = {
@@ -30,11 +32,8 @@ STOPWORDS = {
     "zh": ("的", "是", "在", "了", "我"),
 }
 
-_WORDS = lambda c: F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda x: x != "")  # noqa: E731
-
-
 def word_count(text: Column) -> Column:
-    return F.size(_WORDS(text))
+    return F.size(words(text))
 
 
 def stopword_hits(text: Column, lang: str) -> Column:
@@ -48,9 +47,8 @@ def stopword_hits(text: Column, lang: str) -> Column:
     if lang == "zh":
         cls = "[" + "".join(STOPWORDS["zh"]) + "]"
         return F.length(text) - F.length(F.regexp_replace(text, cls, ""))
-    words = _WORDS(text)
     arr = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(words, lambda x: F.array_contains(arr, x)))
+    return F.size(F.filter(words(text), lambda x: F.array_contains(arr, x)))
 
 
 def language_id(text: Column) -> Column:
@@ -85,60 +83,19 @@ def quality_score(text: Column) -> Column:
     - lexical diversity: distinct words / words
     - punctuation sanity: 1 − min(1, punct_ratio·10)
     """
-    words = _WORDS(text)
-    n = F.size(words)
-    n_distinct = F.size(F.array_distinct(words))
+    w = words(text)
+    n = F.size(w)
+    n_distinct = F.size(F.array_distinct(w))
     length_score = F.least(n / F.lit(100.0), F.lit(1.0))
     diversity = n_distinct / F.greatest(n, F.lit(1))
     punct_sane = F.lit(1.0) - F.least(punct_ratio(text) * 10, F.lit(1.0))
     return pround((length_score + diversity + punct_sane) / 3.0, 4)
 
 
-BPE_ISH_PATTERN = r"[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]"
-
-_ASCII_LETTERS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_JAVA_WS = " \t\n\x0b\x0c\r"  # Java regex \s (default, non-UNICODE flags)
-
-
-def bpe_token_count(text: Column) -> Column:
-    """``size(regexp_extract_all(text, BPE_ISH_PATTERN, 0))`` without
-    materializing any match.
-
-    The pattern's three alternatives partition every character of the
-    input: ASCII letter runs count once per RUN, while digits and
-    chars that are neither ASCII-alphanumeric nor Java ``\\s``
-    whitespace count once per CHAR.  So the token count decomposes
-    into one greedy-run ``regexp_count`` (one matcher find per letter
-    run instead of one per token) plus ``translate``/``length``
-    arithmetic (non-regex scans, no per-match substring allocation).
-    Bit-equal to the extract-all form on every string —
-    hypothesis-pinned — and ~1.5× cheaper on the 64× corpus, where the
-    tokenizer is ~0.7 of the packing query's whole wall
-    (evidence/PACKING_DECOMP.json).  Costs ~0.1 s MORE than
-    extract-all at sf0.1, where fixed per-plan cost dominates and the
-    extract-all's allocations are too few to matter — a deliberate
-    scale-over-microbenchmark trade.  Counting the single-char classes
-    with a second ``regexp_count('[^a-zA-Z\\s]')`` instead is 9×
-    WORSE at 64× (~22 s vs ~2.4: one matcher find per punctuation/
-    digit char), which is why the singles come from translate
-    arithmetic.
-    """
-    # digits and "other" chars both count one token per CHAR, so they
-    # merge into n_singles = chars that are neither ASCII letters nor
-    # Java \s — two translate scans, the digit translate cancels:
-    #   n_singles = L − n_ws − n_letters
-    #             = len(sans_ws) + len(sans_letters) − L
-    n = F.length(text)
-    sans_letters = F.length(F.translate(text, _ASCII_LETTERS, ""))
-    sans_ws = F.length(F.translate(text, _JAVA_WS, ""))
-    n_letter_runs = F.regexp_count(text, F.lit(r"[a-zA-Z]+"))
-    return n_letter_runs + sans_ws + sans_letters - n
-
-
 def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count per doc."""
     t = F.col(text_col)
-    ws = F.size(F.filter(F.split(t, r"\s+"), lambda x: x != ""))
+    ws = F.size(ws_words(t))
     bpe = bpe_token_count(t)
     return df.select(
         F.col(id_col),
@@ -169,47 +126,6 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str,
               ))
 
 
-def quality_score_pandas_udf():
-    """Arrow-vectorized pandas_udf twin of ``quality_score`` — the UDF
-    registration surface (SURVEY.md §2.11).  The engine needs no UDFs
-    for parity (everything above is codegen'd Catalyst); this exists to
-    prove the extension point and is tested bit-equal to the built-in
-    expression path on ASCII inputs.
-    """
-    import re
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    word_re = re.compile(r"[^a-z0-9]+")
-    punct_re = re.compile(r"[^.!?,;:]")
-
-    def _score(texts):
-        import math
-
-        def one(t):
-            if t is None:
-                # the Catalyst twin propagates NULL text to a NULL
-                # score; coercing to '' would score 0.3333 and change
-                # which rows survive a threshold filter
-                return None
-            words = [w for w in word_re.split(t.lower()) if w]
-            n = len(words)
-            punct = len(punct_re.sub("", t)) / max(len(t), 1)
-            punct = math.floor(punct * 10000 + 0.5) / 10000
-            length_score = min(n / 100.0, 1.0)
-            diversity = len(set(words)) / max(n, 1)
-            punct_sane = 1.0 - min(punct * 10, 1.0)
-            v = (length_score + diversity + punct_sane) / 3.0
-            return math.floor(v * 10000 + 0.5) / 10000
-
-        return texts.map(one)
-
-    # positional form: postponed annotations (module-level
-    # `from __future__ import annotations`) break hint inference
-    return pandas_udf(_score, "double")
-
-
 def gopher_quality(df: DataFrame, text_col: str, id_col: str,
                    min_words: int = 50, max_words: int = 100_000,
                    min_mean_word_len: float = 3.0,
@@ -238,15 +154,13 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
     for when the per-rule diagnostics themselves are the output.
     """
 
-    base = df.select(F.col(id_col), _WORDS(F.col(text_col)).alias("_w"))
+    base = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
     n_words = F.size(F.col("_w"))
     mean_wl = (F.aggregate("_w", F.lit(0).cast("long"),
                            lambda acc, x: acc + F.length(x)).cast("double")
                / F.when(n_words > 0, n_words))
-    tg = F.when(n_words >= 3, F.expr(
-        "transform(sequence(0, size(_w) - 3),"
-        " i -> concat_ws(' ', _w[i], _w[i+1], _w[i+2]))"
-    )).otherwise(F.expr("CAST(array() AS array<string>)"))
+    tg = F.when(n_words >= 3, F.expr(ngrams_expr("_w", 3))
+                ).otherwise(F.expr("CAST(array() AS array<string>)"))
     staged = base.select(F.col(id_col), n_words.alias("_n"),
                          mean_wl.alias("_mwl"), tg.alias("_tg"))
     n_tg = F.size("_tg")
@@ -296,14 +210,12 @@ def gopher_gate(text_col: str, min_words: int = 50, max_words: int = 100_000,
     # size(tg) == size(w)-2 for size(w)>=3, so the trigram array is
     # materialized once (inside array_distinct) per row
     dup_r = ("CASE WHEN size(w) >= 3 THEN"
-             " floor((1.0 - CAST(size(array_distinct("
-             "   transform(sequence(0, size(w) - 3),"
-             "     i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-             " )) AS DOUBLE) / (size(w) - 2)) * 10000 + 0.5) / 10000"
+             f" floor((1.0 - CAST(size(array_distinct({ngrams_expr('w', 3)}))"
+             " AS DOUBLE) / (size(w) - 2)) * 10000 + 0.5) / 10000"
              " ELSE 0.0 END")
     return F.expr(f"""
       exists(
-        array(filter(split(lower({c}), '[^a-z0-9]+'), x -> x <> '')),
+        array({words_expr(c)}),
         w -> coalesce(
                size(w) >= {min_words} AND size(w) <= {max_words}
                AND {mean_r} >= {min_mean_word_len}

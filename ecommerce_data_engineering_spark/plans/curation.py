@@ -17,10 +17,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..functions.rounding import pround, pround_sql
+from ..functions.tokens import (
+    WS_RUN, bpe_token_count, bpe_token_count_sql, content_key_sql,
+    ngrams_sql, spaced_words_sql, words, words_sql)
 from ..operators import packing as PK
 from ..operators import sampling as SP
 from ..operators import text as X
 from ..sources import load
+from .extensions import _shingles_cte
 from .registry import query
 
 # ---------------------------------------------------------------- knobs
@@ -83,8 +88,8 @@ def corpus_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_chars").alias("total_chars")))
 
 
-_FP_SQL = (f"md5(substr(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), "
-           f"1, {FP_PREFIX}))")
+_FP_SQL = (f"md5(substr(trim(lower("
+           f"regexp_replace(text, '{WS_RUN}', ' ', 'g'))), 1, {FP_PREFIX}))")
 
 
 def content_fingerprint(col: Column) -> Column:
@@ -92,7 +97,7 @@ def content_fingerprint(col: Column) -> Column:
     whitespace-collapsed, lowercased text — the Spark twin of
     ``_FP_SQL`` (one definition per engine, same knob)."""
     return F.md5(F.substring(
-        F.trim(F.lower(F.regexp_replace(col, r"\s+", " "))),
+        F.trim(F.lower(F.regexp_replace(col, WS_RUN, " "))),
         1, FP_PREFIX))
 
 
@@ -198,11 +203,10 @@ def corpus_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_token_histogram",
-    oracle=rf"""
+    oracle=f"""
     WITH toks AS (
       SELECT lang,
-             len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]'))
-               AS n_tokens
+             {bpe_token_count_sql('text')} AS n_tokens
       FROM documents
     )
     SELECT lang,
@@ -218,7 +222,7 @@ def corpus_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket width 32) — the length-distribution check run before
     packing sequences for training."""
     docs = load(spark, sf_dir, "documents")
-    n_tokens = X.bpe_token_count(F.col("text"))
+    n_tokens = bpe_token_count(F.col("text"))
     return (docs
             .withColumn("token_bucket",
                         (F.floor(n_tokens / TOKEN_BUCKET)
@@ -230,11 +234,10 @@ def corpus_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_sequence_packing",
     bench=True,
-    oracle=rf"""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]'))
-               AS n_tokens,
+             {bpe_token_count_sql('text')} AS n_tokens,
              {PK.sql_shard_of('doc_id', PACK_SHARDS, PACK_SEED)} AS shard
       FROM documents
     ), packed AS (
@@ -263,7 +266,7 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (shard, starting bin) document count, token mass, and boundary
     spills — the sequence-manifest stage before a training run."""
     docs = load(spark, sf_dir, "documents")
-    n_tokens = X.bpe_token_count(F.col("text"))
+    n_tokens = bpe_token_count(F.col("text"))
     toks = docs.select("doc_id", n_tokens.cast("long").alias("n_tokens"))
     packed = PK.pack_sequences(toks, "doc_id", "n_tokens", PACK_BUDGET,
                                num_shards=PACK_SHARDS, seed=PACK_SEED)
@@ -275,11 +278,10 @@ def corpus_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "corpus_greedy_packing",
-    oracle=rf"""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]'))
-               AS n_tokens,
+             {bpe_token_count_sql('text')} AS n_tokens,
              {PK.sql_shard_of('doc_id', PACK_SHARDS, PACK_SEED)} AS shard
       FROM documents
     )
@@ -313,7 +315,7 @@ def corpus_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant) stays out of the output; determinism and BFD shape are
     pinned in tests/test_operators.py."""
     docs = load(spark, sf_dir, "documents")
-    n_tokens = X.bpe_token_count(F.col("text"))
+    n_tokens = bpe_token_count(F.col("text"))
     toks = docs.select("doc_id", n_tokens.cast("long").alias("n_tokens"))
     packed = PK.pack_greedy_bfd(toks, "doc_id", "n_tokens", PACK_BUDGET,
                                 num_shards=PACK_SHARDS, seed=PACK_SEED)
@@ -351,40 +353,33 @@ def corpus_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "oversized_isolated"))
 
 
+def _gopher_sql(docs: str) -> str:
+    """DuckDB twin of operators/text.gopher_quality at its default
+    thresholds, over the rows of ``docs`` (a relation with a ``text``
+    column): every column of ``docs`` plus the words array ``w``, the
+    rule inputs ``n``, ``mwl`` (mean word length) and ``dup``
+    (repeated-trigram fraction), and the ``passes`` verdict."""
+    mwl = pround_sql("CAST(list_aggregate(list_transform(w, x -> length(x)),"
+                     " 'sum') AS DOUBLE) / len(w)", 4)
+    dup = pround_sql(f"1.0 - CAST(len(list_distinct({ngrams_sql('w', 3)}))"
+                     " AS DOUBLE) / (len(w) - 2)", 4)
+    return f"""
+      SELECT *, COALESCE(n >= 50 AND n <= 100000 AND mwl >= 3.0
+                         AND mwl <= 10.0 AND dup <= 0.30, FALSE) AS passes
+      FROM (
+        SELECT *, len(w) AS n,
+               CASE WHEN len(w) > 0 THEN {mwl} END AS mwl,
+               CASE WHEN len(w) >= 3 THEN {dup} ELSE 0.0 END AS dup
+        FROM (SELECT *, {words_sql('text')} AS w FROM {docs}))"""
+
+
 @query(
     "corpus_gopher_rules",
     bench=True,
-    oracle=r"""
-    WITH words AS (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w
-      FROM documents
-    ), staged AS (
-      SELECT doc_id, len(w) AS n,
-             CASE WHEN len(w) > 0 THEN
-               floor(CAST(list_aggregate(list_transform(w, x -> length(x)),
-                                         'sum') AS DOUBLE) / len(w)
-                     * 10000 + 0.5) / 10000 END AS mwl,
-             CASE WHEN len(w) >= 3 THEN
-               list_transform(generate_series(1, len(w) - 2),
-                              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-             ELSE [] END AS tg
-      FROM words
-    ), scored AS (
-      SELECT doc_id, n, mwl,
-             CASE WHEN len(tg) > 0 THEN
-               floor((1.0 - CAST(len(list_distinct(tg)) AS DOUBLE) / len(tg))
-                     * 10000 + 0.5) / 10000
-             ELSE 0.0 END AS dup
-      FROM staged
-    )
+    oracle=f"""
     SELECT doc_id, n AS n_words, mwl AS mean_word_len,
-           dup AS dup_trigram_frac,
-           COALESCE(n >= 50 AND n <= 100000
-                    AND mwl >= 3.0 AND mwl <= 10.0
-                    AND dup <= 0.30, FALSE) AS passes
-    FROM scored
+           dup AS dup_trigram_frac, passes
+    FROM ({_gopher_sql("documents")})
     """,
     covers=("EXT-curation", "EXT-text"),
 )
@@ -399,35 +394,17 @@ def corpus_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_curation_funnel",
     bench=True,
-    oracle=rf"""
+    oracle=f"""
     WITH keepers AS (
-      SELECT min(doc_id) AS doc_id
-      FROM documents GROUP BY md5(lower(trim(text)))
-    ), words AS (
-      SELECT d.doc_id, d.text,
-             list_filter(regexp_split_to_array(lower(d.text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w
-      FROM documents d JOIN keepers k ON d.doc_id = k.doc_id
+      SELECT min(doc_id) AS doc_id FROM documents
+      GROUP BY {content_key_sql('text')}
     ), gated AS (
-      SELECT doc_id, text FROM (
-        SELECT doc_id, text, len(w) AS n,
-               CASE WHEN len(w) > 0 THEN
-                 floor(CAST(list_aggregate(list_transform(w, x -> length(x)),
-                                           'sum') AS DOUBLE) / len(w)
-                       * 10000 + 0.5) / 10000 END AS mwl,
-               CASE WHEN len(w) >= 3 THEN
-                 floor((1.0 - CAST(len(list_distinct(
-                   list_transform(generate_series(1, len(w) - 2),
-                                  i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                 )) AS DOUBLE) / (len(w) - 2)) * 10000 + 0.5) / 10000
-               ELSE 0.0 END AS dup
-        FROM words)
-      WHERE COALESCE(n >= 50 AND n <= 100000 AND mwl >= 3.0 AND mwl <= 10.0
-                     AND dup <= 0.30, FALSE)
+      SELECT doc_id, text
+      FROM ({_gopher_sql("documents JOIN keepers USING (doc_id)")})
+      WHERE passes
     ), train AS (
       SELECT doc_id,
-             len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]'))
-               AS n_tokens,
+             {bpe_token_count_sql('text')} AS n_tokens,
              {PK.sql_shard_of('doc_id', PACK_SHARDS, PACK_SEED)} AS shard
       FROM gated
       WHERE {SP.sql_split_case('doc_id', SPLITS, SPLIT_SEED)} = 'train'
@@ -471,7 +448,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     gated = kept.filter(X.gopher_gate("text"))
     train = (SP.assign_splits(gated, "doc_id", SPLITS, SPLIT_SEED)
              .filter(F.col("split") == "train"))
-    n_tokens = X.bpe_token_count(F.col("text"))
+    n_tokens = bpe_token_count(F.col("text"))
     toks = train.select("doc_id", n_tokens.cast("long").alias("n_tokens"))
     packed = PK.pack_sequences(toks, "doc_id", "n_tokens", PACK_BUDGET,
                                num_shards=PACK_SHARDS, seed=PACK_SEED)
@@ -480,38 +457,18 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_tokens").alias("bin_tokens")))
 
 
-def _decon_shingles_cte(n: int) -> str:
-    """DuckDB CTE: distinct word n-gram shingles per doc, keyed by the
-    64-bit md5 prefix both engines agree on (SQL twin of
-    operators/dedup.word_shingles at width n + the key compression)."""
-    terms = " || ' ' || ".join(f"w[i+{k}]" for k in range(n))
-    return f"""
-    words AS (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w
-      FROM documents
-    ), idx AS (
-      SELECT doc_id, w, unnest(generate_series(1, len(w) - {n - 1})) AS i
-      FROM words WHERE len(w) >= {n}
-    ), rawsh AS (
-      -- DISTINCT on the raw shingle, THEN project the key: matches the
-      -- Spark side (word_shingles distinct -> md5-prefix projection),
-      -- which does NOT re-dedup after key compression -- keeps the two
-      -- engines identical even through a key collision
-      SELECT DISTINCT doc_id, {terms} AS shingle FROM idx
-    ), shn AS (
-      SELECT doc_id, substring(md5(shingle), 1, 16) AS shingle_key
-      FROM rawsh
-    )"""
-
-
 @query(
     "corpus_decontaminate",
     bench=True,
     oracle=f"""
-    WITH {_decon_shingles_cte(DECON_NGRAM)},
-    tagged AS (
+    WITH {_shingles_cte(DECON_NGRAM)},
+    shn AS (
+      -- DISTINCT on the raw shingle (sh), THEN project the key: matches
+      -- the Spark side (word_shingles distinct -> md5-prefix
+      -- projection), which does NOT re-dedup after key compression --
+      -- keeps the two engines identical even through a key collision
+      SELECT doc_id, substring(md5(shingle), 1, 16) AS shingle_key FROM sh
+    ), tagged AS (
       SELECT doc_id, shingle_key,
              {SP.sql_split_case('doc_id', SPLITS, SPLIT_SEED)} AS split
       FROM shn
@@ -582,9 +539,7 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
       SELECT source,
              count(*) AS n_docs,
-             CAST(sum(len(regexp_extract_all(
-               text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\\s]'))) AS BIGINT)
-               AS n_tokens
+             CAST(sum({bpe_token_count_sql('text')}) AS BIGINT) AS n_tokens
       FROM documents GROUP BY source
     ), tot AS (
       SELECT CAST(sum(n_tokens) AS DOUBLE) AS total FROM toks
@@ -612,13 +567,12 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar broadcast cross for the total — the corpus is scanned once
     and never shuffled by anything wider than the source key."""
     docs = load(spark, sf_dir, "documents")
-    n_tokens = X.bpe_token_count(F.col("text"))
+    n_tokens = bpe_token_count(F.col("text"))
     toks = (docs.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.sum(n_tokens.cast("long")).alias("n_tokens")))
     total = toks.agg(F.sum("n_tokens").cast("double").alias("total"))
     rate = F.least(F.lit(1.0), F.lit(MIX_CAP) * F.col("total") / F.col("n_tokens"))
-    from ..functions.rounding import pround
     return (toks.crossJoin(F.broadcast(total))
             .select("source", "n_docs", "n_tokens",
                     pround(F.col("n_tokens") / F.col("total"), 6)
@@ -637,7 +591,7 @@ CHUNK_WORDS = 4          # C4 uses 3-sentence spans; word-salad fixtures
     oracle=f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS w
+             {spaced_words_sql('text')} AS w
       FROM documents
     ), chunks AS (
       SELECT doc_id, i AS pos,
@@ -743,9 +697,7 @@ TOKEN_TOPK = 25
     "corpus_token_topk",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(list_filter(
-               regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-               x -> x <> '')) AS token
+      SELECT unnest({words_sql('text')}) AS token
       FROM documents
     ), freq AS (
       SELECT token, count(*) AS n_occurrences FROM toks GROUP BY token
@@ -773,9 +725,7 @@ def corpus_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topk import distributed_topk
 
     docs = load(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(
-        F.filter(F.split(F.lower("text"), "[^a-z0-9]+"),
-                 lambda x: x != "")).alias("token"))
+    toks = docs.select(F.explode(words(F.col("text"))).alias("token"))
     freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occurrences"))
     from pyspark.sql import Window
 
@@ -792,7 +742,7 @@ def corpus_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS w
+             {spaced_words_sql('text')} AS w
       FROM documents
     ), chunked AS (
       SELECT doc_id,
@@ -870,8 +820,6 @@ def corpus_epoch_upsampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a stateless per-row expression aggregated by source; the
     materializing twin (operators/sampling.epoch_upsample) explodes
     copies inside the scan projection — no shuffle either way."""
-    from ..functions.rounding import pround
-
     docs = load(spark, sf_dir, "documents")
     n = SP.epoch_factor_columns("doc_id", "source", _epoch_factor_map(),
                                 default=1.0, seed=EPOCH_SEED)

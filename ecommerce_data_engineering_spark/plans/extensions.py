@@ -20,7 +20,10 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as X
 from ..sources import load
-from ..functions.rounding import pround
+from ..functions.rounding import pround, pround_sql
+from ..functions.tokens import (
+    bpe_token_count_sql, content_key, content_key_sql, ngrams_sql,
+    words_sql, ws_words_sql)
 from .registry import query
 
 # ---------------------------------------------------------------- knobs
@@ -40,29 +43,26 @@ ANN_K = 5
 ANN_PLANES = 6
 EMB_DIM = 64
 
-# Shared DuckDB CTE: distinct word-3gram shingles per doc (mirrors
-# operators/dedup.word_shingles exactly).
-_SHINGLES_CTE = """
+
+def _shingles_cte(n: int) -> str:
+    """DuckDB CTEs ``words`` (doc_id, w) and ``sh`` (doc_id, shingle):
+    the distinct word ``n``-gram shingles per doc, the twin of
+    operators/dedup.word_shingles."""
+    return f"""
     words AS (
-      SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w
-      FROM documents
-    ), idx AS (
-      SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-      FROM words WHERE len(w) >= 3
+      SELECT doc_id, {words_sql('text')} AS w FROM documents
     ), sh AS (
-      SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS shingle
-      FROM idx
-    )
-"""
+      SELECT DISTINCT doc_id, unnest({ngrams_sql('w', n)}) AS shingle
+      FROM words
+    )"""
+
 
 # ------------------------------------------------------------------ dedup
 
 @query(
     "dedup_exact",
-    oracle="""
-    SELECT md5(lower(trim(text))) AS content_key,
+    oracle=f"""
+    SELECT {content_key_sql('text')} AS content_key,
            min(doc_id) AS keeper_id,
            count(*) AS n_copies
     FROM documents GROUP BY 1
@@ -75,6 +75,36 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     that matters at 100 TB."""
     docs = load(spark, sf_dir, "documents")
     return D.exact_dedup(docs, "text", "doc_id")
+
+
+def _jaccard_oracle(cand: str, *ctes: str) -> str:
+    """The oracle twin of operators/dedup.jaccard_verify, shared by
+    every shingle-Jaccard oracle: ``cand`` selects the distinct
+    (id_a < id_b) candidate pairs over the word-3gram shingles ``sh``
+    and the search's own ``ctes``; then shingle-set sizes,
+    intersections, and the pairs whose rounded Jaccard is at least
+    ``JACCARD_T``."""
+    return f"""
+    WITH {", ".join((_shingles_cte(3), *ctes))},
+    cand AS ({cand}
+    ), sizes AS (
+      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
+    ), inter AS (
+      SELECT c.id_a, c.id_b, count(*) AS n_common
+      FROM cand c
+      JOIN sh sa ON sa.doc_id = c.id_a
+      JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
+      GROUP BY c.id_a, c.id_b
+    ), scored AS (
+      SELECT i.id_a, i.id_b,
+             {pround_sql("i.n_common / (na.n + nb.n - i.n_common)", 4)}
+               AS jaccard
+      FROM inter i
+      JOIN sizes na ON na.doc_id = i.id_a
+      JOIN sizes nb ON nb.doc_id = i.id_b
+    )
+    SELECT id_a, id_b, jaccard FROM scored WHERE jaccard >= {JACCARD_T}
+    """
 
 
 def _minhash_oracle() -> str:
@@ -93,9 +123,11 @@ def _minhash_oracle() -> str:
         )
         for b in range(BANDS)
     )
-    return f"""
-    WITH {_SHINGLES_CTE},
-    mh AS (
+    return _jaccard_oracle(f"""
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM sized a JOIN sized b ON a.band = b.band AND a.bucket = b.bucket
+      WHERE a.doc_id < b.doc_id AND a.bsize <= {MAX_BUCKET}
+        AND b.bsize <= {MAX_BUCKET}""", f"""mh AS (
       SELECT doc_id,
         {mh_cols}
       FROM sh GROUP BY doc_id
@@ -103,26 +135,7 @@ def _minhash_oracle() -> str:
       {band_pieces}
     ), sized AS (
       SELECT *, count(*) OVER (PARTITION BY band, bucket) AS bsize FROM banded
-    ), cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sized a JOIN sized b ON a.band = b.band AND a.bucket = b.bucket
-      WHERE a.doc_id < b.doc_id AND a.bsize <= {MAX_BUCKET} AND b.bsize <= {MAX_BUCKET}
-    ), sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT c.id_a, c.id_b, count(*) AS n_common
-      FROM cand c
-      JOIN sh sa ON sa.doc_id = c.id_a
-      JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-      GROUP BY c.id_a, c.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           floor((i.n_common / (na.n + nb.n - i.n_common)) * 10000 + 0.5) / 10000 AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE floor((i.n_common / (na.n + nb.n - i.n_common)) * 10000 + 0.5) / 10000 >= {JACCARD_T}
-    """
+    )""")
 
 
 @query("dedup_minhash_lsh", oracle=_minhash_oracle(), covers=("EXT-dedup",),
@@ -155,22 +168,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared by the brute-force query AND (as the oracle) by the
 # prefix-filtered one, whose whole guarantee is returning the
 # identical result with far fewer candidates
-_JACCARD_ALL_PAIRS_SQL = f"""
-    WITH {_SHINGLES_CTE},
-    sizes AS (
-      SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-    ), inter AS (
-      SELECT sa.doc_id AS id_a, sb.doc_id AS id_b, count(*) AS n_common
-      FROM sh sa JOIN sh sb ON sa.shingle = sb.shingle AND sa.doc_id < sb.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT i.id_a, i.id_b,
-           floor((i.n_common / (na.n + nb.n - i.n_common)) * 10000 + 0.5) / 10000 AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE floor((i.n_common / (na.n + nb.n - i.n_common)) * 10000 + 0.5) / 10000 >= {JACCARD_T}
-    """
+_JACCARD_ALL_PAIRS_SQL = _jaccard_oracle("""
+      SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
+      FROM sh sa JOIN sh sb ON sa.shingle = sb.shingle AND sa.doc_id < sb.doc_id""")
 
 
 @query(
@@ -221,8 +221,7 @@ def _simhash_fp_cte() -> str:
     return f"""
     tok AS (
       SELECT DISTINCT doc_id,
-             unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                                x -> x <> '')) AS token
+             unnest({words_sql('text')}) AS token
       FROM documents
     ), votes AS (
       SELECT doc_id, unnest(generate_series(1, {SIMHASH_NIBBLES})) AS pos,
@@ -293,8 +292,9 @@ def _simhash_pairs_oracle() -> str:
 @query("dedup_simhash_pairs", oracle=_simhash_pairs_oracle(),
        covers=("EXT-dedup",))
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: pigeonhole chunk blocking + positional
-    hamming verification (≤ 2 of 16 nibble-bits)."""
+    """SimHash near-dup pairs: pigeonhole chunk blocking
+    (``SIMHASH_CHUNKS`` chunks) + positional hamming verification (at
+    most ``SIMHASH_MAX_HAMMING`` of the ``SIMHASH_NIBBLES`` bits)."""
     docs = load(spark, sf_dir, "documents")
     fp = D.simhash(docs, "text", "doc_id", SIMHASH_NIBBLES)
     return (D.simhash_near_dups(fp, "doc_id", SIMHASH_NIBBLES,
@@ -496,10 +496,7 @@ def _lang_id_oracle() -> str:
         f"WHEN h_{l} = {m} THEN '{l}'" for l in _LANGS)
     return f"""
     WITH words AS (
-      SELECT doc_id, lang, text,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w
-      FROM documents
+      SELECT doc_id, lang, text, {words_sql('text')} AS w FROM documents
     ), hits AS (
       SELECT doc_id, lang,
              {hits}
@@ -525,24 +522,27 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quality_sql(docs: str) -> str:
+    """DuckDB twin of operators/text.quality_score over the rows of
+    ``docs`` (a relation with a ``text`` column): every column of
+    ``docs`` plus the words array ``w``, ``punct_ratio`` and
+    ``quality_score``."""
+    punct = pround_sql("length(regexp_replace(text, '[^.!?,;:]', '', 'g'))"
+                       " / greatest(length(text), 1)", 4)
+    score = pround_sql("(least(len(w) / 100.0, 1.0)"
+                       " + len(list_distinct(w)) / greatest(len(w), 1)"
+                       " + 1.0 - least(punct_ratio * 10, 1.0)) / 3.0", 4)
+    return f"""
+      SELECT *, {score} AS quality_score FROM (
+        SELECT *, {words_sql('text')} AS w, {punct} AS punct_ratio
+        FROM {docs})"""
+
+
 @query(
     "text_quality_scores",
-    oracle="""
-    WITH base AS (
-      SELECT doc_id, text,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w,
-             floor((length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
-                   / greatest(length(text), 1)) * 10000 + 0.5) / 10000 AS punct_ratio
-      FROM documents
-    )
-    SELECT doc_id,
-           len(w) AS n_words,
-           punct_ratio,
-           floor(((least(len(w) / 100.0, 1.0)
-                  + len(list_distinct(w)) / greatest(len(w), 1)
-                  + 1.0 - least(punct_ratio * 10, 1.0)) / 3.0) * 10000 + 0.5) / 10000 AS quality_score
-    FROM base
+    oracle=f"""
+    SELECT doc_id, len(w) AS n_words, punct_ratio, quality_score
+    FROM ({_quality_sql("documents")})
     """,
     covers=("EXT-text",),
 )
@@ -560,12 +560,10 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_token_counts",
-    oracle=r"""
+    oracle=f"""
     SELECT doc_id,
-           len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> ''))
-             AS ws_tokens,
-           len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]'))
-             AS bpe_ish_tokens
+           len({ws_words_sql('text')}) AS ws_tokens,
+           {bpe_token_count_sql('text')} AS bpe_ish_tokens
     FROM documents
     """,
     covers=("EXT-text",),
@@ -1156,8 +1154,7 @@ def _clusters_oracle() -> str:
     # the Spark side is the one that must scale)
     return f"""
     WITH RECURSIVE pairs AS (
-      {_minhash_oracle().replace('SELECT i.id_a, i.id_b,',
-                                 'SELECT i.id_a, i.id_b,').strip()}
+      {_minhash_oracle().strip()}
     ), edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION SELECT id_b, id_a FROM pairs
@@ -1186,13 +1183,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "corpus_dedup_stats",
     oracle=f"""
-    WITH {_SHINGLES_CTE},
+    WITH {_shingles_cte(3)},
     per_doc AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)
     SELECT
       (SELECT count(*) FROM documents) AS n_docs,
-      (SELECT count(DISTINCT md5(lower(trim(text)))) FROM documents) AS n_unique_texts,
-      (SELECT floor((1.0 - count(DISTINCT md5(lower(trim(text)))) * 1.0 / count(*))
-             * 10000 + 0.5) / 10000 FROM documents) AS exact_dup_rate,
+      (SELECT count(DISTINCT {content_key_sql('text')}) FROM documents)
+        AS n_unique_texts,
+      (SELECT floor((1.0 - count(DISTINCT {content_key_sql('text')}) * 1.0
+                     / count(*)) * 10000 + 0.5) / 10000 FROM documents)
+        AS exact_dup_rate,
       (SELECT count(DISTINCT shingle) FROM sh) AS shingle_vocab,
       (SELECT floor(CAST(sum(n_sh) AS DOUBLE) / count(*) * 100 + 0.5) / 100
        FROM per_doc) AS avg_shingles_per_doc
@@ -1205,7 +1204,7 @@ def corpus_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle vocabulary, shingles per doc)."""
     docs = load(spark, sf_dir, "documents")
     sh = D.word_shingles(docs, "text", "doc_id")
-    key = F.md5(F.lower(F.trim(F.col("text"))))
+    key = content_key(F.col("text"))
     doc_stats_ = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct(key).alias("n_unique_texts"),
@@ -1226,26 +1225,12 @@ QUALITY_KEEP_T = 0.5
     "corpus_filter_pipeline",
     oracle=f"""
     WITH keepers AS (
-      SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(lower(trim(text)))
-    ), scored AS (
-      SELECT d.doc_id, d.lang, d.source,
-             list_filter(regexp_split_to_array(lower(d.text), '[^a-z0-9]+'),
-                         x -> x <> '') AS w,
-             floor(length(regexp_replace(d.text, '[^.!?,;:]', '', 'g'))
-                   / greatest(length(d.text), 1) * 10000 + 0.5) / 10000 AS punct
-      FROM documents d JOIN keepers k ON d.doc_id = k.doc_id
+      SELECT min(doc_id) AS doc_id FROM documents
+      GROUP BY {content_key_sql('text')}
     )
-    SELECT doc_id, lang, source,
-           len(w) AS n_tokens,
-           floor((least(len(w) / 100.0, 1.0)
-                  + len(list_distinct(w)) / greatest(len(w), 1)
-                  + 1.0 - least(punct * 10, 1.0)) / 3.0 * 10000 + 0.5) / 10000
-             AS quality_score
-    FROM scored
-    WHERE floor((least(len(w) / 100.0, 1.0)
-                 + len(list_distinct(w)) / greatest(len(w), 1)
-                 + 1.0 - least(punct * 10, 1.0)) / 3.0 * 10000 + 0.5) / 10000
-          >= {QUALITY_KEEP_T}
+    SELECT doc_id, lang, source, len(w) AS n_tokens, quality_score
+    FROM ({_quality_sql("documents JOIN keepers USING (doc_id)")})
+    WHERE quality_score >= {QUALITY_KEEP_T}
     """,
     covers=("EXT-text", "EXT-dedup"),
 )

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.tokens import content_key
 from ..operators.text import gopher_gate
 from ..schemas import FIXTURES
 
@@ -71,8 +72,8 @@ def curated_corpus_incremental(spark: SparkSession, src_dir: str,
         from ..sources import versioned as V
 
         sess = batch_df.sparkSession
-        keyed = batch_df.withColumn(
-            "content_key", F.md5(F.lower(F.trim(F.col("text")))))
+        keyed = batch_df.withColumn("content_key",
+                                    content_key(F.col("text")))
         # in-batch dedup: deterministic keeper = min doc_id per key;
         # the trailing dropDuplicates collapses byte-identical rows
         # (same doc_id AND text repeated inside one feed file), which

@@ -15,7 +15,7 @@ per-shard work grows").  Measuring it
    (doc_id, n_tokens) is 0.23×.  The record carries BOTH tokenizer
    forms — the definitional size(regexp_extract_all(...)) and the
    registered bpe_token_count (translate arithmetic + one greedy-run
-   regexp_count, operators/text.py) that this decomposition motivated
+   regexp_count, functions/tokens.py) that this decomposition motivated
    — so `conclusion.tokenizer_speedup` is the banked gain.
 3. **Scan-split scaling is allocation-bound**: forcing the scan from
    its default ~10 splits (openCostInBytes bin-packing of the 40 MB /
@@ -55,7 +55,7 @@ sys.path.insert(0, HERE)
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 from ecommerce_data_engineering_spark.operators import packing as PK  # noqa: E402
-from ecommerce_data_engineering_spark.operators import text as X  # noqa: E402
+from ecommerce_data_engineering_spark.functions import tokens as T  # noqa: E402
 from ecommerce_data_engineering_spark.plans.curation import (  # noqa: E402
     PACK_BUDGET, PACK_SEED)
 from ecommerce_data_engineering_spark.session import driver_memory  # noqa: E402
@@ -85,9 +85,9 @@ def _toks(spark: SparkSession, fixture: str, definitional: bool = False):
     docs = load(spark, fixture, "documents")
     if definitional:
         n_tokens = F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(X.BPE_ISH_PATTERN), 0))
+            F.regexp_extract_all(F.col("text"), F.lit(T.BPE_ISH_PATTERN), 0))
     else:
-        n_tokens = X.bpe_token_count(F.col("text"))
+        n_tokens = T.bpe_token_count(F.col("text"))
     return docs.select("doc_id", n_tokens.cast("long").alias("n_tokens"))
 
 

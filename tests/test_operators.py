@@ -86,24 +86,6 @@ def test_frame_sample_offsets(docs):
     assert offs == [0, 8, 16]
 
 
-def test_pandas_udf_quality_score_matches_builtin(spark, sf_dir):
-    """The Arrow pandas_udf twin must equal the Catalyst expression
-    path — proving the UDF extension point without paying for it in
-    the engine proper."""
-    from pyspark.sql import functions as F
-    from ecommerce_data_engineering_spark.operators.text import (
-        quality_score, quality_score_pandas_udf)
-    from ecommerce_data_engineering_spark.sources import load
-
-    docs = load(spark, sf_dir, "documents")
-    udf = quality_score_pandas_udf()
-    out = docs.select(
-        quality_score(F.col("text")).alias("builtin"),
-        udf(F.col("text")).alias("udf"),
-    )
-    assert out.filter(F.abs(F.col("builtin") - F.col("udf")) > 1e-9).count() == 0
-
-
 def test_ann_recall_knobs_dominate_base_variants(spark, sf_dir):
     """Multi-probe LSH and IVF nprobe=2 search candidate SUPERSETS of
     their base variants, so at every (query, rank) the returned cosine

@@ -216,6 +216,7 @@ def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
     story."""
     from pyspark.sql import functions as F
 
+    from ecommerce_data_engineering_spark.functions import tokens as T
     from ecommerce_data_engineering_spark.operators import dedup as D
     from ecommerce_data_engineering_spark.operators import packing as PK
     from ecommerce_data_engineering_spark.operators import sampling as SP
@@ -249,7 +250,7 @@ def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
 
     def pack_task(r):
         n_tokens = F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(X.BPE_ISH_PATTERN), 0))
+            F.col("text"), F.lit(T.BPE_ISH_PATTERN), 0))
         toks = r["split"].select(
             "doc_id", n_tokens.cast("long").alias("n_tokens"))
         packed = PK.pack_sequences(toks, "doc_id", "n_tokens", PACK_BUDGET,

@@ -457,7 +457,7 @@ def test_bpe_token_count_equals_extract_all_on_random_texts(spark, texts):
     length()/translate()/regex must agree on code-point counting)."""
     from pyspark.sql import functions as F
 
-    from ecommerce_data_engineering_spark.operators.text import (
+    from ecommerce_data_engineering_spark.functions.tokens import (
         BPE_ISH_PATTERN, bpe_token_count)
 
     df = spark.createDataFrame(
