@@ -15,6 +15,7 @@ text (``*_expr``).  The twins agree row for row, NULL included
 - content key: ``md5(lower(trim(text)))`` (exact dedup);
 - word n-grams over a words array (Spark subscripts are 0-based,
   DuckDB's 1-based);
+- non-overlapping n-word chunks over a words array (chunk dedup);
 - BPE-ish token count: ASCII letter runs, single digits and single
   other non-whitespace chars.
 """
@@ -104,6 +105,28 @@ def ngrams_sql(w: str, n: int) -> str:
     terms = " || ' ' || ".join(f"{w}[i+{k}]" for k in range(n))
     return (f"list_transform(generate_series(1, len({w}) - {n - 1}),"
             f" i -> {terms})")
+
+
+# ----------------------------------------------------- word chunks
+
+def chunks_expr(w: str, n: int) -> str:
+    """Spark SQL text: the words array ``w`` cut into consecutive
+    non-overlapping ``n``-word chunks, each space-joined; a trailing
+    remainder shorter than ``n`` is dropped, and an array shorter than
+    ``n`` (or NULL) gives ``[]``.  Spark's ``sequence(1, 0)`` is
+    ``[1, 0]`` (it infers step -1 when start > stop), hence the guard."""
+    return (f"CASE WHEN size({w}) >= {n} THEN"
+            f" transform(sequence(1, CAST(floor(size({w}) / {n}) AS INT)),"
+            f" i -> array_join(slice({w}, (i - 1) * {n} + 1, {n}), ' '))"
+            f" ELSE CAST(array() AS array<string>) END")
+
+
+def chunks_sql(w: str, n: int) -> str:
+    """DuckDB twin of :func:`chunks_expr`."""
+    return (f"CASE WHEN len({w}) >= {n} THEN"
+            f" list_transform(range(CAST(floor(len({w}) / {n}) AS BIGINT)),"
+            f" i -> array_to_string({w}[(i*{n}+1):(i*{n}+{n})], ' '))"
+            f" ELSE [] END")
 
 
 # ------------------------------------------------------ BPE-ish token count

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.hashing import minhash_cols
 from ..functions.tokens import (
-    content_key, ngrams_expr, spaced_words, words, words_expr)
+    chunks_expr, content_key, ngrams_expr, spaced_words, words, words_expr)
 
 
 # --------------------------------------------------------------------- exact
@@ -440,19 +440,6 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
 # -------------------------------------------------- exact chunk (C4-style)
 
-def _chunk_array(n: int):
-    """Non-overlapping ``n``-word chunk array over the pre-split word
-    column ``_w`` — the segmentation both chunk-dedup tiers (and their
-    DuckDB oracle twins) must share.  sequence(1, 0) in Spark is
-    [1, 0] (it infers step -1 when start > stop), hence the <n-word
-    guard."""
-    return F.expr(
-        f"CASE WHEN size(_w) >= {n} THEN"
-        f" transform(sequence(1, CAST(floor(size(_w)/{n}) AS INT)),"
-        f"   i -> array_join(slice(_w, (i-1)*{n} + 1, {n}), ' '))"
-        f" ELSE CAST(array() AS array<string>) END")
-
-
 def chunk_exact_dedup(df: DataFrame, text_col: str, id_col: str,
                       chunk_words: int = 4) -> DataFrame:
     """C4-style exact span dedup: of every globally-repeated
@@ -485,7 +472,8 @@ def chunk_exact_dedup(df: DataFrame, text_col: str, id_col: str,
     """
     w = spaced_words(F.col(text_col))
     staged = (df.select(F.col(id_col), w.alias("_w"))
-                .select(id_col, _chunk_array(chunk_words).alias("_chunks")))
+                .select(id_col, F.expr(chunks_expr("_w", chunk_words))
+                        .alias("_chunks")))
     # staged feeds three consumers (hashes→verdicts, hashes→dropped,
     # and the final reassembly join): without a barrier the word-split
     # + chunk-array construction — the dominant per-row cost — runs 3×
@@ -536,7 +524,7 @@ def intradoc_chunk_dedup(df: DataFrame, text_col: str, id_col: str,
     w = spaced_words(F.col(text_col))
     staged = df.select(
         F.col(id_col), w.alias("_w")).select(
-        id_col, _chunk_array(chunk_words).alias("_chunks"))
+        id_col, F.expr(chunks_expr("_w", chunk_words)).alias("_chunks"))
     # first-occurrence filter: array_position is the 1-based FIRST index
     kept = F.expr("filter(_chunks, (c, i) -> array_position(_chunks, c) = i + 1)")
     return staged.select(

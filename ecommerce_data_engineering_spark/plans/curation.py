@@ -19,8 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import pround, pround_sql
 from ..functions.tokens import (
-    WS_RUN, bpe_token_count, bpe_token_count_sql, content_key_sql,
-    ngrams_sql, spaced_words_sql, words, words_sql)
+    WS_RUN, bpe_token_count, bpe_token_count_sql, chunks_sql,
+    content_key_sql, ngrams_sql, spaced_words_sql, words, words_sql)
 from ..operators import packing as PK
 from ..operators import sampling as SP
 from ..operators import text as X
@@ -594,12 +594,9 @@ CHUNK_WORDS = 4          # C4 uses 3-sentence spans; word-salad fixtures
              {spaced_words_sql('text')} AS w
       FROM documents
     ), chunks AS (
-      SELECT doc_id, i AS pos,
-             array_to_string(
-               w[(i*{CHUNK_WORDS}+1):(i*{CHUNK_WORDS}+{CHUNK_WORDS})], ' ')
-               AS chunk
-      FROM words,
-           unnest(range(CAST(floor(len(w)/{CHUNK_WORDS}) AS BIGINT))) AS t(i)
+      SELECT doc_id, generate_subscripts(ch, 1) - 1 AS pos,
+             unnest(ch) AS chunk
+      FROM (SELECT doc_id, {chunks_sql('w', CHUNK_WORDS)} AS ch FROM words)
     ), marked AS (
       SELECT doc_id, pos, chunk,
              count(*) OVER (PARTITION BY chunk) AS cnt,
@@ -616,8 +613,8 @@ CHUNK_WORDS = 4          # C4 uses 3-sentence spans; word-salad fixtures
       FROM marked GROUP BY doc_id
     )
     -- LEFT JOIN from words, not FROM marked: a document shorter than
-    -- one chunk has NO chunks rows (the lateral unnest over range(0)
-    -- is empty), but the Spark side still emits it with n_chunks = 0
+    -- one chunk has NO chunks rows (the unnest of [] is empty), but
+    -- the Spark side still emits it with n_chunks = 0
     SELECT w.doc_id,
            COALESCE(a.n_chunks, 0) AS n_chunks,
            COALESCE(a.n_dropped, 0) AS n_dropped,
@@ -745,13 +742,7 @@ def corpus_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              {spaced_words_sql('text')} AS w
       FROM documents
     ), chunked AS (
-      SELECT doc_id,
-             CASE WHEN len(w) >= {CHUNK_WORDS} THEN
-               list_transform(range(CAST(floor(len(w)/{CHUNK_WORDS}) AS BIGINT)),
-                 i -> array_to_string(
-                   w[(i*{CHUNK_WORDS}+1):(i*{CHUNK_WORDS}+{CHUNK_WORDS})], ' '))
-             ELSE [] END AS ch
-      FROM words
+      SELECT doc_id, {chunks_sql('w', CHUNK_WORDS)} AS ch FROM words
     )
     SELECT doc_id,
            CAST(len(ch) AS BIGINT) AS n_chunks,

@@ -109,12 +109,3 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
         return result, progress
     return result
 
-
-def stream_deduplicated_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exactly-once ingestion: watermarked dropDuplicates on
-    the event id — re-delivered events (at-least-once sources) are
-    discarded while their id is inside the watermark horizon; state for
-    older ids is evicted.  The streaming twin of dedup_exact."""
-    src = events_stream(spark, sf_dir)
-    return (src.withWatermark("ts", "1 hour")
-            .dropDuplicates(["event_id"]))

@@ -1,56 +1,37 @@
-"""Custom stateful streaming operator: running per-key totals via
-``applyInPandasWithState`` (SURVEY.md §2.11 extension surface).
+"""Running per-key totals as a native update-mode aggregation.
 
-This is the pattern for operators Structured Streaming lacks natively
-(running counters, custom sessionization, CDC folding): state lives in
-the state store per key, each micro-batch's Arrow batches fold into
-it, and the operator emits the updated aggregate.  At firehose scale
-the state is partitioned by key across executors; eviction is the
-caller's policy (timeouts) — bounded state is what lets it run
-forever.
+Each micro-batch folds its rows into one state row per ``event_type``
+(event count plus value sum) and emits the keys it touched.  Spark
+partially aggregates every input partition before the shuffle, so a
+batch moves one partial per key and partition, not its rows, and no
+Python worker runs.  State is one row per key forever: it is bounded by
+the key cardinality, not the input volume, so no watermark is needed.
+
+``running_value`` uses the same exact-decimal sum and portable
+rounding as the hourly rollup (``functions.rounding.dsum``/``pround``):
+it is exact to the cent and does not depend on how the input splits
+into micro-batches or in what order their partials combine.  The
+former plan folded a double running sum through
+``applyInPandasWithState`` and emitted its Python ``round``, which
+could differ from the batch total in the last cent.
+
+The state schema differs from that former plan's, so a running-totals
+checkpoint it wrote cannot be resumed: start from a fresh checkpoint.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Tuple
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql import types as T
-
+from ..functions.rounding import dsum, pround
 from .source import events_stream
-
-OUTPUT_SCHEMA = T.StructType([
-    T.StructField("event_type", T.StringType()),
-    T.StructField("running_events", T.LongType()),
-    T.StructField("running_value", T.DoubleType()),
-])
-
-STATE_SCHEMA = T.StructType([
-    T.StructField("n", T.LongType()),
-    T.StructField("total", T.DoubleType()),
-])
-
-
-def _fold_totals(key: Tuple[str], pdfs: Iterable[pd.DataFrame],
-                 state: GroupState) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame({
-        "event_type": [key[0]],
-        "running_events": [n],
-        "running_value": [round(total, 2)],
-    })
 
 
 def stream_running_totals(spark: SparkSession, sf_dir: str,
                           src: DataFrame | None = None) -> DataFrame:
-    """Streaming running (event-count, value-sum) per event_type.
+    """Streaming running (event-count, value-sum) per event_type, for
+    ``update`` output mode: columns ``event_type`` string,
+    ``running_events`` bigint, ``running_value`` double.
 
     ``src`` overrides the fixture-directory source (see
     joins.stream_click_purchase_join — same injection pattern, used by
@@ -58,6 +39,6 @@ def stream_running_totals(spark: SparkSession, sf_dir: str,
     if src is None:
         src = events_stream(spark, sf_dir)
     return (src.groupBy("event_type")
-            .applyInPandasWithState(
-                _fold_totals, OUTPUT_SCHEMA, STATE_SCHEMA,
-                "update", GroupStateTimeout.NoTimeout))
+            .agg(F.count(F.lit(1)).alias("running_events"),
+                 pround(dsum(F.col("value"), scale=4), 2)
+                 .alias("running_value")))

@@ -11,9 +11,9 @@ each still equals its batch twin on the same large input:
 - ``stream_stream_join`` — click↔purchase interval join
   (streaming/joins.py): BOTH sides buffered in watermarked state; the
   time-range condition is the retention policy.
-- ``running_totals``   — applyInPandasWithState per-key fold
-  (streaming/stateful.py): the custom-stateful shape; state is one row
-  per key forever (bounded by key cardinality, not input volume).
+- ``running_totals``   — native update-mode running aggregate per key
+  (streaming/stateful.py): the unwindowed shape; state is one row per
+  key forever (bounded by key cardinality, not input volume).
 
     python scripts/make_scaled_fixture.py /tmp/sf_64x 64
     python scripts/stream_throughput.py /tmp/sf_64x 32
@@ -379,30 +379,22 @@ def run_suite(spark, events, feed_stream, n_rows: int,
         and must.exceptAll(got).count() == 0)
     scenarios["click_purchase_counts"] = m
 
-    # -- scenario 3: applyInPandasWithState running totals -------------
+    # -- scenario 3: running totals (unwindowed update-mode state) ----
     totals = stream_running_totals(spark, "", src=feed_stream())
     streamed, m = run_scenario(spark, "running_totals" + suffix, totals,
                                "update", n_rows)
     got_rows = (streamed.groupBy("event_type")
                 .agg(F.max_by(F.struct("running_events", "running_value"),
                               "running_events").alias("fin"))
-                .select("event_type",
-                        F.col("fin.running_events").alias("n"),
-                        F.col("fin.running_value").alias("v")).collect())
+                .select("event_type", "fin.*").collect())
     want_rows = (events.groupBy("event_type")
-                 .agg(F.count(F.lit(1)).alias("n"),
-                      F.sum("value").alias("v")).collect())
-    got_map = {r["event_type"]: (r["n"], r["v"]) for r in got_rows}
-    want_map = {r["event_type"]: (r["n"], r["v"]) for r in want_rows}
-    # counts exact; the float fold accumulates in feed order while the
-    # batch sum is shuffle-order — equal within rounding slack (the
-    # same contract test_stateful_running_totals pins)
+                 .agg(F.count(F.lit(1)).alias("running_events"),
+                      pround(dsum(F.col("value"), scale=4), 2)
+                      .alias("running_value")).collect())
+    # exact: the same decimal sum and rounding on both sides (the
+    # contract test_stateful_running_totals pins)
     m["streamed_equals_batch"] = (
-        set(got_map) == set(want_map)
-        and all(got_map[k][0] == want_map[k][0] for k in want_map)
-        and all(abs(got_map[k][1] - want_map[k][1])
-                <= max(0.05, abs(want_map[k][1]) * 1e-9)
-                for k in want_map))
+        {tuple(r) for r in got_rows} == {tuple(r) for r in want_rows})
     scenarios["running_totals"] = m
 
     return scenarios

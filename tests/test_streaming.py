@@ -72,9 +72,13 @@ def test_watermark_evicts_old_window_state(spark, sf_dir, tmp_path):
 
 @pytest.mark.timeout(300)
 def test_stateful_running_totals(spark, sf_dir):
-    """applyInPandasWithState running totals must equal the batch
-    aggregate after the whole fixture streams through."""
+    """The running totals' final update per key must equal the batch
+    aggregate after the whole fixture streams through: the same exact
+    decimal sum and portable rounding on both sides, so equal to the
+    cent."""
     from pyspark.sql import functions as F
+    from ecommerce_data_engineering_spark.functions.rounding import (
+        dsum, pround)
     from ecommerce_data_engineering_spark.sources import load
     from ecommerce_data_engineering_spark.streaming.stateful import (
         stream_running_totals)
@@ -86,14 +90,42 @@ def test_stateful_running_totals(spark, sf_dir):
     # take the final state per key (last update wins)
     got = {r.event_type: (r.running_events, r.running_value) for r in
            spark.sql("SELECT * FROM running_totals_test").collect()}
-    want = {r.event_type: (r.n, round(r.v, 2)) for r in
+    want = {r.event_type: (r.n, r.v) for r in
             load(spark, sf_dir, "events").groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
+            .agg(F.count(F.lit(1)).alias("n"),
+                 pround(dsum(F.col("value"), scale=4), 2).alias("v"))
             .collect()}
-    assert set(got) == set(want)
-    for et, (n, v) in want.items():
-        assert got[et][0] == n
-        assert abs(got[et][1] - v) < 0.05
+    assert got == want
+
+
+@pytest.mark.timeout(300)
+def test_running_totals_is_one_native_aggregation(spark, sf_dir, capsys):
+    """Running totals are one native update-mode aggregation: every
+    micro-batch reports exactly one state operator, the executed plan
+    runs no Python worker, and the output schema is (string, bigint,
+    double)."""
+    from ecommerce_data_engineering_spark.streaming.stateful import (
+        stream_running_totals)
+
+    out = stream_running_totals(spark, sf_dir)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("event_type", "string"), ("running_events", "bigint"),
+        ("running_value", "double")]
+    q = (out.writeStream.outputMode("update").format("memory")
+         .queryName("running_totals_plan").trigger(availableNow=True)
+         .start())
+    assert q.awaitTermination(120)
+    progress = q.recentProgress
+    assert progress
+    assert all(len(p["stateOperators"]) == 1 for p in progress), [
+        len(p["stateOperators"]) for p in progress]
+    capsys.readouterr()
+    q.explain()                    # the last micro-batch's executed plan
+    plan = capsys.readouterr().out
+    assert "StateStoreSave" in plan, plan
+    for node in ("FlatMapGroupsInPandasWithState", "ArrowEvalPython",
+                 "BatchEvalPython", "PythonUDF"):
+        assert node not in plan, plan
 
 
 @pytest.mark.timeout(300)
@@ -280,8 +312,6 @@ def test_streaming_dedup_drops_redelivered(spark, sf_dir, tmp_path):
     import shutil
     from pyspark.sql import functions as F
     from ecommerce_data_engineering_spark.sources import load
-    from ecommerce_data_engineering_spark.streaming.events import (
-        stream_deduplicated_events)
 
     src_dir = tmp_path / "feed"
     src_dir.mkdir()

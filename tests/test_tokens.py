@@ -26,11 +26,14 @@ TEXTS = [
     "我是 的 中文 了 在",                          # CJK
     "hello,,, world!!! ... ;; ?!",          # punctuation runs
     "a b",                                  # shorter than every n below
-    "one two three",
+    "one two three",                        # CHUNK_WORDS - 1 words
+    "one two three four",                   # CHUNK_WORDS words
+    "a b c d e f g h i",                    # 2 * CHUNK_WORDS + 1 words
     "The the THE quick brown fox the quick brown fox 42 7x9",
     "it's \"quoted\" -- dash_underscore 3.14",
 ]
 NGRAM_WIDTHS = (3, 8)
+CHUNK_WORDS = 4
 
 
 def _duck(exprs: list[str]) -> list[tuple]:
@@ -60,17 +63,21 @@ def test_spark_forms_equal_duckdb_twins(spark):
         T.words(text), F.expr(T.words_expr("text")), T.ws_words(text),
         T.spaced_words(text), T.content_key(text),
         T.bpe_token_count(text).cast("long"),
+        F.expr(T.chunks_expr("w", CHUNK_WORDS)),
         *[F.expr(f"CASE WHEN size(w) >= {n} THEN {T.ngrams_expr('w', n)} END")
           for n in NGRAM_WIDTHS]])
     duck_rows = _duck([
         T.words_sql("text"), T.words_sql("text"), T.ws_words_sql("text"),
         T.spaced_words_sql("text"), T.content_key_sql("text"),
-        T.bpe_token_count_sql("text"),
+        T.bpe_token_count_sql("text"), T.chunks_sql("w", CHUNK_WORDS),
         *[T.ngrams_sql("w", n) for n in NGRAM_WIDTHS]])
     k = len(NGRAM_WIDTHS)
     for text_, s, d in zip(TEXTS, spark_rows, duck_rows):
         assert s[:-k] == d[:-k], text_
         words = s[0]
+        assert s[-k - 1] == [" ".join(words[i:i + CHUNK_WORDS]) for i in
+                             range(0, len(words or ()) - CHUNK_WORDS + 1,
+                                   CHUNK_WORDS)], text_
         for n, sg, dg in zip(NGRAM_WIDTHS, s[-k:], d[-k:]):
             if words is None:
                 assert sg is None and dg is None, text_
@@ -131,6 +138,8 @@ RESPELLINGS = {
     "whitespace_split": r"string_split\(|regexp_split_to_array\("
                         r"|split\([^()]*(\([^()]*\))?[^()]*,\s*['\"] ['\"]\)",
     "ngram_subscript": r"\[i\s*\+\s*(\d+|\{k\})\]",
+    "chunk_slice": r"\[\(i\s*\*[^\]]*\+\s*1\)\s*:"
+                   r"|slice\([^,]*,\s*\(i\s*-\s*1\)\s*\*",
 }
 
 
