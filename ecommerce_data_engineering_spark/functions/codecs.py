@@ -79,10 +79,6 @@ def bmp_decode(data: bytes) -> tuple[int, int, bytes]:
 _WAV_HEADER_SIZE = 44  # RIFF + fmt(16) + data headers
 
 
-def wav_encoded_size(n_samples: int, n_channels: int) -> int:
-    return _WAV_HEADER_SIZE + 2 * n_samples * n_channels
-
-
 def wav_encode(sample_rate: int, n_channels: int,
                samples: list[int]) -> bytes:
     """Encode interleaved PCM-16 samples (len == frames*channels) as a

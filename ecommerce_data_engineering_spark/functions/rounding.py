@@ -1,18 +1,21 @@
-"""Portable cross-engine rounding.
+"""Portable cross-engine rounding and exact money sums, each rule
+defined once per engine (no other module spells one:
+tests/test_rounding.py).
 
 ``round(double, n)`` disagrees between engines on half-way binary
 values: Spark rounds the exact binary expansion (BigDecimal HALF_UP)
 while DuckDB multiplies by 10^n first and rounds that product — e.g.
-52298.924999999996 → Spark .92, DuckDB .93 (5229892.5000000003 rounds
-up).  Since every float in the engine's outputs is display-rounded, we
-standardize on ONE formula executed identically (same IEEE ops, same
-order) on both engines:
+52298.924999999996 → Spark .92, DuckDB .93.  We standardize on ONE
+rule executed identically (same IEEE ops, same order) on both engines:
+scale by 10^n, add one half, floor, unscale (:func:`pround`), so value
+hashes match bit for bit while |x|·10^n < 2^63 (Spark's floor returns
+BIGINT).  Half goes toward +∞: unlike PG ROUND (half away from zero)
+on negative half-way values — documented engine-wide choice.
 
-    pround(x, n) = floor(x * 10^n + 0.5) / 10^n      -- half-toward-+∞
-
-The oracle SQL spells it the same way, so value hashes match bit-for-
-bit.  Semantics deviation from PG ROUND (half away from zero) only on
-negative half-way values — documented engine-wide choice.
+Each rule is a Column (``pround``, ``dsum``, ...) with its DuckDB twin
+as SQL text (``*_sql``, operand parenthesized) and, for plans built
+with one ``F.expr`` parse, Spark SQL text (``pround_expr``, whose half
+is ``0.5D``: Spark SQL reads a bare ``0.5`` as DECIMAL).
 """
 
 from __future__ import annotations
@@ -20,16 +23,32 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 
+def half_up(col: Column) -> Column:
+    """floor(x + ½): ``x`` rounded half toward +∞ to a whole number."""
+    return F.floor(col + F.lit(0.5))
+
+
+def half_up_sql(expr: str) -> str:
+    """DuckDB twin of :func:`half_up`."""
+    return f"floor(({expr}) + 0.5)"
+
+
 def pround(col: Column, digits: int = 2) -> Column:
-    """floor(x·10^n + 0.5)/10^n — deterministic cross-engine rounding."""
+    """``col`` rounded half toward +∞ to ``digits`` decimals."""
     scale = 10 ** digits
-    return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
+    return half_up(col * F.lit(scale)) / F.lit(scale)
+
+
+def pround_expr(expr: str, digits: int = 2) -> str:
+    """:func:`pround` as Spark SQL text over the SQL expression ``expr``."""
+    scale = 10 ** digits
+    return f"floor(({expr}) * {scale} + 0.5D) / {scale}"
 
 
 def pround_sql(expr: str, digits: int = 2) -> str:
-    """The identical formula as SQL text (for oracle strings)."""
+    """DuckDB twin of :func:`pround`."""
     scale = 10 ** digits
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"
+    return f"{half_up_sql(f'({expr}) * {scale}')} / {scale}"
 
 
 # ---------------------------------------------------------------------------
@@ -53,6 +72,18 @@ def davg(col: Column, scale: int = 2) -> Column:
     """Exact-sum average: decimal sum ÷ non-null count, in double.
     Both engines divide the identical exact operands → identical bits."""
     return dsum(col, scale) / F.count(col)
+
+
+def dsum_sql(expr: str, scale: int = 2, over: str | None = None) -> str:
+    """DuckDB twin of :func:`dsum` (the text also parses as Spark SQL);
+    ``over`` is a window spec, for a windowed sum."""
+    win = f" OVER ({over})" if over else ""
+    return f"CAST(sum(CAST({expr} AS DECIMAL(18,{scale}))){win} AS DOUBLE)"
+
+
+def davg_sql(expr: str, scale: int = 2) -> str:
+    """DuckDB twin of :func:`davg`."""
+    return f"({dsum_sql(expr, scale)} / count({expr}))"
 
 
 # ---------------------------------------------------------------------------
@@ -80,9 +111,9 @@ def davg(col: Column, scale: int = 2) -> Column:
 # ---------------------------------------------------------------------------
 
 def to_scaled_long(col: Column, scale: int = 2) -> Column:
-    """floor(x·10^s + 0.5) as BIGINT — exact fixed-point snap, the
-    portable-rounding twin of :func:`pround` in integer space."""
-    return F.floor(col * F.lit(10 ** scale) + F.lit(0.5)).cast("bigint")
+    """``col`` in integer units of 10^-s (half toward +∞) as BIGINT —
+    exact fixed-point snap, :func:`pround` in integer space."""
+    return half_up(col * F.lit(10 ** scale)).cast("bigint")
 
 
 def lsum(col: Column, scale: int = 2) -> Column:
@@ -155,7 +186,7 @@ def lsum_wide_sql(term: str, scale_total: int) -> str:
 
 
 def to_scaled_long_sql(expr: str, scale: int = 2) -> str:
-    return f"CAST(floor(({expr}) * {10 ** scale} + 0.5) AS BIGINT)"
+    return f"CAST({half_up_sql(f'({expr}) * {10 ** scale}')} AS BIGINT)"
 
 
 def lsum_sql(expr: str, scale: int = 2) -> str:

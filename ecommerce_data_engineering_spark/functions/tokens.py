@@ -12,7 +12,8 @@ text (``*_expr``).  The twins agree row for row, NULL included
 - whitespace tokens: split on Java's ``\\s`` class, spelled out as
   ``[ \\t\\n\\x0B\\f\\r]`` because DuckDB's RE2 ``\\s`` omits ``\\x0B``;
 - single-space words: split on ``' '``, empties dropped (chunk dedup);
-- content key: ``md5(lower(trim(text)))`` (exact dedup);
+- content text and key: ``lower(trim(text))`` and its md5 (exact
+  dedup, char-gram fingerprints);
 - word n-grams over a words array (Spark subscripts are 0-based,
   DuckDB's 1-based);
 - non-overlapping n-word chunks over a words array (chunk dedup);
@@ -78,14 +79,24 @@ def spaced_words_sql(text: str) -> str:
 
 # ------------------------------------------------------------ content key
 
+def content_text(text: Column) -> Column:
+    """The lowercased, space-trimmed text."""
+    return F.lower(F.trim(text))
+
+
+def content_text_sql(text: str) -> str:
+    """DuckDB twin of :func:`content_text`."""
+    return f"lower(trim({text}))"
+
+
 def content_key(text: Column) -> Column:
-    """md5 of the lowercased, space-trimmed text."""
-    return F.md5(F.lower(F.trim(text)))
+    """md5 of the :func:`content_text`."""
+    return F.md5(content_text(text))
 
 
 def content_key_sql(text: str) -> str:
     """DuckDB twin of :func:`content_key`."""
-    return f"md5(lower(trim({text})))"
+    return f"md5({content_text_sql(text)})"
 
 
 # ------------------------------------------------------------ word n-grams

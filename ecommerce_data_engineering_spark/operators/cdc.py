@@ -191,11 +191,3 @@ def incremental_agg_refresh(prev: DataFrame, diff: DataFrame,
             .agg(*[F.sum(m).alias(m) for m in sum_cols],
                  F.sum(count_col).alias(count_col))
             .filter(F.col(count_col) > 0))
-
-
-def diff_counts(diff: DataFrame) -> DataFrame:
-    """Per-change-type row counts of a :func:`snapshot_diff` result —
-    the summary a refresh job logs (and alerts on: a refresh that
-    deletes 40% of a dimension is usually a bug, not a business
-    event)."""
-    return diff.groupBy(CHANGE_COL).agg(F.count("*").alias("n"))

@@ -27,7 +27,7 @@ reproducible cross-engine.
 
 from __future__ import annotations
 
-from ..functions.rounding import pround, pround_sql
+from ..functions.rounding import half_up, pround, pround_expr
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -44,8 +44,7 @@ def _cosine_sql(a: str, b: str, na: str, nb: str) -> str:
     top-k search computes (in :func:`_score_and_rank`), one parse
     instead of ~30 py4j round-trips at plan construction (r11;
     equivalence pinned in tests/test_expr_parity.py)."""
-    return (f"floor((({_dot_sql(a, b)}) / (`{na}` * `{nb}`)) "
-            f"* 1000000 + 0.5D) / 1000000")
+    return pround_expr(f"({_dot_sql(a, b)}) / (`{na}` * `{nb}`)", 6)
 
 
 def _dot(a: str, b: str):
@@ -133,8 +132,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int,
     (query, corpus) pair is a candidate.
 
     Returns (query_id, neighbor_id, cosine, rn).  Ranking is on
-    floor(cos * 1000000 + 0.5) / 1000000 with neighbor-id tiebreak →
-    engine-independent.
+    pround(cos, 6) with neighbor-id tiebreak → engine-independent.
     """
     return _score_and_rank(
         _side(with_norm(queries, vec_col), "query",
@@ -169,9 +167,8 @@ def _plane_sign_bit_sql(vec_col: str, ws: list[float], dim: int) -> str:
     costs ~130 py4j round-trips per plane in classic mode
     (``F.lit(list)`` loops element-wise internally), which made plan
     CONSTRUCTION — not execution — the dominant cost of the sign-LSH
-    bench queries.  The parsed expression tree is identical (the
-    pround comparison uses :func:`pround_sql`, the exact text the
-    oracles run), so the physical plan and results are unchanged."""
+    bench queries.  The sign is taken of the dot product rounded with
+    :func:`pround_expr` at 1e-9, as the oracles round it."""
     lits = ",".join(repr(w) + "D" for w in ws)
     # array-level CAST outside the lambda (r11): HOF lambdas are
     # interpreted per element, so the old per-element CAST(x AS
@@ -181,7 +178,7 @@ def _plane_sign_bit_sql(vec_col: str, ws: list[float], dim: int) -> str:
            f"CAST(slice(`{vec_col}`, 1, {dim}) AS ARRAY<DOUBLE>),"
            f" array({lits}), (x, w) -> x * w),"
            f" 0.0D, (acc, x) -> acc + x)")
-    return f"CASE WHEN {pround_sql(dot, 9)} > 0 THEN '1' ELSE '0' END"
+    return f"CASE WHEN {pround_expr(dot, 9)} > 0 THEN '1' ELSE '0' END"
 
 
 def _signature_sql(vec_col: str, weights: list[list[float]],
@@ -189,25 +186,6 @@ def _signature_sql(vec_col: str, weights: list[list[float]],
     """SQL text of the '0'/'1' signature over ``weights``' planes."""
     return "concat(" + ",".join(_plane_sign_bit_sql(vec_col, ws, dim)
                                 for ws in weights) + ")"
-
-
-def hyperplane_sign_bits(df: DataFrame, vec_col: str, num_planes: int,
-                         dim: int, out_col: str = "bucket") -> DataFrame:
-    """Random-hyperplane signature as a '0'/'1' string of length H.
-
-    Plane weights are ±1 derived from md5(plane‖dim) — deterministic,
-    shared by every engine, and good enough for sign-LSH (Rademacher
-    planes satisfy the Johnson–Lindenstrauss-style guarantees used by
-    SimHash/sign-LSH in practice).  The weights are precomputed as
-    literal arrays (:func:`rademacher_weights`), so the per-row work is
-    one fused multiply-add over the vector per plane — H·d md5 calls
-    per ROW (the naive form, ~384 hashes/row at H=6, d=64) become H·d
-    hashes per QUERY PLAN, computed once on the driver.  The whole
-    signature is ONE ``F.expr`` parse (see :func:`_plane_sign_bit_sql`).
-    """
-    weights = rademacher_weights(num_planes, dim)
-    return df.withColumn(out_col, F.expr(_signature_sql(vec_col, weights,
-                                                        dim)))
 
 
 def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int, dim: int,
@@ -327,7 +305,7 @@ def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
     recall knob, paid per query, never as corpus duplication.
 
     pround (floor-form), NOT F.round: the oracle CTEs rank on
-    floor(d2*1e9+0.5)/1e9 while F.round is BigDecimal HALF_UP on the
+    pround_sql(d2, 9) while F.round is BigDecimal HALF_UP on the
     double's decimal string — the two can disagree on d2 values near
     a .5e-9 boundary, and once training reads assignments (r9), a
     single flipped row cascades into different trained centroids and
@@ -349,13 +327,13 @@ def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
     # ~200 py4j round-trips per ivf_assign — ×4 per ANN plan (corpus,
     # query, one per Lloyd step), making plan CONSTRUCTION ~1/3 of the
     # sf0.1 wall.  The parsed tree is canonically identical
-    # (sameSemantics-pinned in tests); the d struct field is pround
-    # (floor-form) at 1e-9, spelled inline.
+    # (sameSemantics-pinned in tests); the d struct field is
+    # pround_expr(d2, 9).
     d2 = (f"aggregate(zip_with(CAST(`{vec_col}` AS ARRAY<DOUBLE>), "
           f"cell.c_vec, (a, b) -> a - b), 0.0D, (acc, d) -> acc + d * d)")
     ranked = F.expr(
         f"array_sort(transform(__cents, cell -> "
-        f"struct(floor(({d2}) * 1000000000 + 0.5D) / 1000000000 AS d, "
+        f"struct({pround_expr(d2, 9)} AS d, "
         f"cell.cluster_id AS cluster_id)))")
     out_cols = [F.col(n) for n in df.columns]
     # two Projects, not three (withColumn+drop folded into one select):
@@ -403,10 +381,7 @@ def _lloyd_step(df: DataFrame, centroids: DataFrame, id_col: str,
     # the (quantized) mean is ONE F.expr parse (construction cost, r11;
     # sameSemantics-pinned in tests/test_expr_parity.py)
     def _q(sql: str) -> str:
-        if quantize is None:
-            return sql
-        scale = 10 ** quantize
-        return f"floor({sql} * {scale} + 0.5D) / {scale}"
+        return sql if quantize is None else pround_expr(sql, quantize)
     if dim is not None:
         mean_arr = ", ".join(
             _q(f"avg(CAST(`{vec_col}`[{i}] AS DOUBLE))")
@@ -536,7 +511,7 @@ def int8_quantize_stats(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
 
     One stateless projection — array expressions only, no shuffle, no
     UDF; at 100 TB it runs at scan speed.  Rounding uses the portable
-    floor(x+0.5) form so the DuckDB oracle reproduces every bit.
+    ``half_up``/``pround`` so the DuckDB oracle reproduces every bit.
     """
     x = F.transform(F.col(vec_col), lambda e: e.cast("double"))
     staged = df.select(F.col(id_col), x.alias("_x"))
@@ -547,10 +522,9 @@ def int8_quantize_stats(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     err = F.when(
         F.col("_scale") > 0,
         F.transform("_x", lambda e: F.abs(
-            F.floor(e / F.col("_scale") + F.lit(0.5)) * F.col("_scale") - e))
+            half_up(e / F.col("_scale")) * F.col("_scale") - e))
     ).otherwise(F.transform("_x", lambda e: F.lit(0.0)))
     staged = staged.withColumn("_err", err)
-    from ..functions.rounding import pround
     n = F.size("_x")
     return staged.select(
         F.col(id_col),

@@ -19,9 +19,10 @@ and the DuckDB oracle can reproduce it exactly.
 
 from __future__ import annotations
 
-from ..functions.rounding import pround
+from ..functions.rounding import pround, pround_expr
 from ..functions.tokens import (
-    bpe_token_count, ngrams_expr, words, words_expr, ws_words)
+    bpe_token_count, content_key, content_text, ngrams_expr, words,
+    words_expr, ws_words)
 from pyspark.sql import Column, DataFrame, functions as F
 
 STOPWORDS = {
@@ -113,17 +114,15 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str,
     whole doc) gives a compact single-value fingerprint that is stable
     under small edits elsewhere in the doc.
     """
-    norm = F.lower(F.trim(F.col(text_col)))
+    text = F.col(text_col)
     grams = F.expr(
         f"transform(sequence(1, greatest(length(t) - {gram - 1}, 1)), "
         f"i -> md5(substring(t, i, {gram})))"
     )
-    return (df.select(F.col(id_col), norm.alias("t"))
-              .select(
-                  id_col,
-                  F.md5(F.col("t")).alias("content_md5"),
-                  F.array_min(grams).alias("winnow_fp"),
-              ))
+    return (df.select(F.col(id_col), content_key(text).alias("content_md5"),
+                      content_text(text).alias("t"))
+              .select(id_col, "content_md5",
+                      F.array_min(grams).alias("winnow_fp")))
 
 
 def gopher_quality(df: DataFrame, text_col: str, id_col: str,
@@ -204,15 +203,14 @@ def gopher_gate(text_col: str, min_words: int = 50, max_words: int = 100_000,
     dup-trigram fractions and NULL→False coalescing.
     """
     c = f"`{text_col}`"
-    mean_r = ("floor(CAST(aggregate(w, CAST(0 AS BIGINT),"
-              " (a, x) -> a + length(x)) AS DOUBLE)"
-              " / nullif(size(w), 0) * 10000 + 0.5) / 10000")
+    mean_r = pround_expr("CAST(aggregate(w, CAST(0 AS BIGINT),"
+                         " (a, x) -> a + length(x)) AS DOUBLE)"
+                         " / nullif(size(w), 0)", 4)
     # size(tg) == size(w)-2 for size(w)>=3, so the trigram array is
     # materialized once (inside array_distinct) per row
-    dup_r = ("CASE WHEN size(w) >= 3 THEN"
-             f" floor((1.0 - CAST(size(array_distinct({ngrams_expr('w', 3)}))"
-             " AS DOUBLE) / (size(w) - 2)) * 10000 + 0.5) / 10000"
-             " ELSE 0.0 END")
+    dup_r = ("CASE WHEN size(w) >= 3 THEN " + pround_expr(
+        f"1.0 - CAST(size(array_distinct({ngrams_expr('w', 3)}))"
+        " AS DOUBLE) / (size(w) - 2)", 4) + " ELSE 0.0 END")
     return F.expr(f"""
       exists(
         array({words_expr(c)}),

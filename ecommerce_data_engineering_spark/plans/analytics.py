@@ -16,8 +16,10 @@ from .. import AS_OF_DATE
 from ..operators.range_join import range_join, range_join_by_expansion
 from ..operators.topk import distributed_topk
 from ..sources import load
-from ..functions.rounding import (davg, dsum, lavg, lavg_sql, lsum,
-                                  lsum_sql, pround, to_scaled_long)
+from ..functions.rounding import (davg, davg_sql, dsum, dsum_sql, lavg,
+                                  lavg_sql, lsum, lsum_sql, pround,
+                                  pround_sql, to_scaled_long,
+                                  to_scaled_long_sql)
 from .registry import query
 
 
@@ -26,8 +28,8 @@ from .registry import query
     oracle=f"""
     SELECT CAST(o_orderdate AS DATE) AS sales_date,
            count(DISTINCT o_orderkey) AS total_orders,
-           floor({lsum_sql('o_totalprice')} * 100 + 0.5) / 100 AS total_revenue,
-           floor({lavg_sql('o_totalprice')} * 100 + 0.5) / 100 AS avg_order_value,
+           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
+           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
            count(DISTINCT o_custkey) AS unique_customers,
            0 AS new_customers
     FROM orders
@@ -69,8 +71,8 @@ def daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(o.o_orderkey) AS total_orders,
            count(DISTINCT CASE WHEN o.o_orderstatus = 'F' THEN o.o_orderkey END)
              AS completed_orders,
-           floor(coalesce({lsum_sql('o.o_totalprice')}, 0) * 100 + 0.5) / 100 AS total_spent,
-           floor(coalesce({lavg_sql('o.o_totalprice')}, 0) * 100 + 0.5) / 100 AS avg_order_value,
+           {pround_sql(f"coalesce({lsum_sql('o.o_totalprice')}, 0)")} AS total_spent,
+           {pround_sql(f"coalesce({lavg_sql('o.o_totalprice')}, 0)")} AS avg_order_value,
            CAST(min(o.o_orderdate) AS DATE) AS first_order_date,
            CAST(max(o.o_orderdate) AS DATE) AS last_order_date,
            CAST(date_diff('day', CAST(max(o.o_orderdate) AS DATE),
@@ -149,21 +151,29 @@ def customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# exact Σ extendedprice·(1−discount), scale 4 (cents × percent points)
+_REV4_SQL = (f"CAST(sum({to_scaled_long_sql('l.l_extendedprice')}"
+             f" * (100 - {to_scaled_long_sql('l.l_discount')})) AS BIGINT)"
+             f" / 10000.0")
+# a group's percent of all rows (window over the grouped result)
+_PCT_OF_ALL_SQL = "count(*) * 100.0 / sum(count(*)) OVER ()"
+
+
 @query(
     "product_metrics",
-    oracle="""
+    oracle=f"""
     SELECT p.p_partkey AS product_id,
            p.p_brand AS brand,
-           floor((p.p_retailprice) * 100 + 0.5) / 100 AS retail_price,
-           floor((sum(l.l_quantity)) * 100 + 0.5) / 100 AS total_quantity,
-           floor((CAST(sum(CAST(floor((l.l_extendedprice) * 100 + 0.5) AS BIGINT) * (100 - CAST(floor((l.l_discount) * 100 + 0.5) AS BIGINT))) AS BIGINT) / 10000.0) * 100 + 0.5) / 100 AS total_revenue,
+           {pround_sql('p.p_retailprice')} AS retail_price,
+           {pround_sql('sum(l.l_quantity)')} AS total_quantity,
+           {pround_sql(_REV4_SQL)} AS total_revenue,
            count(DISTINCT l.l_orderkey) AS order_count,
            CASE WHEN p.p_size > 0
                 THEN CAST(floor(sum(l.l_quantity) / p.p_size) AS BIGINT)
                 ELSE 0 END AS stock_turnover
     FROM part p
     LEFT JOIN lineitem l ON p.p_partkey = l.l_partkey
-    GROUP BY p.p_partkey, p.p_brand, floor((p.p_retailprice) * 100 + 0.5) / 100, p.p_size
+    GROUP BY p.p_partkey, p.p_brand, {pround_sql('p.p_retailprice')}, p.p_size
     """,
     covers=("A1", "A2", "A6", "A8", "J3", "P13", "P21"),
     bench=True,
@@ -227,12 +237,12 @@ def product_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "monthly_trends",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
            CAST(EXTRACT(month FROM o_orderdate) AS INT) AS order_month,
            count(DISTINCT o_orderkey) AS total_orders,
-           floor((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) * 100 + 0.5) / 100 AS total_revenue,
-           floor(((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) / count(o_totalprice)) * 100 + 0.5) / 100 AS avg_order_value,
+           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
+           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
            count(DISTINCT o_custkey) AS unique_customers
     FROM orders
     GROUP BY 1, 2
@@ -268,7 +278,7 @@ _REG_DATE_SQL = "DATE '1994-01-01' + CAST(c_custkey % 365 AS INT)"
     WITH first_order AS (
       SELECT o_custkey,
              CAST(min(o_orderdate) AS DATE) AS first_order_date,
-             floor((min(o_totalprice)) * 100 + 0.5) / 100 AS first_order_value
+             {pround_sql('min(o_totalprice)')} AS first_order_value
       FROM orders GROUP BY o_custkey
     )
     SELECT c.c_custkey AS customer_id,
@@ -343,8 +353,8 @@ def customer_acquisition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT acquisition_bucket,
            count(*) AS customer_count,
-           floor(CAST(sum(days) AS DOUBLE) / count(days) * 100 + 0.5) / 100 AS avg_days_to_purchase,
-           floor((count(*) * 100.0 / sum(count(*)) OVER ()) * 100 + 0.5) / 100 AS pct_of_customers
+           {pround_sql('CAST(sum(days) AS DOUBLE) / count(days)')} AS avg_days_to_purchase,
+           {pround_sql(_PCT_OF_ALL_SQL)} AS pct_of_customers
     FROM acq GROUP BY acquisition_bucket
     """,
     covers=("W2", "O3", "A1"),
@@ -385,13 +395,13 @@ _ATTRIBUTION_SQL = f"""
     WITH campaigns AS ({_CAMPAIGNS_SQL}
     ), ds AS (
       SELECT CAST(o_orderdate AS DATE) AS sales_date,
-             floor((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) * 100 + 0.5) / 100 AS total_revenue
+             {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue
       FROM orders GROUP BY 1
     )
     SELECT c.campaign_id, c.start_date, c.end_date,
            count(ds.sales_date) AS days_with_sales,
-           floor(CAST(sum(CAST(ds.total_revenue AS DECIMAL(18,2))) AS DOUBLE) * 100 + 0.5) / 100 AS revenue_in_period,
-           floor(CAST(sum(CAST(ds.total_revenue AS DECIMAL(18,2))) AS DOUBLE) / count(ds.total_revenue) * 100 + 0.5) / 100 AS avg_daily_revenue
+           {pround_sql(dsum_sql('ds.total_revenue'))} AS revenue_in_period,
+           {pround_sql(davg_sql('ds.total_revenue'))} AS avg_daily_revenue
     FROM ds JOIN campaigns c
       ON ds.sales_date BETWEEN c.start_date AND c.end_date
     GROUP BY c.campaign_id, c.start_date, c.end_date
@@ -467,12 +477,12 @@ def campaign_attribution_scalable(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "top_products",
-    oracle="""
+    oracle=f"""
     WITH product_rev AS (
       SELECT p.p_partkey AS product_id,
              p.p_name AS product_name,
-             floor((CAST(sum(CAST(floor((l.l_extendedprice) * 100 + 0.5) AS BIGINT) * (100 - CAST(floor((l.l_discount) * 100 + 0.5) AS BIGINT))) AS BIGINT) / 10000.0) * 100 + 0.5) / 100 AS total_revenue,
-             floor((sum(l.l_quantity)) * 100 + 0.5) / 100 AS total_quantity,
+             {pround_sql(_REV4_SQL)} AS total_revenue,
+             {pround_sql('sum(l.l_quantity)')} AS total_quantity,
              count(DISTINCT l.l_orderkey) AS order_count
       FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
       GROUP BY p.p_partkey, p.p_name
@@ -523,18 +533,18 @@ def top_products(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_segmentation",
-    oracle="""
+    oracle=f"""
     WITH per_customer AS (
       SELECT c.c_custkey, c.c_mktsegment,
-             coalesce(sum(CAST(o.o_totalprice AS DECIMAL(18,4))), 0) AS spent
+             coalesce({dsum_sql('o.o_totalprice', 4)}, 0) AS spent
       FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
       GROUP BY c.c_custkey, c.c_mktsegment
     )
     SELECT c_mktsegment AS customer_segment,
            count(*) AS customer_count,
-           floor(CAST(sum(spent) AS DOUBLE) * 100 + 0.5) / 100 AS total_lifetime_value,
-           floor(CAST(sum(spent) AS DOUBLE) / count(spent) * 100 + 0.5) / 100 AS avg_lifetime_value,
-           floor((count(*) * 100.0 / sum(count(*)) OVER ()) * 100 + 0.5) / 100 AS pct_of_customers
+           {pround_sql(dsum_sql('spent', 4))} AS total_lifetime_value,
+           {pround_sql(davg_sql('spent', 4))} AS avg_lifetime_value,
+           {pround_sql(_PCT_OF_ALL_SQL)} AS pct_of_customers
     FROM per_customer GROUP BY c_mktsegment
     """,
     covers=("A1", "A4", "J3", "W2"),
@@ -549,16 +559,15 @@ def customer_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_customer = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.coalesce(F.sum(F.col("o_totalprice").cast("decimal(18,4)")),
-                        F.lit(0).cast("decimal(18,4)")).alias("spent"))
+        .agg(F.coalesce(dsum(F.col("o_totalprice"), 4), F.lit(0))
+             .alias("spent"))
     )
     seg = (
         per_customer.groupBy(F.col("c_mktsegment").alias("customer_segment"))
         .agg(
             F.count(F.lit(1)).alias("customer_count"),
-            pround(F.sum("spent").cast("double"), 2).alias("total_lifetime_value"),
-            pround(F.sum("spent").cast("double") / F.count("spent"), 2)
-             .alias("avg_lifetime_value"),
+            pround(dsum(F.col("spent"), 4), 2).alias("total_lifetime_value"),
+            pround(davg(F.col("spent"), 4), 2).alias("avg_lifetime_value"),
         )
     )
     return seg.withColumn(
@@ -570,11 +579,11 @@ def customer_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "seasonal_performance",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(quarter FROM o_orderdate) AS INT) AS quarter,
            count(DISTINCT o_orderkey) AS total_orders,
-           floor((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) * 100 + 0.5) / 100 AS total_revenue,
-           floor(((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) / count(o_totalprice)) * 100 + 0.5) / 100 AS avg_order_value,
+           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
+           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
            count(DISTINCT o_custkey) AS unique_customers
     FROM orders GROUP BY 1
     """,
@@ -602,9 +611,9 @@ def seasonal_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "executive_summary",
     oracle=f"""
     SELECT * FROM
-      (SELECT floor((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) * 100 + 0.5) / 100 AS total_revenue,
+      (SELECT {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
               count(*) AS total_orders,
-              floor(((CAST(sum(CAST(floor((o_totalprice) * 100 + 0.5) AS BIGINT)) AS BIGINT) / 100.0) / count(o_totalprice)) * 100 + 0.5) / 100 AS avg_order_value
+              {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value
        FROM orders)
     CROSS JOIN
       (SELECT count(*) AS total_customers FROM customer)

@@ -87,6 +87,8 @@ def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BAL_C = to_scaled_long_sql("c_acctbal")
+# the exact per-group balance sum, from the scaled-long cents
+_BAL_SUM_SQL = "CAST(sum(bal_c) AS BIGINT) / 100.0"
 
 # the oracle recomputes the per-segment aggregate FROM SCRATCH over the
 # v2 snapshot — the Spark side must land on the identical state having
@@ -106,10 +108,8 @@ WITH v2 AS (
 )
 SELECT c_mktsegment AS segment,
        count(*) AS n_customers,
-       floor((CAST(sum(bal_c) AS BIGINT) / 100.0) * 100 + 0.5) / 100
-         AS total_acctbal,
-       floor((CAST(sum(bal_c) AS BIGINT) / 100.0) / count(*) * 100 + 0.5)
-         / 100 AS avg_acctbal
+       {pround_sql(_BAL_SUM_SQL)} AS total_acctbal,
+       {pround_sql(f"{_BAL_SUM_SQL} / count(*)")} AS avg_acctbal
 FROM v2 GROUP BY c_mktsegment
 """
 

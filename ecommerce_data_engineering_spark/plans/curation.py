@@ -545,9 +545,9 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT CAST(sum(n_tokens) AS DOUBLE) AS total FROM toks
     )
     SELECT source, n_docs, n_tokens,
-           floor(n_tokens / total * 1000000 + 0.5) / 1000000 AS raw_share,
-           floor(LEAST(1.0, {MIX_CAP} * total / n_tokens) * 1000000 + 0.5)
-             / 1000000 AS keep_rate,
+           {pround_sql('n_tokens / total', 6)} AS raw_share,
+           {pround_sql(f'LEAST(1.0, {MIX_CAP} * total / n_tokens)', 6)}
+             AS keep_rate,
            CAST(floor(n_tokens *
                       LEAST(1.0, {MIX_CAP} * total / n_tokens)) AS BIGINT)
              AS tokens_after
@@ -792,8 +792,8 @@ def _epoch_factor_map() -> dict[str, float]:
            count(*) AS n_docs,
            CAST(sum(n_copies) AS BIGINT) AS n_copies_total,
            count(*) FILTER (WHERE n_copies = 0) AS n_dropped,
-           floor(CAST(sum(n_copies) AS DOUBLE) / count(*) * 10000 + 0.5)
-             / 10000 AS realized_factor
+           {pround_sql('CAST(sum(n_copies) AS DOUBLE) / count(*)', 4)}
+             AS realized_factor
     FROM per_doc GROUP BY source
     """,
     covers=("EXT-curation",),

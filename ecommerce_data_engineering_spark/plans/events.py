@@ -8,18 +8,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources import load
-from ..functions.rounding import davg, dsum, pround
+from ..functions.rounding import (davg, davg_sql, dsum, dsum_sql, pround,
+                                  pround_sql)
 from .registry import query
 
 
 @query(
     "events_hourly_rollup",
-    oracle="""
+    oracle=f"""
     SELECT date_trunc('hour', ts) AS window_start,
            event_type,
            count(*) AS n_events,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) * 100 + 0.5) / 100 AS total_value,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) / count(value) * 100 + 0.5) / 100 AS avg_value,
+           {pround_sql(dsum_sql('value', 4))} AS total_value,
+           {pround_sql(davg_sql('value', 4))} AS avg_value,
            count(DISTINCT user_id) AS unique_users
     FROM events
     GROUP BY 1, 2
@@ -47,7 +48,7 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_sessionization",
-    oracle="""
+    oracle=f"""
     WITH gaps AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
@@ -68,7 +69,7 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_events,
            min(ts) AS session_start,
            max(ts) AS session_end,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) * 100 + 0.5) / 100 AS session_value
+           {pround_sql(dsum_sql('value', 4))} AS session_value
     FROM sessions
     GROUP BY user_id, CAST(session_seq AS INT)
     """,
@@ -107,13 +108,14 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_type_daily_share",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT CAST(ts AS DATE) AS event_date, event_type, count(*) AS n
       FROM events GROUP BY 1, 2
     )
     SELECT event_date, event_type, n,
-           floor((n * 100.0 / sum(n) OVER (PARTITION BY event_date)) * 100 + 0.5) / 100 AS pct_of_day
+           {pround_sql('n * 100.0 / sum(n) OVER (PARTITION BY event_date)')}
+             AS pct_of_day
     FROM daily
     """,
     covers=("W2", "A1"),
@@ -229,7 +231,7 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_session_window_native",
-    oracle="""
+    oracle=f"""
     WITH gaps AS (
       SELECT user_id, ts, event_id, value,
              CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
@@ -248,8 +250,7 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id,
            min(ts) AS session_start,
            count(*) AS n_events,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) * 100 + 0.5) / 100
-             AS session_value
+           {pround_sql(dsum_sql('value', 4))} AS session_value
     FROM sessions
     GROUP BY user_id, session_seq
     """,
@@ -275,13 +276,12 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_rollup_cascade",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(year FROM ts) AS INT) AS y,
            CAST(EXTRACT(month FROM ts) AS INT) AS m,
            event_type,
            count(*) AS n_events,
-           floor(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) * 100 + 0.5) / 100
-             AS total_value
+           {pround_sql(dsum_sql('value', 4))} AS total_value
     FROM events GROUP BY 1, 2, 3
     """,
     covers=("EXT-rollup", "A1"),

@@ -20,10 +20,10 @@ from ..operators import multimodal as M
 from ..operators import similarity as S
 from ..operators import text as X
 from ..sources import load
-from ..functions.rounding import pround, pround_sql
+from ..functions.rounding import half_up_sql, pround, pround_sql
 from ..functions.tokens import (
-    bpe_token_count_sql, content_key, content_key_sql, ngrams_sql,
-    words_sql, ws_words_sql)
+    bpe_token_count_sql, content_key, content_key_sql, content_text_sql,
+    ngrams_sql, words_sql, ws_words_sql)
 from .registry import query
 
 # ---------------------------------------------------------------- knobs
@@ -338,7 +338,7 @@ def _topk_oracle(cand: str, *ctes: str) -> str:
       GROUP BY 1, 2
     ), sims AS (
       SELECT d.query_id, d.neighbor_id,
-             floor((d.dot / (nq.nrm * nc.nrm)) * 1000000 + 0.5) / 1000000 AS cosine
+             {pround_sql('d.dot / (nq.nrm * nc.nrm)', 6)} AS cosine
       FROM dots d
       JOIN norms nq ON d.query_id = nq.vec_id
       JOIN norms nc ON d.neighbor_id = nc.vec_id
@@ -413,8 +413,7 @@ def _lsh_oracle(num_tables: int, probe_hamming: int) -> str:
         f"""planes AS (SELECT * FROM (VALUES {rows}) AS t(tbl, p, w)),
     sb AS (
       SELECT v.vec_id, planes.tbl, planes.p,
-             CASE WHEN floor(sum(v.x * planes.w[v.i]) * 1000000000 + 0.5)
-                       / 1000000000 > 0
+             CASE WHEN {pround_sql('sum(v.x * planes.w[v.i])', 9)} > 0
                   THEN '1' ELSE '0' END AS bit
       FROM v CROSS JOIN planes
       GROUP BY v.vec_id, planes.tbl, planes.p
@@ -576,10 +575,13 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_fingerprints",
-    oracle="""
-    WITH base AS (SELECT doc_id, lower(trim(text)) AS t FROM documents)
+    oracle=f"""
+    WITH base AS (
+      SELECT doc_id, {content_key_sql('text')} AS content_md5,
+             {content_text_sql('text')} AS t
+      FROM documents)
     SELECT doc_id,
-           md5(t) AS content_md5,
+           content_md5,
            list_aggregate(
              list_transform(generate_series(1, greatest(length(t) - 7, 1)),
                             i -> md5(substr(t, i, 8))), 'min') AS winnow_fp
@@ -596,9 +598,9 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_stats",
-    oracle="""
+    oracle=f"""
     SELECT lang, source, count(*) AS n_docs,
-           floor(CAST(sum(n_chars) AS DOUBLE) / count(n_chars) * 100 + 0.5) / 100 AS avg_chars,
+           {pround_sql('CAST(sum(n_chars) AS DOUBLE) / count(n_chars)')} AS avg_chars,
            CAST(sum(n_chars) AS BIGINT) AS total_chars
     FROM documents GROUP BY lang, source
     """,
@@ -741,6 +743,12 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.decode_audio(M.synth_wav_media(docs))
 
 
+# the rounded cosine of an all-pairs oracle row (vectors a, b with
+# norms nrm)
+_PAIR_COSINE_SQL = pround_sql(
+    "list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)", 6)
+
+
 @query(
     "dedup_embedding_cosine",
     # list_dot_product formulation: bit-identical (post-rounding) to
@@ -748,7 +756,7 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the all-pairs join stays (exhaustive SEMANTICS on purpose), but
     # the per-pair dot is one native list op instead of 64 aggregated
     # join rows, which is what made the 4x-scale sweep intractable.
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
     ), n AS (
@@ -756,11 +764,9 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM e WHERE list_dot_product(emb, emb) > 0
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           floor(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)
-                 * 1000000 + 0.5) / 1000000 AS cosine
+           {_PAIR_COSINE_SQL} AS cosine
     FROM n a JOIN n b ON a.vec_id < b.vec_id
-    WHERE floor(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)
-                * 1000000 + 0.5) / 1000000 >= 0.4
+    WHERE {_PAIR_COSINE_SQL} >= 0.4
     """,
     covers=("EXT-dedup", "EXT-similarity"),
 )
@@ -877,8 +883,7 @@ def _cent_cte_sql(ivf_k: int, seed_step: int, train_iters: int = 0,
         p = t - 1
         chain.append(f"""td{t} AS (
       SELECT v.vec_id, c.cluster_id,
-             floor(sum((v.x - c.x) * (v.x - c.x)) * 1000000000 + 0.5)
-               / 1000000000 AS d2
+             {pround_sql('sum((v.x - c.x) * (v.x - c.x))', 9)} AS d2
       FROM {train_src} v JOIN cent{p} c ON v.i = c.i GROUP BY 1, 2
     ), ta{t} AS (
       SELECT vec_id, cluster_id FROM (
@@ -888,7 +893,7 @@ def _cent_cte_sql(ivf_k: int, seed_step: int, train_iters: int = 0,
       WHERE rn = 1
     ), tm{t} AS (
       SELECT a.cluster_id, v.i,
-             floor(avg(v.x) * 1000000000 + 0.5) / 1000000000 AS x
+             {pround_sql('avg(v.x)', 9)} AS x
       FROM ta{t} a JOIN {train_src} v ON v.vec_id = a.vec_id GROUP BY 1, 2
     ), cent{t} AS (
       SELECT c.cluster_id, c.i, COALESCE(m.x, c.x) AS x
@@ -912,7 +917,7 @@ def _ivf_nprobe_oracle(ivf_k: int, seed_step: int, nprobe: int,
         _cent_cte_sql(ivf_k, seed_step, train_iters, train_sample_sql),
         f"""dist AS (
       SELECT v.vec_id, c.cluster_id,
-             floor(sum((v.x - c.x) * (v.x - c.x)) * 1000000000 + 0.5) / 1000000000 AS d2
+             {pround_sql('sum((v.x - c.x) * (v.x - c.x))', 9)} AS d2
       FROM v JOIN cent c ON v.i = c.i
       GROUP BY 1, 2
     ), ranked_cells AS (
@@ -1081,7 +1086,7 @@ def _index_delta_oracle() -> str:
       -- join norms: the Spark side assigns with_norm(emb), which
       -- excludes zero-norm/empty vectors — mirror that here
       SELECT v.vec_id, c.cluster_id,
-             floor(sum((v.x - c.x) * (v.x - c.x)) * 1000000000 + 0.5) / 1000000000 AS d2
+             {pround_sql('sum((v.x - c.x) * (v.x - c.x))', 9)} AS d2
       FROM v
       JOIN norms nm ON v.vec_id = nm.vec_id
       JOIN cent c ON v.i = c.i
@@ -1103,9 +1108,9 @@ def _index_delta_oracle() -> str:
     SELECT COALESCE(o.cluster_id, n.cluster_id) AS cluster_id,
            COALESCE(o.n_existing, 0) AS n_existing,
            COALESCE(n.n_new, 0) AS n_new,
-           floor(COALESCE(n.n_new, 0) * 1.0
-                 / (COALESCE(o.n_existing, 0) + COALESCE(n.n_new, 0))
-                 * 10000 + 0.5) / 10000 AS share_new
+           {pround_sql('''COALESCE(n.n_new, 0) * 1.0
+                 / (COALESCE(o.n_existing, 0) + COALESCE(n.n_new, 0))''', 4)}
+             AS share_new
     FROM oldc o FULL OUTER JOIN newc n ON o.cluster_id = n.cluster_id
     """
 
@@ -1189,11 +1194,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
       (SELECT count(*) FROM documents) AS n_docs,
       (SELECT count(DISTINCT {content_key_sql('text')}) FROM documents)
         AS n_unique_texts,
-      (SELECT floor((1.0 - count(DISTINCT {content_key_sql('text')}) * 1.0
-                     / count(*)) * 10000 + 0.5) / 10000 FROM documents)
+      (SELECT {pround_sql(f'''1.0 - count(DISTINCT {content_key_sql('text')})
+                                * 1.0 / count(*)''', 4)} FROM documents)
         AS exact_dup_rate,
       (SELECT count(DISTINCT shingle) FROM sh) AS shingle_vocab,
-      (SELECT floor(CAST(sum(n_sh) AS DOUBLE) / count(*) * 100 + 0.5) / 100
+      (SELECT {pround_sql('CAST(sum(n_sh) AS DOUBLE) / count(*)')}
        FROM per_doc) AS avg_shingles_per_doc
     """,
     covers=("A7", "EXT-dedup"),
@@ -1253,7 +1258,7 @@ def corpus_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _emb_clusters_oracle() -> str:
     # same list_dot_product rewrite as dedup_embedding_cosine's oracle
     # (bit-identical post-rounding, ~140x cheaper all-pairs stage)
-    return """
+    return f"""
     WITH RECURSIVE e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
     ), n AS (
@@ -1262,8 +1267,7 @@ def _emb_clusters_oracle() -> str:
     ), pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM n a JOIN n b ON a.vec_id < b.vec_id
-      WHERE floor(list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)
-                  * 1000000 + 0.5) / 1000000 >= 0.4
+      WHERE {_PAIR_COSINE_SQL} >= 0.4
     ), edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION SELECT id_b, id_a FROM pairs
@@ -1290,7 +1294,7 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_int8_quantize",
-    oracle="""
+    oracle=f"""
     WITH vx AS (
       SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x
       FROM embeddings
@@ -1299,14 +1303,14 @@ def dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), e AS (
       SELECT v.vec_id, s.scale,
              CASE WHEN s.scale > 0
-               THEN abs(floor(v.x / s.scale + 0.5) * s.scale - v.x)
+               THEN abs({half_up_sql('v.x / s.scale')} * s.scale - v.x)
                ELSE 0.0 END AS err
       FROM vx v JOIN s ON v.vec_id = s.vec_id
     )
     SELECT vec_id,
-           floor(scale * 1e8 + 0.5) / 1e8 AS scale,
-           floor(max(err) * 1e8 + 0.5) / 1e8 AS max_abs_err,
-           floor(sum(err * err) / count(*) * 1e10 + 0.5) / 1e10 AS mse
+           {pround_sql('scale', 8)} AS scale,
+           {pround_sql('max(err)', 8)} AS max_abs_err,
+           {pround_sql('sum(err * err) / count(*)', 10)} AS mse
     FROM e GROUP BY vec_id, scale
     UNION ALL
     -- unnest of an empty list yields no rows, which would drop the

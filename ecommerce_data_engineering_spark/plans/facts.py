@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..functions.dates import date_key
 from ..operators.upsert import keyed_upsert
 from ..sources import load
-from ..functions.rounding import pround
+from ..functions.rounding import pround, pround_sql
 from .registry import query
 
 
@@ -28,7 +28,7 @@ def _customer_dim_with_keys(customer: DataFrame) -> DataFrame:
 
 @query(
     "fact_orders_build",
-    oracle="""
+    oracle=f"""
     WITH dim AS (
       SELECT c_custkey, c_mktsegment,
              CAST(row_number() OVER (ORDER BY c_custkey) AS INT) AS customer_key
@@ -39,9 +39,9 @@ def _customer_dim_with_keys(customer: DataFrame) -> DataFrame:
            d.customer_key,
            d.c_mktsegment AS customer_segment,
            CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
-           floor((o.o_totalprice) * 100 + 0.5) / 100 AS total_amount,
-           floor((o.o_totalprice * 0.15 / 1.15) * 100 + 0.5) / 100 AS tax_amount,
-           floor((o.o_totalprice / 1.15) * 100 + 0.5) / 100 AS net_amount,
+           {pround_sql('o.o_totalprice')} AS total_amount,
+           {pround_sql('o.o_totalprice * 0.15 / 1.15')} AS tax_amount,
+           {pround_sql('o.o_totalprice / 1.15')} AS net_amount,
            1 AS total_items
     FROM orders o
     JOIN dim d ON o.o_custkey = d.c_custkey
@@ -76,7 +76,7 @@ def fact_orders_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fact_lineitem_build",
-    oracle="""
+    oracle=f"""
     SELECT l.l_orderkey AS order_id,
            l.l_linenumber AS line_number,
            o.o_orderstatus AS order_status,
@@ -84,9 +84,10 @@ def fact_orders_build(spark: SparkSession, sf_dir: str) -> DataFrame:
            p.p_brand AS brand,
            s.s_name AS supplier_name,
            CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
-           floor((l.l_quantity) * 100 + 0.5) / 100 AS quantity,
-           floor((l.l_extendedprice * (1 - l.l_discount)) * 100 + 0.5) / 100 AS net_revenue,
-           floor((l.l_extendedprice * (1 - l.l_discount) - l.l_quantity * p.p_retailprice * 0.6) * 100 + 0.5) / 100
+           {pround_sql('l.l_quantity')} AS quantity,
+           {pround_sql('l.l_extendedprice * (1 - l.l_discount)')} AS net_revenue,
+           {pround_sql('l.l_extendedprice * (1 - l.l_discount)'
+                       ' - l.l_quantity * p.p_retailprice * 0.6')}
              AS item_profit
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -134,13 +135,13 @@ def fact_lineitem_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fact_orders_upsert",
-    oracle="""
+    oracle=f"""
     WITH old AS (
-      SELECT o_orderkey AS order_id, floor((o_totalprice) * 100 + 0.5) / 100 AS total_amount,
+      SELECT o_orderkey AS order_id, {pround_sql('o_totalprice')} AS total_amount,
              'old' AS batch_flag
       FROM orders WHERE o_orderdate < TIMESTAMP '2001-01-01'
     ), batch AS (
-      SELECT o_orderkey AS order_id, floor((o_totalprice) * 100 + 0.5) / 100 AS total_amount,
+      SELECT o_orderkey AS order_id, {pround_sql('o_totalprice')} AS total_amount,
              'batch' AS batch_flag
       FROM orders WHERE o_orderdate >= TIMESTAMP '2000-07-01'
     )

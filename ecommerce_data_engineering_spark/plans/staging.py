@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.cleaning import clean_string, coerce_date, coerce_numeric, fill_unknown
 from ..sources import load
-from ..functions.rounding import dsum, pround
+from ..functions.rounding import dsum, dsum_sql, pround, pround_sql
 from .registry import query
 
 
@@ -72,7 +72,7 @@ def coerce_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dq_summary",
-    oracle="""
+    oracle=f"""
     SELECT
       (SELECT count(*) FROM orders)                                          AS orders_rows,
       (SELECT count(*) FROM customer WHERE c_name IS NULL)                   AS null_name_count,
@@ -81,7 +81,7 @@ def coerce_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
          ON o.o_custkey = c.c_custkey WHERE c.c_custkey IS NULL)             AS orphan_orders,
       (SELECT count(*) FROM lineitem l LEFT JOIN orders o
          ON l.l_orderkey = o.o_orderkey WHERE o.o_orderkey IS NULL)          AS orphan_lineitems,
-      (SELECT floor(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) * 100 + 0.5) / 100 FROM orders) AS total_revenue
+      (SELECT {pround_sql(dsum_sql('o_totalprice', 4))} FROM orders) AS total_revenue
     """,
     covers=("Q2", "Q3", "Q4", "Q5", "Q6", "A7", "J6", "J8", "F2", "F3"),
 )

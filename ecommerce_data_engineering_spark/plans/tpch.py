@@ -19,8 +19,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions.rounding import (lsum_wide, lsum_wide_sql, pround,
-                                  to_scaled_long, to_scaled_long_sql)
+from ..functions.rounding import (dsum, dsum_sql, lsum_sql, lsum_wide,
+                                  lsum_wide_sql, pround, pround_expr,
+                                  pround_sql, to_scaled_long,
+                                  to_scaled_long_sql)
 from ..sources import load
 from .registry import query
 
@@ -79,16 +81,15 @@ SUM_DISC_PRICE_SQL = lsum_wide_sql(f"{_EP_C} * (100 - {_DISC_P})", 4)
     "pricing_summary",
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
-           floor(sum(l_quantity) * 100 + 0.5) / 100 AS sum_qty,
-           floor((CAST(sum({_EP_C}) AS BIGINT) / 100.0) * 100 + 0.5) / 100 AS sum_base_price,
-           floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100
-             AS sum_disc_price,
-           floor({lsum_wide_sql(f"{_EP_C} * (100 - {_DISC_P}) * (100 + {_TAX_P})", 6)} * 100 + 0.5) / 100
+           {pround_sql('sum(l_quantity)')} AS sum_qty,
+           {pround_sql(lsum_sql('l_extendedprice'))} AS sum_base_price,
+           {pround_sql(SUM_DISC_PRICE_SQL)} AS sum_disc_price,
+           {pround_sql(lsum_wide_sql(
+               f"{_EP_C} * (100 - {_DISC_P}) * (100 + {_TAX_P})", 6))}
              AS sum_charge,
-           floor(sum(l_quantity) / count(*) * 100 + 0.5) / 100 AS avg_qty,
-           floor((CAST(sum({_EP_C}) AS BIGINT) / 100.0) / count(*) * 100 + 0.5) / 100 AS avg_price,
-           floor((CAST(sum({_DISC_P}) AS BIGINT) / 100.0) / count(*) * 10000 + 0.5) / 10000
-             AS avg_disc,
+           {pround_sql('sum(l_quantity) / count(*)')} AS avg_qty,
+           {pround_sql(f"{lsum_sql('l_extendedprice')} / count(*)")} AS avg_price,
+           {pround_sql(f"{lsum_sql('l_discount')} / count(*)", 4)} AS avg_disc,
            count(*) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2000-09-02'
@@ -129,7 +130,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT n.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS order_year,
-           floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100 AS revenue,
+           {pround_sql(SUM_DISC_PRICE_SQL)} AS revenue,
            count(DISTINCT o.o_orderkey) AS n_orders
     FROM lineitem l
     JOIN orders o   ON l.l_orderkey = o.o_orderkey
@@ -188,7 +189,7 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top_revenue_orders",
     oracle=f"""
     SELECT l.l_orderkey AS order_key,
-           floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100 AS revenue,
+           {pround_sql(SUM_DISC_PRICE_SQL)} AS revenue,
            CAST(o.o_orderdate AS DATE) AS order_date,
            o.o_orderpriority AS order_priority
     FROM lineitem l
@@ -278,10 +279,10 @@ def order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "promo_revenue_share",
     oracle=f"""
     SELECT CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS ship_year,
-           floor(CAST(sum(CASE WHEN p.p_type LIKE 'PROMO%'
-                               THEN {_DEC_EP} * {_DEC_DISC} END) AS DOUBLE)
-                 * 100.0 / CAST(sum({_DEC_EP} * {_DEC_DISC}) AS DOUBLE)
-                 * 10000 + 0.5) / 10000 AS promo_share
+           {pround_sql(f'''CAST(sum(CASE WHEN p.p_type LIKE 'PROMO%'
+                 THEN {_DEC_EP} * {_DEC_DISC} END) AS DOUBLE)
+                 * 100.0 / CAST(sum({_DEC_EP} * {_DEC_DISC}) AS DOUBLE)''', 4)}
+             AS promo_share
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY CAST(EXTRACT(year FROM l.l_shipdate) AS INT)
     """,
@@ -315,8 +316,8 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN nation n   ON c.c_nationkey = n.n_nationkey
     )
     SELECT order_year,
-           floor(CAST(sum(CASE WHEN nation = 'CHINA' THEN volume END) AS DOUBLE)
-                 * 100.0 / CAST(sum(volume) AS DOUBLE) * 10000 + 0.5) / 10000
+           {pround_sql('''CAST(sum(CASE WHEN nation = 'CHINA' THEN volume END)
+                 AS DOUBLE) * 100.0 / CAST(sum(volume) AS DOUBLE)''', 4)}
              AS china_share_pct
     FROM rev GROUP BY order_year
     """,
@@ -373,11 +374,10 @@ def customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_api_revenue_by_status",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus AS order_status,
            count(*) AS n_orders,
-           floor(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-                 * 100 + 0.5) / 100 AS total_revenue
+           {pround_sql(dsum_sql('o_totalprice', 4))} AS total_revenue
     FROM orders
     GROUP BY o_orderstatus
     """,
@@ -389,11 +389,10 @@ def sql_api_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan as the DataFrame API.  Demonstrates the engine's second
     query surface."""
     load(spark, sf_dir, "orders").createOrReplaceTempView("sql_api_orders")
-    return spark.sql("""
+    return spark.sql(f"""
         SELECT o_orderstatus AS order_status,
                count(*) AS n_orders,
-               floor(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-                     * 100 + 0.5) / 100 AS total_revenue
+               {pround_expr(dsum_sql('o_totalprice', 4))} AS total_revenue
         FROM sql_api_orders
         GROUP BY o_orderstatus
     """)
@@ -401,9 +400,9 @@ def sql_api_revenue_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "important_part_stock",
-    oracle="""
+    oracle=f"""
     SELECT l_partkey AS part_key,
-           floor(sum(l_quantity) * 100 + 0.5) / 100 AS total_qty
+           {pround_sql('sum(l_quantity)')} AS total_qty
     FROM lineitem
     GROUP BY l_partkey
     HAVING sum(l_quantity) > (
@@ -431,8 +430,7 @@ def important_part_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT l_partkey, sum(l_quantity) / count(*) AS avg_qty
       FROM lineitem GROUP BY l_partkey
     )
-    SELECT floor(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-                 / 7.0 * 100 + 0.5) / 100 AS avg_yearly
+    SELECT {pround_sql(f"{dsum_sql('l.l_extendedprice', 4)} / 7.0")} AS avg_yearly
     FROM lineitem l JOIN part_avg pa ON l.l_partkey = pa.l_partkey
     WHERE l.l_quantity < 0.5 * pa.avg_qty
     """,
@@ -447,8 +445,8 @@ def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg((F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty")))
     return (li.join(F.broadcast(part_avg), "l_partkey")
             .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
-            .agg(pround(F.sum(F.col("l_extendedprice").cast("decimal(18,4)"))
-                        .cast("double") / 7.0, 2).alias("avg_yearly")))
+            .agg(pround(dsum(F.col("l_extendedprice"), 4) / 7.0, 2)
+                 .alias("avg_yearly")))
 
 
 @query(
@@ -491,8 +489,7 @@ def customer_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top_return_customers",
     oracle=f"""
     SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
-           floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100
-             AS revenue_lost,
+           {pround_sql(SUM_DISC_PRICE_SQL)} AS revenue_lost,
            n.n_name AS nation
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
@@ -564,8 +561,7 @@ def shipmode_priority_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "disjunctive_predicate_revenue",
     oracle=f"""
-    SELECT floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100
-             AS revenue
+    SELECT {pround_sql(SUM_DISC_PRICE_SQL)} AS revenue
     FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
     WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
              AND l.l_quantity BETWEEN 1 AND 20)
@@ -601,9 +597,9 @@ def disjunctive_predicate_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "forecast_revenue_change",
     oracle=f"""
-    SELECT floor(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                          * CAST(l_discount AS DECIMAL(8,4))) AS DOUBLE)
-                 * 100 + 0.5) / 100 AS potential_revenue
+    SELECT {pround_sql('''CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                 * CAST(l_discount AS DECIMAL(8,4))) AS DOUBLE)''')}
+             AS potential_revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
       AND l_shipdate <  TIMESTAMP '1998-01-01'
@@ -632,8 +628,7 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS ship_year,
-           floor({SUM_DISC_PRICE_SQL} * 100 + 0.5) / 100
-             AS volume
+           {pround_sql(SUM_DISC_PRICE_SQL)} AS volume
     FROM lineitem l
     JOIN orders o    ON l.l_orderkey = o.o_orderkey
     JOIN customer c  ON o.o_custkey = c.c_custkey
@@ -675,10 +670,10 @@ def volume_between_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT sn.n_name AS nation,
            CAST(EXTRACT(year FROM o.o_orderdate) AS INT) AS order_year,
-           floor(CAST(sum({_DEC_EP} * {_DEC_DISC}
-                          - CAST(l.l_quantity AS DECIMAL(18,4))
-                            * CAST(p.p_retailprice * 0.6 AS DECIMAL(18,4)))
-                      AS DOUBLE) * 100 + 0.5) / 100 AS profit
+           {pround_sql(f'''CAST(sum({_DEC_EP} * {_DEC_DISC}
+                 - CAST(l.l_quantity AS DECIMAL(18,4))
+                   * CAST(p.p_retailprice * 0.6 AS DECIMAL(18,4))) AS DOUBLE)''')}
+             AS profit
     FROM lineitem l
     JOIN part p     ON l.l_partkey = p.p_partkey
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
@@ -722,7 +717,7 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
       GROUP BY l_suppkey
     )
     SELECT s.s_suppkey AS supplier_key, s.s_name AS supplier_name,
-           floor(r.total_rev * 100 + 0.5) / 100 AS total_revenue
+           {pround_sql('r.total_rev')} AS total_revenue
     FROM supplier_rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
     WHERE r.total_rev = (SELECT max(total_rev) FROM supplier_rev)
     """,
@@ -791,7 +786,7 @@ def supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.c_custkey AS customer_id, c.c_name AS customer_name,
            o.o_orderkey AS order_key,
            CAST(o.o_orderdate AS DATE) AS order_date,
-           floor(o.o_totalprice * 100 + 0.5) / 100 AS total_price
+           {pround_sql('o.o_totalprice')} AS total_price
     FROM orders o
     JOIN customer c ON o.o_custkey = c.c_custkey
     WHERE o.o_orderkey IN (SELECT l_orderkey FROM big_orders)
@@ -819,7 +814,7 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "min_cost_supplier",
-    oracle="""
+    oracle=f"""
     WITH supply AS (
       SELECT l.l_partkey, l.l_suppkey,
              min(l.l_extendedprice / l.l_quantity) AS unit_cost
@@ -829,7 +824,7 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT l_partkey, min(unit_cost) AS best_cost FROM supply GROUP BY l_partkey
     )
     SELECT s.l_partkey AS part_key, s.l_suppkey AS supplier_key,
-           floor(s.unit_cost * 100 + 0.5) / 100 AS unit_cost,
+           {pround_sql('s.unit_cost')} AS unit_cost,
            sup.s_name AS supplier_name,
            n.n_name AS nation
     FROM supply s
@@ -938,16 +933,14 @@ def late_only_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dormant_high_balance_customers",
-    oracle="""
+    oracle=f"""
     WITH avg_bal AS (
-      SELECT CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / count(*)
-        AS threshold
+      SELECT {dsum_sql('c_acctbal', 4)} / count(*) AS threshold
       FROM customer WHERE c_acctbal > 0
     )
     SELECT c.c_nationkey AS nation_key,
            count(*) AS n_customers,
-           floor(CAST(sum(CAST(c.c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-                 * 100 + 0.5) / 100 AS total_balance
+           {pround_sql(dsum_sql('c.c_acctbal', 4))} AS total_balance
     FROM customer c, avg_bal
     WHERE c.c_acctbal > avg_bal.threshold
       AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
@@ -961,8 +954,8 @@ def dormant_high_balance_customers(spark: SparkSession, sf_dir: str) -> DataFram
     customer = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     threshold = (customer.filter(F.col("c_acctbal") > 0)
-                 .agg((F.sum(F.col("c_acctbal").cast("decimal(18,4)"))
-                       .cast("double") / F.count(F.lit(1))).alias("threshold")))
+                 .agg((dsum(F.col("c_acctbal"), 4) / F.count(F.lit(1)))
+                      .alias("threshold")))
     return (
         customer.crossJoin(F.broadcast(threshold))
         .filter(F.col("c_acctbal") > F.col("threshold"))
@@ -970,6 +963,5 @@ def dormant_high_balance_customers(spark: SparkSession, sf_dir: str) -> DataFram
               customer.c_custkey == F.col("o_custkey"), "left_anti")
         .groupBy(F.col("c_nationkey").alias("nation_key"))
         .agg(F.count(F.lit(1)).alias("n_customers"),
-             pround(F.sum(F.col("c_acctbal").cast("decimal(18,4)"))
-                    .cast("double"), 2).alias("total_balance"))
+             pround(dsum(F.col("c_acctbal"), 4), 2).alias("total_balance"))
     )

@@ -11,14 +11,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.rounding import pround
+from ..functions.rounding import dsum, dsum_sql, pround, pround_sql
 from ..sources import load
 from .registry import query
 
-_DAILY_CTE = """
+_DAILY_CTE = f"""
     daily AS (
       SELECT CAST(o_orderdate AS DATE) AS sales_date,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+             {dsum_sql('o_totalprice', 4)} AS revenue
       FROM orders GROUP BY 1
     )
 """
@@ -27,8 +27,10 @@ _DAILY_CTE = """
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return (o.groupBy(F.col("o_orderdate").cast("date").alias("sales_date"))
-            .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-                 .cast("double").alias("revenue")))
+            .agg(dsum(F.col("o_totalprice"), 4).alias("revenue")))
+
+
+_LAST_7_ROWS = "ORDER BY sales_date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW"
 
 
 @query(
@@ -36,13 +38,9 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_DAILY_CTE}
     SELECT sales_date,
-           floor(revenue * 100 + 0.5) / 100 AS revenue,
-           floor(CAST(sum(CAST(revenue AS DECIMAL(18,2))) OVER
-                 (ORDER BY sales_date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-                 AS DOUBLE) * 100 + 0.5) / 100 AS revenue_7d,
-           CAST(count(*) OVER
-                 (ORDER BY sales_date ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-                 AS INT) AS days_in_window
+           {pround_sql('revenue')} AS revenue,
+           {pround_sql(dsum_sql('revenue', over=_LAST_7_ROWS))} AS revenue_7d,
+           CAST(count(*) OVER ({_LAST_7_ROWS}) AS INT) AS days_in_window
     FROM daily
     """,
     covers=("EXT-window",),
@@ -68,17 +66,17 @@ def rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "month_over_month_delta",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS y,
              CAST(EXTRACT(month FROM o_orderdate) AS INT) AS m,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+             {dsum_sql('o_totalprice', 4)} AS revenue
       FROM orders GROUP BY 1, 2
     )
     SELECT y, m,
-           floor(revenue * 100 + 0.5) / 100 AS revenue,
-           floor(coalesce(revenue - lag(revenue) OVER (ORDER BY y, m), 0)
-                 * 100 + 0.5) / 100 AS mom_delta
+           {pround_sql('revenue')} AS revenue,
+           {pround_sql('coalesce(revenue - lag(revenue) OVER (ORDER BY y, m), 0)')}
+             AS mom_delta
     FROM monthly
     """,
     covers=("EXT-window",),
@@ -88,8 +86,7 @@ def month_over_month_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     monthly = (o.groupBy(F.year("o_orderdate").alias("y"),
                          F.month("o_orderdate").alias("m"))
-               .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-                    .cast("double").alias("revenue")))
+               .agg(dsum(F.col("o_totalprice"), 4).alias("revenue")))
     w = Window.orderBy("y", "m")
     return monthly.select(
         "y", "m",
@@ -101,14 +98,13 @@ def month_over_month_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_value_quartiles",
-    oracle="""
+    oracle=f"""
     WITH spent AS (
-      SELECT o_custkey,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total
+      SELECT o_custkey, {dsum_sql('o_totalprice', 4)} AS total
       FROM orders GROUP BY 1
     )
     SELECT o_custkey AS customer_id,
-           floor(total * 100 + 0.5) / 100 AS total_spent,
+           {pround_sql('total')} AS total_spent,
            CAST(ntile(4) OVER (ORDER BY total DESC, o_custkey) AS INT) AS value_quartile
     FROM spent
     """,
@@ -119,8 +115,7 @@ def customer_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering; custkey tiebreak)."""
     o = load(spark, sf_dir, "orders")
     spent = (o.groupBy("o_custkey")
-             .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-                  .cast("double").alias("total")))
+             .agg(dsum(F.col("o_totalprice"), 4).alias("total")))
     w = Window.orderBy(F.desc("total"), F.asc("o_custkey"))
     return spent.select(
         F.col("o_custkey").alias("customer_id"),
@@ -131,11 +126,10 @@ def customer_value_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "revenue_rollup",
-    oracle="""
+    oracle=f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
            CAST(EXTRACT(quarter FROM o_orderdate) AS INT) AS order_quarter,
-           floor(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-                 * 100 + 0.5) / 100 AS revenue,
+           {pround_sql(dsum_sql('o_totalprice', 4))} AS revenue,
            count(*) AS n_orders
     FROM orders
     GROUP BY ROLLUP (CAST(EXTRACT(year FROM o_orderdate) AS INT),
@@ -199,10 +193,10 @@ def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_value_percentiles",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus AS order_status,
-           floor(quantile_cont(o_totalprice, 0.5) * 100 + 0.5) / 100 AS median_value,
-           floor(quantile_cont(o_totalprice, 0.9) * 100 + 0.5) / 100 AS p90_value,
+           {pround_sql('quantile_cont(o_totalprice, 0.5)')} AS median_value,
+           {pround_sql('quantile_cont(o_totalprice, 0.9)')} AS p90_value,
            count(*) AS n_orders
     FROM orders GROUP BY o_orderstatus
     """,
@@ -220,12 +214,10 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_value_percentiles_approx",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus AS order_status,
-           floor(quantile_cont(o_totalprice, 0.5) * 100 + 0.5) / 100
-             AS median_value,
-           floor(quantile_cont(o_totalprice, 0.9) * 100 + 0.5) / 100
-             AS p90_value,
+           {pround_sql('quantile_cont(o_totalprice, 0.5)')} AS median_value,
+           {pround_sql('quantile_cont(o_totalprice, 0.9)')} AS p90_value,
            count(*) AS n_orders,
            CAST(1 AS INT) AS within_rank_eps
     FROM orders GROUP BY o_orderstatus
@@ -348,20 +340,20 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unpivot_monthly_metrics",
-    oracle="""
+    oracle=f"""
     WITH monthly AS (
       SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS y,
              CAST(EXTRACT(month FROM o_orderdate) AS INT) AS m,
              CAST(count(*) AS DOUBLE) AS n_orders,
              CAST(count(DISTINCT o_custkey) AS DOUBLE) AS n_customers,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+             {dsum_sql('o_totalprice', 4)} AS revenue
       FROM orders GROUP BY 1, 2
     )
-    SELECT y, m, 'n_orders' AS metric, floor(n_orders * 100 + 0.5) / 100 AS value FROM monthly
+    SELECT y, m, 'n_orders' AS metric, {pround_sql('n_orders')} AS value FROM monthly
     UNION ALL
-    SELECT y, m, 'n_customers', floor(n_customers * 100 + 0.5) / 100 FROM monthly
+    SELECT y, m, 'n_customers', {pround_sql('n_customers')} FROM monthly
     UNION ALL
-    SELECT y, m, 'revenue', floor(revenue * 100 + 0.5) / 100 FROM monthly
+    SELECT y, m, 'revenue', {pround_sql('revenue')} FROM monthly
     """,
     covers=("EXT-pivot",),
 )
@@ -374,8 +366,7 @@ def unpivot_monthly_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                          F.month("o_orderdate").alias("m"))
                .agg(F.count(F.lit(1)).cast("double").alias("n_orders"),
                     F.countDistinct("o_custkey").cast("double").alias("n_customers"),
-                    F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-                     .cast("double").alias("revenue")))
+                    dsum(F.col("o_totalprice"), 4).alias("revenue")))
     return (monthly.unpivot(["y", "m"],
                             ["n_orders", "n_customers", "revenue"],
                             "metric", "value")

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.rounding import dsum
 from ..operators.upsert import keyed_upsert
 from ..schemas import FIXTURES
 
@@ -37,13 +38,9 @@ def daily_sales_incremental(spark: SparkSession, sf_dir: str,
         .groupBy(F.col("o_orderdate").cast("date").alias("sales_date"))
         .agg(
             F.count(F.lit(1)).alias("total_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-             .alias("_rev"),
+            dsum(F.col("o_totalprice"), 4).alias("total_revenue"),
             F.approx_count_distinct("o_custkey").alias("approx_customers"),
         )
-        .select("sales_date", "total_orders",
-                F.col("_rev").cast("double").alias("total_revenue"),
-                "approx_customers")
     )
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:

@@ -14,8 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from ecommerce_data_engineering_spark.operators.cdc import (
-    diff_counts, snapshot_diff)
+from ecommerce_data_engineering_spark.operators.cdc import snapshot_diff
 from ecommerce_data_engineering_spark.sources import versioned as V
 
 SCHEMA = "k bigint, seg string, bal double"
@@ -45,7 +44,8 @@ def test_snapshot_diff_classification(spark):
     diff = snapshot_diff(before, after, ["k"])
     assert _rows(diff) == {(2, "update"), (3, "delete"), (5, "update"),
                            (6, "update"), (7, "insert")}
-    counts = {r.change: r.n for r in diff_counts(diff).collect()}
+    counts = {r.change: r.n for r in
+              diff.groupBy("change").agg(F.count("*").alias("n")).collect()}
     assert counts == {"update": 3, "delete": 1, "insert": 1}
     # before/after structs carry the payloads (NULL on the absent side)
     by_k = {r.k: r for r in diff.collect()}

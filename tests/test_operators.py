@@ -142,13 +142,16 @@ def test_multiprobe_flip_expressions_match_python_reference(spark):
 
     from ecommerce_data_engineering_spark.operators import similarity as S
 
+    vecs = {i: [float(i + j) for j in range(4)] for i in range(6)}
+    emb = spark.createDataFrame(list(vecs.items()),
+                                "vec_id int, embedding array<double>")
     for num_planes in (1, 2, 3, 6, 8):
-        emb = spark.createDataFrame(
-            [(i, [float(i + j) for j in range(4)]) for i in range(6)],
-            "vec_id int, embedding array<double>")
-        qb = S.hyperplane_sign_bits(S.with_norm(emb), "embedding",
-                                    num_planes, 4)
-        base = {r["vec_id"]: r["bucket"] for r in qb.collect()}
+        # each vector's bucket from a plain-Python sign-bit reference:
+        # integer vectors and ±1 weights make every dot product exact
+        planes = S.rademacher_weights(num_planes, 4)
+        base = {i: "".join("1" if sum(x * w for x, w in zip(v, p)) > 0
+                           else "0" for p in planes)
+                for i, v in vecs.items()}
         probed = S.lsh_cosine_topk(emb, emb, k=1, dim=4,
                                    num_planes=num_planes, probe_hamming=2)
         # reproduce the expected probe set in plain Python and assert

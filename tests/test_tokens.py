@@ -61,15 +61,16 @@ def test_spark_forms_equal_duckdb_twins(spark):
     # down); DuckDB's form yields [] below n
     spark_rows = _spark(spark, [
         T.words(text), F.expr(T.words_expr("text")), T.ws_words(text),
-        T.spaced_words(text), T.content_key(text),
+        T.spaced_words(text), T.content_text(text), T.content_key(text),
         T.bpe_token_count(text).cast("long"),
         F.expr(T.chunks_expr("w", CHUNK_WORDS)),
         *[F.expr(f"CASE WHEN size(w) >= {n} THEN {T.ngrams_expr('w', n)} END")
           for n in NGRAM_WIDTHS]])
     duck_rows = _duck([
         T.words_sql("text"), T.words_sql("text"), T.ws_words_sql("text"),
-        T.spaced_words_sql("text"), T.content_key_sql("text"),
-        T.bpe_token_count_sql("text"), T.chunks_sql("w", CHUNK_WORDS),
+        T.spaced_words_sql("text"), T.content_text_sql("text"),
+        T.content_key_sql("text"), T.bpe_token_count_sql("text"),
+        T.chunks_sql("w", CHUNK_WORDS),
         *[T.ngrams_sql("w", n) for n in NGRAM_WIDTHS]])
     k = len(NGRAM_WIDTHS)
     for text_, s, d in zip(TEXTS, spark_rows, duck_rows):
@@ -132,7 +133,11 @@ PACKAGE = pathlib.Path(__file__).resolve().parents[1] / \
     "ecommerce_data_engineering_spark"
 RESPELLINGS = {
     "word_tokenizer": re.escape("[^a-z0-9]+"),
-    "content_key": r"md5\((F\.)?lower\((F\.)?trim\(",
+    # md5(lower(trim(...))), or split over an alias: lower(trim(<the
+    # document text>)) AS t, then md5(t)
+    "content_key": r"md5\((F\.)?lower\((F\.)?trim\("
+                   r"|lower\((F\.)?trim\((F\.col\()?`?text(_col)?\b"
+                   r"|md5\((F\.col\()?[\"']?t[\"']?\)",
     "bpe_pattern": re.escape("[a-zA-Z]+|[0-9]"),
     "whitespace_class": r"\\s",
     "whitespace_split": r"string_split\(|regexp_split_to_array\("
