@@ -166,14 +166,28 @@ def lavg(col: Column, scale: int = 2) -> Column:
 _WIDE_SPLIT = 1_000_000
 
 
+def wide_split(term: Column) -> tuple[Column, Column]:
+    """The (hi, lo) BIGINT halves of a scaled-long term, to be summed
+    separately: term = hi·1e6 + lo."""
+    lo = term % F.lit(_WIDE_SPLIT)
+    hi = ((term - lo) / F.lit(_WIDE_SPLIT)).cast("long")
+    return hi, lo
+
+
+def wide_total(hi_sum: Column, lo_sum: Column, scale_total: int) -> Column:
+    """Recombine summed :func:`wide_split` halves in double, divided by
+    10^scale_total.  Sums of partial sums give the same bits: integer
+    addition is associative."""
+    return ((hi_sum.cast("double") * F.lit(float(_WIDE_SPLIT))
+             + lo_sum.cast("double"))
+            / F.lit(float(10 ** scale_total)))
+
+
 def lsum_wide(term: Column, scale_total: int) -> Column:
     """Exact sum of a scaled-long PRODUCT term via hi/lo split BIGINT
     sums, surfaced as double divided by 10^scale_total."""
-    lo = term % F.lit(_WIDE_SPLIT)
-    hi = ((term - lo) / F.lit(_WIDE_SPLIT)).cast("long")
-    return ((F.sum(hi).cast("double") * F.lit(float(_WIDE_SPLIT))
-             + F.sum(lo).cast("double"))
-            / F.lit(float(10 ** scale_total)))
+    hi, lo = wide_split(term)
+    return wide_total(F.sum(hi), F.sum(lo), scale_total)
 
 
 def lsum_wide_sql(term: str, scale_total: int) -> str:

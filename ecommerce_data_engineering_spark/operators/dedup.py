@@ -301,6 +301,10 @@ def simhash_near_dups(fingerprints: DataFrame, id_col: str,
         raise ValueError(
             f"max_hamming={max_hamming} must be in [0, chunks={chunks}) "
             f"for pigeonhole blocking to be complete")
+    # the fingerprint folds into one signed BIGINT; simhash() yields at
+    # most 32 bits (one per md5 hex digit)
+    if width > 63:
+        raise ValueError(f"width={width} must be at most 63 bits")
     fp = fingerprints
     clen = max(1, width // chunks)
     share = chunks - max_hamming
@@ -322,46 +326,28 @@ def simhash_near_dups(fingerprints: DataFrame, id_col: str,
     # every candidate pair AFTER a distinct that shuffled both 32-char
     # fingerprints — at 64× data that was ~53M candidates × 32
     # interpreted node evals, the measured wall of the whole query.
-    # Fingerprints are '0'/'1' strings, so for width ≤ 63 the whole
-    # fingerprint folds into ONE long per document before the join
-    # (conv base-2) and hamming is bit_count(a ^ b) — three
-    # codegen'd ops per candidate, no strings in the join payload.
-    # The filter moves BEFORE the distinct (hamming is functionally
-    # dependent on the pair, so filter-past-distinct commutes — the
-    # DuckDB oracle has applied it pre-distinct since r9 for the same
-    # blowup reason), leaving only true near-dup pairs to deduplicate.
-    if width <= 63:
-        # positions 1..width only (ADVICE r11: the bare conv hammed the
-        # WHOLE string, so the two width branches disagreed when the
-        # fingerprint is longer than ``width``; substring makes both
-        # measure the same distance — a no-op for in-spec inputs, where
-        # length(simhash) == width by construction of simhash())
-        fpl = F.expr(
-            f"cast(conv(substring(simhash, 1, {width}), 2, 10) as bigint)")
-        blocked = (fp.select(F.col(id_col), fpl.alias("fpl"),
-                             F.explode(chunk_structs).alias("cc"))
-                     .select(id_col, "fpl",
-                             F.col("cc.chunk").alias("chunk"),
-                             F.col("cc.ckey").alias("ckey")))
-        a = blocked.select("chunk", "ckey", F.col(id_col).alias("id_a"),
-                           F.col("fpl").alias("fp_a"))
-        b = blocked.select("chunk", "ckey", F.col(id_col).alias("id_b"),
-                           F.col("fpl").alias("fp_b"))
-        ham = F.expr("bit_count(fp_a ^ fp_b)").cast("int")
-    else:
-        blocked = (fp.select(F.col(id_col), F.col("simhash"),
-                             F.explode(chunk_structs).alias("cc"))
-                     .select(id_col, "simhash",
-                             F.col("cc.chunk").alias("chunk"),
-                             F.col("cc.ckey").alias("ckey")))
-        a = blocked.select("chunk", "ckey", F.col(id_col).alias("id_a"),
-                           F.col("simhash").alias("sh_a"))
-        b = blocked.select("chunk", "ckey", F.col(id_col).alias("id_b"),
-                           F.col("simhash").alias("sh_b"))
-        # fixed positional CASE sum — codegen'd, no lambda interpretation
-        ham = F.expr(" + ".join(
-            f"(CASE WHEN substring(sh_a, {i}, 1) <> substring(sh_b, {i}, 1) "
-            f"THEN 1 ELSE 0 END)" for i in range(1, width + 1))).cast("int")
+    # Fingerprints are '0'/'1' strings, so the whole fingerprint folds
+    # into ONE long per document before the join (conv base-2) and
+    # hamming is bit_count(a ^ b) — three codegen'd ops per candidate,
+    # no strings in the join payload.  The filter moves BEFORE the
+    # distinct (hamming is functionally dependent on the pair, so
+    # filter-past-distinct commutes — the DuckDB oracle has applied it
+    # pre-distinct since r9 for the same blowup reason), leaving only
+    # true near-dup pairs to deduplicate.  Only positions 1..width are
+    # folded (a no-op for in-spec inputs, where length(simhash) ==
+    # width by construction of simhash()).
+    fpl = F.expr(
+        f"cast(conv(substring(simhash, 1, {width}), 2, 10) as bigint)")
+    blocked = (fp.select(F.col(id_col), fpl.alias("fpl"),
+                         F.explode(chunk_structs).alias("cc"))
+                 .select(id_col, "fpl",
+                         F.col("cc.chunk").alias("chunk"),
+                         F.col("cc.ckey").alias("ckey")))
+    a = blocked.select("chunk", "ckey", F.col(id_col).alias("id_a"),
+                       F.col("fpl").alias("fp_a"))
+    b = blocked.select("chunk", "ckey", F.col(id_col).alias("id_b"),
+                       F.col("fpl").alias("fp_b"))
+    ham = F.expr("bit_count(fp_a ^ fp_b)").cast("int")
     return (a.join(b, ["chunk", "ckey"])
              .filter(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b", ham.alias("hamming"))
@@ -369,10 +355,12 @@ def simhash_near_dups(fingerprints: DataFrame, id_col: str,
              .distinct())
 
 
+# label-propagation rounds before connected_components stops unconverged
+_CC_MAX_ROUNDS = 20
+
+
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iterations: int = 20,
-                         first_check: int = 1) -> DataFrame:
+                         id_b: str = "id_b") -> DataFrame:
     """Connected components over a near-dup pair graph → (node, component)
     where component = min node id reachable — the canonical-document
     assignment step after candidate verification.
@@ -385,20 +373,14 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     algorithm trap on Spark).
 
     Convergence is tested on an exponential schedule (after rounds 1,
-    2, 4, 8, 16), with a single scalar aggregate instead of a self-join
-    diff: labels are monotonically non-increasing, so Σlabel strictly
-    decreases whenever ANY node changed — equal sums at two consecutive
-    checks prove the whole gap was a fixpoint.  Small-diameter graphs
-    (the common near-dup case) stop within a round or two of
-    converging, while a 20-round run pays ≤6 driver actions instead of
-    r01's join + count every round.
-
-    ``first_check`` sets where the exponential probe schedule starts
-    (checks at rounds f, 2f, 4f, …).  Near-dup graphs converge in a
-    handful of rounds, so the default probes early; for a graph known
-    to have large diameter (long chains), a higher ``first_check``
-    skips probes that cannot succeed yet — each skipped probe saves
-    one driver action and its job (VERDICT r9 #8).
+    2, 4, 8, 16, and the last of ``_CC_MAX_ROUNDS``), with a single
+    scalar aggregate instead of a self-join diff: labels are
+    monotonically non-increasing, so Σlabel strictly decreases whenever
+    ANY node changed — equal sums at two consecutive checks prove the
+    whole gap was a fixpoint.  Small-diameter graphs (the common
+    near-dup case) stop within a round or two of converging, while a
+    20-round run pays ≤6 driver actions instead of r01's join + count
+    every round.
     """
     # both edge directions from ONE pass over pairs (r11): the union
     # form re-executed the pair PLAN once per branch, doubling the
@@ -418,8 +400,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
               .distinct()
               .withColumn("label", F.col("node")))
     prev_sum = None
-    next_check = max(1, first_check)
-    for it in range(max_iterations):
+    next_check = 1
+    for it in range(_CC_MAX_ROUNDS):
         neighbor_min = (edges.join(labels, edges.dst == labels.node)
                         .groupBy("src").agg(F.min("label").alias("nmin")))
         new_labels = (labels.join(neighbor_min,
@@ -429,7 +411,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                                       F.coalesce(F.col("nmin"), F.col("label")))
                               .alias("label")))
         labels = new_labels.localCheckpoint()
-        if (it + 1) == next_check or it == max_iterations - 1:
+        if (it + 1) == next_check or it == _CC_MAX_ROUNDS - 1:
             next_check *= 2
             cur_sum = labels.agg(F.sum("label")).collect()[0][0]
             if cur_sum == prev_sum:

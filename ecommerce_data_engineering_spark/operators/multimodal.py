@@ -9,9 +9,9 @@ The decode kernels are REAL for BMP images and PCM-16 WAV audio —
 zero-dependency ``struct``-level codecs (functions/codecs.py) parse
 actual media bytes, header fields and payload content alike, so the
 whole Arrow pipeline is exercised with genuine decoding.  Formats that
-need an external library (JPEG/FLAC/MP4…) raise ``NotImplementedError``
-with a clear message; swapping in PIL/soundfile/pyav replaces one
-kernel body, never the Spark plumbing.
+need an external library (JPEG/FLAC/MP4…) have no kernel here; swapping
+in PIL/soundfile/pyav replaces one kernel body, never the Spark
+plumbing.
 """
 
 from __future__ import annotations
@@ -67,41 +67,14 @@ def to_media_table(docs: DataFrame, text_col: str = "text",
     )
 
 
-def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
-    """Arrow-batched "decode": mapInPandas over the payload column.
-
-    ``real_decode=False`` computes deterministic pseudo-dimensions +
-    checksum from the bytes (the schema/batching smoke path).
-    ``real_decode=True`` parses the payload with a real codec:
-    ``image/bmp`` yields true width/height and the md5 of the DECODED
-    pixel bytes (functions/codecs.bmp_decode); formats needing an
-    external codec raise ``NotImplementedError`` naming the library.
-    """
+def decode_media(media: DataFrame) -> DataFrame:
+    """Arrow-batched "decode" smoke path: mapInPandas over the payload
+    column, computing deterministic pseudo-dimensions + checksum from
+    the bytes (the schema/batching check).  The real BMP decoder is
+    :func:`decode_image`."""
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_decode:
-                rows = {"n_bytes": [], "checksum": [], "width": [], "height": []}
-                for kind, payload in zip(pdf["media_kind"], pdf["payload"]):
-                    raw = bytes(payload or b"")
-                    if kind != "image/bmp":
-                        raise NotImplementedError(
-                            f"no pure-Python codec for media_kind={kind!r}; "
-                            "plug in PIL/soundfile/pyav here")
-                    w, h, pixels = codecs.bmp_decode(raw)
-                    rows["n_bytes"].append(len(raw))
-                    rows["checksum"].append(hashlib.md5(pixels).hexdigest())
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                yield pd.DataFrame({
-                    "doc_id": pdf["doc_id"],
-                    "media_kind": pdf["media_kind"],
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                    "checksum": rows["checksum"],
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                })
-                continue
             payloads = pdf["payload"]
             checksums = payloads.map(
                 lambda b: hashlib.md5(bytes(b or b"")).hexdigest()
@@ -294,23 +267,18 @@ def resize_media(media: DataFrame, max_bytes: int = 128) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, real_extract: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads via Arrow-batched
     mapInPandas — the embedding-model slot.  Stub: deterministic
     FEATURE_DIM-dim vector from md5 of the bytes (so downstream
     similarity plumbing is testable end-to-end without a model)."""
 
+    def vec(b):
+        h = hashlib.md5(bytes(b or b"")).digest()
+        return [h[i] / 255.0 for i in range(FEATURE_DIM)]
+
     def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_extract:
-                raise NotImplementedError(
-                    "real feature extraction needs a vision/audio model; "
-                    "the stub path exercises identical Spark plumbing")
-
-            def vec(b):
-                h = hashlib.md5(bytes(b or b"")).digest()
-                return [h[i] / 255.0 for i in range(FEATURE_DIM)]
-
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"],
                 "media_kind": pdf["media_kind"],

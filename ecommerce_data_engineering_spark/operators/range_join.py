@@ -24,10 +24,10 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def range_join(left: DataFrame, right: DataFrame, point_col: str,
-               start_col: str, end_col: str, how: str = "inner",
-               broadcast_right: bool = True) -> DataFrame:
-    """``left`` rows whose ``point_col`` falls in ``right``'s interval."""
-    r = F.broadcast(right) if broadcast_right else right
+               start_col: str, end_col: str, how: str = "inner") -> DataFrame:
+    """``left`` rows whose ``point_col`` falls in ``right``'s
+    (broadcast) interval."""
+    r = F.broadcast(right)
     cond = (left[point_col] >= r[start_col]) & (left[point_col] <= r[end_col])
     return left.join(r, cond, how)
 

@@ -14,8 +14,7 @@ Spark storage is immutable, so the merge is a four-way union rewrite:
 
 Fidelity trap replicated on purpose (SURVEY.md §7.4.3): change
 detection uses null-unsafe ``!=`` exactly like the reference's SQL —
-a staged NULL never registers as a change.  Pass
-``null_safe=True`` for ``IS DISTINCT FROM`` semantics instead.
+a staged NULL never registers as a change.
 
 Scale: one shuffle on the natural key (the staging↔dim join); dims are
 usually broadcastable, and the union adds no extra shuffle.  With a
@@ -29,14 +28,15 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+# expiry_date of a current (open) version, as in the reference
+OPEN_EXPIRY = "9999-12-31"
+
 
 def scd2_merge(dim: DataFrame, staging: DataFrame, natural_key: str,
                tracked: list[str], as_of_date: str,
                effective_col: str = "effective_date",
                expiry_col: str = "expiry_date",
-               current_col: str = "is_current",
-               null_safe: bool = False,
-               sentinel_expiry: str = "9999-12-31") -> DataFrame:
+               current_col: str = "is_current") -> DataFrame:
     """Return the post-merge dimension (same schema as ``dim``).
 
     ``staging`` must carry ``natural_key`` plus EVERY dim attribute
@@ -75,18 +75,12 @@ def scd2_merge(dim: DataFrame, staging: DataFrame, natural_key: str,
     joined = cur.join(stg, on=F.col(f"c.{natural_key}") == F.col(f"s.{natural_key}"),
                       how="inner")
 
-    if null_safe:
-        changed_pred = reduce(
-            lambda a, b: a | b,
-            [~F.col(f"c.{t}").eqNullSafe(F.col(f"s.{t}")) for t in tracked],
-        )
-    else:
-        # warehouse_dag.py:47-49 — plain `!=`; NULLs propagate and the
-        # row silently counts as unchanged (3-valued logic).
-        changed_pred = reduce(
-            lambda a, b: a | b,
-            [F.col(f"c.{t}") != F.col(f"s.{t}") for t in tracked],
-        )
+    # warehouse_dag.py:47-49 — plain `!=`; NULLs propagate and the
+    # row silently counts as unchanged (3-valued logic).
+    changed_pred = reduce(
+        lambda a, b: a | b,
+        [F.col(f"c.{t}") != F.col(f"s.{t}") for t in tracked],
+    )
 
     changed_keys = (joined.filter(changed_pred)
                     .select(F.col(f"c.{natural_key}").alias(natural_key))
@@ -105,7 +99,7 @@ def scd2_merge(dim: DataFrame, staging: DataFrame, natural_key: str,
         staging.select(natural_key, *[c for c in attr_cols if c != natural_key])
         .join(unchanged.select(natural_key), natural_key, "left_anti")
         .withColumn(effective_col, as_of)
-        .withColumn(expiry_col, F.lit(sentinel_expiry).cast("date"))
+        .withColumn(expiry_col, F.lit(OPEN_EXPIRY).cast("date"))
         .withColumn(current_col, F.lit(True))
     )
 

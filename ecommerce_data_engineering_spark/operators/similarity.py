@@ -47,6 +47,16 @@ def _cosine_sql(a: str, b: str, na: str, nb: str) -> str:
     return pround_expr(f"({_dot_sql(a, b)}) / (`{na}` * `{nb}`)", 6)
 
 
+def _d2_sql(a: str, b: str) -> str:
+    """Squared Euclidean distance of the ARRAY<DOUBLE> SQL expressions
+    ``a`` and ``b`` as SQL text: zip_with computes the diffs, aggregate
+    squares and sums them left to right — one interpreted pass each
+    (a ``(x-y)*(x-y)`` lambda re-evaluates the subtraction, because
+    interpreted HOF evaluation does no CSE)."""
+    return (f"aggregate(zip_with({a}, {b}, (a, b) -> a - b), "
+            f"0.0D, (acc, d) -> acc + d * d)")
+
+
 def _dot(a: str, b: str):
     # Cast each ARRAY to double once per row (a codegen'd Cast, exact
     # for float32 inputs) instead of casting inside the lambda: HOF
@@ -317,11 +327,6 @@ def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
             "ivf_assign: pass exactly one of centroids and prefolded")
     c_arr = (prefolded if prefolded is not None
              else fold_centroids(centroids, vec_col))
-    # d2 in two cheap interpreted passes: zip_with computes the diffs,
-    # aggregate squares-and-sums them.  Same left-to-right summation,
-    # same element values as the old ((x-y)*(x-y)) lambda — which
-    # re-evaluated the subtraction AND two casts per element because
-    # interpreted HOF eval does no CSE (~8 node evals/element -> 3).
     # The whole ranked expression is ONE F.expr parse: the Column-API
     # form (nested transform/zip_with/aggregate Python lambdas) cost
     # ~200 py4j round-trips per ivf_assign — ×4 per ANN plan (corpus,
@@ -329,8 +334,7 @@ def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
     # sf0.1 wall.  The parsed tree is canonically identical
     # (sameSemantics-pinned in tests); the d struct field is
     # pround_expr(d2, 9).
-    d2 = (f"aggregate(zip_with(CAST(`{vec_col}` AS ARRAY<DOUBLE>), "
-          f"cell.c_vec, (a, b) -> a - b), 0.0D, (acc, d) -> acc + d * d)")
+    d2 = _d2_sql(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)", "cell.c_vec")
     ranked = F.expr(
         f"array_sort(transform(__cents, cell -> "
         f"struct({pround_expr(d2, 9)} AS d, "
@@ -347,8 +351,8 @@ def ivf_assign(df: DataFrame, centroids: DataFrame | None = None,
 
 
 def _lloyd_step(df: DataFrame, centroids: DataFrame, id_col: str,
-                vec_col: str, quantize: int | None = None,
-                dim: int | None = None) -> DataFrame:
+                vec_col: str, dim: int,
+                quantize: int | None = None) -> DataFrame:
     """ONE Lloyd's iteration as a pure (lazy) DataFrame transform:
     assign every vector to its nearest centroid (broadcast cross, the
     :func:`ivf_assign` kernel), recompute each cell's element-wise
@@ -364,38 +368,24 @@ def _lloyd_step(df: DataFrame, centroids: DataFrame, id_col: str,
     oracle replay the trained quantizer exactly
     (embedding_ann_production since r9).
 
-    ``dim``: when the vector width is KNOWN (and every row is exactly
-    that wide — the embeddings fixture contract), the per-cell mean is
-    computed as ``dim`` per-position ``avg(vec[i])`` columns in ONE
-    groupBy(cluster_id) instead of posexplode → groupBy(cluster_id,
-    pos) → groupBy(cluster_id) (r12, guide §2.3/§2.4): no ×dim row
-    multiplication, one Exchange per iteration instead of two, and no
-    collect_list/array_sort reconstruction.  Per-position averages are
-    over the identical value sets (an array element is NULL-skipped
-    exactly like a missing posexplode row), and each mean is quantized
-    with the same floor-form, so the trained centroids match the
-    generic path on every fixture (row-equality pinned in
-    tests/test_expr_parity.py; all oracle sweeps re-run green)."""
+    ``dim`` is the vector width (every row is exactly that wide — the
+    embeddings fixture contract): the per-cell mean is ``dim``
+    per-position ``avg(vec[i])`` columns in ONE groupBy(cluster_id),
+    one Exchange per iteration with no ×dim row multiplication (r12,
+    guide §2.3/§2.4).  The per-position averages run over the same
+    value sets as a posexplode → groupBy(cluster_id, pos) mean, so the
+    centroids equal that form's row for row (pinned in
+    tests/test_expr_parity.py)."""
     assigned = ivf_assign(df.select(id_col, vec_col), centroids,
                           id_col=id_col, vec_col=vec_col, nprobe=1)
     # the (quantized) mean is ONE F.expr parse (construction cost, r11;
     # sameSemantics-pinned in tests/test_expr_parity.py)
     def _q(sql: str) -> str:
         return sql if quantize is None else pround_expr(sql, quantize)
-    if dim is not None:
-        mean_arr = ", ".join(
-            _q(f"avg(CAST(`{vec_col}`[{i}] AS DOUBLE))")
-            for i in range(dim))
-        means = (assigned.groupBy("cluster_id")
-                 .agg(F.expr(f"array({mean_arr})").alias("__new")))
-    else:
-        means = (assigned
-                 .select("cluster_id", F.posexplode(vec_col))
-                 .groupBy("cluster_id", "pos")
-                 .agg(F.expr(_q("avg(CAST(col AS DOUBLE))")).alias("v"))
-                 .groupBy("cluster_id")
-                 .agg(F.expr("transform(array_sort(collect_list("
-                             "struct(pos, v))), s -> s.v)").alias("__new")))
+    mean_arr = ", ".join(
+        _q(f"avg(CAST(`{vec_col}`[{i}] AS DOUBLE))") for i in range(dim))
+    means = (assigned.groupBy("cluster_id")
+             .agg(F.expr(f"array({mean_arr})").alias("__new")))
     return (centroids.select("cluster_id", F.col(vec_col))
             .join(means, "cluster_id", "left")
             .select("cluster_id",
@@ -403,13 +393,11 @@ def _lloyd_step(df: DataFrame, centroids: DataFrame, id_col: str,
                     .alias(vec_col)))
 
 
-def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
+def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame, dim: int,
                        n_iter: int = 3, id_col: str = "vec_id",
                        vec_col: str = "embedding",
                        quantize: int | None = None,
-                       persist_steps: bool = False,
-                       step_cache: list[DataFrame] | None = None,
-                       dim: int | None = None) -> DataFrame:
+                       persist_steps: bool = False) -> DataFrame:
     """Lloyd's-iteration refinement with NO driver hops: the centroid
     table stays a lazy DataFrame through every iteration, so building
     the plan launches zero Spark jobs (VERDICT r7 #3 — registered
@@ -425,7 +413,8 @@ def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
     cluster_id, so two runs produce identical centroids, and an empty
     cell keeps its previous centroid (pinned in tests).
 
-    ``quantize`` (forwarded to :func:`_lloyd_step`): pround each mean
+    ``dim`` (the vector width) and ``quantize`` (both forwarded to
+    :func:`_lloyd_step`): one Exchange per iteration; pround each mean
     at 10^-quantize so the trained centroids are bit-identical across
     engines and partitionings — required when an SQL oracle replays
     the training.
@@ -451,31 +440,13 @@ def kmeans_refine_lazy(df: DataFrame, centroids: DataFrame,
     per-query loop) bound the accumulation with
     ``spark.catalog.clearCache()`` between plans (a plan over these
     persisted steps is never kept in the registry's query memo, so
-    ``clearCache`` frees them for good).  A LONG-LIVED
-    service that builds many trained quantizers should instead pass
-    ``step_cache`` (any list): every persisted step DataFrame is
-    appended to it, and :func:`release_kmeans_steps` unpersists them
-    once the trained table has been materialized — targeted release,
-    no collateral cache eviction."""
+    ``clearCache`` frees them for good)."""
     cur = centroids.select("cluster_id", F.col(vec_col))
     for _ in range(n_iter):
-        cur = _lloyd_step(df, cur, id_col, vec_col, quantize=quantize,
-                          dim=dim)
+        cur = _lloyd_step(df, cur, id_col, vec_col, dim, quantize=quantize)
         if persist_steps:
             cur = cur.persist()
-            if step_cache is not None:
-                step_cache.append(cur)
     return cur
-
-
-def release_kmeans_steps(step_cache: list[DataFrame]) -> None:
-    """Unpersist every step table collected via ``step_cache`` and
-    empty the list.  Call AFTER the trained centroid table (or any
-    plan built on it) has been materialized — releasing earlier turns
-    later references back into full lineage re-derivations."""
-    for step in step_cache:
-        step.unpersist()
-    step_cache.clear()
 
 
 def kmeans_wcss_df(df: DataFrame, centroids: DataFrame,
@@ -489,13 +460,8 @@ def kmeans_wcss_df(df: DataFrame, centroids: DataFrame,
     monotonicity comparisons well-typed (ADVICE r5)."""
     assigned = ivf_assign(df.select(id_col, vec_col), centroids,
                           id_col=id_col, vec_col=vec_col, nprobe=1)
-    # same fast d2 form as ivf_assign (r11): row-level double casts,
-    # diff pass + square-sum pass — bit-identical, fewer node evals
-    d2 = F.aggregate(
-        F.zip_with(F.col(vec_col).cast("array<double>"),
-                   F.col("c_vec_kept").cast("array<double>"),
-                   lambda x, y: x - y),
-        F.lit(0.0), lambda acc, d: acc + d * d)
+    d2 = F.expr(_d2_sql(f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)",
+                        "CAST(c_vec_kept AS ARRAY<DOUBLE>)"))
     cent = centroids.select(F.col("cluster_id"),
                             F.col(vec_col).alias("c_vec_kept"))
     return (assigned.join(cent, "cluster_id")

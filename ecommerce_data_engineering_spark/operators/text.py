@@ -13,7 +13,7 @@ and the DuckDB oracle can reproduce it exactly.
   blended into a [0,1] score, the standard pre-training heuristics.
 - token counting: whitespace tokens + a BPE-ish regex segmentation
   (letters runs | single digits | punctuation marks).
-- fingerprinting: content md5 + min-hash-of-character-8-grams (a
+- fingerprinting: content md5 + min-hash of character n-grams (a
   winnowing-style rolling-window fingerprint).
 """
 
@@ -105,19 +105,23 @@ def token_counts(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str, id_col: str,
-                 gram: int = 8) -> DataFrame:
-    """Content md5 + winnowing-style min-hash over char 8-grams.
+# character n-gram width of the winnowing fingerprint
+FINGERPRINT_GRAM = 8
+
+
+def fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Content md5 + winnowing-style min-hash over char
+    ``FINGERPRINT_GRAM``-grams.
 
     The min over a rolling window of hashed character n-grams is the
     core of winnowing fingerprints; taking the global min (window =
     whole doc) gives a compact single-value fingerprint that is stable
     under small edits elsewhere in the doc.
     """
-    text = F.col(text_col)
+    text, g = F.col(text_col), FINGERPRINT_GRAM
     grams = F.expr(
-        f"transform(sequence(1, greatest(length(t) - {gram - 1}, 1)), "
-        f"i -> md5(substring(t, i, {gram})))"
+        f"transform(sequence(1, greatest(length(t) - {g - 1}, 1)), "
+        f"i -> md5(substring(t, i, {g})))"
     )
     return (df.select(F.col(id_col), content_key(text).alias("content_md5"),
                       content_text(text).alias("t"))
@@ -125,11 +129,44 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str,
                       F.array_min(grams).alias("winnow_fp")))
 
 
-def gopher_quality(df: DataFrame, text_col: str, id_col: str,
-                   min_words: int = 50, max_words: int = 100_000,
-                   min_mean_word_len: float = 3.0,
-                   max_mean_word_len: float = 10.0,
-                   max_dup_trigram_frac: float = 0.30) -> DataFrame:
+# Gopher rule thresholds (published pretraining filters)
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_DUP_TRIGRAM_FRAC = 0.30
+
+
+def _mean_word_len_expr(w: str) -> str:
+    """Spark SQL text: mean word length of the words array ``w``,
+    pround to 4 digits; NULL when ``w`` is empty."""
+    return pround_expr(f"CAST(aggregate({w}, CAST(0 AS BIGINT),"
+                       f" (a, x) -> a + length(x)) AS DOUBLE)"
+                       f" / nullif(size({w}), 0)", 4)
+
+
+def _dup_trigram_frac_expr(w: str) -> str:
+    """Spark SQL text: 1 − |distinct trigrams|/|trigrams| of the words
+    array ``w``, pround to 4 digits; 0.0 under three words.  size(tg)
+    == size(w)-2 for size(w)>=3, so the trigram array is materialized
+    once (inside array_distinct) per row."""
+    return (f"CASE WHEN size({w}) >= 3 THEN " + pround_expr(
+        f"1.0 - CAST(size(array_distinct({ngrams_expr(w, 3)}))"
+        f" AS DOUBLE) / (size({w}) - 2)", 4) + " ELSE 0.0 END")
+
+
+def _verdict_expr(n: str, mwl: str, dup: str) -> str:
+    """Spark SQL text: the Gopher ``passes`` verdict over the SQL
+    expressions for word count, mean word length and repeated-trigram
+    fraction, NULL → false."""
+    return (f"coalesce({n} >= {GOPHER_MIN_WORDS}"
+            f" AND {n} <= {GOPHER_MAX_WORDS}"
+            f" AND {mwl} >= {GOPHER_MIN_MEAN_WORD_LEN}"
+            f" AND {mwl} <= {GOPHER_MAX_MEAN_WORD_LEN}"
+            f" AND {dup} <= {GOPHER_MAX_DUP_TRIGRAM_FRAC}, false)")
+
+
+def gopher_quality(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Gopher-style document quality rules (published pretraining
     filters: word-count bounds, mean word length band, repeated-trigram
     fraction) as one stateless Catalyst projection — per doc the rule
@@ -152,41 +189,21 @@ def gopher_quality(df: DataFrame, text_col: str, id_col: str,
     (and beneficial) to push all the way into the scan.  This frame is
     for when the per-rule diagnostics themselves are the output.
     """
-
     base = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
-    n_words = F.size(F.col("_w"))
-    mean_wl = (F.aggregate("_w", F.lit(0).cast("long"),
-                           lambda acc, x: acc + F.length(x)).cast("double")
-               / F.when(n_words > 0, n_words))
-    tg = F.when(n_words >= 3, F.expr(ngrams_expr("_w", 3))
-                ).otherwise(F.expr("CAST(array() AS array<string>)"))
-    staged = base.select(F.col(id_col), n_words.alias("_n"),
-                         mean_wl.alias("_mwl"), tg.alias("_tg"))
-    n_tg = F.size("_tg")
-    dup_frac = F.when(
-        n_tg > 0,
-        F.lit(1.0) - F.size(F.array_distinct("_tg")).cast("double") / n_tg
-    ).otherwise(F.lit(0.0))
-    mean_r = pround(F.col("_mwl"), 4)
-    dup_r = pround(dup_frac, 4)
-    passes = ((F.col("_n") >= min_words) & (F.col("_n") <= max_words)
-              & (mean_r >= min_mean_word_len) & (mean_r <= max_mean_word_len)
-              & (dup_r <= max_dup_trigram_frac))
-    return staged.select(
-        F.col(id_col),
-        F.col("_n").cast("long").alias("n_words"),
-        mean_r.alias("mean_word_len"),
-        dup_r.alias("dup_trigram_frac"),
-        F.coalesce(passes, F.lit(False)).alias("passes"),
-    )
+    staged = base.select(F.col(id_col),
+                         F.size("_w").cast("long").alias("n_words"),
+                         F.expr(_mean_word_len_expr("_w"))
+                         .alias("mean_word_len"),
+                         F.expr(_dup_trigram_frac_expr("_w"))
+                         .alias("dup_trigram_frac"))
+    passes = _verdict_expr("n_words", "mean_word_len", "dup_trigram_frac")
+    return staged.select("*", F.expr(passes).alias("passes"))
 
 
-def gopher_gate(text_col: str, min_words: int = 50, max_words: int = 100_000,
-                min_mean_word_len: float = 3.0,
-                max_mean_word_len: float = 10.0,
-                max_dup_trigram_frac: float = 0.30) -> Column:
+def gopher_gate(text_col: str) -> Column:
     """The :func:`gopher_quality` ``passes`` verdict as ONE boolean
-    expression, built for use directly in ``df.filter(...)``.
+    expression, built for use directly in ``df.filter(...)``, from the
+    same rule texts.
 
     The trick: ``exists(array(<words>), w -> <rules>)`` binds the
     tokenized words array to the lambda variable ``w`` exactly once,
@@ -197,29 +214,11 @@ def gopher_gate(text_col: str, min_words: int = 50, max_words: int = 100_000,
     none).  Deterministic, so it pushes through joins down to the
     scan — at 100 TB the gate runs inside the file scan with no extra
     join, shuffle, or pinned cache.
-
-    Exactly replicates gopher_quality's semantics, including the
-    4-digit deterministic rounding of the mean-word-length and
-    dup-trigram fractions and NULL→False coalescing.
     """
-    c = f"`{text_col}`"
-    mean_r = pround_expr("CAST(aggregate(w, CAST(0 AS BIGINT),"
-                         " (a, x) -> a + length(x)) AS DOUBLE)"
-                         " / nullif(size(w), 0)", 4)
-    # size(tg) == size(w)-2 for size(w)>=3, so the trigram array is
-    # materialized once (inside array_distinct) per row
-    dup_r = ("CASE WHEN size(w) >= 3 THEN " + pround_expr(
-        f"1.0 - CAST(size(array_distinct({ngrams_expr('w', 3)}))"
-        " AS DOUBLE) / (size(w) - 2)", 4) + " ELSE 0.0 END")
-    return F.expr(f"""
-      exists(
-        array({words_expr(c)}),
-        w -> coalesce(
-               size(w) >= {min_words} AND size(w) <= {max_words}
-               AND {mean_r} >= {min_mean_word_len}
-               AND {mean_r} <= {max_mean_word_len}
-               AND {dup_r} <= {max_dup_trigram_frac}, false)
-      )""")
+    verdict = _verdict_expr("size(w)", _mean_word_len_expr("w"),
+                                 _dup_trigram_frac_expr("w"))
+    return F.expr(f"exists(array({words_expr(f'`{text_col}`')}),"
+                  f" w -> {verdict})")
 
 
 # ------------------------------------------------------------------ PII

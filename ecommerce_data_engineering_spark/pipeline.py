@@ -22,7 +22,7 @@ from . import AS_OF_DATE
 from .functions.cleaning import clean_string, coerce_numeric, fill_unknown
 from .functions.dates import date_key, day_name, is_weekend, month_name, pg_dow
 from .operators.range_join import range_join
-from .operators.scd2 import scd2_merge
+from .operators.scd2 import OPEN_EXPIRY, scd2_merge
 from .operators.upsert import keyed_upsert
 from . import quality as Q
 from .orchestration import State, pipeline_dag, pipeline_tables
@@ -104,7 +104,7 @@ def _scd2_dim(snapshot: DataFrame, prior: DataFrame | None, key: str,
     if prior is None:
         dim = (snapshot
                .withColumn("effective_date", F.lit(as_of).cast("date"))
-               .withColumn("expiry_date", F.lit("9999-12-31").cast("date"))
+               .withColumn("expiry_date", F.lit(OPEN_EXPIRY).cast("date"))
                .withColumn("is_current", F.lit(True)))
     else:
         dim = scd2_merge(prior.drop(surrogate), snapshot, key,

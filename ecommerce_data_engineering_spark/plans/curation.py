@@ -354,18 +354,22 @@ def corpus_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gopher_sql(docs: str) -> str:
-    """DuckDB twin of operators/text.gopher_quality at its default
-    thresholds, over the rows of ``docs`` (a relation with a ``text``
-    column): every column of ``docs`` plus the words array ``w``, the
-    rule inputs ``n``, ``mwl`` (mean word length) and ``dup``
-    (repeated-trigram fraction), and the ``passes`` verdict."""
+    """DuckDB twin of operators/text.gopher_quality, over the rows of
+    ``docs`` (a relation with a ``text`` column): every column of
+    ``docs`` plus the words array ``w``, the rule inputs ``n``, ``mwl``
+    (mean word length) and ``dup`` (repeated-trigram fraction), and the
+    ``passes`` verdict."""
     mwl = pround_sql("CAST(list_aggregate(list_transform(w, x -> length(x)),"
                      " 'sum') AS DOUBLE) / len(w)", 4)
     dup = pround_sql(f"1.0 - CAST(len(list_distinct({ngrams_sql('w', 3)}))"
                      " AS DOUBLE) / (len(w) - 2)", 4)
     return f"""
-      SELECT *, COALESCE(n >= 50 AND n <= 100000 AND mwl >= 3.0
-                         AND mwl <= 10.0 AND dup <= 0.30, FALSE) AS passes
+      SELECT *, COALESCE(n >= {X.GOPHER_MIN_WORDS}
+                         AND n <= {X.GOPHER_MAX_WORDS}
+                         AND mwl >= {X.GOPHER_MIN_MEAN_WORD_LEN}
+                         AND mwl <= {X.GOPHER_MAX_MEAN_WORD_LEN}
+                         AND dup <= {X.GOPHER_MAX_DUP_TRIGRAM_FRAC},
+                         FALSE) AS passes
       FROM (
         SELECT *, len(w) AS n,
                CASE WHEN len(w) > 0 THEN {mwl} END AS mwl,

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import AS_OF_DATE
 from ..functions.dates import date_key, day_name, is_weekend, month_name, pg_dow
-from ..operators.scd2 import scd2_merge
+from ..operators.scd2 import OPEN_EXPIRY, scd2_merge
 from ..operators.upsert import insert_if_absent
 from ..sources import load
 from .registry import query
@@ -120,7 +120,7 @@ def _scd2_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
             F.col("c_mktsegment").alias("customer_segment"),
             F.col("c_nationkey").alias("nation_key"),
             F.lit("1995-01-01").cast("date").alias("effective_date"),
-            F.lit("9999-12-31").cast("date").alias("expiry_date"),
+            F.lit(OPEN_EXPIRY).cast("date").alias("expiry_date"),
             F.lit(True).alias("is_current"),
         )
     )

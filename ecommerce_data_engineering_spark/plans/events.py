@@ -39,8 +39,8 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                   "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            pround(dsum(F.col("value")), 2).alias("total_value"),
-            pround(davg(F.col("value")), 2).alias("avg_value"),
+            pround(dsum(F.col("value"), 4), 2).alias("total_value"),
+            pround(davg(F.col("value"), 4), 2).alias("avg_value"),
             F.countDistinct("user_id").alias("unique_users"),
         )
     )
@@ -101,7 +101,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
-            pround(dsum(F.col("value")), 2).alias("session_value"),
+            pround(dsum(F.col("value"), 4), 2).alias("session_value"),
         )
     )
 
@@ -268,7 +268,7 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.min("ts").alias("session_start"),
             F.count(F.lit(1)).alias("n_events"),
-            pround(dsum(F.col("value")), 2).alias("session_value"),
+            pround(dsum(F.col("value"), 4), 2).alias("session_value"),
         )
         .select("user_id", "session_start", "n_events", "session_value")
     )

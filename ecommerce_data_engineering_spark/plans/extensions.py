@@ -583,14 +583,16 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            content_md5,
            list_aggregate(
-             list_transform(generate_series(1, greatest(length(t) - 7, 1)),
-                            i -> md5(substr(t, i, 8))), 'min') AS winnow_fp
+             list_transform(generate_series(1, greatest(
+                              length(t) - {X.FINGERPRINT_GRAM - 1}, 1)),
+                            i -> md5(substr(t, i, {X.FINGERPRINT_GRAM}))),
+             'min') AS winnow_fp
     FROM base
     """,
     covers=("EXT-text",),
 )
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content md5 + winnowing-style min-hash over rolling char 8-grams
+    """Content md5 + winnowing-style min-hash over rolling char n-grams
     (operators/text.fingerprints)."""
     docs = load(spark, sf_dir, "documents")
     return X.fingerprints(docs, "text", "doc_id")
@@ -957,16 +959,15 @@ def _train_centroids(emb: DataFrame, seeds: DataFrame, n_iter: int,
     Quantizing each mean at 1e-9 keeps the trained centroids
     bit-identical across engines and partitionings; ``persist_steps``
     keeps a table consumed more than once (corpus and query
-    assignment) from re-expanding the nested training lineage; and
-    ``dim=EMB_DIM`` computes each mean in one Exchange per iteration —
-    every embeddings fixture is exactly EMB_DIM wide, which the
-    oracle's ``_VEC_CTE`` already assumes."""
+    assignment) from re-expanding the nested training lineage; every
+    embeddings fixture is exactly EMB_DIM wide, which the oracle's
+    ``_VEC_CTE`` already assumes."""
     from ..operators.sampling import sample_predicate
 
     train_df = emb if sample_frac >= 1.0 else emb.filter(
         sample_predicate(F.col("vec_id"), sample_frac, seed=sample_seed))
-    return S.kmeans_refine_lazy(train_df, seeds, n_iter=n_iter, quantize=9,
-                                persist_steps=True, dim=EMB_DIM)
+    return S.kmeans_refine_lazy(train_df, seeds, EMB_DIM, n_iter=n_iter,
+                                quantize=9, persist_steps=True)
 
 
 def _prod_centroids(emb: DataFrame) -> DataFrame:
@@ -1366,7 +1367,7 @@ def embedding_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     cents = [_seed_centroids(emb, IVF_K, IVF_SEED_STEP)]
     for _ in range(3):
-        cents.append(S.kmeans_refine_lazy(emb, cents[-1], n_iter=1))
+        cents.append(S.kmeans_refine_lazy(emb, cents[-1], EMB_DIM, n_iter=1))
     wcss_rows = [
         S.kmeans_wcss_df(emb, c).select(F.lit(i).alias("iteration"), "wcss")
         for i, c in enumerate(cents)]

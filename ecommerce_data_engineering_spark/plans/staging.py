@@ -108,7 +108,7 @@ def dq_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     orphan_l = (lineitem.join(orders.select("o_orderkey"),
                               lineitem.l_orderkey == F.col("o_orderkey"), "left_anti")
                 .agg(F.count(F.lit(1)).alias("orphan_lineitems")))
-    revenue = orders.agg(pround(dsum(F.col("o_totalprice")), 2).alias("total_revenue"))
+    revenue = orders.agg(pround(dsum(F.col("o_totalprice"), 4), 2).alias("total_revenue"))
 
     return (orders_rows.crossJoin(null_names).crossJoin(nonpos)
             .crossJoin(orphan_o).crossJoin(orphan_l).crossJoin(revenue))

@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.rounding import (dsum, dsum_sql, lsum_sql, lsum_wide,
                                   lsum_wide_sql, pround, pround_expr,
                                   pround_sql, to_scaled_long,
-                                  to_scaled_long_sql)
+                                  to_scaled_long_sql, wide_split,
+                                  wide_total)
 from ..sources import load
 from .registry import query
 
@@ -158,19 +159,14 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi/lo BIGINT totals in the same order of operations as the direct
     lsum_wide — integer addition is associative, so the final double
     is bit-identical (rows MATCH pinned at sf0.01/sf0.1)."""
-    from ..functions.rounding import _WIDE_SPLIT
-
     li, orders, customer, nation, region = (
         load(spark, sf_dir, t) for t in
         ("lineitem", "orders", "customer", "nation", "region"))
     asia = region.filter(F.col("r_name") == "ASIA")
-    term = _ep_c() * (F.lit(100) - _disc_p())
-    lo = term % F.lit(_WIDE_SPLIT)
-    hi = ((term - lo) / F.lit(_WIDE_SPLIT)).cast("long")
+    hi, lo = wide_split(_ep_c() * (F.lit(100) - _disc_p()))
     li_agg = li.groupBy("l_orderkey").agg(F.sum(hi).alias("_hi"),
                                           F.sum(lo).alias("_lo"))
-    rev = ((F.sum("_hi").cast("double") * F.lit(float(_WIDE_SPLIT))
-            + F.sum("_lo").cast("double")) / F.lit(float(10 ** 4)))
+    rev = wide_total(F.sum("_hi"), F.sum("_lo"), 4)
     return (
         li_agg.join(orders, li_agg.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)

@@ -71,7 +71,6 @@ def shj_threshold(heap: str, cores: int) -> str:
 
 def get_spark(app_name: str = "ecommerce_data_engineering_spark",
               cpus: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -80,7 +79,8 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
 
     - AQE + coalesce + skewJoin: runtime re-planning replaces hand-tuned
       shuffle partition counts and manual skew salting for most plans.
-    - ``shuffle.partitions`` is only the *initial* number; AQE coalesces.
+    - ``shuffle.partitions`` (the core count) is only the *initial*
+      number; AQE coalesces.
     - UTC session timezone: deterministic date extraction regardless of
       host timezone (and matches the DuckDB oracle, which is UTC-naive).
     - ANSI mode stays at the Spark 4 default (on); coercion semantics
@@ -88,14 +88,12 @@ def get_spark(app_name: str = "ecommerce_data_engineering_spark",
     """
     if cpus is None:
         cpus = local_cores()
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     heap = driver_memory()
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -23,7 +23,7 @@ def pytest_configure(config):
 @pytest.fixture(scope="session")
 def spark():
     from ecommerce_data_engineering_spark.session import get_spark
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("tests", cpus=8)
     yield s
     s.stop()
 

@@ -154,13 +154,6 @@ def test_extract_features_deterministic(media):
     assert len(a[1]) == 16 and all(0 <= x <= 1 for x in a[1])
 
 
-def test_extract_features_real_path_raises(media):
-    with pytest.raises(Exception) as ei:
-        extract_features(media, real_extract=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
-
-
 def test_asof_join_null_time_and_null_key_rows_match_nothing(spark):
     """ASOF NULL semantics (pandas merge_asof / DuckDB): a right row
     with a NULL time can never satisfy ts <= left.ts (Spark's

@@ -114,6 +114,32 @@ def test_ivf_assign_sql_text_matches_column_form(spark):
         assert new.columns == ref.columns
 
 
+def _keep_previous(cents, means):
+    """New centroid per cell from ``means.__new``; an empty cell keeps
+    its previous centroid."""
+    return (cents.select("cluster_id", F.col("embedding"))
+            .join(means, "cluster_id", "left")
+            .select("cluster_id",
+                    F.coalesce(F.col("__new"), F.col("embedding"))
+                    .alias("embedding")))
+
+
+def _lloyd_posexplode_ref(emb, cents, quantize):
+    """One Lloyd's step with the per-cell mean over posexplode rows:
+    groupBy(cluster_id, pos), then reassemble the array in pos order."""
+    assigned = _ivf_assign_ref(emb.select("vec_id", "embedding"), cents)
+    mean = F.avg(F.col("col").cast("double"))
+    means = (assigned
+             .select("cluster_id", F.posexplode("embedding"))
+             .groupBy("cluster_id", "pos")
+             .agg((pround(mean, quantize) if quantize is not None
+                   else mean).alias("v"))
+             .groupBy("cluster_id")
+             .agg(F.expr("transform(array_sort(collect_list("
+                         "struct(pos, v))), s -> s.v)").alias("__new")))
+    return _keep_previous(cents, means)
+
+
 def test_lloyd_step_mean_sql_text_matches_column_form(spark):
     from ecommerce_data_engineering_spark.operators.similarity import (
         _lloyd_step)
@@ -121,36 +147,28 @@ def test_lloyd_step_mean_sql_text_matches_column_form(spark):
 
     def ref_step(quantize):
         assigned = _ivf_assign_ref(emb.select("vec_id", "embedding"), cents)
-        mean = F.avg(F.col("col").cast("double"))
-        means = (assigned
-                 .select("cluster_id", F.posexplode("embedding"))
-                 .groupBy("cluster_id", "pos")
-                 .agg((pround(mean, quantize) if quantize is not None
-                       else mean).alias("v"))
-                 .groupBy("cluster_id")
-                 .agg(F.expr("transform(array_sort(collect_list("
-                             "struct(pos, v))), s -> s.v)").alias("__new")))
-        return (cents.select("cluster_id", F.col("embedding"))
-                .join(means, "cluster_id", "left")
-                .select("cluster_id",
-                        F.coalesce(F.col("__new"), F.col("embedding"))
-                        .alias("embedding")))
+        means = [F.avg(F.col("embedding")[i].cast("double"))
+                 for i in range(3)]
+        if quantize is not None:
+            means = [pround(m, quantize) for m in means]
+        return _keep_previous(cents, assigned.groupBy("cluster_id")
+                              .agg(F.array(*means).alias("__new")))
 
     for quantize in (9, None):
-        new = _lloyd_step(emb, cents, "vec_id", "embedding",
+        new = _lloyd_step(emb, cents, "vec_id", "embedding", 3,
                           quantize=quantize)
         assert _optimized_same(new, ref_step(quantize)), f"q={quantize}"
 
 
 def test_lloyd_step_dim_path_matches_posexplode_path(spark):
-    """r12: with a known vector width, _lloyd_step computes the per-cell
-    mean as ``dim`` per-position avg columns in ONE groupBy instead of
-    posexplode -> two groupBys (one Exchange per Lloyd's iteration
-    instead of two, no ×dim row multiplication).  The per-position
-    averages run over the identical value sets and quantize with the
-    same floor-form, so the trained centroids must be row-equal to the
-    generic path — including the empty-cell keep-previous fallback
-    (cluster 2 below is never nearest for this data)."""
+    """r12: _lloyd_step computes the per-cell mean as ``dim``
+    per-position avg columns in ONE groupBy instead of posexplode ->
+    two groupBys (one Exchange per Lloyd's iteration instead of two,
+    no ×dim row multiplication).  The per-position averages run over
+    the identical value sets and quantize with the same floor-form, so
+    the trained centroids must be row-equal to the posexplode form —
+    including the empty-cell keep-previous fallback (cluster 2 below
+    is never nearest for this data)."""
     from ecommerce_data_engineering_spark.operators.similarity import (
         _lloyd_step)
     emb = _emb(spark)
@@ -158,22 +176,37 @@ def test_lloyd_step_dim_path_matches_posexplode_path(spark):
         [(0, [0.0, 0.0, 1.0]), (1, [2.0, 2.0, 2.0]),
          (2, [900.0, 900.0, 900.0])],
         "cluster_id INT, embedding ARRAY<FLOAT>")
+
+    def step(c, quantize):
+        return _lloyd_step(emb, c, "vec_id", "embedding", 3,
+                           quantize=quantize)
+
     for quantize in (9, None):
-        generic = _lloyd_step(emb, cents, "vec_id", "embedding",
-                              quantize=quantize)
-        fast = _lloyd_step(emb, cents, "vec_id", "embedding",
-                           quantize=quantize, dim=3)
-        a = sorted(generic.collect())
-        b = sorted(fast.collect())
+        a = sorted(_lloyd_posexplode_ref(emb, cents, quantize).collect())
+        b = sorted(step(cents, quantize).collect())
         assert a == b, f"q={quantize}: {a} vs {b}"
-        # two chained iterations (the shipped PROD_TRAIN_ITERS shape)
-    g2 = _lloyd_step(emb, _lloyd_step(emb, cents, "vec_id", "embedding",
-                                      quantize=9),
-                     "vec_id", "embedding", quantize=9)
-    f2 = _lloyd_step(emb, _lloyd_step(emb, cents, "vec_id", "embedding",
-                                      quantize=9, dim=3),
-                     "vec_id", "embedding", quantize=9, dim=3)
+    # two chained iterations (the shipped PROD_TRAIN_ITERS shape)
+    g2 = _lloyd_posexplode_ref(emb, _lloyd_posexplode_ref(emb, cents, 9), 9)
+    f2 = step(step(cents, 9), 9)
     assert sorted(g2.collect()) == sorted(f2.collect())
+
+
+def test_kmeans_wcss_sql_text_matches_column_form(spark):
+    """kmeans_wcss_df's d² is ivf_assign's SQL text (_d2_sql); the plan
+    must equal the Column-API lambda form it replaced."""
+    emb, cents = _emb(spark), _cents(spark)
+    d2 = F.aggregate(
+        F.zip_with(F.col("embedding").cast("array<double>"),
+                   F.col("c_vec_kept").cast("array<double>"),
+                   lambda x, y: x - y),
+        F.lit(0.0), lambda acc, d: acc + d * d)
+    ref = (S.ivf_assign(emb.select("vec_id", "embedding"), cents)
+           .join(cents.select(F.col("cluster_id"),
+                              F.col("embedding").alias("c_vec_kept")),
+                 "cluster_id")
+           .select(d2.alias("d2"))
+           .agg(F.coalesce(F.sum("d2"), F.lit(0.0)).alias("wcss")))
+    assert _optimized_same(S.kmeans_wcss_df(emb, cents), ref)
 
 
 def test_cosine_topk_single_project_matches_withcolumn_form(spark):

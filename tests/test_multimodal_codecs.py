@@ -44,28 +44,17 @@ def test_wav_rejects_garbage():
 
 
 def test_decode_media_real_path_parses_bmp(spark, sf_dir):
-    """decode_media(real_decode=True) returns TRUE dimensions parsed
-    from the payload (the r01 stub raised here)."""
+    """The real BMP decoder (decode_image) returns TRUE dimensions
+    parsed from the payload (the r01 stub raised here)."""
     from ecommerce_data_engineering_spark.operators import multimodal as M
     from ecommerce_data_engineering_spark.sources import load
 
     docs = load(spark, sf_dir, "documents").limit(20)
     media = M.synth_bmp_media(docs)
-    out = {r["doc_id"]: r for r in
-           M.decode_media(media, real_decode=True).collect()}
+    out = {r["doc_id"]: r for r in M.decode_image(media).collect()}
     assert out
     for doc_id, row in out.items():
         assert row["width"] == 1 + doc_id % 16
         assert row["height"] == 1 + doc_id % 12
         assert row["n_bytes"] == codecs.bmp_encoded_size(
             row["width"], row["height"])
-
-
-def test_decode_media_real_path_raises_for_unknown_format(spark, sf_dir):
-    from ecommerce_data_engineering_spark.operators import multimodal as M
-    from ecommerce_data_engineering_spark.sources import load
-
-    docs = load(spark, sf_dir, "documents").limit(2)
-    media = M.to_media_table(docs)      # media_kind='text' — no codec
-    with pytest.raises(Exception, match="no pure-Python codec"):
-        M.decode_media(media, real_decode=True).collect()

@@ -72,13 +72,6 @@ def test_media_roundtrip_and_decode_stub(docs):
     assert rows[2].checksum != rows[1].checksum
 
 
-def test_decode_real_path_raises(docs):
-    with pytest.raises(Exception) as ei:
-        decode_media(to_media_table(docs), real_decode=True).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
-
-
 def test_frame_sample_offsets(docs):
     media = to_media_table(docs)
     out = frame_sample(media, every_n_bytes=8)
@@ -492,6 +485,7 @@ def test_kmeans_refine_invariants(spark, sf_dir):
 
     from ecommerce_data_engineering_spark.operators.similarity import (
         kmeans_refine_lazy, kmeans_wcss_df)
+    from ecommerce_data_engineering_spark.plans.extensions import EMB_DIM
     from ecommerce_data_engineering_spark.sources import load
 
     def wcss_of(cents) -> float:
@@ -504,13 +498,15 @@ def test_kmeans_refine_invariants(spark, sf_dir):
     wcss = [wcss_of(seeds)]
     cur = seeds
     for _ in range(3):
-        cur = kmeans_refine_lazy(emb, cur, n_iter=1, persist_steps=True)
+        cur = kmeans_refine_lazy(emb, cur, EMB_DIM, n_iter=1,
+                                 persist_steps=True)
         wcss.append(wcss_of(cur))
     assert all(b <= a * (1 + 1e-9) for a, b in zip(wcss, wcss[1:])), wcss
     assert wcss[-1] < wcss[0]                      # training actually helps
     assert cur.count() == seeds.count()
 
-    again = kmeans_refine_lazy(emb, seeds, n_iter=3, persist_steps=True)
+    again = kmeans_refine_lazy(emb, seeds, EMB_DIM, n_iter=3,
+                               persist_steps=True)
     a = sorted((r.cluster_id, tuple(r.embedding)) for r in again.collect())
     b = sorted((r.cluster_id, tuple(r.embedding)) for r in cur.collect())
     assert a == b
@@ -531,43 +527,10 @@ def test_kmeans_empty_cell_keeps_previous_centroid(spark):
         [(0, [5.0, 1.0]), (1, [5.0, 1.0])],
         "cluster_id int, embedding array<double>")
     out = {r.cluster_id: list(r.embedding) for r in
-           kmeans_refine_lazy(vecs, seeds, n_iter=1).collect()}
+           kmeans_refine_lazy(vecs, seeds, 2, n_iter=1).collect()}
     assert set(out) == {0, 1}
     assert out[0] == [4.5, 1.0]          # mean of all ten vectors
     assert out[1] == [5.0, 1.0]          # empty cell: previous centroid
-
-
-def test_kmeans_step_cache_tracked_release(spark, sf_dir):
-    """kmeans_refine_lazy(step_cache=...) collects every persisted
-    per-iteration centroid table so a long-lived caller can release
-    them AFTER materializing the trained table (VERDICT r10 #6) —
-    targeted unpersist instead of the clearCache() sledgehammer, and
-    the trained result is unaffected by the release."""
-    from pyspark.sql import functions as F
-
-    from ecommerce_data_engineering_spark.operators.similarity import (
-        kmeans_refine_lazy, release_kmeans_steps)
-    from ecommerce_data_engineering_spark.sources import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    seeds = (emb.filter((F.col("vec_id") % 31 == 0) & (F.col("vec_id") < 496))
-             .select((F.col("vec_id") / 31).cast("int").alias("cluster_id"),
-                     "embedding"))
-    steps: list = []
-    trained = kmeans_refine_lazy(emb, seeds, n_iter=2, quantize=9,
-                                 persist_steps=True, step_cache=steps)
-    assert len(steps) == 2
-    assert steps[-1] is trained
-    rows = sorted((r.cluster_id, tuple(r.embedding))
-                  for r in trained.collect())       # materialize
-    assert all(s.storageLevel.useMemory for s in steps)
-    tracked = list(steps)
-    release_kmeans_steps(steps)
-    assert steps == []
-    assert all(not s.storageLevel.useMemory for s in tracked)
-    # released ≠ broken: the trained table recomputes to the same bits
-    assert sorted((r.cluster_id, tuple(r.embedding))
-                  for r in trained.collect()) == rows
 
 
 def test_chunk_exact_dedup_invariants(spark, sf_dir):
@@ -977,19 +940,29 @@ def test_sampling_sql_twins_escape_quotes():
 
 def test_connected_components_first_check_cadence(spark):
     """A long chain (diameter 9) must converge to one component under
-    both the default probe schedule and a delayed first_check — the
-    cadence knob (VERDICT r9 #8) changes driver-action count, never
-    labels."""
+    the exponential probe schedule: probes before the fixpoint see the
+    label sum still falling."""
     from ecommerce_data_engineering_spark.operators.dedup import (
         connected_components)
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], ["id_a", "id_b"])
-    want = {(i, 0) for i in range(10)}
-    for fc in (1, 4):
-        got = {(r.node, r.component) for r in
-               connected_components(chain, first_check=fc).collect()}
-        assert got == want, fc
+    got = {(r.node, r.component) for r in
+           connected_components(chain).collect()}
+    assert got == {(i, 0) for i in range(10)}
+
+
+def test_simhash_near_dups_rejects_unfoldable_parameters(spark):
+    """Pigeonhole blocking is complete only for max_hamming < chunks,
+    and the hamming fold packs at most 63 bits into one BIGINT."""
+    from ecommerce_data_engineering_spark.operators.dedup import (
+        simhash_near_dups)
+
+    fp = spark.createDataFrame([(1, "0" * 64)], "doc_id INT, simhash STRING")
+    with pytest.raises(ValueError, match="max_hamming=4"):
+        simhash_near_dups(fp, "doc_id", 16, max_hamming=4, chunks=4)
+    with pytest.raises(ValueError, match="width=64"):
+        simhash_near_dups(fp, "doc_id", 64)
 
 
 def test_leakage_safe_split_group_atomicity(spark):

@@ -105,6 +105,8 @@ RESPELLINGS = {
     "column_decimal_sum": r"F\.sum\((?:[^()]|\([^()]*\))*?\.cast\(\s*f?"
                           r"[\"']decimal\([^)]*\)[\"']\)\)\s*"
                           r"\.cast\(\s*[\"']double[\"']\)",
+    # the hi/lo split of a wide scaled-long sum: wide_split/wide_total
+    "wide_split": r"_WIDE_SPLIT",
 }
 
 
@@ -125,3 +127,82 @@ def test_no_rule_spelled_outside_rounding_module(rule):
             hits.append(f"{rel}:{i + 1}: {lines[i].strip()}")
     assert not hits, f"{rule} spelled outside {HOME}:\n" + "\n".join(hits)
     assert pattern.search((PACKAGE / HOME).read_text()), rule
+
+
+# One hour, one user, one session: every value is under half a cent,
+# so each rounds to 0.00 at DECIMAL(18,2) while the exact sum is 0.01.
+SUB_CENT_EVENTS = [
+    (0, "2024-01-01 00:01:00", 7, "purchase", 0.004),
+    (1, "2024-01-01 00:02:00", 7, "purchase", 0.004),
+    (2, "2024-01-01 00:03:00", 7, "purchase", 0.004),
+    (3, "2024-01-01 00:04:00", 7, "view", 0.0134),
+    (4, "2024-01-01 00:05:00", 7, "view", 0.0134),
+]
+
+
+@pytest.fixture()
+def sub_cent_dir(tmp_path):
+    """events, orders, customer and lineitem parquet whose money values
+    carry sub-cent digits (the fixtures hold whole cents only)."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [datetime.datetime.fromisoformat(r[1]) for r in SUB_CENT_EVENTS]
+    tables = {
+        "events": {"event_id": [r[0] for r in SUB_CENT_EVENTS],
+                   "ts": pa.array(ts, pa.timestamp("us")),
+                   "user_id": [r[2] for r in SUB_CENT_EVENTS],
+                   "event_type": [r[3] for r in SUB_CENT_EVENTS],
+                   "value": [r[4] for r in SUB_CENT_EVENTS],
+                   "props": ['{"k": 1}'] * len(SUB_CENT_EVENTS)},
+        "orders": {"o_orderkey": [1, 2, 3], "o_custkey": [1, 1, 1],
+                   "o_orderstatus": ["O"] * 3,
+                   "o_totalprice": [0.004] * 3,
+                   "o_orderdate": pa.array(ts[:3], pa.timestamp("us")),
+                   "o_orderpriority": ["1-URGENT"] * 3},
+        "customer": {"c_custkey": [1], "c_name": ["c1"],
+                     "c_nationkey": pa.array([1], pa.int32()),
+                     "c_acctbal": [1.0], "c_mktsegment": ["BUILDING"]},
+        "lineitem": {"l_orderkey": [1]},
+    }
+    for name, cols in tables.items():
+        pq.write_table(pa.table(cols), str(tmp_path / f"{name}.parquet"))
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("q", ["events_hourly_rollup", "events_sessionization",
+                               "events_session_window_native", "dq_summary"])
+def test_money_sums_use_the_oracle_scale(spark, sub_cent_dir, q):
+    """The Spark side sums money at its oracle's DECIMAL(18,4): summed
+    at DECIMAL(18,2), each sub-cent value would round to a cent first
+    and the answer would change."""
+    import duckdb
+
+    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from .oracle import compare
+
+    con = duckdb.connect()
+    for t in ("events", "orders", "customer", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{sub_cent_dir}/{t}.parquet'")
+    oracle = REGISTRY[q].oracle
+    want = con.execute(oracle).fetchdf()
+    at_cents = con.execute(
+        oracle.replace("DECIMAL(18,4)", "DECIMAL(18,2)")).fetchdf()
+    assert not want.equals(at_cents), "fixture does not tell the scales apart"
+    assert compare(REGISTRY[q].fn(spark, sub_cent_dir), want, q) == []
+
+
+def test_stream_rollup_equals_batch_at_sub_cent_values(spark, sub_cent_dir):
+    from ecommerce_data_engineering_spark.plans import REGISTRY
+    from ecommerce_data_engineering_spark.streaming import (
+        run_stream_to_memory, stream_hourly_rollup)
+
+    streamed = run_stream_to_memory(
+        stream_hourly_rollup(spark, sub_cent_dir), "sub_cent_rollup")
+    batch = (REGISTRY["events_hourly_rollup"].fn(spark, sub_cent_dir)
+             .select("window_start", "event_type", "n_events", "total_value"))
+    assert sorted(streamed.collect()) == sorted(batch.collect())
+    assert {r.total_value for r in batch.collect()} == {0.01, 0.03}

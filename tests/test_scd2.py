@@ -95,18 +95,6 @@ def test_null_change_is_not_a_change(spark):
     assert len(c1) == 1 and c1[0].is_current and c1[0].segment == "Premium"
 
 
-def test_null_safe_mode_detects_null_change(spark):
-    out = scd2_merge(
-        base_dim(spark),
-        _staging(spark, [("C1", None, "Dhaka"), ("C2", "Regular", "Sylhet"),
-                         ("C3", "Regular", "Khulna")]),
-        natural_key="customer_id", tracked=["segment", "city"],
-        as_of_date=AS_OF, null_safe=True,
-    )
-    c1 = out.filter("customer_id = 'C1'").collect()
-    assert len(c1) == 2  # closed Premium row + new NULL-segment current
-
-
 def test_staging_missing_attr_columns_fails_fast(spark):
     """The stated contract: staging must carry EVERY dim attribute
     column; a key+tracked-only frame gets a clear error, not a deep
