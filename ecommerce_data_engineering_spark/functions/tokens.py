@@ -156,8 +156,9 @@ def bpe_token_count(text: Column) -> Column:
     Bit-equal to the extract-all form on every string —
     hypothesis-pinned — and ~1.5× cheaper on the 64× corpus, where the
     tokenizer is ~0.7 of the packing query's whole wall
-    (evidence/PACKING_DECOMP.json).  Costs ~0.1 s MORE than
-    extract-all at sf0.1, where fixed per-plan cost dominates and the
+    (evidence/PACKING_DECOMP.json, last present at commit a27ea52).
+    Costs ~0.1 s MORE than extract-all at sf0.1, where fixed per-plan
+    cost dominates and the
     extract-all's allocations are too few to matter — a deliberate
     scale-over-microbenchmark trade.  Counting the single-char classes
     with a second ``regexp_count('[^a-zA-Z\\s]')`` instead is 9×

@@ -1,9 +1,8 @@
-"""Machine-load context snapshots shared by the measurement harnesses.
+"""Machine-load context snapshots for the benchmark.
 
-perfbench and the streaming throughput harness record load average +
-/proc/stat busy fraction around their measurement windows so a delta
-measured on a shared box is adjudicable from the artifact alone
-(VERDICT r9 #1).  One definition here, importable without the query
+perfbench records load average + /proc/stat busy fraction around its
+measurement windows so a delta measured on a shared box is adjudicable
+from the artifact alone (VERDICT r9 #1).  Importable without the query
 registry.
 """
 

@@ -45,27 +45,6 @@ def sql_shard_of(id_expr: str, num_shards: int, seed: int = 0) -> str:
             f"% {num_shards})")
 
 
-class _BisectList:
-    """Minimal SortedList stand-in (bisect + list): O(log n) lookup,
-    O(n) C-memmove insert/remove — still orders of magnitude faster
-    than the r3 Python-level linear scan; used only if sortedcontainers
-    is absent."""
-
-    def __init__(self):
-        self._data: list[tuple] = []
-
-    def bisect_left(self, key):
-        import bisect
-        return bisect.bisect_left(self._data, key)
-
-    def pop(self, idx):
-        return self._data.pop(idx)
-
-    def add(self, item):
-        import bisect
-        bisect.insort(self._data, item)
-
-
 def pack_greedy_bfd(df: DataFrame, id_col: str, size_col: str,
                     budget: int, num_shards: int = 16,
                     seed: int = 0) -> DataFrame:
@@ -130,11 +109,8 @@ def pack_greedy_bfd(df: DataFrame, id_col: str, size_col: str,
         # fills the largest -bin_id is the LOWEST bin id — exactly the
         # r3 linear scan's tie rule (`f > best_fill` keeps the first
         # max), so assignments stay bit-identical.
-        try:
-            from sortedcontainers import SortedList
-            open_bins = SortedList()
-        except ImportError:            # pragma: no cover - always baked in
-            open_bins = _BisectList()
+        from sortedcontainers import SortedList
+        open_bins = SortedList()
         fills: list[int] = []          # fill level per bin id
         bin_of, fill_of, over = [], [], []
         for size in pdf[size_col]:

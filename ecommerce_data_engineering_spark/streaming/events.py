@@ -62,11 +62,12 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
     window exactly once, so the memory table equals the batch result.
     With a MULTI-batch feed (maxFilesPerTrigger on the source) the
     memory table holds one row per update instead — consumers finalize
-    by max-n_events per key (scripts/stream_throughput.py).
+    by max-n_events per key.
 
     ``return_progress=True`` returns ``(result_df, recentProgress)``
     instead of the bare DataFrame — the per-batch input-rate and
-    state-operator metrics the throughput record is built from."""
+    state-operator metrics a throughput measurement reads (perfbench's
+    ``event_ingest`` drain)."""
     q = (
         stream_df.writeStream.outputMode(mode)
         .format("memory").queryName(name)
@@ -86,8 +87,8 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
     if return_progress:
         # recentProgress: per-micro-batch input rows, trigger durations,
         # and state-operator metrics — the raw material for throughput
-        # records (scripts/stream_throughput.py).  The buffer is a ring
-        # capped by spark.sql.streaming.numRecentProgressUpdates
+        # metrics.  The buffer is a ring capped by
+        # spark.sql.streaming.numRecentProgressUpdates
         # (default 100): a feed with more micro-batches than the cap
         # would silently DROP the earliest entries, under-counting
         # input rows while the record still reads as complete (ADVICE

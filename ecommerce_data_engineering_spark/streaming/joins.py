@@ -16,17 +16,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .source import events_stream as _events_stream
 
+# how much older than a purchase a click may be and still match it
+LOOKBACK_MINUTES = 60
 
-def stream_click_purchase_join(spark: SparkSession, sf_dir: str,
-                               lookback_minutes: int = 60,
-                               src: DataFrame | None = None) -> DataFrame:
-    """Purchases joined to same-user clicks within the lookback window.
 
-    ``src`` overrides the fixture-directory source with any
-    events-shaped streaming DataFrame — the throughput soak
-    (scripts/stream_throughput.py) injects the paced monotone file
-    feed; production would inject a Kafka source the same way."""
-    ev = src if src is not None else _events_stream(spark, sf_dir)
+def stream_click_purchase_join(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """Purchases joined to same-user clicks within the
+    ``LOOKBACK_MINUTES`` window."""
+    ev = _events_stream(spark, sf_dir)
     clicks = (ev.filter(F.col("event_type") == "click")
               .select(F.col("user_id").alias("c_user"),
                       F.col("event_id").alias("click_id"),
@@ -41,7 +39,7 @@ def stream_click_purchase_join(spark: SparkSession, sf_dir: str,
         (F.col("p_user") == F.col("c_user"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts")
-           - F.expr(f"INTERVAL {lookback_minutes} MINUTES"))
+           - F.expr(f"INTERVAL {LOOKBACK_MINUTES} MINUTES"))
     )
     return (purchases.join(clicks, cond, "inner")
             .select("purchase_id", F.col("p_user").alias("user_id"),
@@ -58,9 +56,10 @@ def stream_click_purchase_counts(spark: SparkSession, sf_dir: str,
     The row-pair join is output-bound under key skew by arithmetic, not
     by any store defect: a user holding c clicks and p purchases in a
     window emits c·p pair ROWS (17.3M on the skew16x fixture's hot
-    key).  When the downstream product is a statistic — pairs per user,
-    conversion volume, attribution weight — materializing the pairs
-    only to re-aggregate them wastes the entire emission.  This
+    key in evidence/STREAM_BENCH.json, last present at commit
+    a27ea52).  When the downstream product is a statistic — pairs per
+    user, conversion volume, attribution weight — materializing the
+    pairs only to re-aggregate them wastes the entire emission.  This
     operator never matches rows at all: clicks and purchases collapse
     together into one count row per (user, window), so the state and
     the output are bounded by key cardinality.  The hot key becomes one

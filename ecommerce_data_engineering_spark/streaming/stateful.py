@@ -33,9 +33,10 @@ def stream_running_totals(spark: SparkSession, sf_dir: str,
     ``update`` output mode: columns ``event_type`` string,
     ``running_events`` bigint, ``running_value`` double.
 
-    ``src`` overrides the fixture-directory source (see
-    joins.stream_click_purchase_join — same injection pattern, used by
-    the throughput soak to pace micro-batches)."""
+    ``src`` overrides the fixture-directory source with any
+    events-shaped streaming DataFrame: a paced file feed
+    (``source.stream_events_dir`` with ``max_files_per_trigger``), or a
+    Kafka source in production."""
     if src is None:
         src = events_stream(spark, sf_dir)
     return (src.groupBy("event_type")

@@ -12,9 +12,8 @@ the repo root in r7; SCALE.md carries the index):
 - the untagged SCALE_SWEEP.json (the authoritative 4x full sweep)
   keeps the exact "N of the M" claim SCALE.md quotes.
 
-The other records (STREAM_BENCH, RECALL, ANN_SCALING, BUCKET_BENCH,
-PACKING_DECOMP) must be cited too, and the verdicts that
-STREAM_BENCH, ANN_SCALING and PACKING_DECOMP carry must still hold.
+The other records (RECALL, ANN_SCALING) must be cited too, and the
+verdict that ANN_SCALING carries must still hold.
 
 Exit 0 with a one-line summary per record, exit 1 with the reason
 otherwise.
@@ -63,21 +62,6 @@ def main() -> None:
         print(f"{name}: {rec['n_ok']}/{n_total} ok "
               f"(subset={rec.get('subset', 'full')}, "
               f"fixture={rec['fixture']})")
-    sbench = os.path.join(EVID, "STREAM_BENCH.json")
-    if os.path.exists(sbench):
-        rec = json.load(open(sbench))
-        if not rec.get("streamed_equals_batch"):
-            bad.append("STREAM_BENCH.json: streamed != batch (red record)")
-        if "STREAM_BENCH.json" not in md:
-            bad.append("STREAM_BENCH.json: not cited in SCALE.md")
-        else:
-            rocks = rec.get("scenarios_rocksdb")
-            skew = rec.get("scenarios_skew")
-            print(f"STREAM_BENCH.json: {rec['rows']} rows, "
-                  f"{rec['rows_per_sec_wall']} rows/s wall, "
-                  f"stream==batch {rec['streamed_equals_batch']}, "
-                  f"rocksdb={'yes' if rocks else 'no'}, "
-                  f"skew={'yes' if skew else 'no'}")
     # r7 artifacts under the same staleness rule: if they exist, SCALE.md
     # must cite them next to the numbers they back (content-level floors
     # are asserted by tests/test_recall_evidence.py for RECALL.json)
@@ -103,30 +87,6 @@ def main() -> None:
                            f"recall floor: {miss}")
             print(f"ANN_SCALING.json: {len(legs)} (fixture, k_cells) "
                   f"legs, floor {rec.get('recall_floor')}")
-    bbench = os.path.join(EVID, "BUCKET_BENCH.json")
-    if os.path.exists(bbench):
-        rec = json.load(open(bbench))
-        if "BUCKET_BENCH.json" not in md:
-            bad.append("BUCKET_BENCH.json: not cited in SCALE.md")
-        else:
-            print(f"BUCKET_BENCH.json: {rec['fixture']} "
-                  f"{rec['join_sec_unbucketed']}s -> "
-                  f"{rec['join_sec_bucketed']}s bucketed")
-    pdec = os.path.join(EVID, "PACKING_DECOMP.json")
-    if os.path.exists(pdec):
-        rec = json.load(open(pdec))
-        if "PACKING_DECOMP.json" not in md:
-            bad.append("PACKING_DECOMP.json: not cited in SCALE.md")
-        else:
-            c = rec["conclusion"]
-            if c["num_shards_moves_wall"]:
-                bad.append("PACKING_DECOMP.json: num_shards moved the wall "
-                           ">1.5x — SCALE.md's packing-note attribution "
-                           "(regex, not window) no longer holds; re-derive")
-            print(f"PACKING_DECOMP.json: tokenize {c['tokenize_frac_of_full']}"
-                  f" / window {c['window_frac_of_full']} of full wall, "
-                  f"32-split cpu inflation {c['split32_cpu_inflation']}x, "
-                  f"tokenizer speedup {c.get('tokenizer_speedup', 'n/a')}x")
     if bad:
         sys.exit("STALE/RED scale evidence:\n  " + "\n  ".join(bad))
     print(f"scale evidence fresh: {len(records)} records, all green, "

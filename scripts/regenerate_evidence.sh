@@ -3,10 +3,10 @@
 #
 # Run pieces selectively — the full script is hours (the quadratic
 # single-node DuckDB oracles dominate; Spark is never the bottleneck).
-# Measurement steps (4-5) need an OTHERWISE IDLE box: concurrent sweeps
-# poison their timings (correctness sweeps 1-3 only cost wall time).
 # The legacy bench harness is retired (last present at commit 767b712)
-# and its records with it (last present at commit 5c22305);
+# and its records with it (last present at commit 5c22305), as are the
+# streaming-soak, bucketed-join and packing-decomposition timing
+# scripts and their records (last present at commit a27ea52);
 # perfbench/run.py is the repo's benchmark.
 #
 # Fixture derivation first — driver testdata regenerates every round,
@@ -86,14 +86,6 @@ python scripts/ann_recall.py sf0.1=/root/testdata/sf0.1 16x=/tmp/sf_16x \
 
 echo "== 3b. IVF k_cells scaling (VERDICT r9 #2) =="
 python scripts/ann_scaling.py
-
-echo "== 4. streaming soak (IDLE BOX) =="
-# --skew (VERDICT r8 #7): the same three stateful shapes re-run on the
-# pathological-key fixture; streamed==batch must hold there too
-python scripts/stream_throughput.py /tmp/sf_64x 32 --force --skew=/tmp/sf_skew16x
-
-echo "== 5. bucketed-join delta (IDLE BOX) =="
-python scripts/bucketed_join_bench.py /tmp/sf_64x
 
 echo "== assert everything green and cited =="
 python scripts/check_scale_evidence.py

@@ -110,31 +110,6 @@ def test_skew_at_volume_record_covers_the_bench_set():
     assert "skew16x" in rec["fixture"]
 
 
-def test_stream_bench_covers_skewed_keys():
-    """VERDICT r8 #7: the streaming throughput record carries a
-    skewed-key leg — the stateful shapes re-run on the
-    pathological-distribution fixture (hot user, NULL mass) with
-    streamed≡batch holding on every one, so state stores provably
-    don't hot-spot or diverge under key skew.  Since r10 the leg also
-    carries the pre-aggregated count join (VERDICT r9 #7): the
-    compacted twin of the row-pair join, whose output is bounded by
-    key cardinality — its skew-leg output must be orders of magnitude
-    below the row-pair scenario's 17M-pair emission."""
-    rec = json.load(open(os.path.join(EVID, "STREAM_BENCH.json")))
-    assert rec["streamed_equals_batch"] is True
-    skew = rec.get("scenarios_skew")
-    assert skew, "STREAM_BENCH.json missing the skewed-key leg"
-    assert set(skew) == {"hourly_rollup", "stream_stream_join",
-                         "running_totals", "click_purchase_counts"}
-    for name, m in skew.items():
-        assert m["streamed_equals_batch"], name
-        assert m["rows_per_sec_wall"] > 0, name
-    # the compaction claim, as recorded numbers: count-join output
-    # rows << row-pair output pairs on the skewed fixture
-    assert skew["click_purchase_counts"]["output_rows"] * 100 < \
-        skew["stream_stream_join"]["output_pairs"]
-
-
 def test_16x_full_registry_record_covers_everything_tractable():
     """VERDICT r6 #4: the FULL registry verifies at 16x, not just the
     bench subset — every oracled query runs except the six

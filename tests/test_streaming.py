@@ -161,7 +161,7 @@ def test_stream_stream_join_equals_batch_interval_join(spark, sf_dir):
     from ecommerce_data_engineering_spark.streaming.joins import (
         stream_click_purchase_join)
 
-    out = stream_click_purchase_join(spark, sf_dir, lookback_minutes=60)
+    out = stream_click_purchase_join(spark, sf_dir)
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("ss_join_test").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -303,6 +303,115 @@ def test_count_join_emits_only_users_with_both_types(spark, tmp_path):
     assert len([p for p in progress if p["numInputRows"] > 0]) == 2
     got = [tuple(r) for r in result.collect()]
     assert got == [(h10, 2, 3, 2, 6)], got
+
+
+@pytest.mark.timeout(300)
+def test_skewed_paced_feed_streams_equal_batch(spark, tmp_path, monkeypatch):
+    """Key skew on a paced multi-batch feed: one user owns a third of
+    the events and a quarter have a NULL user_id.  Fed one file per
+    micro-batch, the hourly rollup, the running totals and the
+    click/purchase counts each equal their batch twin over the same
+    files exactly.  A lone click ten hours after the rest moves the
+    count join's watermark past every window that holds both types."""
+    import datetime
+    import os
+    import random
+    import time
+
+    from pyspark.sql import functions as F
+    from ecommerce_data_engineering_spark.functions.rounding import (
+        dsum, pround)
+    from ecommerce_data_engineering_spark.schemas import FIXTURES
+    from ecommerce_data_engineering_spark.sources import load
+    from ecommerce_data_engineering_spark.streaming import events
+    from ecommerce_data_engineering_spark.streaming.joins import (
+        stream_click_purchase_counts)
+    from ecommerce_data_engineering_spark.streaming.source import (
+        stream_events_dir)
+    from ecommerce_data_engineering_spark.streaming.stateful import (
+        stream_running_totals)
+
+    hot, n = 1, 1200
+    rng = random.Random(16)
+    t0 = datetime.datetime(2024, 1, 1)
+    stamps = sorted(t0 + datetime.timedelta(seconds=rng.randrange(6 * 3600))
+                    for _ in range(n))
+    rows = []
+    for i, ts in enumerate(stamps):
+        slot = i % 12                  # 3 of 12 NULL, 4 of 12 hot
+        user = (None if slot < 3 else hot if slot < 7
+                else rng.randint(2, 40))
+        etype = rng.choices(["click", "purchase", "view", "signup"],
+                            weights=[45, 20, 30, 5])[0]
+        rows.append((i, ts, user, etype, rng.randrange(20_000) / 100, None))
+    rows.append((n, t0 + datetime.timedelta(hours=10), 2, "click", 1.0, None))
+
+    # the feed directory is also the batch twins' events table
+    feed = tmp_path / "events.parquet"
+    feed.mkdir()
+    base = time.time() - 10
+    for k, chunk in enumerate((rows[:400], rows[400:800], rows[800:])):
+        stage = tmp_path / f"stage{k}"
+        (spark.createDataFrame(chunk, FIXTURES["events"]).coalesce(1)
+         .write.parquet(str(stage)))
+        dst = feed / f"part{k}.parquet"
+        os.rename(next(stage.glob("part-*.parquet")), dst)
+        os.utime(dst, (base + k, base + k))   # files stream in time order
+
+    def paced(*_):
+        return stream_events_dir(spark, str(feed), max_files_per_trigger=1)
+
+    def drain(df, name, mode):
+        result, progress = run_stream_to_memory(
+            df, name, mode=mode, return_progress=True)
+        assert len([p for p in progress if p["numInputRows"] > 0]) == 3
+        return result.collect()
+
+    def final(updates, key, count):
+        # update mode emits a key once per batch that touched it; its
+        # last value has the largest count
+        out = {}
+        for r in updates:
+            k = tuple(r[c] for c in key)
+            if k not in out or r[count] > out[k][count]:
+                out[k] = r
+        return {k: tuple(r) for k, r in out.items()}
+
+    batch_events = load(spark, str(tmp_path), "events")
+    assert batch_events.count() == n + 1
+
+    monkeypatch.setattr(events, "events_stream", paced)
+    key = ("window_start", "event_type")
+    got = final(drain(stream_hourly_rollup(spark, ""), "skew_hourly",
+                      "update"), key, "n_events")
+    want = {tuple(r[c] for c in key): tuple(r) for r in
+            REGISTRY["events_hourly_rollup"].fn(spark, str(tmp_path))
+            .select(*key, "n_events", "total_value").collect()}
+    assert got == want
+
+    got = final(drain(stream_running_totals(spark, "", src=paced()),
+                      "skew_running", "update"),
+                ("event_type",), "running_events")
+    want = {(r[0],): tuple(r) for r in
+            batch_events.groupBy("event_type")
+            .agg(F.count(F.lit(1)),
+                 pround(dsum(F.col("value"), scale=4), 2)).collect()}
+    assert got == want
+
+    got = {tuple(r) for r in drain(
+        stream_click_purchase_counts(spark, "", src=paced()),
+        "skew_counts", "append")}
+    click = F.col("event_type") == "click"
+    purchase = F.col("event_type") == "purchase"
+    want = {(r.ws, r.user_id, r.nc, r.np, r.nc * r.np) for r in
+            batch_events.filter(F.col("user_id").isNotNull())
+            .groupBy(F.date_trunc("hour", "ts").alias("ws"), "user_id")
+            .agg(F.count(F.when(click, 1)).alias("nc"),
+                 F.count(F.when(purchase, 1)).alias("np"))
+            .filter((F.col("nc") > 0) & (F.col("np") > 0)).collect()}
+    assert got == want
+    # the hot user clicked and purchased in each of the six hours
+    assert sum(u == hot for _, u, *_ in got) == 6
 
 
 @pytest.mark.timeout(300)
@@ -664,9 +773,10 @@ def test_soak_versioned_registry_garbage_stays_bounded(spark, sf_dir,
 
 @pytest.mark.timeout(300)
 def test_run_stream_to_memory_return_progress(spark, sf_dir):
-    """The return_progress flag (scripts/stream_throughput.py's hook)
-    must hand back the memory table plus the query's recentProgress
-    list — pin the contract so the throughput harness can't rot."""
+    """The return_progress flag must hand back the memory table plus
+    the query's recentProgress list: perfbench's event_ingest drain
+    reads its per-batch metrics from it.  (The streaming soak script
+    that first used the hook is last present at commit a27ea52.)"""
     from ecommerce_data_engineering_spark.streaming.events import (
         run_stream_to_memory, stream_hourly_rollup)
 
