@@ -1,15 +1,2 @@
-from .dates import (
-    date_key,
-    day_name,
-    month_name,
-    pg_dow,
-    is_weekend,
-)
-from .cleaning import clean_string, fill_unknown, coerce_numeric, coerce_date
-from .hashing import portable_hash_hex, minhash_cols, hex_nibble_value
-
-__all__ = [
-    "date_key", "day_name", "month_name", "pg_dow", "is_weekend",
-    "clean_string", "fill_unknown", "coerce_numeric", "coerce_date",
-    "portable_hash_hex", "minhash_cols", "hex_nibble_value",
-]
+"""Scalar rules, one module per family (dates, cleaning, hashing,
+rounding, tokens, business, codecs); most carry a DuckDB SQL twin."""

@@ -79,6 +79,21 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str,
               .select(id_col, F.explode(shingle).alias("shingle")))
 
 
+# ---------------------------------------------------------------- candidates
+
+def _pairs_sharing(df: DataFrame, keys: list[str], id_col: str,
+                   payload: tuple[str, ...] = ()) -> DataFrame:
+    """Self-join of ``df`` on its blocking ``keys``: (keys, id_a, id_b,
+    then each payload column as <c>_a, <c>_b) for every two rows that
+    share them, id_a < id_b.  Not deduplicated — rows sharing several
+    keys meet once per key."""
+    def side(s: str) -> DataFrame:
+        return df.select(*keys, F.col(id_col).alias(f"id_{s}"),
+                         *[F.col(c).alias(f"{c}_{s}") for c in payload])
+    return (side("a").join(side("b"), keys)
+            .filter(F.col("id_a") < F.col("id_b")))
+
+
 # -------------------------------------------------------------- MinHash LSH
 
 def minhash_signatures(shingles: DataFrame, id_col: str,
@@ -115,11 +130,8 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str,
         "bsize", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("bsize") <= max_bucket)
 
-    a = sized.select(F.col("band"), F.col("bucket"), F.col(id_col).alias("id_a"))
-    b = sized.select(F.col("band"), F.col("bucket"), F.col(id_col).alias("id_b"))
-    return (a.join(b, ["band", "bucket"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct())
+    return (_pairs_sharing(sized, ["band", "bucket"], id_col)
+            .select("id_a", "id_b").distinct())
 
 
 def prefix_filter_candidates(shingles: DataFrame, id_col: str,
@@ -158,11 +170,8 @@ def prefix_filter_candidates(shingles: DataFrame, id_col: str,
     prefix = ranked.filter(
         F.col("_rnk") <= F.col("_sz")
         - F.ceil(F.lit(threshold) * F.col("_sz")) + 1)
-    a = prefix.select(F.col(id_col).alias("id_a"), "shingle")
-    b = prefix.select(F.col(id_col).alias("id_b"), "shingle")
-    return (a.join(b, "shingle")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .select("id_a", "id_b").distinct())
+    return (_pairs_sharing(prefix, ["shingle"], id_col)
+            .select("id_a", "id_b").distinct())
 
 
 def jaccard_verify(pairs: DataFrame, shingles: DataFrame, id_col: str,
@@ -343,13 +352,8 @@ def simhash_near_dups(fingerprints: DataFrame, id_col: str,
                  .select(id_col, "fpl",
                          F.col("cc.chunk").alias("chunk"),
                          F.col("cc.ckey").alias("ckey")))
-    a = blocked.select("chunk", "ckey", F.col(id_col).alias("id_a"),
-                       F.col("fpl").alias("fp_a"))
-    b = blocked.select("chunk", "ckey", F.col(id_col).alias("id_b"),
-                       F.col("fpl").alias("fp_b"))
-    ham = F.expr("bit_count(fp_a ^ fp_b)").cast("int")
-    return (a.join(b, ["chunk", "ckey"])
-             .filter(F.col("id_a") < F.col("id_b"))
+    ham = F.expr("bit_count(fpl_a ^ fpl_b)").cast("int")
+    return (_pairs_sharing(blocked, ["chunk", "ckey"], id_col, ("fpl",))
              .select("id_a", "id_b", ham.alias("hamming"))
              .filter(F.col("hamming") <= max_hamming)
              .distinct())

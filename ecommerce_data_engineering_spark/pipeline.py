@@ -16,11 +16,13 @@ equi-join available for bigger campaign tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import AS_OF_DATE
 from .functions.cleaning import clean_string, coerce_numeric, fill_unknown
-from .functions.dates import date_key, day_name, is_weekend, month_name, pg_dow
+from .functions.business import (acquisition_bucket, churn_risk,
+                                 pct_of_total, stock_turnover)
+from .functions.dates import calendar_columns, date_key, days_between, key_date
 from .operators.range_join import range_join
 from .operators.scd2 import OPEN_EXPIRY, scd2_merge
 from .operators.upsert import keyed_upsert
@@ -154,20 +156,8 @@ def build_dim_time(orders_staged: DataFrame,
     attributes (P8-P11; PG DOW semantics), insert-if-absent (M4)."""
     d = F.col("order_date")
     fresh = (orders_staged.select(d.alias("order_date")).distinct()
-             .select(
-                 date_key(d).alias("time_key"),
-                 d.cast("date").alias("full_date"),
-                 pg_dow(d).alias("day_of_week"),
-                 day_name(d).alias("day_name"),
-                 F.dayofmonth(d).alias("day_of_month"),
-                 F.dayofyear(d).alias("day_of_year"),
-                 F.weekofyear(d).alias("week_of_year"),
-                 F.month(d).alias("month"),
-                 month_name(d).alias("month_name"),
-                 F.quarter(d).alias("quarter"),
-                 F.year(d).alias("year"),
-                 is_weekend(d).alias("is_weekend"),
-             ))
+             .select(date_key(d).alias("time_key"),
+                     d.cast("date").alias("full_date"), *calendar_columns(d)))
     if prior is None:
         return fresh
     from .operators.upsert import insert_if_absent
@@ -264,7 +254,7 @@ def build_dim_campaigns(campaigns_staged: DataFrame) -> DataFrame:
     """warehouse_dag.py:344-378: campaign dim with duration (M3)."""
     return campaigns_staged.withColumn(
         "duration_days",
-        F.datediff("end_date", "start_date") + F.lit(1))
+        days_between("start_date", "end_date") + F.lit(1))
 
 
 def warehouse_quality(fact_orders: DataFrame,
@@ -287,9 +277,7 @@ def build_customer_metrics(dim_customers: DataFrame, fact_orders: DataFrame,
     """analytics_dag.py:44-69: per-customer rollup + churn tiers."""
     dim = _current(dim_customers)
     as_of_c = F.lit(as_of).cast("date")
-    last_dk = F.max("order_date_key")
-    last_date = F.to_date(last_dk.cast("string"), "yyyyMMdd")
-    days_since = F.datediff(as_of_c, last_date)
+    last_date = key_date(F.max("order_date_key"))
     return (
         dim.join(fact_orders, "customer_key", "left")
         .groupBy("customer_id", "customer_key", "customer_segment")
@@ -299,14 +287,10 @@ def build_customer_metrics(dim_customers: DataFrame, fact_orders: DataFrame,
                        F.lit(0).cast("decimal(12,2)")).alias("lifetime_value"),
             F.coalesce(F.avg("total_amount"),
                        F.lit(0).cast("decimal(12,2)")).alias("avg_order_value"),
-            F.min(F.to_date(F.col("order_date_key").cast("string"), "yyyyMMdd"))
-             .alias("first_order_date"),
+            F.min(key_date(F.col("order_date_key"))).alias("first_order_date"),
             last_date.alias("last_order_date"),
-            days_since.alias("days_since_last_order"),
-            F.when(last_dk.isNull(), "No Orders")
-             .when(days_since > 365, "High")
-             .when(days_since > 180, "Medium")
-             .otherwise("Low").alias("churn_risk"),
+            days_between(last_date, as_of_c).alias("days_since_last_order"),
+            churn_risk(last_date, as_of_c).alias("churn_risk"),
         )
         .drop("customer_key")
     )
@@ -315,7 +299,7 @@ def build_customer_metrics(dim_customers: DataFrame, fact_orders: DataFrame,
 def build_product_metrics(dim_products: DataFrame, fact_items: DataFrame,
                           inventory_staged: DataFrame) -> DataFrame:
     """analytics_dag.py:85-122 with the CTE total_inventory (A6) and the
-    PG truncating integer division (P21 — floor, §7.4.4)."""
+    PG truncating integer division (P21, §7.4.4)."""
     dimp = _current(dim_products)
     total_inv = (inventory_staged.groupBy("product_id")
                  .agg(F.sum("current_stock").alias("total_stock")))
@@ -337,14 +321,9 @@ def build_product_metrics(dim_products: DataFrame, fact_items: DataFrame,
              .alias("total_profit"),
             F.coalesce("order_count", F.lit(0)).alias("order_count"),
             F.coalesce("total_stock", F.lit(0)).alias("total_stock"),
-            # analytics_dag.py:114-117: guard + truncating division.
-            # PG integer division truncates TOWARD ZERO (cast does
-            # too); floor() would round toward -inf and diverge on a
-            # negative units_sold (returns/corrections)
-            F.when(F.coalesce("total_stock", F.lit(0)) > 0,
-                   (F.coalesce("units_sold", F.lit(0))
-                    / F.col("total_stock")).cast("int"))
-             .otherwise(0).alias("stock_turnover"),
+            stock_turnover(F.coalesce("units_sold", F.lit(0)),
+                           F.coalesce("total_stock", F.lit(0)))
+            .cast("int").alias("stock_turnover"),
         )
     )
 
@@ -353,8 +332,7 @@ def build_daily_sales(fact_orders: DataFrame) -> DataFrame:
     """analytics_dag.py:150-163 (incl. new_customers = 0 placeholder)."""
     return (
         fact_orders
-        .groupBy(F.to_date(F.col("order_date_key").cast("string"), "yyyyMMdd")
-                 .alias("sales_date"))
+        .groupBy(key_date(F.col("order_date_key")).alias("sales_date"))
         .agg(F.countDistinct("order_id").alias("total_orders"),
              F.sum("total_amount").alias("total_revenue"),
              F.avg("total_amount").alias("avg_order_value"),
@@ -383,21 +361,17 @@ def build_customer_acquisition(dim_customers: DataFrame,
     dim = _current(dim_customers)
     first_order = (
         fact_orders.groupBy("customer_key")
-        .agg(F.min(F.to_date(F.col("order_date_key").cast("string"), "yyyyMMdd"))
-             .alias("first_order_date"),
+        .agg(F.min(key_date(F.col("order_date_key"))).alias("first_order_date"),
              F.min("total_amount").alias("first_order_value"))
     )
-    days = F.datediff("first_order_date", "registration_date")
+    reg, first = F.col("registration_date"), F.col("first_order_date")
     return (
         dim.join(first_order, "customer_key", "left")
         .select(
             "customer_id", "registration_date", "first_order_date",
             "first_order_value",
-            days.alias("days_to_first_purchase"),
-            F.when(F.col("first_order_date").isNull(), "Never Purchased")
-             .when(days <= 7, "First Week")
-             .when(days <= 30, "First Month")
-             .otherwise("After Month").alias("acquisition_bucket"),
+            days_between(reg, first).alias("days_to_first_purchase"),
+            acquisition_bucket(reg, first).alias("acquisition_bucket"),
         )
     )
 
@@ -437,11 +411,7 @@ def build_customer_segmentation(customer_metrics: DataFrame) -> DataFrame:
            .agg(F.count(F.lit(1)).alias("customer_count"),
                 F.sum("lifetime_value").alias("total_lifetime_value"),
                 F.avg("lifetime_value").alias("avg_lifetime_value")))
-    total = Window.partitionBy()
-    return seg.withColumn(
-        "pct_of_customers",
-        F.round(F.col("customer_count") * 100.0 /
-                F.sum("customer_count").over(total), 2))
+    return seg.withColumn("pct_of_customers", pct_of_total("customer_count"))
 
 
 def build_seasonal_performance(daily_sales: DataFrame) -> DataFrame:
@@ -459,10 +429,8 @@ def build_acquisition_summary(customer_acquisition: DataFrame) -> DataFrame:
     by_bucket = (customer_acquisition.groupBy("acquisition_bucket")
                  .agg(F.count(F.lit(1)).alias("customer_count"),
                       F.avg("days_to_first_purchase").alias("avg_days_to_purchase")))
-    return by_bucket.withColumn(
-        "pct_of_customers",
-        F.round(F.col("customer_count") * 100.0 /
-                F.sum("customer_count").over(Window.partitionBy()), 2))
+    return by_bucket.withColumn("pct_of_customers",
+                                pct_of_total("customer_count"))
 
 
 def build_executive_summary(fact_orders: DataFrame,

@@ -10,27 +10,33 @@ part≙products).  Quirks replicated on purpose are flagged inline
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import AS_OF_DATE
 from ..operators.range_join import range_join, range_join_by_expansion
 from ..operators.topk import distributed_topk
 from ..sources import load
+from ..functions.business import (
+    acquisition_bucket, acquisition_bucket_sql, churn_risk, churn_risk_sql,
+    order_rollup, order_rollup_sql, pct_of_total, pct_of_total_sql,
+    stock_turnover, stock_turnover_sql)
+from ..functions.dates import days_between, days_between_sql
 from ..functions.rounding import (davg, davg_sql, dsum, dsum_sql, lavg,
                                   lavg_sql, lsum, lsum_sql, pround,
                                   pround_sql, to_scaled_long,
                                   to_scaled_long_sql)
 from .registry import query
 
+# the orders rollup of daily_sales, monthly_trends and seasonal_performance
+_ORDERS = ("o_orderkey", "o_totalprice", "o_custkey")
+_ROLLUP_SQL = order_rollup_sql(*_ORDERS)
+
 
 @query(
     "daily_sales",
     oracle=f"""
     SELECT CAST(o_orderdate AS DATE) AS sales_date,
-           count(DISTINCT o_orderkey) AS total_orders,
-           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
-           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
-           count(DISTINCT o_custkey) AS unique_customers,
+           {_ROLLUP_SQL},
            0 AS new_customers
     FROM orders
     GROUP BY CAST(o_orderdate AS DATE)
@@ -46,21 +52,13 @@ def daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy(F.col("o_orderdate").cast("date").alias("sales_date"))
-        .agg(
-            # count == countDistinct for the orders PRIMARY KEY (r12,
-            # guide §2.3): with two DIFFERENT distinct columns Spark
-            # planned an Expand that doubled every orders row before the
-            # first exchange; counting the PK plainly leaves one true
-            # distinct (o_custkey) and removes the Expand.  The oracle
-            # keeps count(DISTINCT o_orderkey) — the hash match proves
-            # the equality per fixture.
-            F.count("o_orderkey").alias("total_orders"),
-            pround(lsum(F.col("o_totalprice")), 2).alias("total_revenue"),
-            pround(lavg(F.col("o_totalprice")), 2).alias("avg_order_value"),
-            F.countDistinct("o_custkey").alias("unique_customers"),
-        )
+        .agg(*order_rollup(*_ORDERS))
         .withColumn("new_customers", F.lit(0))
     )
+
+
+_AS_OF_SQL = f"DATE '{AS_OF_DATE}'"
+_LAST_SQL = "CAST(max(o.o_orderdate) AS DATE)"
 
 
 @query(
@@ -75,16 +73,8 @@ def daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
            {pround_sql(f"coalesce({lavg_sql('o.o_totalprice')}, 0)")} AS avg_order_value,
            CAST(min(o.o_orderdate) AS DATE) AS first_order_date,
            CAST(max(o.o_orderdate) AS DATE) AS last_order_date,
-           CAST(date_diff('day', CAST(max(o.o_orderdate) AS DATE),
-                          DATE '{AS_OF_DATE}') AS INT) AS days_since_last_order,
-           CASE
-             WHEN max(o.o_orderdate) IS NULL THEN 'No Orders'
-             WHEN date_diff('day', CAST(max(o.o_orderdate) AS DATE),
-                            DATE '{AS_OF_DATE}') > 365 THEN 'High'
-             WHEN date_diff('day', CAST(max(o.o_orderdate) AS DATE),
-                            DATE '{AS_OF_DATE}') > 180 THEN 'Medium'
-             ELSE 'Low'
-           END AS churn_risk
+           {days_between_sql(_LAST_SQL, _AS_OF_SQL)} AS days_since_last_order,
+           {churn_risk_sql(_LAST_SQL, _AS_OF_SQL)} AS churn_risk
     FROM customer c
     LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey, c.c_mktsegment
@@ -128,7 +118,6 @@ def customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.col("o_orderdate").cast("date")).alias("_last"),
         )
     )
-    days_since = F.datediff(as_of, F.col("_last"))
     return (
         c.join(o_agg, c.c_custkey == o_agg.o_custkey, "left")
         .select(
@@ -142,11 +131,9 @@ def customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.lit(0)), 2).alias("avg_order_value"),
             F.col("_first").alias("first_order_date"),
             F.col("_last").alias("last_order_date"),
-            days_since.cast("int").alias("days_since_last_order"),
-            F.when(F.col("_last").isNull(), F.lit("No Orders"))
-             .when(days_since > 365, F.lit("High"))
-             .when(days_since > 180, F.lit("Medium"))
-             .otherwise(F.lit("Low")).alias("churn_risk"),
+            days_between(F.col("_last"), as_of).cast("int")
+             .alias("days_since_last_order"),
+            churn_risk(F.col("_last"), as_of).alias("churn_risk"),
         )
     )
 
@@ -155,8 +142,6 @@ def customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _REV4_SQL = (f"CAST(sum({to_scaled_long_sql('l.l_extendedprice')}"
              f" * (100 - {to_scaled_long_sql('l.l_discount')})) AS BIGINT)"
              f" / 10000.0")
-# a group's percent of all rows (window over the grouped result)
-_PCT_OF_ALL_SQL = "count(*) * 100.0 / sum(count(*)) OVER ()"
 
 
 @query(
@@ -168,9 +153,7 @@ _PCT_OF_ALL_SQL = "count(*) * 100.0 / sum(count(*)) OVER ()"
            {pround_sql('sum(l.l_quantity)')} AS total_quantity,
            {pround_sql(_REV4_SQL)} AS total_revenue,
            count(DISTINCT l.l_orderkey) AS order_count,
-           CASE WHEN p.p_size > 0
-                THEN CAST(floor(sum(l.l_quantity) / p.p_size) AS BIGINT)
-                ELSE 0 END AS stock_turnover
+           {stock_turnover_sql('sum(l.l_quantity)', 'p.p_size')} AS stock_turnover
     FROM part p
     LEFT JOIN lineitem l ON p.p_partkey = l.l_partkey
     GROUP BY p.p_partkey, p.p_brand, {pround_sql('p.p_retailprice')}, p.p_size
@@ -181,9 +164,8 @@ _PCT_OF_ALL_SQL = "count(*) * 100.0 / sum(count(*)) OVER ()"
 def product_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """analytics.product_metrics (analytics_dag.py:85-122): per-product
     sales rollup with the truncating-division turnover guard
-    (analytics_dag.py:114-117) — PG integer division truncates, so
-    floor() is written explicitly on both engines (SURVEY.md §7.4.4);
-    p_size stands in for total_stock."""
+    (functions/business.stock_turnover, SURVEY.md §7.4.4); p_size
+    stands in for total_stock."""
     p = load(spark, sf_dir, "part")
     li = load(spark, sf_dir, "lineitem")
     # Pre-aggregate the fact side on its own key FIRST (partial agg
@@ -228,9 +210,8 @@ def product_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(F.col("_qty"), 2).alias("total_quantity"),
             pround(F.col("_rev4") / F.lit(10_000.0), 2).alias("total_revenue"),
             F.coalesce(F.col("_orders"), F.lit(0)).alias("order_count"),
-            F.when(F.col("p_size") > 0,
-                   F.floor(F.col("_qty") / F.col("p_size")).cast("bigint"))
-             .otherwise(F.lit(0).cast("bigint")).alias("stock_turnover"),
+            stock_turnover(F.col("_qty"), F.col("p_size"))
+             .alias("stock_turnover"),
         )
     )
 
@@ -240,10 +221,7 @@ def product_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS order_year,
            CAST(EXTRACT(month FROM o_orderdate) AS INT) AS order_month,
-           count(DISTINCT o_orderkey) AS total_orders,
-           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
-           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
-           count(DISTINCT o_custkey) AS unique_customers
+           {_ROLLUP_SQL}
     FROM orders
     GROUP BY 1, 2
     """,
@@ -255,14 +233,7 @@ def monthly_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         o.groupBy(F.year("o_orderdate").alias("order_year"),
                   F.month("o_orderdate").alias("order_month"))
-        .agg(
-            # PK count — removes the two-distinct Expand (see
-            # daily_sales, r12); oracle spelling unchanged
-            F.count("o_orderkey").alias("total_orders"),
-            pround(lsum(F.col("o_totalprice")), 2).alias("total_revenue"),
-            pround(lavg(F.col("o_totalprice")), 2).alias("avg_order_value"),
-            F.countDistinct("o_custkey").alias("unique_customers"),
-        )
+        .agg(*order_rollup(*_ORDERS))
         .orderBy("order_year", "order_month")
     )
 
@@ -285,16 +256,10 @@ _REG_DATE_SQL = "DATE '1994-01-01' + CAST(c_custkey % 365 AS INT)"
            {_REG_DATE_SQL} AS registration_date,
            f.first_order_date,
            f.first_order_value,
-           CAST(date_diff('day', {_REG_DATE_SQL}, f.first_order_date) AS INT)
+           {days_between_sql(_REG_DATE_SQL, 'f.first_order_date')}
              AS days_to_first_purchase,
-           CASE
-             WHEN f.first_order_date IS NULL THEN 'Never Purchased'
-             WHEN date_diff('day', {_REG_DATE_SQL}, f.first_order_date) <= 7
-               THEN 'First Week'
-             WHEN date_diff('day', {_REG_DATE_SQL}, f.first_order_date) <= 30
-               THEN 'First Month'
-             ELSE 'After Month'
-           END AS acquisition_bucket
+           {acquisition_bucket_sql(_REG_DATE_SQL, 'f.first_order_date')}
+             AS acquisition_bucket
     FROM customer c LEFT JOIN first_order f ON c.c_custkey = f.o_custkey
     """,
     covers=("A6", "J3", "P15", "P16", "P17"),
@@ -315,7 +280,7 @@ def customer_acquisition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     reg = F.date_add(F.lit("1994-01-01").cast("date"),
                      (F.col("c_custkey") % 365).cast("int"))
-    days = F.datediff(F.col("first_order_date"), reg)
+    first = F.col("first_order_date")
     return (
         c.join(first_order, c.c_custkey == first_order.o_custkey, "left")
         .select(
@@ -323,11 +288,9 @@ def customer_acquisition(spark: SparkSession, sf_dir: str) -> DataFrame:
             reg.alias("registration_date"),
             F.col("first_order_date"),
             F.col("first_order_value"),
-            days.cast("int").alias("days_to_first_purchase"),
-            F.when(F.col("first_order_date").isNull(), F.lit("Never Purchased"))
-             .when(days <= 7, F.lit("First Week"))
-             .when(days <= 30, F.lit("First Month"))
-             .otherwise(F.lit("After Month")).alias("acquisition_bucket"),
+            days_between(reg, first).cast("int")
+             .alias("days_to_first_purchase"),
+            acquisition_bucket(reg, first).alias("acquisition_bucket"),
         )
     )
 
@@ -340,21 +303,15 @@ def customer_acquisition(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM orders GROUP BY o_custkey
     ), acq AS (
       SELECT c.c_custkey,
-             CASE
-               WHEN f.first_order_date IS NULL THEN 'Never Purchased'
-               WHEN date_diff('day', {_REG_DATE_SQL}, f.first_order_date) <= 7
-                 THEN 'First Week'
-               WHEN date_diff('day', {_REG_DATE_SQL}, f.first_order_date) <= 30
-                 THEN 'First Month'
-               ELSE 'After Month'
-             END AS acquisition_bucket,
-             date_diff('day', {_REG_DATE_SQL}, f.first_order_date) AS days
+             {acquisition_bucket_sql(_REG_DATE_SQL, 'f.first_order_date')}
+               AS acquisition_bucket,
+             {days_between_sql(_REG_DATE_SQL, 'f.first_order_date')} AS days
       FROM customer c LEFT JOIN first_order f ON c.c_custkey = f.o_custkey
     )
     SELECT acquisition_bucket,
            count(*) AS customer_count,
            {pround_sql('CAST(sum(days) AS DOUBLE) / count(days)')} AS avg_days_to_purchase,
-           {pround_sql(_PCT_OF_ALL_SQL)} AS pct_of_customers
+           {pct_of_total_sql('count(*)')} AS pct_of_customers
     FROM acq GROUP BY acquisition_bucket
     """,
     covers=("W2", "O3", "A1"),
@@ -372,12 +329,8 @@ def acquisition_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / F.count("days_to_first_purchase"), 2)
              .alias("avg_days_to_purchase"))
     )
-    total = Window.partitionBy()
-    return by_bucket.withColumn(
-        "pct_of_customers",
-        pround(F.col("customer_count") * 100.0 /
-                F.sum("customer_count").over(total), 2),
-    )
+    return by_bucket.withColumn("pct_of_customers",
+                                pct_of_total("customer_count"))
 
 
 # -- campaign attribution (range join) ------------------------------------
@@ -544,7 +497,7 @@ def top_products(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS customer_count,
            {pround_sql(dsum_sql('spent', 4))} AS total_lifetime_value,
            {pround_sql(davg_sql('spent', 4))} AS avg_lifetime_value,
-           {pround_sql(_PCT_OF_ALL_SQL)} AS pct_of_customers
+           {pct_of_total_sql('count(*)')} AS pct_of_customers
     FROM per_customer GROUP BY c_mktsegment
     """,
     covers=("A1", "A4", "J3", "W2"),
@@ -570,21 +523,14 @@ def customer_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             pround(davg(F.col("spent"), 4), 2).alias("avg_lifetime_value"),
         )
     )
-    return seg.withColumn(
-        "pct_of_customers",
-        pround(F.col("customer_count") * 100.0 /
-                F.sum("customer_count").over(Window.partitionBy()), 2),
-    )
+    return seg.withColumn("pct_of_customers", pct_of_total("customer_count"))
 
 
 @query(
     "seasonal_performance",
     oracle=f"""
     SELECT CAST(EXTRACT(quarter FROM o_orderdate) AS INT) AS quarter,
-           count(DISTINCT o_orderkey) AS total_orders,
-           {pround_sql(lsum_sql('o_totalprice'))} AS total_revenue,
-           {pround_sql(lavg_sql('o_totalprice'))} AS avg_order_value,
-           count(DISTINCT o_custkey) AS unique_customers
+           {_ROLLUP_SQL}
     FROM orders GROUP BY 1
     """,
     covers=("A1", "A2", "P9", "O2"),
@@ -596,14 +542,7 @@ def seasonal_performance(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy(F.quarter("o_orderdate").alias("quarter"))
-        .agg(
-            # PK count — removes the two-distinct Expand (see
-            # daily_sales, r12); oracle spelling unchanged
-            F.count("o_orderkey").alias("total_orders"),
-            pround(lsum(F.col("o_totalprice")), 2).alias("total_revenue"),
-            pround(lavg(F.col("o_totalprice")), 2).alias("avg_order_value"),
-            F.countDistinct("o_custkey").alias("unique_customers"),
-        )
+        .agg(*order_rollup(*_ORDERS))
     )
 
 

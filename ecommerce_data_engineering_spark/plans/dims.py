@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import AS_OF_DATE
-from ..functions.dates import date_key, day_name, is_weekend, month_name, pg_dow
+from ..functions.dates import (calendar_columns, calendar_columns_sql,
+                               date_key, date_key_sql)
 from ..operators.scd2 import OPEN_EXPIRY, scd2_merge
 from ..operators.upsert import insert_if_absent
 from ..sources import load
@@ -36,20 +37,10 @@ _STG_SEGMENT = """
 
 @query(
     "dim_time_from_orders",
-    oracle="""
-    SELECT DISTINCT
-      CAST(o_orderdate AS DATE)                                      AS full_date,
-      CAST(strftime(o_orderdate, '%Y%m%d') AS INT)                   AS time_key,
-      CAST(EXTRACT(dow     FROM o_orderdate) AS INT)                 AS day_of_week,
-      dayname(o_orderdate)                                           AS day_name,
-      CAST(EXTRACT(day     FROM o_orderdate) AS INT)                 AS day_of_month,
-      CAST(EXTRACT(doy     FROM o_orderdate) AS INT)                 AS day_of_year,
-      CAST(EXTRACT(week    FROM o_orderdate) AS INT)                 AS week_of_year,
-      CAST(EXTRACT(month   FROM o_orderdate) AS INT)                 AS month,
-      monthname(o_orderdate)                                         AS month_name,
-      CAST(EXTRACT(quarter FROM o_orderdate) AS INT)                 AS quarter,
-      CAST(EXTRACT(year    FROM o_orderdate) AS INT)                 AS year,
-      EXTRACT(dow FROM o_orderdate) IN (0, 6)                        AS is_weekend
+    oracle=f"""
+    SELECT DISTINCT CAST(o_orderdate AS DATE) AS full_date,
+           {date_key_sql('o_orderdate')} AS time_key,
+           {calendar_columns_sql('o_orderdate')}
     FROM orders
     """,
     covers=("A5", "P8", "P9", "P10", "P11"),
@@ -62,33 +53,21 @@ def dim_time_from_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return (
-        o.select(
-            d.cast("date").alias("full_date"),
-            date_key(d).alias("time_key"),
-            pg_dow(d).alias("day_of_week"),
-            day_name(d).alias("day_name"),
-            F.dayofmonth(d).alias("day_of_month"),
-            F.dayofyear(d).alias("day_of_year"),
-            F.weekofyear(d).alias("week_of_year"),
-            F.month(d).alias("month"),
-            month_name(d).alias("month_name"),
-            F.quarter(d).alias("quarter"),
-            F.year(d).alias("year"),
-            is_weekend(d).alias("is_weekend"),
-        )
+        o.select(d.cast("date").alias("full_date"),
+                 date_key(d).alias("time_key"), *calendar_columns(d))
         .distinct()
     )
 
 
 @query(
     "dim_time_insert_if_absent",
-    oracle="""
+    oracle=f"""
     WITH existing AS (
-      SELECT DISTINCT CAST(strftime(o_orderdate, '%Y%m%d') AS INT) AS time_key,
+      SELECT DISTINCT {date_key_sql('o_orderdate')} AS time_key,
              'existing' AS row_source
       FROM orders WHERE EXTRACT(year FROM o_orderdate) < 2000
     ), incoming AS (
-      SELECT DISTINCT CAST(strftime(o_orderdate, '%Y%m%d') AS INT) AS time_key
+      SELECT DISTINCT {date_key_sql('o_orderdate')} AS time_key
       FROM orders
     )
     SELECT time_key, row_source FROM existing

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..sources import load
+from ..functions.business import pct_of_total, pct_of_total_sql
 from ..functions.rounding import (davg, davg_sql, dsum, dsum_sql, pround,
                                   pround_sql)
 from .registry import query
@@ -114,8 +115,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events GROUP BY 1, 2
     )
     SELECT event_date, event_type, n,
-           {pround_sql('n * 100.0 / sum(n) OVER (PARTITION BY event_date)')}
-             AS pct_of_day
+           {pct_of_total_sql('n', 'event_date')} AS pct_of_day
     FROM daily
     """,
     covers=("W2", "A1"),
@@ -129,9 +129,7 @@ def event_type_daily_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.col("ts").cast("date").alias("event_date"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("event_date")
-    return daily.withColumn(
-        "pct_of_day", pround(F.col("n") * 100.0 / F.sum("n").over(w), 2))
+    return daily.withColumn("pct_of_day", pct_of_total("n", "event_date"))
 
 
 @query(

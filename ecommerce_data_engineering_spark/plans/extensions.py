@@ -185,14 +185,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the scale path; this one exists to measure LSH recall."""
     docs = load(spark, sf_dir, "documents")
     sh = D.word_shingles(docs, "text", "doc_id")
-    sa = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    sb = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (sa.join(sb, "shingle")
-             .filter(F.col("id_a") < F.col("id_b"))
-             .groupBy("id_a", "id_b")
-             .agg(F.count(F.lit(1)).alias("n_common")))
-    return D.jaccard_verify(
-        inter.select("id_a", "id_b"), sh, "doc_id", JACCARD_T)
+    cand = (D._pairs_sharing(sh, ["shingle"], "doc_id")
+            .select("id_a", "id_b").distinct())
+    return D.jaccard_verify(cand, sh, "doc_id", JACCARD_T)
 
 
 @query(

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions.dates import date_key
+from ..functions.dates import date_key, date_key_sql
 from ..operators.upsert import keyed_upsert
 from ..sources import load
 from ..functions.rounding import pround, pround_sql
@@ -38,7 +38,7 @@ def _customer_dim_with_keys(customer: DataFrame) -> DataFrame:
     SELECT o.o_orderkey AS order_id,
            d.customer_key,
            d.c_mktsegment AS customer_segment,
-           CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
+           {date_key_sql('o.o_orderdate')} AS order_date_key,
            {pround_sql('o.o_totalprice')} AS total_amount,
            {pround_sql('o.o_totalprice * 0.15 / 1.15')} AS tax_amount,
            {pround_sql('o.o_totalprice / 1.15')} AS net_amount,
@@ -83,7 +83,7 @@ def fact_orders_build(spark: SparkSession, sf_dir: str) -> DataFrame:
            c.c_mktsegment AS customer_segment,
            p.p_brand AS brand,
            s.s_name AS supplier_name,
-           CAST(strftime(o.o_orderdate, '%Y%m%d') AS INT) AS order_date_key,
+           {date_key_sql('o.o_orderdate')} AS order_date_key,
            {pround_sql('l.l_quantity')} AS quantity,
            {pround_sql('l.l_extendedprice * (1 - l.l_discount)')} AS net_revenue,
            {pround_sql('l.l_extendedprice * (1 - l.l_discount)'

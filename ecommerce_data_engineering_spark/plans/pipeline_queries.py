@@ -9,8 +9,10 @@ the structural invariants are asserted in tests/test_pipeline.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..functions.business import churn_risk_sql
+from ..functions.dates import days_between_sql
 from ..pipeline import run_pipeline
 from ..sources.synthetic import generate_ecommerce
 from .registry import query
@@ -30,12 +32,33 @@ _CACHE_ATTR = "_egraft_pipeline_cache"
 # it requires re-deriving those oracle literals in the same edit.
 PIPELINE_SCALE = 0.05
 
+# customer i's segment: the generator's (sources/synthetic.customers)
+# with staging's 'Unknown' fill (stage_customers)
+_SEGMENT_SQL = """COALESCE(CASE WHEN i % 97 = 0 THEN NULL
+                         WHEN i % 10 < 2 THEN 'Premium'
+                         WHEN i % 10 < 8 THEN 'Regular'
+                         ELSE 'Budget' END, 'Unknown')"""
+_AS_OF = "2024-07-09"
+_AS_OF_SQL = f"DATE '{_AS_OF}'"
+# the source's 600 orders: order j is customer (j*31)%125's, dated
+# 2024-07-08 − (j%365)
+_ORDERS_CTE = """o AS (
+      SELECT (j * 31) % 125 AS c,
+             DATE '2024-07-08' - CAST(j % 365 AS INT) AS order_date
+      FROM generate_series(0, 599) t(j)
+    )"""
+
+
+def _matches(col: str, ref: Column) -> Column:
+    """1 where ``col`` equals ``ref`` exactly (NULLs equal), else 0."""
+    return F.col(col).eqNullSafe(ref).cast("int")
+
 
 def _tables(spark: SparkSession) -> dict[str, DataFrame]:
     tables = getattr(spark, _CACHE_ATTR, None)
     if tables is None:
         tables = run_pipeline(spark, generate_ecommerce(spark, scale=PIPELINE_SCALE),
-                              as_of="2024-07-09")
+                              as_of=_AS_OF)
         setattr(spark, _CACHE_ATTR, tables)
     return tables
 
@@ -50,7 +73,7 @@ def _tables(spark: SparkSession) -> dict[str, DataFrame]:
     # initial-load SCD2 literals, and first-sight surrogate keys
     # (row_number over customer_id ≡ id+1).  Full row-level hash check
     # for S8+M1 instead of the r2 rows-only record.
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT CAST(i AS BIGINT) AS i FROM generate_series(0, 124) AS t(i)
     )
@@ -61,10 +84,7 @@ def _tables(spark: SparkSession) -> dict[str, DataFrame]:
                            THEN printf('  FIRST.LAST%d@GMAIL.COM  ', i)
                            ELSE printf('first.last%d@gmail.com', i) END))
              AS email,
-           COALESCE(CASE WHEN i % 97 = 0 THEN NULL
-                         WHEN i % 10 < 2 THEN 'Premium'
-                         WHEN i % 10 < 8 THEN 'Regular'
-                         ELSE 'Budget' END, 'Unknown') AS customer_segment,
+           {_SEGMENT_SQL} AS customer_segment,
            CASE WHEN i % 5 = 0 THEN 'Dhaka'
                 WHEN i % 5 = 1 THEN 'Chittagong'
                 WHEN i % 5 = 2 THEN 'Sylhet'
@@ -72,7 +92,7 @@ def _tables(spark: SparkSession) -> dict[str, DataFrame]:
                 ELSE 'Khulna' END AS city,
            'Bangladesh' AS country,
            DATE '2022-07-08' + CAST(i % 730 AS INTEGER) AS registration_date,
-           DATE '2024-07-09' AS effective_date,
+           {_AS_OF_SQL} AS effective_date,
            DATE '9999-12-31' AS expiry_date,
            TRUE AS is_current,
            CAST(i + 1 AS INTEGER) AS customer_key
@@ -108,38 +128,24 @@ def pipeline_dim_customers_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generate_series oracle, like the SCD2 dim above.
 @query(
     "pipeline_customer_metrics",
-    # scale=0.05 → 125 customers (ids 0..124), 600 orders (ids
-    # 0..599), order j belongs to customer (j*31)%125 on date
-    # 2024-07-08 − (j%365); pipeline as_of = 2024-07-09.  Every
-    # customer has ≥1 order (31 ⊥ 125 and 600 ≥ 125), so no
-    # 'No Orders' tier appears; the CASE still mirrors it.
-    oracle="""
-    WITH o AS (
-      SELECT CAST(j AS BIGINT) AS j,
-             (j * 31) % 125 AS c,
-             DATE '2024-07-08' - CAST(j % 365 AS INT) AS order_date
-      FROM generate_series(0, 599) t(j)
-    ), agg AS (
+    # scale=0.05 → 125 customers (ids 0..124) and the 600 orders of
+    # _ORDERS_CTE; pipeline as_of = 2024-07-09.  Every
+    # customer has ≥1 order (31 ⊥ 125 and 600 ≥ 125), so the
+    # order-less tier never appears; the CASE still mirrors it.
+    oracle=f"""
+    WITH {_ORDERS_CTE}, agg AS (
       SELECT c, count(*) AS total_orders,
              min(order_date) AS first_order_date,
              max(order_date) AS last_order_date
       FROM o GROUP BY c
     )
     SELECT printf('CUST_%06d', i) AS customer_id,
-           COALESCE(CASE WHEN i % 97 = 0 THEN NULL
-                         WHEN i % 10 < 2 THEN 'Premium'
-                         WHEN i % 10 < 8 THEN 'Regular'
-                         ELSE 'Budget' END, 'Unknown') AS customer_segment,
+           {_SEGMENT_SQL} AS customer_segment,
            COALESCE(total_orders, 0) AS total_orders,
            first_order_date, last_order_date,
-           CAST(datediff('day', last_order_date, DATE '2024-07-09')
-                AS INT) AS days_since_last_order,
-           CASE WHEN last_order_date IS NULL THEN 'No Orders'
-                WHEN datediff('day', last_order_date, DATE '2024-07-09')
-                     > 365 THEN 'High'
-                WHEN datediff('day', last_order_date, DATE '2024-07-09')
-                     > 180 THEN 'Medium'
-                ELSE 'Low' END AS churn_risk,
+           {days_between_sql('last_order_date', _AS_OF_SQL)}
+             AS days_since_last_order,
+           {churn_risk_sql('last_order_date', _AS_OF_SQL)} AS churn_risk,
            CAST(1 AS INT) AS ltv_matches_source,
            CAST(1 AS INT) AS aov_matches_source
     FROM (SELECT CAST(i AS BIGINT) AS i
@@ -161,39 +167,27 @@ def pipeline_customer_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.sum("total_amount").alias("_ltv"),
                 F.avg("total_amount").alias("_aov")))
     j = t.join(ref, "customer_id", "left")
-    ltv_ok = F.coalesce(
-        F.col("lifetime_value").eqNullSafe(
-            F.coalesce(F.col("_ltv"),
-                       F.lit(0).cast("decimal(12,2)"))).cast("int"),
-        F.lit(0))
-    aov_ok = F.coalesce(
-        F.col("avg_order_value").eqNullSafe(
-            F.coalesce(F.col("_aov"),
-                       F.lit(0).cast("decimal(12,2)"))).cast("int"),
-        F.lit(0))
+    zero = F.lit(0).cast("decimal(12,2)")
     return j.select("customer_id", "customer_segment", "total_orders",
                     "first_order_date", "last_order_date",
                     "days_since_last_order", "churn_risk",
-                    ltv_ok.alias("ltv_matches_source"),
-                    aov_ok.alias("aov_matches_source"))
+                    _matches("lifetime_value", F.coalesce("_ltv", zero))
+                    .alias("ltv_matches_source"),
+                    _matches("avg_order_value", F.coalesce("_aov", zero))
+                    .alias("aov_matches_source"))
 
 
 @query(
     "pipeline_daily_sales",
-    oracle="""
-    WITH o AS (
-      SELECT CAST(j AS BIGINT) AS j,
-             (j * 31) % 125 AS c,
-             DATE '2024-07-08' - CAST(j % 365 AS INT) AS sales_date
-      FROM generate_series(0, 599) t(j)
-    )
-    SELECT sales_date,
+    oracle=f"""
+    WITH {_ORDERS_CTE}
+    SELECT order_date AS sales_date,
            count(*) AS total_orders,
            CAST(count(DISTINCT c) AS BIGINT) AS unique_customers,
            CAST(0 AS INT) AS new_customers,
            CAST(1 AS INT) AS revenue_matches_source,
            CAST(1 AS INT) AS aov_matches_source
-    FROM o GROUP BY sales_date
+    FROM o GROUP BY order_date
     """,
     covers=("A1", "S8"))
 def pipeline_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,13 +204,9 @@ def pipeline_daily_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.sum("total_amount").alias("_rev"),
                 F.avg("total_amount").alias("_aov")))
     j = t.join(ref, "sales_date", "left")
-    rev_ok = F.coalesce(
-        F.col("total_revenue").eqNullSafe(F.col("_rev")).cast("int"),
-        F.lit(0))
-    aov_ok = F.coalesce(
-        F.col("avg_order_value").eqNullSafe(F.col("_aov")).cast("int"),
-        F.lit(0))
     return j.select("sales_date", "total_orders", "unique_customers",
                     "new_customers",
-                    rev_ok.alias("revenue_matches_source"),
-                    aov_ok.alias("aov_matches_source"))
+                    _matches("total_revenue", F.col("_rev"))
+                    .alias("revenue_matches_source"),
+                    _matches("avg_order_value", F.col("_aov"))
+                    .alias("aov_matches_source"))

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.tokens import content_key
 from ..operators.text import gopher_gate
 from ..schemas import FIXTURES
+from ..sources import versioned as V
+from .source import drain
 
 
 def curated_corpus_incremental(spark: SparkSession, src_dir: str,
@@ -69,8 +71,6 @@ def curated_corpus_incremental(spark: SparkSession, src_dir: str,
             .parquet(src_dir.rstrip("/")))
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..sources import versioned as V
-
         sess = batch_df.sparkSession
         keyed = batch_df.withColumn("content_key",
                                     content_key(F.col("text")))
@@ -115,18 +115,9 @@ def curated_corpus_incremental(spark: SparkSession, src_dir: str,
         V.publish_version(merged_keys, registry_path)
         V.vacuum(sess, registry_path, keep=2)
 
-    q = (docs.writeStream.outputMode("append")
-         .foreachBatch(fold)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        # awaitTermination(timeout) returns False on timeout instead of
-        # raising; falling through would read epoch directories that a
-        # still-running query is actively overwriting
-        q.stop()
-        raise TimeoutError(
-            f"streaming corpus ingest did not finish within {timeout_s}s")
+    drain(docs.writeStream.outputMode("append").foreachBatch(fold)
+          .option("checkpointLocation", checkpoint),
+          "streaming corpus ingest", timeout_s)
     out_glob = f"{out_path.rstrip('/')}/epoch=*"
     # an empty feed (first scheduler run before the producer lands any
     # file) finishes with zero batches and zero epoch directories; the

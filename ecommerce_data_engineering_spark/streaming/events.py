@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.rounding import dsum, pround
-from .source import events_stream
+from .source import drain, events_stream
 
 
 def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,38 +68,21 @@ def run_stream_to_memory(stream_df: DataFrame, name: str,
     instead of the bare DataFrame — the per-batch input-rate and
     state-operator metrics a throughput measurement reads (perfbench's
     ``event_ingest`` drain)."""
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        # awaitTermination(timeout) returns False on timeout instead of
-        # raising; falling through would return a partially-populated
-        # memory table while the query keeps writing (same guard as
-        # corpus.py / incremental.py)
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_s}s")
+    q = drain(stream_df.writeStream.outputMode(mode)
+              .format("memory").queryName(name),
+              f"streaming query {name!r}", timeout_s)
     spark = stream_df.sparkSession
     result = spark.sql(f"SELECT * FROM {name}")
     if return_progress:
-        # recentProgress: per-micro-batch input rows, trigger durations,
-        # and state-operator metrics — the raw material for throughput
-        # metrics.  The buffer is a ring capped by
-        # spark.sql.streaming.numRecentProgressUpdates
-        # (default 100): a feed with more micro-batches than the cap
-        # would silently DROP the earliest entries, under-counting
-        # input rows while the record still reads as complete (ADVICE
-        # r6).  Detect actual loss, not buffer fullness: the surviving
-        # batchId sequence must be contiguous AND start at batch 0 —
-        # a feed that produced exactly `cap` micro-batches loses
-        # nothing and must pass (ADVICE r7).
+        # recentProgress is a ring capped by
+        # spark.sql.streaming.numRecentProgressUpdates (default 100): a
+        # longer feed silently drops its earliest batches and
+        # under-counts input rows.  Check for actual loss, not fullness:
+        # the batchIds must be exactly 0..n-1 (a feed of exactly `cap`
+        # batches loses nothing and passes).
         progress = list(q.recentProgress)
         batch_ids = [p["batchId"] for p in progress]
-        expected = list(range(len(batch_ids)))
-        if batch_ids != expected:
+        if batch_ids != list(range(len(batch_ids))):
             raise RuntimeError(
                 f"streaming query {name!r}: recentProgress batchIds "
                 f"{batch_ids[:3]}..{batch_ids[-3:]} are not the "

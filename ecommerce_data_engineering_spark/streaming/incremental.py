@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.rounding import dsum
 from ..operators.upsert import keyed_upsert
 from ..schemas import FIXTURES
+from ..sources import versioned as V
+from .source import drain
 
 
 def _orders_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,8 +46,6 @@ def daily_sales_incremental(spark: SparkSession, sf_dir: str,
     )
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..sources import versioned as V
-
         sess = batch_df.sparkSession
         batch = batch_df.cache()
         try:
@@ -68,17 +68,7 @@ def daily_sales_incremental(spark: SparkSession, sf_dir: str,
         finally:
             batch.unpersist()
 
-    q = (agg.writeStream.outputMode("update")
-         .foreachBatch(fold)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout_s):
-        # returns False on timeout instead of raising; falling through
-        # would snapshot a rollup the still-running query keeps
-        # republishing, and leak the query
-        q.stop()
-        raise TimeoutError(
-            f"incremental rollup did not finish within {timeout_s}s")
-    from ..sources import versioned as V
+    drain(agg.writeStream.outputMode("update").foreachBatch(fold)
+          .option("checkpointLocation", checkpoint),
+          "incremental rollup", timeout_s)
     return V.read_current(spark, rollup_path)

@@ -1,4 +1,5 @@
-"""Shared streaming scan of the events fixture.
+"""Shared streaming scan of the events fixture, and the one drain of a
+stream to completion (:func:`drain`).
 
 One place owns the fixture-generation quirk: the driver testdata has
 shipped ``events.ts`` both as parquet TIMESTAMP(NANOS) (read as long,
@@ -11,6 +12,7 @@ sniff is the only footer read and costs one driver-side metadata call.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..schemas import FIXTURES
 
@@ -80,3 +82,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     so stream the directory with a glob filter on the events table.
     """
     return stream_events_dir(spark, sf_dir.rstrip("/"), "events.parquet")
+
+
+def drain(writer: DataStreamWriter, name: str, timeout_s: int) -> StreamingQuery:
+    """Run ``writer`` over the input available now (Trigger.AvailableNow)
+    to completion.  On timeout, stop the query (never read a sink it
+    is still writing, never leak it) and raise, naming ``name``."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"{name} did not finish within {timeout_s}s")
+    return q

@@ -787,3 +787,20 @@ def test_run_stream_to_memory_return_progress(spark, sf_dir):
     assert isinstance(progress, list) and progress
     assert any(p.get("numInputRows", 0) > 0 for p in progress)
     assert any(p.get("stateOperators") for p in progress)
+
+
+@pytest.mark.timeout(300)
+def test_drain_timeout_stops_the_query_and_names_it(spark, sf_dir):
+    """A drain that outlives its timeout stops its query (none is left
+    running to write the sink) and raises a TimeoutError naming it."""
+    from ecommerce_data_engineering_spark.streaming.events import (
+        stream_hourly_rollup)
+    from ecommerce_data_engineering_spark.streaming.source import drain
+
+    writer = (stream_hourly_rollup(spark, sf_dir).writeStream
+              .outputMode("update").format("memory")
+              .queryName("drain_timeout_probe"))
+    with pytest.raises(TimeoutError, match="the probe did not finish"):
+        drain(writer, "the probe", 0.001)
+    assert not [q for q in spark.streams.active
+                if q.name == "drain_timeout_probe"]
