@@ -333,7 +333,10 @@ def build_daily_sales(fact_orders: DataFrame) -> DataFrame:
     return (
         fact_orders
         .groupBy(key_date(F.col("order_date_key")).alias("sales_date"))
-        .agg(F.countDistinct("order_id").alias("total_orders"),
+        # order_id is fact_orders' upsert key, so its plain count is
+        # its distinct count, without the Expand that a second distinct
+        # aggregate plans (it doubles every fact row)
+        .agg(F.count("order_id").alias("total_orders"),
              F.sum("total_amount").alias("total_revenue"),
              F.avg("total_amount").alias("avg_order_value"),
              F.countDistinct("customer_key").alias("unique_customers"))

@@ -23,7 +23,7 @@ def pytest_configure(config):
 @pytest.fixture(scope="session")
 def spark():
     from ecommerce_data_engineering_spark.session import get_spark
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
     s.stop()
 
@@ -31,3 +31,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _empty_query_memo(request):
+    """Each test that uses the session starts with an empty query memo,
+    so a registered query it calls builds the plan the test inspects:
+    a hit would hand back an earlier test's kept plan or its stored
+    result (plans/registry.py)."""
+    if "spark" in request.fixturenames:
+        from ecommerce_data_engineering_spark.plans import clear_query_memo
+        clear_query_memo(request.getfixturevalue("spark"))

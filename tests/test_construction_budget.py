@@ -30,6 +30,7 @@ from __future__ import annotations
 import pytest
 
 from ecommerce_data_engineering_spark.plans import REGISTRY, clear_query_memo
+from ecommerce_data_engineering_spark.plans.registry import _query_memo
 
 # name -> why construction legitimately runs jobs
 CONSTRUCTION_EXCEPTIONS = {
@@ -105,6 +106,32 @@ def test_registry_construction_launches_no_jobs(spark, sf_dir, warmed):
 
     # the r8 fix itself: the k-means trainer is lazy, forever
     assert "embedding_ivf_kmeans" not in eager
+
+
+def test_registry_hits_launch_no_jobs(spark, sf_dir, warmed):
+    """A repeat call after an action is a memo hit: it returns the
+    stored result, made from the kept plan's final stages, or the kept
+    plan itself.  Making either launches no job."""
+    memo = _query_memo(spark)
+    eager: dict[str, int] = {}
+    stored = []
+    try:
+        for name, spec in REGISTRY.items():
+            df = spec.fn(spark, sf_dir)
+            if (name, sf_dir) not in memo:
+                continue
+            df.collect()
+            group = f"construction-budget-hit-{name}"
+            _construct_in_group(
+                spark, group,
+                lambda: stored.append(spec.fn(spark, sf_dir) is not df))
+            n = len(_jobs_for(spark, group))
+            if n:
+                eager[name] = n
+    finally:
+        clear_query_memo(spark)
+    assert not eager, f"memo hits ran Spark jobs: {eager}"
+    assert any(stored), "no hit returned a stored result"
 
 
 def test_job_group_tracking_detects_jobs(spark, sf_dir):

@@ -65,7 +65,7 @@ def test_double_run_determinism(spark, sf_dir, name):
     """Canary against partition-order nondeterminism: the ranked /
     hashed / iterative queries must produce identical canonical rows on
     two executions within one session.  Each run builds its own plan:
-    a memoized one would re-run only its final stage."""
+    a memoized one would hand back the first run's stored rows."""
     from .oracle import canonical
 
     spec = REGISTRY[name]

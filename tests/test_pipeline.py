@@ -92,6 +92,27 @@ def test_daily_sales_totals_match_fact(tables):
     assert ds.filter(F.col("new_customers") != 0).count() == 0   # quirk
 
 
+def test_daily_sales_plans_no_expand(tables):
+    """total_orders counts fact_orders' upsert key plainly, so only one
+    distinct aggregate is left and Spark plans no Expand."""
+    from ecommerce_data_engineering_spark.pipeline import build_daily_sales
+
+    ds = build_daily_sales(tables["fact_orders"])
+    ds.collect()
+    assert "Expand" not in ds._jdf.queryExecution().executedPlan().toString()
+
+
+def test_daily_sales_total_orders_equal_distinct_orders(tables):
+    from ecommerce_data_engineering_spark.functions.dates import key_date
+
+    fo = tables["fact_orders"]
+    distinct = (fo.groupBy(key_date(F.col("order_date_key"))
+                           .alias("sales_date"))
+                .agg(F.countDistinct("order_id").alias("total_orders")))
+    got = tables["daily_sales"].select("sales_date", "total_orders")
+    assert sorted(got.collect()) == sorted(distinct.collect())
+
+
 def test_product_metrics_turnover_guard(tables):
     pm = tables["product_metrics"]
     assert pm.filter((F.col("total_stock") == 0)

@@ -10,7 +10,8 @@ import os
 import re
 
 from ecommerce_data_engineering_spark.session import (
-    _mib, default_driver_memory, driver_memory, local_cores, shj_threshold)
+    _mib, default_driver_memory, driver_memory, g1_region_flag, local_cores,
+    shj_threshold)
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))), "scripts")
@@ -115,3 +116,24 @@ def test_get_spark_sets_the_derived_shj_threshold(spark):
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == \
         shj_threshold(conf.get("spark.driver.memory"),
                       spark.sparkContext.defaultParallelism)
+
+
+def test_g1_region_flag_only_below_8g():
+    # G1 picks heap / 2048: 1 MiB regions at 3g, 4 MiB from 8g up
+    for heap in ("1g", "3g", "3072m", "7g", "8191m"):
+        assert g1_region_flag(heap) == "-XX:G1HeapRegionSize=4m", heap
+    for heap in ("8g", "8192m", "48g", "1t"):
+        assert g1_region_flag(heap) == "", heap
+
+
+def test_get_spark_starts_the_driver_with_the_g1_region_flag(spark):
+    jvm = spark._jvm
+    args = list(jvm.java.lang.management.ManagementFactory
+                .getRuntimeMXBean().getInputArguments())
+    flag = g1_region_flag(spark.conf.get("spark.driver.memory"))
+    if flag:
+        assert flag in args
+    else:
+        assert not any("G1HeapRegionSize" in a for a in args)
+    assert spark.sparkContext.getConf().get(
+        "spark.broadcast.blockSize") == "1m"
