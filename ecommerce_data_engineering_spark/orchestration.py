@@ -1,16 +1,18 @@
-"""Orchestration semantics: task graph, retries, backfill.
+"""Orchestration semantics: declaration order, one retry, branch
+isolation, the soft fail.
 
 The reference encodes run semantics in three Airflow DAGs — task
 dependency edges (staging_dag.py:299, warehouse_dag.py:554-563,
-analytics_dag.py:547-550), per-task retry policy (``retries: 1,
-retry_delay: 5 min`` — staging_dag.py:17-18), daily cadence with
-``catchup=False`` (staging_dag.py:25-26) and ``depends_on_past:
-False`` (staging_dag.py:13).  This module re-expresses exactly those
-semantics engine-side so a user running the reference under Airflow
-keeps dependency ordering, transient-failure retry, branch isolation
-(a failed task only blocks its own descendants), the one soft-fail
-task (campaign attribution — analytics_dag.py:325-328), and logical-
-date backfill — without an external scheduler.
+analytics_dag.py:547-550), one retry per task (``retries: 1`` —
+staging_dag.py:17), no gate on the previous run's outcome
+(staging_dag.py:13) and a daily cadence with ``catchup=False``
+(staging_dag.py:25-26).  This module keeps what those settings mean
+for one run: a task runs after its upstreams, a failing task is
+retried once (without the reference's 5 min delay), a hard failure
+blocks only its own descendants, and the one soft-fail task (campaign
+attribution — analytics_dag.py:325-328) lets its downstream proceed.
+Each run stands alone, so the daily cadence is the host scheduler
+calling ``pipeline.run_pipeline`` once per day.
 
 Scale note: orchestration is pure driver-side control flow over lazy
 DataFrames — a task "running" builds a plan; Spark executes when a
@@ -20,11 +22,12 @@ paths, so the module is scale-neutral by construction.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any
+
+RETRIES = 1                              # staging_dag.py:17: retries: 1
 
 
 class State(str, Enum):
@@ -32,7 +35,6 @@ class State(str, Enum):
     FAILED = "failed"
     SOFT_FAILED = "soft_failed"          # task failed, downstream proceeds
     UPSTREAM_FAILED = "upstream_failed"  # an ancestor hard-failed
-    SKIPPED = "skipped"                  # depends_on_past gate
 
 
 @dataclass
@@ -42,10 +44,7 @@ class Task:
     name: str
     fn: Callable[[dict[str, Any]], Any]
     upstream: tuple[str, ...] = ()
-    retries: int = 1                     # Airflow default_args: retries=1
-    retry_delay: float = 0.0             # seconds; reference uses 5 min
     soft_fail: bool = False              # analytics_dag.py:325-328
-    depends_on_past: bool = False
 
 
 @dataclass
@@ -58,76 +57,30 @@ class TaskRun:
 
 @dataclass
 class Dag:
-    """Deterministic topological executor with Airflow-equivalent
-    failure semantics.  Insertion order breaks topological ties, so
-    runs are reproducible."""
+    """Runs its tasks in declaration order with Airflow-equivalent
+    failure semantics.  ``task()`` rejects an upstream not declared
+    yet, so declaration order is a topological order and runs are
+    reproducible."""
     dag_id: str
-    default_retries: int = 1
-    default_retry_delay: float = 0.0
     _tasks: dict[str, Task] = field(default_factory=dict)
-    # injectable for tests; monkeypatch-free determinism
-    sleep: Callable[[float], None] = time.sleep
 
     def task(self, name: str, fn: Callable[[dict[str, Any]], Any],
-             upstream: Iterable[str | Task] = (), **kw: Any) -> Task:
+             upstream: Iterable[str] = (), soft_fail: bool = False) -> None:
         if name in self._tasks:
             raise ValueError(f"{self.dag_id}: duplicate task {name!r}")
-        # dedupe while preserving order: a duplicate upstream entry
-        # would inflate the Kahn in-degree (len(upstream)) while the
-        # completion loop decrements once per task — a false "cycle
-        # detected" on an acyclic graph
-        ups = tuple(dict.fromkeys(
-            t.name if isinstance(t, Task) else t for t in upstream))
+        ups = tuple(upstream)
         for u in ups:
             if u not in self._tasks:
                 raise ValueError(f"{self.dag_id}: {name!r} depends on "
                                  f"unknown task {u!r} (declare upstream first)")
-        kw.setdefault("retries", self.default_retries)
-        kw.setdefault("retry_delay", self.default_retry_delay)
-        t = Task(name=name, fn=fn, upstream=ups, **kw)
-        self._tasks[name] = t
-        return t
+        self._tasks[name] = Task(name=name, fn=fn, upstream=ups,
+                                 soft_fail=soft_fail)
 
-    def topo_order(self) -> list[str]:
-        """Kahn's algorithm; insertion order as tie-break.  Upstreams
-        must pre-exist at declaration, so the graph is acyclic by
-        construction — this re-derives the order for callers/tests."""
-        indeg = {n: len(t.upstream) for n, t in self._tasks.items()}
-        out: list[str] = []
-        ready = [n for n, d in indeg.items() if d == 0]
-        while ready:
-            n = ready.pop(0)
-            out.append(n)
-            for m, t in self._tasks.items():
-                if n in t.upstream:
-                    indeg[m] -= 1
-                    if indeg[m] == 0:
-                        ready.append(m)
-        if len(out) != len(self._tasks):      # pragma: no cover - guarded
-            raise ValueError(f"{self.dag_id}: cycle detected")
-        return out
-
-    def _static_state(self, t: Task, runs: Mapping[str, TaskRun],
-                      past: Mapping[str, TaskRun] | None) -> State | None:
-        """Skip/block resolution without executing; None = runnable."""
-        up_states = {runs[u].state for u in t.upstream}
-        if State.FAILED in up_states or State.UPSTREAM_FAILED in up_states:
-            return State.UPSTREAM_FAILED
-        if State.SKIPPED in up_states:       # skip cascades, like Airflow
-            return State.SKIPPED
-        if t.depends_on_past and past is not None:
-            prev = past.get(t.name)
-            if prev is not None and prev.state not in (State.SUCCESS,
-                                                       State.SOFT_FAILED):
-                return State.SKIPPED
-        return None
-
-    def _execute(self, t: Task, results: dict[str, Any]) -> TaskRun:
+    @staticmethod
+    def _execute(t: Task, results: dict[str, Any]) -> TaskRun:
         run = TaskRun(state=State.FAILED)
-        for attempt in range(1 + t.retries):
+        for attempt in range(1 + RETRIES):
             run.attempts = attempt + 1
-            if attempt:
-                self.sleep(t.retry_delay)
             try:
                 run.result = t.fn(dict(results))
                 run.state = State.SUCCESS
@@ -140,101 +93,20 @@ class Dag:
             run.result = None
         return run
 
-    def run(self, past: Mapping[str, TaskRun] | None = None,
-            max_workers: int = 1) -> dict[str, TaskRun]:
-        """Execute one logical run.  ``past`` is the previous logical
-        date's TaskRuns, consulted only by ``depends_on_past`` tasks
-        (reference sets it False everywhere; supported because it is
-        part of the scheduling contract surface).
-
-        ``max_workers > 1`` runs independent branches concurrently
-        (Airflow LocalExecutor parity).  Spark's driver schedules
-        actions from multiple threads fine, and overlapping branches
-        keeps a large cluster busy while one branch waits on a shuffle.
-        States are identical to the sequential path — the dependency
-        graph, not submission order, decides them."""
-        if max_workers > 1:
-            return self._run_parallel(past, max_workers)
+    def run(self) -> dict[str, TaskRun]:
+        """Execute one run; the returned dict is in declaration order."""
         runs: dict[str, TaskRun] = {}
         results: dict[str, Any] = {}
-        for name in self.topo_order():
-            t = self._tasks[name]
-            static = self._static_state(t, runs, past)
-            if static is not None:
-                runs[name] = TaskRun(state=static)
+        for t in self._tasks.values():
+            if any(runs[u].state in (State.FAILED, State.UPSTREAM_FAILED)
+                   for u in t.upstream):
+                runs[t.name] = TaskRun(state=State.UPSTREAM_FAILED)
                 continue
             run = self._execute(t, results)
-            if run.state in (State.SUCCESS, State.SOFT_FAILED):
-                results[name] = run.result
-            runs[name] = run
+            if run.state is not State.FAILED:
+                results[t.name] = run.result
+            runs[t.name] = run
         return runs
-
-    def _run_parallel(self, past: Mapping[str, TaskRun] | None,
-                      max_workers: int) -> dict[str, TaskRun]:
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
-        order = self.topo_order()
-        runs: dict[str, TaskRun] = {}
-        results: dict[str, Any] = {}
-        pending = set(order)
-        futures: dict[Any, str] = {}
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            while pending or futures:
-                progressed = True
-                while progressed:            # settle all statically-decided
-                    progressed = False
-                    for name in [n for n in order if n in pending]:
-                        t = self._tasks[name]
-                        if not all(u in runs for u in t.upstream):
-                            continue
-                        static = self._static_state(t, runs, past)
-                        if static is not None:
-                            runs[name] = TaskRun(state=static)
-                            pending.discard(name)
-                            progressed = True
-                for name in [n for n in order if n in pending]:
-                    t = self._tasks[name]
-                    if all(u in runs for u in t.upstream) \
-                            and name not in futures.values():
-                        fut = pool.submit(self._execute, t, dict(results))
-                        futures[fut] = name
-                        pending.discard(name)
-                if not futures:
-                    break
-                done, _ = wait(futures, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    name = futures.pop(fut)
-                    run = fut.result()
-                    if run.state in (State.SUCCESS, State.SOFT_FAILED):
-                        results[name] = run.result
-                    runs[name] = run
-        return runs
-
-    def results(self, runs: Mapping[str, TaskRun]) -> dict[str, Any]:
-        return {n: r.result for n, r in runs.items()
-                if r.state is State.SUCCESS}
-
-
-def backfill(dag: Dag, dates: Iterable[str],
-             bind: Callable[[str], Dag] | None = None
-             ) -> dict[str, dict[str, TaskRun]]:
-    """Run ``dag`` once per logical date, oldest first, threading each
-    date's states into the next (for ``depends_on_past``).  ``bind``
-    optionally rebuilds the dag per date (closure over the logical
-    date — the Airflow ``{{ ds }}`` idiom); default reuses ``dag``.
-
-    The reference runs ``catchup=False`` (staging_dag.py:26): its
-    scheduler only executes the latest interval.  Backfill here is the
-    explicit, bounded form of catchup — the caller names the dates.
-    """
-    out: dict[str, dict[str, TaskRun]] = {}
-    past: dict[str, TaskRun] | None = None
-    for ds in sorted(dates):
-        d = bind(ds) if bind is not None else dag
-        runs = d.run(past=past)
-        out[ds] = runs
-        past = runs
-    return out
 
 
 def pipeline_dag(spark, raw: Mapping[str, Any], as_of: str,

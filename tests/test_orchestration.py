@@ -1,13 +1,13 @@
-"""Orchestration semantics: dependency order, retry, branch isolation,
-soft-fail, depends_on_past backfill — and edge-faithful equality with
-run_pipeline on the full e-commerce graph."""
+"""Orchestration semantics: declaration order, one retry, branch
+isolation, the soft fail — and edge-faithful equality with run_pipeline
+on the full e-commerce graph."""
 
 from __future__ import annotations
 
 import pytest
 
 from ecommerce_data_engineering_spark.orchestration import (
-    Dag, State, backfill, pipeline_dag,
+    Dag, State, pipeline_dag,
 )
 
 
@@ -15,15 +15,22 @@ def _nop(r):
     return "ok"
 
 
-def test_topo_respects_edges_and_insertion_order():
-    d = Dag("t", default_retries=0)
-    d.task("a", _nop)
-    d.task("b", _nop)
-    d.task("c", _nop, upstream=("a", "b"))
-    d.task("d", _nop, upstream=("c",))
-    order = d.topo_order()
-    assert order == ["a", "b", "c", "d"]
+def test_tasks_run_in_declaration_order():
+    """Declaration order is a topological order (an upstream must be
+    declared first), and the run keeps it: ``c`` runs after ``b`` though
+    a FIFO Kahn sort would run the root ``c`` before ``b``."""
+    ran = []
+
+    def record(name):
+        return lambda r: ran.append(name)
+
+    d = Dag("t")
+    d.task("a", record("a"))
+    d.task("b", record("b"), upstream=("a",))
+    d.task("c", record("c"))
     runs = d.run()
+    assert ran == ["a", "b", "c"]
+    assert list(runs) == ["a", "b", "c"]
     assert all(r.state is State.SUCCESS for r in runs.values())
 
 
@@ -37,11 +44,9 @@ def test_unknown_upstream_and_duplicate_rejected():
 
 
 def test_retry_recovers_transient_failure():
-    """retries=1 (the reference default) → a once-flaky task succeeds
-    on attempt 2; retry_delay is honored via the injected sleep."""
-    slept = []
-    d = Dag("t", default_retries=1, default_retry_delay=0.25)
-    d.sleep = slept.append
+    """retries: 1 (the reference's) → a once-flaky task succeeds on
+    attempt 2."""
+    d = Dag("t")
     calls = {"n": 0}
 
     def flaky(r):
@@ -55,14 +60,12 @@ def test_retry_recovers_transient_failure():
     assert runs["flaky"].state is State.SUCCESS
     assert runs["flaky"].attempts == 2
     assert runs["flaky"].result == "recovered"
-    assert slept == [0.25]
 
 
 def test_hard_failure_blocks_descendants_only():
     """warehouse_dag.py:554-563 semantics: a failed branch blocks its
     own descendants; sibling branches still run."""
-    d = Dag("t", default_retries=1)
-    d.sleep = lambda s: None
+    d = Dag("t")
 
     def boom(r):
         raise RuntimeError("permanent")
@@ -83,7 +86,7 @@ def test_hard_failure_blocks_descendants_only():
 def test_soft_fail_lets_downstream_proceed():
     """analytics_dag.py:325-328: campaign attribution failing must not
     block the views task."""
-    d = Dag("t", default_retries=0)
+    d = Dag("t")
 
     def boom(r):
         raise RuntimeError("no campaign rows")
@@ -97,34 +100,6 @@ def test_soft_fail_lets_downstream_proceed():
     # soft-failed result surfaces as None, like run_pipeline's
     # campaign_attribution
     assert runs["views"].result is None
-
-
-def test_backfill_runs_dates_in_order_and_gates_on_past():
-    seen = []
-
-    def bind(ds):
-        d = Dag(f"t_{ds}", default_retries=0)
-
-        def work(r, ds=ds):
-            seen.append(ds)
-            if ds == "2024-07-02":
-                raise RuntimeError("bad day")
-            return ds
-
-        d.task("work", work, depends_on_past=True)
-        d.task("after", _nop, upstream=("work",))
-        return d
-
-    out = backfill(Dag("unused"), ["2024-07-03", "2024-07-01", "2024-07-02"],
-                   bind=bind)
-    assert list(out) == ["2024-07-01", "2024-07-02", "2024-07-03"]
-    assert out["2024-07-01"]["work"].state is State.SUCCESS
-    assert out["2024-07-02"]["work"].state is State.FAILED
-    # depends_on_past: the 07-03 instance is gated on 07-02's failure
-    assert out["2024-07-03"]["work"].state is State.SKIPPED
-    # skips cascade: the downstream task of a skipped instance skips too
-    assert out["2024-07-03"]["after"].state is State.SKIPPED
-    assert seen == ["2024-07-01", "2024-07-02"]
 
 
 def test_pipeline_dag_matches_run_pipeline(spark):
@@ -163,50 +138,6 @@ def test_pipeline_dag_matches_run_pipeline(spark):
     assert lhs == rhs
 
 
-def test_parallel_run_overlaps_and_matches_sequential_states():
-    """max_workers>1: independent branches actually overlap (wall time
-    well under the serial sum) and failure semantics are identical to
-    the sequential executor."""
-    import time as _time
-
-    def build():
-        d = Dag("par", default_retries=0)
-        d.task("a", lambda r: (_time.sleep(0.4), "a")[1])
-        d.task("b", lambda r: (_time.sleep(0.4), "b")[1])
-        d.task("boom", lambda r: 1 / 0)
-        d.task("joined", lambda r: r["a"] + r["b"], upstream=("a", "b"))
-        d.task("blocked", _nop, upstream=("boom",))
-        return d
-
-    t0 = _time.perf_counter()
-    par = build().run(max_workers=4)
-    elapsed = _time.perf_counter() - t0
-    seq = build().run()
-    assert {n: r.state for n, r in par.items()} == \
-           {n: r.state for n, r in seq.items()}
-    assert par["joined"].result == "ab"
-    assert par["blocked"].state is State.UPSTREAM_FAILED
-    # the two 0.4 s sleeps overlapped
-    assert elapsed < 0.75, elapsed
-
-
-def test_parallel_pipeline_dag_matches(spark):
-    """The full e-commerce DAG under the concurrent executor produces
-    the same terminal states as sequential."""
-    from ecommerce_data_engineering_spark.pipeline import AS_OF_DATE
-    from ecommerce_data_engineering_spark.sources.synthetic import (
-        generate_ecommerce,
-    )
-
-    raw = generate_ecommerce(spark, scale=0.02)
-    runs = pipeline_dag(spark, raw, as_of=AS_OF_DATE).run(max_workers=4)
-    bad = {n: r.state for n, r in runs.items()
-           if r.state not in (State.SUCCESS, State.SOFT_FAILED)}
-    assert not bad, bad
-    assert runs["create_business_summary_views"].result[
-        "top_products"].count() > 0
-
-
 def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
     """The curation funnel expressed as an orchestrated DAG (dedup →
     gate → split → pack as tasks, results flowing through the task
@@ -228,8 +159,7 @@ def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
     from ecommerce_data_engineering_spark.sources import load
 
     sf = "/root/testdata/sf0.001"
-    d = Dag("curation", default_retries=1)
-    d.sleep = lambda s: None
+    d = Dag("curation")
     flaked = {"n": 0}
 
     def dedup_task(r):
@@ -267,7 +197,7 @@ def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
     assert all(r.state is State.SUCCESS for r in runs.values())
     assert runs["gate"].attempts == 2
 
-    got = sorted(map(tuple, d.results(runs)["pack"].collect()))
+    got = sorted(map(tuple, runs["pack"].result.collect()))
     want = sorted(map(tuple,
                       REGISTRY["corpus_curation_funnel"].fn(spark, sf)
                       .collect()))
@@ -275,8 +205,8 @@ def test_curation_dag_with_transient_failure_matches_direct_funnel(spark):
 
 
 def test_duplicate_upstream_entries_do_not_fake_a_cycle(spark):
-    """A duplicated upstream name inflated the Kahn in-degree while
-    completion decremented once per task — falsely reporting a cycle."""
+    """A duplicated upstream name is accepted: the task runs once,
+    after its upstream, and reads that upstream's result."""
     from ecommerce_data_engineering_spark.orchestration import Dag
 
     d = Dag("dup")

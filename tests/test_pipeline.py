@@ -282,6 +282,42 @@ def test_campaign_attribution_soft_fails(spark):
     assert out["daily_sales"].count() > 0
 
 
+def test_pipeline_failure_contract(spark, monkeypatch):
+    """Two sibling warehouse tasks fail for good: each is tried twice
+    (the reference's ``retries: 1``), a sibling branch still builds,
+    their common descendant is blocked, and run_pipeline raises the
+    error of the failed task declared first."""
+    from ecommerce_data_engineering_spark import pipeline as P
+    from ecommerce_data_engineering_spark.orchestration import (
+        State, pipeline_dag)
+
+    class InventoryError(RuntimeError):
+        pass
+
+    class CampaignsError(RuntimeError):
+        pass
+
+    def fail(exc):
+        def build(*args):
+            raise exc("broken feed")
+        return build
+
+    monkeypatch.setattr(P, "build_fact_inventory", fail(InventoryError))
+    monkeypatch.setattr(P, "build_dim_campaigns", fail(CampaignsError))
+    raw = generate_ecommerce(spark, scale=0.02)
+    with pytest.raises(InventoryError):
+        run_pipeline(spark, raw, as_of=AS_OF)
+
+    runs = pipeline_dag(spark, raw, AS_OF).run()
+    for name, exc in (("load_inventory_fact", InventoryError),
+                      ("load_marketing_campaigns_dimension", CampaignsError)):
+        assert runs[name].state is State.FAILED, name
+        assert runs[name].attempts == 2, name
+        assert isinstance(runs[name].error, exc), name
+    assert runs["load_clickstream_fact"].state is State.SUCCESS
+    assert runs["validate_warehouse_data"].state is State.UPSTREAM_FAILED
+
+
 def test_materialize_partitioned_facts_roundtrip(spark, tables, tmp_path):
     """Close the S4/S5 loop with real pipeline data: write fact_orders
     month-partitioned, read back, verify counts and partition pruning."""
